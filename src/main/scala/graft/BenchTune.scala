@@ -45,7 +45,7 @@ object BenchTune {
       DataGen.benchTable(spark, rows, 42).repartition(32)
         .write.mode("overwrite").parquet(dir)
     }
-    val df = spark.read.parquet(dir)
+    val df = Tables.parquet(spark, dir)
     def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
     def consumeColumnar(d: org.apache.spark.sql.DataFrame): Unit = {
       val scan = d.queryExecution.executedPlan.collectFirst {
@@ -88,7 +88,7 @@ object BenchTune {
         pmod(col("id"), lit(20)).cast("string").as("source"))
         .repartition(32).write.mode("overwrite").parquet(dir)
     }
-    val docs = spark.read.parquet(dir)
+    val docs = Tables.parquet(spark, dir)
     def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
     def drain(d: DataFrame): Unit =
       d.write.mode("overwrite").format("noop").save()
@@ -179,7 +179,7 @@ object BenchTune {
         pmod(col("id"), lit(20)).cast("string").as("source"))
         .repartition(32).write.mode("overwrite").parquet(dir)
     }
-    val docs = spark.read.parquet(dir)
+    val docs = Tables.parquet(spark, dir)
     val t0 = System.nanoTime()
     val (df, rounds) =
       Bpe.learnMergesBatched(docs, "text", merges.toInt, maxBatch = 32)
@@ -249,7 +249,7 @@ object BenchTune {
         (pmod(xxhash64(col("id"), lit(3)), lit(10000)) / 100.0).as("value"))
         .repartition(32).write.mode("overwrite").parquet(dir)
     }
-    val ev = spark.read.parquet(dir)
+    val ev = Tables.parquet(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"),
         floor(unix_millis(col("ts")) / lit(3600000)).cast("long").as("h"),
@@ -311,7 +311,7 @@ object BenchTune {
           .as("embedding"))
         .repartition(32).write.mode("overwrite").parquet(dir)
     }
-    val emb = spark.read.parquet(dir).cache()
+    val emb = Tables.parquet(spark, dir).cache()
     emb.count()
     def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
     val sample = emb.filter(pmod(xxhash64(col("vec_id"), lit(99)), lit(10)) === 0)
@@ -786,8 +786,8 @@ object BenchTune {
     }
     val dir = InvertedIndex.genDir(iroot, InvertedIndex.currentGen(iroot))
     val naiveT = timeIt {
-      val d = spark.read.parquet(s"$dir/doclens").count()
-      val p = spark.read.parquet(s"$dir/deletes").count()
+      val d = Tables.parquet(spark, s"$dir/doclens").count()
+      val p = Tables.parquet(spark, s"$dir/deletes").count()
       assert(p.toDouble >= 0.005 * d)
     }
     println(f"[policy] docs=$docs%d needsCompaction=${predT * 1000}%.0f ms " +
@@ -1030,7 +1030,7 @@ object BenchTune {
         sha2(concat(col("id").cast("string"), lit("pad")), 256).as("pad"),
         pmod(col("id"), lit(4)).as("b"))
       .write.partitionBy("key").parquet(dir)
-    val corpus = spark.read.parquet(dir)
+    val corpus = Tables.parquet(spark, dir)
     def buildSketch(root: String): Unit = {
       SketchStore.initStore(root)
       (0L to 3L).foreach { bb =>
@@ -1350,7 +1350,7 @@ object BenchTune {
         (System.nanoTime() - t0) / 1e9
       }
     } finally q.stop()
-    val retainedN = spark.read.parquet(retained).count()
+    val retainedN = Tables.parquet(spark, retained).count()
     val gen = graft.operators.GenStore.currentGen(root)
     println(f"[curation] docs=$docs%d batches=$batches%d " +
       f"total=${times.sum}%.1f s throughput=${docs / times.sum}%.0f docs/s " +

@@ -93,7 +93,7 @@ object Cli {
       DataGen.main(rest.toArray)
     case "query" :: path :: rest =>
       val spark = GraftSession.local("graft-cli")
-      try show(parseQueryArgs(rest).compile(spark.read.parquet(path)))
+      try show(parseQueryArgs(rest).compile(Tables.parquet(spark, path)))
       finally spark.stop()
     case "sql" :: sfDir :: query :: Nil =>
       val spark = GraftSession.local("graft-cli")

@@ -2139,7 +2139,7 @@ object Queries {
           .forall(c => !c.hasDict && c.encodings.contains("DELTA_BYTE_ARRAY"))
         val flagDict = chunks("l_returnflag").nonEmpty &&
           chunks("l_returnflag").forall(_.hasDict)
-        s.read.parquet(s"$dir/t")
+        Tables.parquet(s, s"$dir/t")
           .agg(count(lit(1)).cast("long").as("n_rows"),
             sum(col("l_quantity")).as("sum_qty"))
           .select(col("n_rows"), col("sum_qty"),
@@ -2195,7 +2195,7 @@ object Queries {
           p.min <= phi && p.max >= plo && sp.min <= shi && sp.max >= slo
         }
         val prunedFrac = 1.0 - overlapping.toDouble / stats.size
-        s.read.parquet(s"$dir/t")
+        Tables.parquet(s, s"$dir/t")
           .filter(col("l_partkey") >= plo && col("l_partkey") <= phi &&
             col("l_suppkey") >= slo && col("l_suppkey") <= shi)
           .agg(count(lit(1)).cast("long").as("n_rows"),
@@ -2230,7 +2230,7 @@ object Queries {
         val dir = scratchDir("q89")
         ParquetWrite.write(t(s, d, "events"), s"$dir/t",
           ParquetWrite.WriteSpec(partitionBy = Seq("event_type")))
-        val filtered = s.read.parquet(s"$dir/t")
+        val filtered = Tables.parquet(s, s"$dir/t")
           .filter(col("event_type").isin("click", "view"))
         val plan = filtered.queryExecution.executedPlan.toString
         val pruned = raw"PartitionFilters: \[[^\]]*event_type".r
@@ -3993,7 +3993,7 @@ object Queries {
         def sideSearch(gen: Long, cs: Array[Array[Double]],
             bs: Array[Array[Array[Double]]], ids: Seq[Long]) =
           Similarity.searchCodedFrame(
-            s.read.parquet(ids.map(i =>
+            Tables.parquet(s, ids.map(i =>
               s"${VectorStore.codedDir(root, gen)}/batch_id=$i"): _*),
             q, "vec_id", "embedding", k, cs, bs,
             nprobe = 12, shortlistFactor = 32)
@@ -5229,11 +5229,11 @@ object Queries {
         // compaction dedups keys ACROSS batches: the compacted fragment
         // must hold exactly the distinct union, never more rows than
         // the fragments it merged
-        val keyRowsFragmented = s.read.parquet(root + "/gen=1").count()
-        val keyRowsCompacted = s.read.parquet(root + "/gen=2").count()
+        val keyRowsFragmented = Tables.parquet(s, root + "/gen=1").count()
+        val keyRowsCompacted = Tables.parquet(s, root + "/gen=2").count()
         val crossBatchDedup = keyRowsCompacted <= keyRowsFragmented &&
           keyRowsCompacted ==
-            s.read.parquet(root + "/gen=1").drop("batch_id").distinct().count()
+            Tables.parquet(s, root + "/gen=1").drop("batch_id").distinct().count()
         val sealedRefused =
           try {
             Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 0),
@@ -6058,10 +6058,10 @@ object Queries {
           InvertedIndex.compactStore(s, root, expectedGen = 1L)
           val postEqPending = bm25Rows() == pending
           val gen2 = InvertedIndex.genDir(root, 2L)
-          val purged = s.read.parquet(s"$gen2/postings")
+          val purged = Tables.parquet(s, s"$gen2/postings")
             .select(explode(col("postings")).as("p"))
             .filter(col("p.doc_id") % 7 === 3).isEmpty &&
-            s.read.parquet(s"$gen2/doclens")
+            Tables.parquet(s, s"$gen2/doclens")
               .filter(col("doc_id") % 7 === 3).isEmpty &&
             !java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "deletes"))
           (replayNoop, postEqPending, purged)
@@ -6092,7 +6092,7 @@ object Queries {
           val vPending = vsearch(vroot) == vwant
           VectorStore.compactGen(s, vroot, expectedGen = 1L)
           val vCompacted = vsearch(vroot) == vwant &&
-            s.read.parquet(VectorStore.codedDir(vroot, 2L))
+            Tables.parquet(s, VectorStore.codedDir(vroot, 2L))
               .filter(col("cid") % 5 === 2).isEmpty
           (vPending, vCompacted)
         }
@@ -6389,7 +6389,7 @@ object Queries {
         // advanced between micro-batches, not after the last one
         val midStream = genSeen.init.exists(_ >= 2L)
         Packing.packByBudget(
-          s.read.parquet(retained).select(col("doc_id"), col("source"),
+          Tables.parquet(s, retained).select(col("doc_id"), col("source"),
             TextFunctions.tokenCount(col("text")).as("n_tokens")),
           "source", "doc_id", "n_tokens", 2048L)
           .withColumn("mid_stream_compaction", lit(midStream))
@@ -6524,7 +6524,7 @@ object Queries {
         val deadKeys = deadKeyRows
           .select(col("band"), col("bucket")).distinct()
         val frag2 = GenStore.listBatchIds(s, gen2)
-        val purged = s.read.parquet(frag2.map(i => s"$gen2/batch_id=$i"): _*)
+        val purged = Tables.parquet(s, frag2.map(i => s"$gen2/batch_id=$i"): _*)
           .join(deadKeys, Seq("band", "bucket"), "left_semi").isEmpty &&
           !java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "deletes"))
         val byId = pending.map(p => p._1 -> p._3).toMap
@@ -6620,7 +6620,7 @@ object Queries {
         def hist(r: String) = QuantileStore.mergedHistogram(s,
             GenStore.genDir(r, GenStore.currentGen(r)), Seq("l_returnflag"))
           .select(col("l_returnflag"), col("bin"), col("cnt").cast("long"))
-        val frag = s.read.parquet(GenStore.genDir(root, 2L)).drop("batch_id")
+        val frag = Tables.parquet(s, GenStore.genDir(root, 2L)).drop("batch_id")
         val physical = frag.filter(col("cnt") <= 0).isEmpty &&
           Checks.multisetEq(hist(root), hist(froot))
         val sealedRefused = try {
@@ -6949,13 +6949,13 @@ object Queries {
         val replayNoop = spanCounts() == pending
         val shrank = pending.map(_._2).sum < before.map(_._2).sum
         // the admitted delete keys, read back for the purge check
-        val delKeys = s.read.parquet(s"$root/gen=1/deletes")
+        val delKeys = Tables.parquet(s, s"$root/gen=1/deletes")
           .select(col("g")).distinct()
         KeySetStore.compactStore(s, root, expectedGen = 1L)
         val postEqPending = spanCounts() == pending
         val gen2 = GenStore.genDir(root, 2L)
         val frag2 = GenStore.listBatchIds(s, gen2)
-        val purged = s.read.parquet(frag2.map(i => s"$gen2/batch_id=$i"): _*)
+        val purged = Tables.parquet(s, frag2.map(i => s"$gen2/batch_id=$i"): _*)
           .join(delKeys, Seq("g"), "left_semi").isEmpty &&
           !java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "deletes"))
         val beforeDf = before.toDF("doc_id", "spans_before")
@@ -7056,7 +7056,7 @@ object Queries {
             q.processAllAvailable()
           }
           // the takedown: purge retained %5==0 docs from the live store
-          val td = s.read.parquet(retained)
+          val td = Tables.parquet(s, retained)
             .filter(pmod(col("doc_id"), lit(5)) === 0)
             .select(col("doc_id"), col("text")).localCheckpoint()
           Dedup.deleteMinHashBatch(td, "doc_id", "text", n = 3,
@@ -7074,7 +7074,7 @@ object Queries {
           td.select("doc_id")
         } finally q.stop()
         Packing.packByBudget(
-          s.read.parquet(retained)
+          Tables.parquet(s, retained)
             .join(takedown, Seq("doc_id"), "left_anti")
             .select(col("doc_id"), col("source"),
               TextFunctions.tokenCount(col("text")).as("n_tokens")),
@@ -7851,7 +7851,7 @@ object Queries {
               maxPendingFraction = 0.05)
             val purged = !java.nio.file.Files.exists(
               java.nio.file.Paths.get(root, "gen=2", "deletes")) &&
-              s.read.parquet(VectorStore.codedDir(root, 2L))
+              Tables.parquet(s, VectorStore.codedDir(root, 2L))
                 .filter(col("cid") % 10 === 2).count() == 0L
             (fired, quietAfter, purged, served())
           },
@@ -7989,7 +7989,7 @@ object Queries {
         val v2 = Manifest.publish(mroot, expectedVersion = 1L,
           Map("index" -> 3L, "vectors" -> 3L, "signatures" -> 3L))
         val v1Stable = v2 == 2L && bmAt(1L) == preBm
-        val vectorPurged = s.read.parquet(VectorStore.codedDir(vroot, 3L))
+        val vectorPurged = Tables.parquet(s, VectorStore.codedDir(vroot, 3L))
           .filter(col("cid") % 7 === 3).isEmpty &&
           !java.nio.file.Files.exists(
             java.nio.file.Paths.get(vroot, "gen=3", "deletes"))
@@ -8478,7 +8478,7 @@ object Queries {
         val served = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
           .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
         val nSurv = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0).count()
-        val statsShrunk = s.read.parquet(
+        val statsShrunk = Tables.parquet(s,
             InvertedIndex.genDir(root, gen2) + "/stats")
           .agg(sum(col("n_docs"))).head.getLong(0) == nSurv
         val replayRefused =
@@ -8491,7 +8491,7 @@ object Queries {
         InvertedIndex.admitBatch(s,
           toks.filter(pmod(col("doc_id"), lit(3)) === 0),
           "doc_id", "tk", IndexBucket, batchId = 10L, root = root)
-        val readmitted = s.read.parquet(
+        val readmitted = Tables.parquet(s,
             InvertedIndex.genDir(root, gen2) + "/doclens")
           .filter(pmod(col("doc_id"), lit(3)) === 0).count() > 0
         import s.implicits._
@@ -8874,7 +8874,7 @@ object Queries {
           VectorStore.mergeStores(s, Seq(ra, rb), merged)
           val pending = served(merged)
           VectorStore.compactGen(s, merged, expectedGen = 1L)
-          val purged = s.read.parquet(VectorStore.codedDir(merged, 2L))
+          val purged = Tables.parquet(s, VectorStore.codedDir(merged, 2L))
             .join(deadIds.withColumnRenamed("vec_id", "cid"), Seq("cid"),
               "left_semi").isEmpty &&
             !java.nio.file.Files.exists(
@@ -9124,7 +9124,7 @@ object Queries {
         val v2 = Manifest.publish(mroot, expectedVersion = 1L,
           Map("index" -> 3L, "vectors" -> 3L, "signatures" -> 3L))
         val v1Stable = v2 == 2L && bmAt(1L) == preBm
-        val vectorPurged = s.read.parquet(VectorStore.codedDir(vm, 3L))
+        val vectorPurged = Tables.parquet(s, VectorStore.codedDir(vm, 3L))
           .filter(col("cid") % 7 === 3).isEmpty &&
           !java.nio.file.Files.exists(
             java.nio.file.Paths.get(vm, "gen=3", "deletes"))
@@ -9870,7 +9870,7 @@ object Queries {
         require(!java.nio.file.Files.exists(
             java.nio.file.Paths.get(gen, "deletes")),
           "compaction left pending deletes")
-        require(s.read.parquet(s"$gen/doclens").groupBy("doc_id").count()
+        require(Tables.parquet(s, s"$gen/doclens").groupBy("doc_id").count()
             .filter(col("count") > 1).isEmpty,
           "a doc survives in more than one physical copy")
         InvertedIndex.lookupCurrent(s, root, terms)
@@ -10129,7 +10129,7 @@ object Queries {
         Par.both(
           InvertedIndex.compactStore(s, iroot, InvertedIndex.currentGen(iroot)),
           VectorStore.compactGen(s, vroot, VectorStore.currentGen(vroot)))
-        val idxIds = s.read.parquet(InvertedIndex.genDir(iroot,
+        val idxIds = Tables.parquet(s, InvertedIndex.genDir(iroot,
           InvertedIndex.currentGen(iroot)) + "/doclens").select("doc_id")
         val vecIds = VectorStore.vectors(s, vroot, "doc_id", "embedding")
           .select("doc_id")

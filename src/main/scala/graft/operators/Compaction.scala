@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.Tables
+
 /** Small-file compaction — the unglamorous operator every 100 TB lake
   * needs: streaming ingestion and fine-grained partitioning leave behind
   * thousands of kilobyte files whose per-file open/footer cost dominates
@@ -28,7 +30,7 @@ object Compaction {
       targetBytes: Long = 128L << 20): Int = {
     val bytes = inputBytes(spark, inDir)
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).repartition(n)
+    Tables.parquet(spark, inDir).repartition(n)
       .write.mode("overwrite").parquet(outDir)
     n
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.{HashExprs, TextFunctions, VectorFunctions}
 
 /** Deduplication operators for web-scale corpus curation — exact,
@@ -679,7 +680,7 @@ object Dedup {
       path: String, portableKeys: Boolean = false): DataFrame = {
     val tok = tokenized(docs, idCol, textCol, minTokens)
     val grams = gramPostings(tok, minTokens, portableKeys)
-    val store = docs.sparkSession.read.parquet(path).select(col("g")).distinct()
+    val store = Tables.parquet(docs.sparkSession, path).select(col("g")).distinct()
     val dupPos = grams.join(store, Seq("g"), "left_semi")
       .select(col("doc_id"), col("pos"))
     spansFromPositions(dupPos, tok, minTokens)
@@ -754,7 +755,7 @@ object Dedup {
       n: Int = 3, numHashes: Int = 128, bands: Int = 32,
       path: String, portableKeys: Boolean = false): DataFrame = {
     val keys = minHashBandKeys(docs, idCol, textCol, n, numHashes, bands, portableKeys)
-    val store = docs.sparkSession.read.parquet(path)
+    val store = Tables.parquet(docs.sparkSession, path)
       .select(col("band"), col("bucket")).distinct()
     val hits = keys.join(store, Seq("band", "bucket"), "left_semi")
       .groupBy(col("id")).agg(count(lit(1)).cast("long").as("hit_bands"))

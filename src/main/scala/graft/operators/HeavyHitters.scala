@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Misra-Gries heavy hitters: find the keys whose frequency exceeds
   * N/(m+1) in ONE pass with m counters — the vocabulary / hot-key /
   * heavy-URL detector for corpora where an exact group-by's key
@@ -113,7 +115,7 @@ object HeavyHitters {
     * `path` as `(key, est, batch_id)` rows — [[SketchStore.appendBatch]]'s
     * shape for frequency instead of distinct counts. One summarize pass
     * over the batch, <= m rows appended; [[mergeSummaries]] over
-    * `spark.read.parquet(path)` recovers the heavy hitters of the UNION
+    * `Tables.parquet(spark, path)` recovers the heavy hitters of the UNION
     * of all batches without rescanning any of them.
     *
     * Each batch lands in its own `batch_id=N` subdirectory with
@@ -206,12 +208,12 @@ object HeavyHitters {
     // a directory-wide read would fold a straggler admitted after the
     // listing into the merge AND the sweep — double-counting its
     // estimates, which breaks est <= exact
-    mergeSummaries(spark.read.parquet(ids.map(i => s"$src/batch_id=$i"): _*), m)
+    mergeSummaries(Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*), m)
       .write.mode("overwrite")
       .parquet(s"$dst/batch_id=$hwm")
     def sweep(): Unit =
       (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        spark.read.parquet(s"$src/batch_id=$i")
+        Tables.parquet(spark, s"$src/batch_id=$i")
           .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
       }
     sweep()
@@ -270,7 +272,7 @@ object HeavyHitters {
     */
   def hittersCurrent(spark: SparkSession, root: String, m: Int): DataFrame =
     mergeSummaries(
-      spark.read.parquet(GenStore.genDir(root, GenStore.currentGen(root))), m)
+      Tables.parquet(spark, GenStore.genDir(root, GenStore.currentGen(root))), m)
 
   // -------------------------------------------------------------------------
   // TAKEDOWN contract. MG deletion is impossible: the prune step
@@ -330,7 +332,7 @@ object HeavyHitters {
     // family straggler sweep: an admit racing the rebuild rides through
     def sweep(): Unit =
       (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        spark.read.parquet(s"$src/batch_id=$i")
+        Tables.parquet(spark, s"$src/batch_id=$i")
           .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
       }
     sweep()

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Bucketed inverted index (posting lists) for corpus-scale retrieval.
   *
   * A flat `term -> [doc_id...]` index breaks at web scale: a stop-word-like
@@ -258,7 +260,7 @@ object InvertedIndex {
 
   private def storeLookupBounded(spark: SparkSession, path: String,
       terms: Seq[String], bound: Option[Long]): DataFrame = {
-    val base0 = spark.read.parquet(s"$path/postings")
+    val base0 = Tables.parquet(spark, s"$path/postings")
       .filter(col("tok").isin(terms: _*))
     val base = bound.map(b => base0.filter(col("batch_id") <= b))
       .getOrElse(base0)
@@ -338,18 +340,18 @@ object InvertedIndex {
     // and it vanishes once compaction applies the set physically)
     val st = del match {
       case None =>
-        spark.read.parquet(s"$path/stats")
+        Tables.parquet(spark, s"$path/stats")
           .agg(sum(col("n_docs")).cast("long").as("n"),
             (sum(col("sum_dl")).cast("double") / sum(col("n_docs"))).as("avgdl"))
       case Some(d) =>
-        val full = spark.read.parquet(s"$path/stats")
+        val full = Tables.parquet(spark, s"$path/stats")
           .agg(sum(col("n_docs")).cast("long").as("n0"),
             sum(col("sum_dl")).cast("long").as("sd0"))
         // a doclens row is "gone" iff its batch falls under its doc's
         // mask bound — for a replaced doc that subtracts exactly the
         // old copy's row, so N and sum(dl) count the doc ONCE with the
         // new version's length
-        val gone = spark.read.parquet(s"$path/doclens")
+        val gone = Tables.parquet(spark, s"$path/doclens")
           .join(d, Seq("doc_id"))
           .filter(col("batch_id") <= col("del_hwm"))
           .agg(count(lit(1)).cast("long").as("dn"),
@@ -359,7 +361,7 @@ object InvertedIndex {
             ((col("sd0") - col("dsum")).cast("double") /
               (col("n0") - col("dn"))).as("avgdl"))
     }
-    val post = spark.read.parquet(s"$path/postings")
+    val post = Tables.parquet(spark, s"$path/postings")
       .filter(col("tok").isin(terms: _*))
     val tf0 = post.select(col("tok"), col("batch_id"),
         explode(col("postings")).as("p"))
@@ -425,7 +427,7 @@ object InvertedIndex {
   def phraseSearchStore(spark: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
     require(terms.size >= 2, "a phrase needs at least two terms")
-    val post0 = spark.read.parquet(s"$path/postings")
+    val post0 = Tables.parquet(spark, s"$path/postings")
       .filter(col("tok").isin(terms.distinct: _*))
       .select(col("tok"), col("batch_id"), explode(col("postings")).as("p"))
       .select(col("tok"), col("batch_id"), col("p.doc_id").as("doc_id"),
@@ -807,13 +809,13 @@ object InvertedIndex {
     // straggler admitted after the listing INTO the merge and then the
     // sweep would copy it AGAIN — duplicating its postings and stats
     def frag(table: String, is: Seq[Long]) =
-      spark.read.parquet(is.map(i => s"$src/$table/batch_id=$i"): _*)
+      Tables.parquet(spark, is.map(i => s"$src/$table/batch_id=$i"): _*)
     // same fragments, with the admission batch_id retained as a column
     // (basePath keeps partition discovery on explicit-path reads) — the
     // scoped-delete mask is a per-(doc, batch) predicate
     def fragB(table: String, is: Seq[Long]) =
-      spark.read.option("basePath", s"$src/$table")
-        .parquet(is.map(i => s"$src/$table/batch_id=$i"): _*)
+      Tables.parquet(spark, Map("basePath" -> s"$src/$table"),
+        is.map(i => s"$src/$table/batch_id=$i"): _*)
     // pending deletes listed alongside the data fragments are applied
     // PHYSICALLY here: the compacted generation holds no trace of the
     // deleted docs (postings entries removed, doclens rows dropped,
@@ -864,7 +866,7 @@ object InvertedIndex {
           .write.mode("overwrite").parquet(s"$dst/doclens/batch_id=$hwm")
         // stats recomputed from the surviving doclens rows — N, sum_dl
         // shrink exactly, so post-compaction BM25 needs no pending set
-        spark.read.parquet(s"$dst/doclens/batch_id=$hwm")
+        Tables.parquet(spark, s"$dst/doclens/batch_id=$hwm")
           .agg(count(lit(1)).cast("long").as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
           .write.mode("overwrite").parquet(s"$dst/stats/batch_id=$hwm")
@@ -911,7 +913,7 @@ object InvertedIndex {
                 .select(col("doc_id"), col("dl"))
                 .join(d, Seq("doc_id"), "left_anti")
                 .write.mode("overwrite").parquet(s"$dst/doclens/batch_id=$i")
-              spark.read.parquet(s"$dst/doclens/batch_id=$i")
+              Tables.parquet(spark, s"$dst/doclens/batch_id=$i")
                 .agg(count(lit(1)).cast("long").as("n_docs"),
                   coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
                 .write.mode("overwrite").parquet(s"$dst/stats/batch_id=$i")
@@ -919,7 +921,7 @@ object InvertedIndex {
         }
       (GenStore.listBatchIds(spark, s"$src/deletes").toSet -- delIds).toSeq.sorted
         .foreach { i =>
-          val straggler = spark.read.parquet(s"$src/deletes/batch_id=$i")
+          val straggler = Tables.parquet(spark, s"$src/deletes/batch_id=$i")
           // a SCOPED delete straggling into the compaction window is
           // refused: its hwm references batch ids this fold just sealed
           // into one fragment, so carrying it pending could unmask the

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Generational DISTINCT-KEY-SET store — the [[GenStore]] discipline
   * (q143 postings / q148 sketches / q149 frequencies / q150 coded
   * vectors) for the dedup admission family, whose persisted state is a
@@ -136,7 +138,7 @@ object KeySetStore {
     // the whole key-set scan (see InvertedIndex.pendingDeletes). The
     // needsCompaction policy keeps the set fraction-bounded.
     else Some(broadcast(
-      spark.read.parquet(s"$dir/deletes").drop("batch_id").distinct()))
+      Tables.parquet(spark, s"$dir/deletes").drop("batch_id").distinct()))
   }
 
   /** The key set through the pointer — every key column of every
@@ -163,7 +165,7 @@ object KeySetStore {
 
   private def keysOf(spark: SparkSession, dir: String,
       ids: Seq[Long]): DataFrame = {
-    val df = spark.read.parquet(ids.map(i => s"$dir/batch_id=$i"): _*)
+    val df = Tables.parquet(spark, ids.map(i => s"$dir/batch_id=$i"): _*)
     pendingDeletes(spark, dir) match {
       case None => df
       case Some(del) => df.join(del, df.columns.toSeq, "left_anti")
@@ -274,12 +276,12 @@ object KeySetStore {
     // listing into the merge and the sweep both — harmless HERE (the
     // key set is distinct, reads are semi-joins), but the family keeps
     // one discipline so the lossy stores can't inherit the wrong shape
-    val merged = spark.read.parquet(ids.map(i => s"$src/batch_id=$i"): _*).distinct()
+    val merged = Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*).distinct()
     val survivors =
       if (delIds.isEmpty) merged
       else merged.join(
         broadcast( // O(dead docs' keys) — see pendingDeletes
-          spark.read.parquet(delIds.map(i => s"$src/deletes/batch_id=$i"): _*)
+          Tables.parquet(spark, delIds.map(i => s"$src/deletes/batch_id=$i"): _*)
             .distinct()),
         merged.columns.toSeq, "left_anti")
     survivors.write.mode("overwrite").parquet(s"$dst/batch_id=$hwm")
@@ -295,14 +297,13 @@ object KeySetStore {
     // fragment of the generation, stragglers included.
     lazy val listedDel: Option[DataFrame] =
       if (delIds.isEmpty) None
-      else Some(spark.read
-        .parquet(delIds.map(i => s"$src/deletes/batch_id=$i"): _*).distinct())
+      else Some(Tables.parquet(spark, delIds.map(i => s"$src/deletes/batch_id=$i"): _*).distinct())
     def sweep(): Unit = {
       // subtract the FULL listing (an expired fragment is not a
       // straggler) and retain-filter what remains
       (GenStore.listBatchIds(spark, src).toSet -- allIds)
         .filter(retain).toSeq.sorted.foreach { i =>
-        val raw = spark.read.parquet(s"$src/batch_id=$i")
+        val raw = Tables.parquet(spark, s"$src/batch_id=$i")
         listedDel.map(d =>
             raw.join(broadcast(d), raw.columns.toSeq, "left_anti"))
           .getOrElse(raw)
@@ -310,7 +311,7 @@ object KeySetStore {
       }
       (GenStore.listBatchIds(spark, s"$src/deletes").toSet -- delIds).toSeq.sorted
         .foreach { i =>
-          spark.read.parquet(s"$src/deletes/batch_id=$i")
+          Tables.parquet(spark, s"$src/deletes/batch_id=$i")
             .write.mode("overwrite").parquet(s"$dst/deletes/batch_id=$i")
         }
     }

@@ -54,22 +54,23 @@ object Par {
   }
 
   /** [[both]] for N independent sections: thunks(0) runs on the calling
-    * thread, the rest on the pool; results keep input order.
+    * thread, the rest on the pool; results keep input order. Every
+    * section is awaited before any failure propagates; the first failing
+    * section in input order wins, unwrapped.
     */
   def all[A](thunks: Seq[() => A]): Seq[A] = {
     require(thunks.nonEmpty, "Par.all needs at least one section")
     val fs = thunks.tail.map(t =>
       pool.submit(new Callable[A] { def call(): A = t() }))
-    val r0 =
-      try thunks.head()
+    val r0: Either[Throwable, A] =
+      try Right(thunks.head()) catch { case t: Throwable => Left(t) }
+    val rs = r0 +: fs.map { f =>
+      try Right(f.get())
       catch {
-        case t: Throwable =>
-          fs.foreach(f => try f.get() catch { case _: Throwable => () })
-          throw t
+        case e: ExecutionException => Left(e.getCause)
+        case t: Throwable => Left(t)
       }
-    r0 +: fs.map { f =>
-      try f.get()
-      catch { case e: ExecutionException => throw e.getCause }
     }
+    rs.map(_.fold(t => throw t, identity))
   }
 }

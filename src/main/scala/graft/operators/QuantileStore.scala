@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Persisted, mergeable QUANTILE state — the third member of the
   * sketch-store family (distinct counts: [[SketchStore]] HLL;
   * frequencies: [[HeavyHitters]] Misra-Gries; order statistics: THIS).
@@ -119,7 +121,7 @@ object QuantileStore {
     */
   def mergedHistogram(spark: SparkSession, path: String,
       keyCols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy((keyCols :+ "bin").map(col): _*)
       .agg(sum(col("cnt")).as("cnt"))
 
@@ -342,7 +344,7 @@ object QuantileStore {
     // a directory-wide read would fold a straggler admitted after the
     // listing into the merge AND the sweep — double-counting its bins.
     // Fully retracted cells (sum 0) are dropped — the physical purge.
-    spark.read.parquet(ids.map(i => s"$src/batch_id=$i"): _*)
+    Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*)
       .groupBy((keyCols :+ "bin").map(col): _*)
       .agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") =!= 0L)
@@ -350,7 +352,7 @@ object QuantileStore {
       .parquet(s"$dst/batch_id=$hwm")
     // over-retraction fence: validate BEFORE sealing/publishing (one
     // scan of the nbins-x-keys-sized fragment, never the raw stream)
-    val negatives = spark.read.parquet(s"$dst/batch_id=$hwm")
+    val negatives = Tables.parquet(spark, s"$dst/batch_id=$hwm")
       .filter(col("cnt") < 0L).count()
     require(negatives == 0L,
       s"compaction of $src found $negatives (key, bin) cells with negative " +
@@ -359,7 +361,7 @@ object QuantileStore {
         "retraction fragment and retry")
     def sweep(): Unit =
       (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        spark.read.parquet(s"$src/batch_id=$i")
+        Tables.parquet(spark, s"$src/batch_id=$i")
           .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
       }
     sweep()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.VectorFunctions
 
 /** Approximate/exact nearest-neighbor search over embedding columns.
@@ -356,7 +357,7 @@ object Similarity {
     */
   def loadIndex(spark: SparkSession, path: String): Array[Array[Double]] =
     cachedArtifact(spark, path) {
-      val rows = spark.read.parquet(path).orderBy("cell").collect()
+      val rows = Tables.parquet(spark, path).orderBy("cell").collect()
       require(rows.nonEmpty, s"no index at $path")
       rows.zipWithIndex.foreach { case (r, i) =>
         require(r.getInt(0) == i, s"index at $path is missing cell $i")
@@ -616,7 +617,7 @@ object Similarity {
     */
   def loadPqIndex(spark: SparkSession, path: String): Array[Array[Array[Double]]] =
     cachedArtifact(spark, path) {
-      val rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
+      val rows = Tables.parquet(spark, path).orderBy("subspace", "code").collect()
       require(rows.nonEmpty, s"no PQ index at $path")
       val bySub = rows.groupBy(_.getInt(0))
       val m = bySub.keySet.max + 1
@@ -1177,7 +1178,7 @@ object Similarity {
     * regardless of corpus size.
     */
   def codedStoreDriftStats(spark: SparkSession, storePath: String): DataFrame =
-    spark.read.parquet(s"${storePath}_stats")
+    Tables.parquet(spark, s"${storePath}_stats")
       .select(col("batch_id"), col("n_vectors"), col("mean_err"), col("max_err"))
       .orderBy(col("batch_id"))
 
@@ -1198,7 +1199,7 @@ object Similarity {
       storePath: String,
       nprobe: Int = 4, shortlistFactor: Int = 8,
       broadcastQueries: Boolean = true, tier: String = "pq"): DataFrame =
-    searchCodedFrame(spark.read.parquet(storePath), queries,
+    searchCodedFrame(Tables.parquet(spark, storePath), queries,
       idCol, vecCol, k, cents, books,
       nprobe, shortlistFactor, broadcastQueries, tier)
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Persisted, mergeable sketch state — the incremental-pipeline shape of
   * approximate distinct counting. Each ingest batch reduces to one tiny
   * row of Apache DataSketches HLL bytes per key, written to its own
@@ -57,7 +59,7 @@ object SketchStore {
     */
   def mergedEstimates(
       spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).cast("long").as("n_batches"),
         hll_sketch_estimate(hll_union_agg(col("sketch"))).as("est"))
@@ -141,7 +143,7 @@ object SketchStore {
     val dst = GenStore.genDir(root, cur + 1)
     // merge the LISTED fragments explicitly (parquet listing is lazy):
     // a straggler admitted after the listing belongs to the sweep only
-    spark.read.parquet(ids.map(i => s"$src/batch_id=$i"): _*)
+    Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*)
       .groupBy(keyCols.map(col): _*)
       .agg(hll_union_agg(col("sketch")).as("sketch"),
         max(col("lgk")).as("lgk"))
@@ -149,7 +151,7 @@ object SketchStore {
       .parquet(s"$dst/batch_id=$hwm")
     def sweep(): Unit =
       (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        spark.read.parquet(s"$src/batch_id=$i")
+        Tables.parquet(spark, s"$src/batch_id=$i")
           .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
       }
     sweep()
@@ -274,7 +276,7 @@ object SketchStore {
     // them raw is correct; the read union folds them in)
     def sweep(): Unit =
       (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        spark.read.parquet(s"$src/batch_id=$i")
+        Tables.parquet(spark, s"$src/batch_id=$i")
           .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
       }
     sweep()
@@ -300,7 +302,7 @@ object SketchStore {
     val affected = broadcast(affectedKeys.select(keyCols.map(col): _*)
       .distinct())
     // unaffected keys: the ordinary compaction union, minus affected
-    val carried = spark.read.parquet(ids.map(i => s"$src/batch_id=$i"): _*)
+    val carried = Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*)
       .join(affected, keyCols, "left_anti")
       .groupBy(keyCols.map(col): _*)
       .agg(hll_union_agg(col("sketch")).as("sketch"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.VectorFunctions
 
 /** Generation-versioned coded-vector store: the REFIT ACTUATOR that
@@ -337,7 +338,7 @@ object VectorStore {
     // geometry must not be shaped around vectors the store will never
     // serve again
     val corpus = minusDeleted(spark, root, cur, primaryRows(
-      spark.read.parquet(codedDir(root, cur))
+      Tables.parquet(spark, codedDir(root, cur))
         .select("cid", "cv", "cell", "codes", "batch_id"),
       oldCents))
     val (nc, nb) = Similarity.fitIvfPq(corpus, "cid", "cv",
@@ -361,7 +362,7 @@ object VectorStore {
       fromGen: Long, toGen: Long, batchId: Long, nassign: Int = 2): Unit = {
     val (oldCents, _) = loadGenIndex(spark, root, fromGen)
     val (nc, nb) = loadGenIndex(spark, root, toGen)
-    val batch = spark.read.parquet(s"${codedDir(root, fromGen)}/batch_id=$batchId")
+    val batch = Tables.parquet(spark, s"${codedDir(root, fromGen)}/batch_id=$batchId")
     Similarity.appendCodedBatch(primaryRows(batch, oldCents), "cid", "cv",
       nc, nb, batchId, codedDir(root, toGen), nassign)
   }
@@ -393,7 +394,7 @@ object VectorStore {
     // compaction applies them physically
     def sweepDeletes(): Unit =
       listBatchIds(spark, deletesDir(root, toGen - 1)).foreach { i =>
-        spark.read.parquet(s"${deletesDir(root, toGen - 1)}/batch_id=$i")
+        Tables.parquet(spark, s"${deletesDir(root, toGen - 1)}/batch_id=$i")
           .write.mode("overwrite").parquet(s"${deletesDir(root, toGen)}/batch_id=$i")
       }
     sweepDeletes()
@@ -503,8 +504,8 @@ object VectorStore {
       // reads — the scoped-delete mask is a per-(vector, batch)
       // predicate: a replaced vector's live re-encode (admitted above
       // its mask bound) folds through, its old copies die
-      val frags = spark.read.option("basePath", src)
-        .parquet(srcIds.map(i => s"$src/batch_id=$i"): _*)
+      val frags = Tables.parquet(spark, Map("basePath" -> src),
+        srcIds.map(i => s"$src/batch_id=$i"): _*)
       val kept =
         if (applyDeletes) del.map(d => frags.join(d, Seq("cid"), "left")
             .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
@@ -523,10 +524,10 @@ object VectorStore {
     // stats: baseline copied bit-for-bit, the rest exactly-weighted
     val statsDst = s"${codedDir(root, ng)}_stats"
     val base = ids.min
-    spark.read.parquet(s"${src}_stats/batch_id=$base")
+    Tables.parquet(spark, s"${src}_stats/batch_id=$base")
       .write.mode("overwrite").parquet(s"$statsDst/batch_id=$base")
     if (ids.size > 1)
-      spark.read.parquet(s"${src}_stats").filter(col("batch_id") > base)
+      Tables.parquet(spark, s"${src}_stats").filter(col("batch_id") > base)
         .agg(sum(col("n_vectors")).as("n_vectors"),
           (sum(col("mean_err") * col("n_vectors")) / sum(col("n_vectors")))
             .as("mean_err"),
@@ -539,12 +540,12 @@ object VectorStore {
     def sweep(): Unit = {
       (listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
         mergeInto(i, Seq(i), applyDeletes = true)
-        spark.read.parquet(s"${src}_stats/batch_id=$i")
+        Tables.parquet(spark, s"${src}_stats/batch_id=$i")
           .write.mode("overwrite").parquet(s"$statsDst/batch_id=$i")
       }
       (listBatchIds(spark, deletesDir(root, cur)).toSet -- delIds).toSeq.sorted
         .foreach { i =>
-          val straggler = spark.read.parquet(
+          val straggler = Tables.parquet(spark,
             s"${deletesDir(root, cur)}/batch_id=$i")
           // a SCOPED delete straggling into the compaction window is
           // refused, never mis-carried: its hwm references batch ids
@@ -720,7 +721,7 @@ object VectorStore {
     else {
       val pending = GenStore.footerRowCount(spark, Seq(deletesDir(root, gen)))
       pending > 0 && {
-        val vectors = spark.read.parquet(s"${codedDir(root, gen)}_stats")
+        val vectors = Tables.parquet(spark, s"${codedDir(root, gen)}_stats")
           .agg(coalesce(sum(col("n_vectors")), lit(0L)))
           .head().getLong(0)
         pending.toDouble >= maxPendingFraction * vectors
@@ -744,7 +745,7 @@ object VectorStore {
       maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame = {
     val gen = currentGen(root)
     val frags = listBatchIds(spark, codedDir(root, gen)).size.toLong
-    val vectors = spark.read.parquet(s"${codedDir(root, gen)}_stats")
+    val vectors = Tables.parquet(spark, s"${codedDir(root, gen)}_stats")
       .agg(coalesce(sum(col("n_vectors")), lit(0L))).head().getLong(0)
     val pending = GenStore.footerRowCount(spark, Seq(deletesDir(root, gen)))
     GenStore.statusRow(spark, gen, frags, vectors, pending,
@@ -763,7 +764,7 @@ object VectorStore {
     val gen = currentGen(root)
     val (cents, _) = loadGenIndex(spark, root, gen)
     minusDeleted(spark, root, gen, primaryRows(
-      spark.read.parquet(codedDir(root, gen))
+      Tables.parquet(spark, codedDir(root, gen))
         .select("cid", "cv", "cell", "codes", "batch_id"),
       cents))
       .select(col("cid").as(idCol), col("cv").as(vecCol))
@@ -780,7 +781,7 @@ object VectorStore {
     // pending takedowns are excluded BEFORE the shortlist/top-k cut —
     // a narrow anti-join above the store scan (cell pruning intact)
     Similarity.searchCodedFrame(
-      minusDeleted(spark, root, gen, spark.read.parquet(codedDir(root, gen))),
+      minusDeleted(spark, root, gen, Tables.parquet(spark, codedDir(root, gen))),
       queries, idCol, vecCol, k, cents, books, nprobe, shortlistFactor,
       broadcastQueries, tier)
   }
@@ -826,7 +827,7 @@ object VectorStore {
     val ids = allowed.select(col(idCol).as("cid"))
     Similarity.searchCodedFrame(
       minusDeleted(spark, root, gen,
-        spark.read.parquet(codedDir(root, gen))
+        Tables.parquet(spark, codedDir(root, gen))
           .join(ids, Seq("cid"), "left_semi")),
       queries, idCol, vecCol, k, cents, books, nprobe, shortlistFactor,
       broadcastQueries, tier)
@@ -867,8 +868,8 @@ object VectorStore {
         // basePath keeps batch_id for the scoped mask; migrated
         // re-encodes keep their source batch ids, so one mask bound
         // applies identically on both sides of the transition
-        val coded0 = spark.read.option("basePath", codedDir(root, gen))
-          .parquet(ids.map(i => s"${codedDir(root, gen)}/batch_id=$i"): _*)
+        val coded0 = Tables.parquet(spark, Map("basePath" -> codedDir(root, gen)),
+          ids.map(i => s"${codedDir(root, gen)}/batch_id=$i"): _*)
         val coded = del.map(d => coded0.join(broadcast(d), Seq("cid"), "left")
             .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
             .drop("del_hwm"))

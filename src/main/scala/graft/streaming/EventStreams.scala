@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Tables
+
 /** Structured Streaming surface over the events table: windowed
   * aggregation with watermarking, and stateful gap sessionization whose
   * semantics mirror graft.operators.Sessionize (the batch form the oracle
@@ -213,7 +215,7 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val prevV = math.min(readCdcVersion(stateDir), batchId)
-        val prev = spark.read.parquet(s"$stateDir/v$prevV")
+        val prev = Tables.parquet(spark, s"$stateDir/v$prevV")
         val next = graft.operators.Components
           .incrementalComponents(prev, batch, srcCol, dstCol)
         next.write.mode("overwrite").parquet(s"$stateDir/v${batchId + 1}")
@@ -234,7 +236,7 @@ object EventStreams {
 
   /** The label snapshot readers see: whatever `_CURRENT` points at. */
   def currentCcLabels(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/v${readCdcVersion(stateDir)}")
+    Tables.parquet(spark, s"$stateDir/v${readCdcVersion(stateDir)}")
 
   /** Continuous sketch-store maintenance: every micro-batch appends its
     * per-key HLL sketches to the stats table via
@@ -346,7 +348,7 @@ object EventStreams {
           .filter(col("cos") >= threshold)
           .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
         val prevV = math.min(readCdcVersion(labelDir), batchId)
-        val prev = spark.read.parquet(s"$labelDir/v$prevV")
+        val prev = Tables.parquet(spark, s"$labelDir/v$prevV")
         val next = Components.withSingletonComponents(
           Components.incrementalComponents(prev, edges, "id_a", "id_b"),
           batch, idCol)
@@ -1013,8 +1015,8 @@ object EventStreams {
     val step =
       if (deltas.size <= 1) graft.operators.Merge.cdcApply _
       else graft.operators.Merge.cdcApplyJoined _
-    deltas.foldLeft(spark.read.parquet(base)) { case (df, (d, m)) =>
-      step(df, spark.read.parquet(d), m.keyCols, m.seqCol, m.opCol)
+    deltas.foldLeft(Tables.parquet(spark, base)) { case (df, (d, m)) =>
+      step(df, Tables.parquet(spark, d), m.keyCols, m.seqCol, m.opCol)
     }
   }
 
@@ -1087,7 +1089,7 @@ object EventStreams {
       // check against the chain base's schema (one footer read): the
       // batch must carry exactly payload + op, or the read-time replay
       // would fail far from the writer that caused it.
-      val payload = spark.read.parquet(
+      val payload = Tables.parquet(spark,
         resolveCdcChain(stateDir, cur)._1).columns.toSet
       require(changes.columns.toSet == payload + opCol,
         s"delta batch columns ${changes.columns.sorted.mkString(",")} " +
@@ -1216,7 +1218,7 @@ object EventStreams {
           "wiped and redone on retry")
     }
     if (verifyKeyCols.nonEmpty) {
-      val dup = spark.read.parquet(s"$dstDir/v0")
+      val dup = Tables.parquet(spark, s"$dstDir/v0")
         .groupBy(verifyKeyCols.map(org.apache.spark.sql.functions.col): _*)
         .count()
         .filter(org.apache.spark.sql.functions.col("count") > 1)
@@ -1359,7 +1361,7 @@ object EventStreams {
     val cur = readCdcVersion(stateDir)
     require(fromV >= 0 && fromV <= toV && toV <= cur,
       s"need 0 <= fromV <= toV <= current ($cur); got ($fromV, $toV)")
-    val cols = spark.read.parquet(resolveCdcChain(stateDir, fromV)._1)
+    val cols = Tables.parquet(spark, resolveCdcChain(stateDir, fromV)._1)
       .columns.toSeq
     require(keyCols.forall(cols.contains),
       s"key columns ${keyCols.mkString(",")} not all present in " +
@@ -1389,7 +1391,7 @@ object EventStreams {
     // survivor per (key, version): applyChanges' within-batch rule
     def perVersionOf(dirs: Seq[(String, Long)]): DataFrame = dirs.map {
         case (dir, ord) =>
-          spark.read.parquet(dir).withColumn("__v", lit(ord))
+          Tables.parquet(spark, dir).withColumn("__v", lit(ord))
       }.reduce(_.unionByName(_))
       .groupBy(keyCols.map(col) :+ col("__v"): _*)
       .agg(max_by(struct(col(opCol).as("op"), pStruct.as("p")),
@@ -1430,7 +1432,7 @@ object EventStreams {
           s"${keyCols.mkString(",")}, seq=$seqCol, op=$opCol)")
     }
     val wKeys = byKey.select(keyCols.map(col): _*)
-    val ckptNarrow = spark.read.parquet(ckptDir)
+    val ckptNarrow = Tables.parquet(spark, ckptDir)
       .select(keyCols.map(col) :+ col(seqCol).as("__ck_seq"): _*)
       .join(wKeys, keyCols, "left_semi")
     val ckInit = st(col("__ck_seq").isNotNull,
@@ -1589,8 +1591,8 @@ object EventStreams {
       .map(_.toSeq).getOrElse(Seq.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     val raw =
-      if (evFiles.nonEmpty) spark.read.parquet(eventsDir).schema
-      else spark.read.parquet(s"$schemaDir/events.parquet").schema
+      if (evFiles.nonEmpty) Tables.parquet(spark, eventsDir).schema
+      else Tables.parquet(spark, s"$schemaDir/events.parquet").schema
     val stream = spark.readStream.schema(StructType(raw))
       .option("maxFilesPerTrigger", 1)
       .parquet(eventsDir)

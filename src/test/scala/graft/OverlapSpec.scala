@@ -34,6 +34,24 @@ class OverlapSpec extends AnyFunSuite {
     assert(e2.getMessage == "pool side")
   }
 
+  test("Par.all: a failing pooled section still awaits its running partners") {
+    val partnerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Par.all(Seq(
+        () => (),
+        () => throw new IllegalStateException("pooled"),
+        () => { Thread.sleep(300); partnerDone.set(true) }))
+    }
+    assert(e.getMessage == "pooled")
+    assert(partnerDone.get(), "Par.all returned while a partner section was still running")
+    val first = intercept[IllegalArgumentException] {
+      Par.all(Seq(() => 1,
+        () => { Thread.sleep(100); throw new IllegalArgumentException("first") },
+        () => throw new IllegalStateException("second")))
+    }
+    assert(first.getMessage == "first", "the first failure in section order propagates")
+  }
+
   test("concurrent disjoint-root key-set stores == sequential twins (the q194 fleet shape)") {
     val docs = Tables.load(spark, TestSpark.sf0001, "documents")
       .select(col("doc_id"), col("text"))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,28 +60,36 @@ class ParquetFormatSpec extends AnyFunSuite {
     assert(agg.getLong(0) == 5L && agg.getLong(1) == 30L)
   }
 
-  test("truncated file fails cleanly, not wrong data (test_corruption.cpp:48-67,185-219)") {
-    val dir = tmpDir() + "/t"
-    spark.range(1000).toDF("v").coalesce(1).write.parquet(dir)
-    val file = Files.list(Paths.get(dir)).filter(_.toString.endsWith(".parquet")).findFirst().get()
-    val bytes = Files.readAllBytes(file)
-    Files.write(file, bytes.take(bytes.length / 2),
-      StandardOpenOption.TRUNCATE_EXISTING)
-    val ex = intercept[Exception] {
-      spark.read.parquet(dir).collect()
-    }
-    assert(ex != null)
-  }
+  // the corruption cases run through both openers: Spark's reader and
+  // Tables.parquet, which reads the footer on the driver
+  private val openers: Seq[(String, String => DataFrame)] = Seq(
+    "" -> (dir => spark.read.parquet(dir)),
+    " via Tables.parquet" -> (dir => Tables.parquet(spark, dir)))
 
-  test("bad magic fails cleanly (test_corruption.cpp:70-143)") {
-    val dir = tmpDir() + "/t"
-    spark.range(10).toDF("v").coalesce(1).write.parquet(dir)
-    val file = Files.list(Paths.get(dir)).filter(_.toString.endsWith(".parquet")).findFirst().get()
-    val bytes = Files.readAllBytes(file)
-    // clobber the trailing PAR1 footer magic
-    bytes(bytes.length - 1) = 'X'.toByte
-    Files.write(file, bytes, StandardOpenOption.TRUNCATE_EXISTING)
-    intercept[Exception] { spark.read.parquet(dir).collect() }
+  for ((via, open) <- openers) {
+    test(s"truncated file fails cleanly, not wrong data$via (test_corruption.cpp:48-67,185-219)") {
+      val dir = tmpDir() + "/t"
+      spark.range(1000).toDF("v").coalesce(1).write.parquet(dir)
+      val file = Files.list(Paths.get(dir)).filter(_.toString.endsWith(".parquet")).findFirst().get()
+      val bytes = Files.readAllBytes(file)
+      Files.write(file, bytes.take(bytes.length / 2),
+        StandardOpenOption.TRUNCATE_EXISTING)
+      val ex = intercept[Exception] {
+        open(dir).collect()
+      }
+      assert(ex != null)
+    }
+
+    test(s"bad magic fails cleanly$via (test_corruption.cpp:70-143)") {
+      val dir = tmpDir() + "/t"
+      spark.range(10).toDF("v").coalesce(1).write.parquet(dir)
+      val file = Files.list(Paths.get(dir)).filter(_.toString.endsWith(".parquet")).findFirst().get()
+      val bytes = Files.readAllBytes(file)
+      // clobber the trailing PAR1 footer magic
+      bytes(bytes.length - 1) = 'X'.toByte
+      Files.write(file, bytes, StandardOpenOption.TRUNCATE_EXISTING)
+      intercept[Exception] { open(dir).collect() }
+    }
   }
 
   test("wrong-schema read fails at analysis, not silently (corruption analogue)") {

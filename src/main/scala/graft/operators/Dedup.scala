@@ -753,19 +753,11 @@ object Dedup {
   def admitAgainstMinHashStore(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      path: String, portableKeys: Boolean = false): DataFrame = {
-    val keys = minHashBandKeys(docs, idCol, textCol, n, numHashes, bands, portableKeys)
-    val store = Tables.parquet(docs.sparkSession, path)
-      .select(col("band"), col("bucket")).distinct()
-    val hits = keys.join(store, Seq("band", "bucket"), "left_semi")
-      .groupBy(col("id")).agg(count(lit(1)).cast("long").as("hit_bands"))
-    docs.select(col(idCol).as("id"))
-      .join(hits, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("hit_bands"), lit(0L)).as("hit_bands"),
-        (coalesce(col("hit_bands"), lit(0L)) === 0L).as("admit"))
-      .orderBy(col("id"))
-  }
+      path: String, portableKeys: Boolean = false): DataFrame =
+    admitAgainstKeys(docs, idCol, textCol, n, numHashes, bands,
+      Tables.parquet(docs.sparkSession, path)
+        .select(col("band"), col("bucket")).distinct(),
+      portableKeys)
 
   // ---------------------------------------------------------------------
   // Generational forms of the two dedup admission stores, through

@@ -1,43 +1,61 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, max}
 
-/** The shared generational-store primitives of the admission-store
-  * family: an atomic `_CURRENT` generation pointer, per-generation
-  * directories, batch-fragment listing, and the `_COMPACTED`
-  * high-water seal. [[InvertedIndex]] (postings/doclens/stats) and
-  * [[SketchStore]] (per-key HLL rows) compact through this;
-  * [[VectorStore]] predates it with the same discipline (its
-  * generations also hold an index artifact, so its pointer logic stays
-  * local).
+import graft.Tables
+
+/** The generational-store protocol of the admission-store family —
+  * [[KeySetStore]], [[QuantileStore]], [[SketchStore]], [[HeavyHitters]],
+  * [[InvertedIndex]] and [[VectorStore]] all run it, and each supplies
+  * only how it writes a fragment, how it folds fragments, and how it
+  * reads. The protocol entry points:
+  *  - [[admit]]: the fenced admission every `admit*`/`retract*`/
+  *    `admitDelete*` front runs (quiesce pre-check, sealed-id or
+  *    delete-id check, write, post-write quiesce and pointer re-checks);
+  *  - [[publish]]: a compaction, expiry or rebuild — CAS on the
+  *    generation, list, fold, sweep stragglers, seal, move the pointer,
+  *    sweep again;
+  *  - [[mergeStores]] / [[mergeFlatStoresHooked]]: the federation merge;
+  *  - the policy: [[fragmentCount]], [[compactIfFragmented]],
+  *    [[needsCompaction]], [[compactIfNeeded]], [[maintenanceStatus]].
   *
   * Layout under one root:
   * {{{
   *   root/_CURRENT            # current generation number (text)
   *   root/gen=G/...           # one generation's store (layout is the
   *                            #   owner's; fragments are batch_id=N)
+  *   root/gen=G/deletes/...   # pending delete fragments, if any
   *   root/gen=G/_COMPACTED    # max batch id sealed by the compaction
   *                            #   that produced this generation
   * }}}
   *
-  * Pointer discipline: tmp-write + ATOMIC_MOVE — readers see the old
-  * generation or the new one, never a torn pointer. A generation
-  * directory above the pointer is unpublished work (crashed or
-  * in-flight compaction) that no reader may observe.
+  * Pointer discipline: [[atomicWrite]] — readers see the old generation
+  * or the new one, never a torn pointer. A generation directory above
+  * the pointer is unpublished work (crashed or in-flight compaction)
+  * that no reader may observe.
   */
 object GenStore {
 
   private def pointerPath(root: String) =
     java.nio.file.Paths.get(root, "_CURRENT")
 
-  def writePointer(root: String, gen: Long): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val tmp = java.nio.file.Paths.get(root, "_CURRENT.tmp")
-    java.nio.file.Files.write(tmp, gen.toString.getBytes)
-    java.nio.file.Files.move(tmp, pointerPath(root),
+  /** Replace the small file at `path` with `text` atomically: write a
+    * tmp file beside it, then rename it over the target. Readers see
+    * the old content or the new, never a torn file, and a crash leaves
+    * the old one.
+    */
+  def atomicWrite(path: java.nio.file.Path, text: String): Unit = {
+    java.nio.file.Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+    java.nio.file.Files.write(tmp, text.getBytes)
+    java.nio.file.Files.move(tmp, path,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  def writePointer(root: String, gen: Long): Unit =
+    atomicWrite(pointerPath(root), gen.toString)
 
   /** Create the store (generation 1, empty). Idempotent. */
   def init(root: String): Unit = writePointer(root, 1L)
@@ -258,6 +276,194 @@ object GenStore {
     graft.streaming.EventStreams.tombstoneDelete(
       java.nio.file.Paths.get(root))
 
+  // -------------------------------------------------------------------------
+  // ADMISSION and PUBLISH — the two halves every store shares. A front
+  // writes one fragment under the generation it read; a publish folds
+  // the listed fragments into the next generation, carries what landed
+  // after the listing, seals, and moves the pointer. Each fence below
+  // closes one interleaving of the two.
+  // -------------------------------------------------------------------------
+
+  /** `dir/table`, or `dir` itself for fragments directly under it. */
+  private def sub(dir: String, table: String): String =
+    if (table.isEmpty) dir else s"$dir/$table"
+
+  /** The FENCED ADMISSION every store front runs around its fragment
+    * write (`write` gets the generation directory of `gen`):
+    *  - refuse a quiesced store ([[requireNotQuiesced]]);
+    *  - data ids at or below the generation's compaction seal
+    *    ([[compactedHwm]]) are refused — they are INSIDE the compacted
+    *    fragment, and a per-batch overwrite would replace it; delete ids
+    *    (`deletes`) are refused at or below the merge-renumbered delete-id
+    *    mark ([[deletesHwm]]) instead — a delete replay is a semantic
+    *    no-op, but overwriting a renumbered id clobbers a carried takedown;
+    *  - after the write (and `midHook`, the race-test seam), the quiesce
+    *    mark is re-checked ([[requireStillNotQuiesced]]) and so is the
+    *    pointer: a publish that moved it in between may have listed the
+    *    generation before this fragment landed, so the admission throws
+    *    and the caller re-admits under the current generation, never
+    *    lands invisibly in a superseded one.
+    * `verb` names a data write in the errors ("admit of", "retraction"),
+    * `racedWith` what can move the pointer, `sealedWhy` why a sealed id
+    * is refused.
+    */
+  private[graft] def admit(root: String, gen: Long, batchId: Long,
+      deletes: Boolean = false, verb: String = "admit of",
+      racedWith: String = "a compaction",
+      sealedWhy: String = "replays of compacted batches are refused",
+      midHook: () => Unit = () => ())(write: String => Unit): Unit = {
+    requireNotQuiesced(root)
+    if (deletes) {
+      val dhwm = deletesHwm(root, gen)
+      require(batchId > dhwm,
+        s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
+          s"high-water mark $dhwm: a federation merge renumbered carried " +
+          "delete fragments into that id space — admitting under one of " +
+          "those ids would clobber a pending takedown; use a fresh id above " +
+          "the mark")
+    } else {
+      val hwm = compactedHwm(root, gen)
+      require(batchId > hwm,
+        s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
+          s"mark $hwm: compaction sealed it; $sealedWhy")
+    }
+    write(genDir(root, gen))
+    midHook()
+    val what = s"${if (deletes) "delete" else verb} batch_id=$batchId"
+    requireStillNotQuiesced(root, what)
+    val now = currentGen(root)
+    if (now != gen) throw new IllegalStateException(
+      s"$what raced $racedWith: wrote under gen=$gen but _CURRENT is now " +
+        s"gen=$now — re-admit under the current generation")
+  }
+
+  /** One publish's listing, handed to the store's fold: the source and
+    * target generation directories, every data fragment id listed
+    * (`all`), the ids the fold keeps (`ids`), and the pending delete ids
+    * listed with them.
+    */
+  private[graft] final case class Listing(src: String, dst: String,
+      all: Seq[Long], ids: Seq[Long], delIds: Seq[Long]) {
+    /** The seal: the FULL listing's high-water mark — an expired id must
+      * refuse replay (it would resurrect aged-out data) exactly like a
+      * folded one.
+      */
+    def hwm: Long = all.max
+
+    /** `dir/batch_id=i` for each listed `i` in `is`. */
+    def paths(dir: String, is: Seq[Long]): Seq[String] =
+      is.map(i => s"$dir/batch_id=$i")
+
+    /** The listed pending delete fragments. */
+    def delPaths: Seq[String] = paths(s"$src/deletes", delIds)
+
+    /** Rewrite fragment `i` of `table` into the target generation
+      * unchanged — the straggler carry of a fold that leaves later
+      * batches as they are.
+      */
+    def carry(spark: SparkSession, table: String = "")(i: Long): Unit =
+      Tables.parquet(spark, s"${sub(src, table)}/batch_id=$i")
+        .write.mode("overwrite").parquet(s"${sub(dst, table)}/batch_id=$i")
+  }
+
+  /** PUBLISH a new generation — the one sequence behind every
+    * compaction, expiry and scoped rebuild of the family:
+    *  1. compare-and-swap on `expectedGen`: a retry after success (or a
+    *     racing second publish) returns the current generation untouched;
+    *  2. list the data fragments of the store's `table` (and its pending
+    *     deletes); `retain` drops expired ids from the fold, `midHook`
+    *     runs after the listing (the race-test seam);
+    *  3. `fold` writes the next generation from the LISTED fragments —
+    *     never a directory-wide read, which would fold a straggler into
+    *     the merge and the sweep both — and returns its straggler carry;
+    *  4. sweep: data fragments admitted since the listing go through the
+    *     carry under their own ids, delete fragments ride along PENDING
+    *     (a scoped one is refused: its bound names batch ids this fold
+    *     just merged, so carrying it could unmask the copy it kills);
+    *  5. seal the next generation (`sealAt`, default the listing's
+    *     high-water mark) BEFORE the pointer moves, so a reader that sees
+    *     the generation also sees its retry fence; move the pointer;
+    *  6. sweep again — the list-to-publish window converged. An admission
+    *     landing later still fails its own pointer re-check ([[admit]]).
+    * Returns the published generation. Readers are generation-isolated
+    * throughout: nothing here writes the generation they read.
+    */
+  private[graft] def publish(spark: SparkSession, root: String,
+      expectedGen: Long, table: String = "",
+      retain: Long => Boolean = _ => true, midHook: () => Unit = () => (),
+      action: String = "compact", sealAt: Listing => Long = _.hwm)(
+      fold: Listing => Long => Unit): Long = {
+    val cur = currentGen(root)
+    if (cur != expectedGen) return cur
+    val src = genDir(root, cur)
+    val data = sub(src, table)
+    val all = listBatchIds(spark, data)
+    require(all.nonEmpty, s"nothing to $action under $src")
+    val ids = all.filter(retain)
+    require(ids.nonEmpty,
+      "retention would empty the store — at least one fragment must " +
+        "survive; to drop everything, initialize a fresh root instead")
+    val l = Listing(src, genDir(root, cur + 1), all, ids,
+      listBatchIds(spark, s"$src/deletes"))
+    midHook()
+    val carry = fold(l)
+    def sweep(): Unit = {
+      // subtract the FULL listing (an expired fragment is not a
+      // straggler) and retain-filter what remains
+      (listBatchIds(spark, data).toSet -- all).filter(retain).toSeq.sorted
+        .foreach(carry)
+      (listBatchIds(spark, s"$src/deletes").toSet -- l.delIds).toSeq.sorted
+        .foreach { i =>
+          val straggler = Tables.parquet(spark, s"$src/deletes/batch_id=$i")
+          if (hasScoped(straggler)) throw new IllegalStateException(
+            s"scoped (hwm) delete batch_id=$i landed during a compaction " +
+              s"of $root: scoped deletes reference pre-fold admission " +
+              "batch ids and cannot be carried pending across the fold — " +
+              "the upsert front must serialize its ticks against " +
+              "compaction (re-run the tick against the new generation)")
+          straggler.write.mode("overwrite")
+            .parquet(s"${l.dst}/deletes/batch_id=$i")
+        }
+    }
+    sweep()
+    seal(root, cur + 1, sealAt(l))
+    writePointer(root, cur + 1)
+    sweep()
+    cur + 1
+  }
+
+  /** True when a delete frame holds an hwm-SCOPED row (the ordered
+    * delete of [[InvertedIndex.admitReplaceBatch]]): its mask bound
+    * names admission batch ids of one generation, which a fold or a
+    * merge renumbers. Takedowns (no `hwm` column, or hwm = infinity)
+    * are renumber-invariant.
+    */
+  private[graft] def hasScoped(dels: DataFrame): Boolean =
+    dels.columns.contains("hwm") &&
+      dels.filter(col("hwm") =!= Long.MaxValue).limit(1).count() > 0
+
+  /** Pending deletes as one `(idCol, del_hwm)` row per deleted id with
+    * the HIGHEST mask bound across its delete rows (an id has at most
+    * one live copy, so the max bound is the one that matters); rows
+    * written before the hwm column existed are unbounded.
+    */
+  private[graft] def deleteMask(raw: DataFrame, idCol: String): DataFrame = {
+    val hwmCol = if (raw.columns.contains("hwm"))
+      coalesce(col("hwm"), lit(Long.MaxValue)) else lit(Long.MaxValue)
+    raw.groupBy(col(idCol)).agg(max(hwmCol).as("del_hwm"))
+  }
+
+  /** Keep the rows of `cands` (which carry the admission `batch_id`)
+    * that survive a [[deleteMask]]: a row dies when a delete of its id
+    * has `del_hwm >= batch_id`. With takedowns only this is a plain
+    * anti-join.
+    */
+  private[graft] def maskLive(cands: DataFrame, del: DataFrame,
+      idCol: String): DataFrame =
+    cands.join(del, Seq(idCol), "left")
+      .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
+      .drop("del_hwm")
+
   /** FILE-LEVEL manifest of a directory tree: every file's (relative
     * path, length, modification time), sorted — the movement fence's
     * observation unit. A batch-id SET compare would miss an in-flight
@@ -382,34 +588,81 @@ object GenStore {
 
   /** FEDERATION MERGE for FLAT-fragment stores (fragments directly
     * under the generation directory; an optional `deletes/` table
-    * beside them) — the shared machinery behind [[KeySetStore
-    * .mergeStores]] and the mergeable-family wrappers (sketch /
-    * frequency / quantile, whose reads union fragments by algebra, so
-    * a merge IS just the fragments side by side): copy each source's
-    * current-generation fragments under fresh sequential ids — a
-    * BYTE-LEVEL parallel copy ([[copyFragments]]): the fragments are
-    * immutable sealed parquet, so no decode, no Spark job, no shuffle
-    * — carry delete fragments, seal the occupied data ids AND the
-    * renumbered delete-id space ([[deletesHwm]]). Caller contract:
-    * compatible fragment schemas (same key columns / sketch parameters
-    * — the algebra's own merge precondition) and a `dstRoot` that is
-    * fresh or holds only a crashed previous attempt at this merge (the
-    * seal is written last, so an unsealed target is wiped and redone —
-    * merge is crash-retryable).
+    * beside them) — the mergeable-family wrappers (sketch / frequency /
+    * quantile, whose reads union fragments by algebra, so a merge IS
+    * just the fragments side by side). See [[mergeFlatStoresHooked]].
     */
   private[graft] def mergeFlatStores(spark: SparkSession,
       srcRoots: Seq[String], dstRoot: String): Long =
     mergeFlatStoresHooked(spark, srcRoots, dstRoot, () => ())
 
-  /** [[mergeFlatStores]] with a hook run between the fragment listing
-    * and the copy — the race-test seam for the live-merge window (the
-    * [[InvertedIndex.compactStoreHooked]] pattern): a fragment landing
-    * inside the hook must make the merge REFUSE to seal
+  /** FEDERATION MERGE of stores with pending deletes and a fold — the
+    * scale-out ingestion pattern ([[InvertedIndex.mergeStores]],
+    * [[VectorStore.mergeStores]], [[KeySetStore.mergeStores]]): K
+    * independent builders, one serving store at the end.
+    *
+    * `compactFirst` folds each source that holds more than one data
+    * fragment or any pending delete before the copy — the
+    * COMPACT-BEFORE-QUIESCE economics (SCALE.md's K-sweep: K builders'
+    * uncompacted fragments hold ~K× the bytes of one folded store), so
+    * the copy moves near-minimal bytes and the merged store starts
+    * compacted. Legal on quiesced sources: the quiesce fence guards
+    * admission fronts only.
+    *
+    * `scopedFence` refuses a source with pending hwm-SCOPED deletes
+    * ([[hasScoped]]): their bounds reference source-local admission
+    * batch ids, which the merge renumbers. Compacting the source first
+    * applies the mask and clears the pending set.
+    */
+  private[graft] def mergeStores(spark: SparkSession, srcRoots: Seq[String],
+      dstRoot: String, tables: Seq[String],
+      compactFirst: Option[(String, Long) => Long], scopedFence: Boolean,
+      prepare: () => Unit = () => ()): Long = {
+    require(srcRoots.size >= 2, "mergeStores needs at least two sources")
+    compactFirst.foreach { compact => srcRoots.foreach { src =>
+      val g = currentGen(src)
+      val sdir = genDir(src, g)
+      if (listBatchIds(spark, sub(sdir, tables.head)).size > 1 ||
+        listBatchIds(spark, s"$sdir/deletes").nonEmpty)
+        compact(src, g)
+    }}
+    if (scopedFence) srcRoots.foreach { src =>
+      val sdir = genDir(src, currentGen(src))
+      val delIds = listBatchIds(spark, s"$sdir/deletes")
+      if (delIds.nonEmpty && hasScoped(spark.read.option("mergeSchema", "true")
+          .parquet(delIds.map(i => s"$sdir/deletes/batch_id=$i"): _*)))
+        throw new IllegalStateException(
+          s"source $src has pending SCOPED (hwm) deletes: their " +
+            "high-water marks reference source-local admission batch " +
+            "ids, which this merge renumbers — compact the source " +
+            "first (or pass compactFirst = true)")
+    }
+    mergeFlatStoresHooked(spark, srcRoots, dstRoot, () => (), tables, prepare)
+  }
+
+  /** The federation-merge copy: each source's current-generation
+    * fragments copy under fresh sequential ids — every table one batch
+    * id spans (`tables`; "" = fragments directly under the generation
+    * directory) moves together under the new id — as a BYTE-LEVEL
+    * parallel copy ([[copyFragments]]): the fragments are immutable
+    * sealed parquet, so no decode, no Spark job, no shuffle. Pending
+    * delete fragments ride along under renumbered ids; the occupied data
+    * ids AND the renumbered delete-id space ([[deletesHwm]]) are sealed.
+    * `prepare` runs once the target generation is open (a store that
+    * keeps an index artifact in the generation writes it there).
+    * Caller contract: compatible fragment schemas and a `dstRoot` that
+    * is fresh or holds only a crashed previous attempt at this merge
+    * (the seal is written last, so an unsealed target is wiped and
+    * redone — merge is crash-retryable, [[mergeOpen]]).
+    *
+    * `midHook` runs between the fragment listing and the copy — the
+    * race-test seam for the live-merge window: a fragment landing
+    * inside it must make the merge REFUSE to seal
     * ([[requireSourcesUnmoved]]), never publish a store missing it.
     */
   private[graft] def mergeFlatStoresHooked(spark: SparkSession,
-      srcRoots: Seq[String], dstRoot: String,
-      midHook: () => Unit): Long = {
+      srcRoots: Seq[String], dstRoot: String, midHook: () => Unit,
+      tables: Seq[String] = Seq(""), prepare: () => Unit = () => ()): Long = {
     require(srcRoots.size >= 2, "mergeStores needs at least two sources")
     initIfAbsent(dstRoot)
     require(currentGen(dstRoot) == 1L && compactedHwm(dstRoot, 1L) == -1L,
@@ -418,18 +671,22 @@ object GenStore {
     val dst = genDir(dstRoot, 1L)
     mergeOpen(spark, dstRoot, 1L,
       occupied = java.nio.file.Files.exists(java.nio.file.Paths.get(dst)))
+    prepare()
     var next = 0L
     var delNext = 0L
     val observed = scala.collection.mutable.ArrayBuffer
       .empty[(String, Seq[(String, Long, Long)])]
     val pairs = srcRoots.flatMap { src =>
       val sdir = genDir(src, currentGen(src))
-      val ids = listBatchIds(spark, sdir)
+      val ids = listBatchIds(spark, sub(sdir, tables.head))
       val delIds = listBatchIds(spark, s"$sdir/deletes")
+      // one file-level manifest per source generation covers every
+      // table AND the deletes — including in-place rewrites
       observed += ((sdir, listManifest(spark, sdir)))
-      ids.map { i =>
-        val p = (s"$sdir/batch_id=$i", s"$dst/batch_id=$next")
-        next += 1; p
+      ids.flatMap { i =>
+        val ps = tables.map(t =>
+          (s"${sub(sdir, t)}/batch_id=$i", s"${sub(dst, t)}/batch_id=$next"))
+        next += 1; ps
       } ++ delIds.map { i =>
         val p = (s"$sdir/deletes/batch_id=$i",
           s"$dst/deletes/batch_id=$delNext")
@@ -463,16 +720,12 @@ object GenStore {
     }
   }
 
-  /** Retention for superseded generations: tombstone-renamed before
-    * deletion ([[graft.streaming.EventStreams.tombstoneDelete]]), so a
-    * crash mid-vacuum or a racing reader can never observe a partial
-    * generation that still resolves. Returns the dropped generations.
-    */
-  def vacuum(root: String, keepLast: Int): Seq[Long] =
-    vacuumExcept(root, keepLast, Set.empty)
-
-  /** [[vacuum]] with an exclusion set: generations in `keep` survive
-    * even when older than the retention window — the enforcement hook
+  /** Retention for superseded generations: drop every published
+    * generation older than the newest `keepLast`, except those in
+    * `keep`. Each is tombstone-renamed before deletion
+    * ([[graft.streaming.EventStreams.tombstoneDelete]]), so a crash
+    * mid-vacuum or a racing reader can never observe a partial
+    * generation that still resolves. `keep` is the enforcement hook
     * for cross-store pins ([[Manifest.vacuumStore]] passes the
     * generations that retained manifest versions still pin, turning
     * [[Manifest.retainedPins]] from an advisory audit into an invariant
@@ -488,18 +741,100 @@ object GenStore {
     drop
   }
 
-  /** Assemble one maintenance-status row — the shared shape of the
-    * family's `maintenanceStatus` dashboards (store-specific only in
-    * how data/pending cardinalities are counted).
+  // -------------------------------------------------------------------------
+  // COMPACTION POLICY — one trigger and one dashboard for the family.
+  // A store states its [[Layout]]; every policy read is a listing plus
+  // parquet-footer counts ([[footerRowCount]]), so a maintenance loop
+  // can afford it every batch.
+  // -------------------------------------------------------------------------
+
+  /** How a store lays out one generation: `tables` are the
+    * sub-directories one batch id spans (the first holds the fragments
+    * the policy counts; "" = fragments directly under the generation
+    * directory), and `dataRows` counts a generation directory's data
+    * rows. Pending rows are the footer count of its `deletes/` table.
     */
-  private[graft] def statusRow(spark: SparkSession, gen: Long,
-      fragments: Long, dataRows: Long, pendingRows: Long,
-      needs: Boolean): org.apache.spark.sql.DataFrame = {
+  private[graft] final case class Layout(tables: Seq[String],
+      dataRows: (SparkSession, String) => Long) {
+    def table: String = tables.head
+    def dataDir(dir: String): String = sub(dir, table)
+  }
+
+  /** Fragments directly under the generation directory, data rows
+    * counted from their footers.
+    */
+  private[graft] val Flat: Layout = Layout(Seq(""), (spark, dir) =>
+    footerRowCount(spark, listBatchIds(spark, dir).map(i => s"$dir/batch_id=$i")))
+
+  /** Fragments of the current generation — the quantity compaction
+    * exists to bound.
+    */
+  private[graft] def fragmentCount(spark: SparkSession, root: String,
+      layout: Layout): Long =
+    listBatchIds(spark, layout.dataDir(genDir(root, currentGen(root)))).size.toLong
+
+  /** The continuous-compaction policy: run `compact` on the current
+    * generation once `maxFragments` accumulate (the dial that bounds
+    * steady-state read amplification). Returns the new generation when
+    * it fired.
+    */
+  private[graft] def compactIfFragmented(spark: SparkSession, root: String,
+      layout: Layout, maxFragments: Int)(compact: Long => Long): Option[Long] = {
+    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
+    if (fragmentCount(spark, root, layout) < maxFragments) None
+    else Some(compact(currentGen(root)))
+  }
+
+  /** The COMPACTION-POLICY predicate: true when the fragment count
+    * reached `maxFragments` (read amplification) OR the pending-delete
+    * rows grew past `maxPendingFraction` of the data rows (every read
+    * pays that mask until a compaction folds it away — the takedown
+    * serving window, bounded by CONTRACT once this predicate drives the
+    * maintenance loop). A store with pending deletes but no data rows
+    * compacts; one with no fragments does not (deletes alone can wait).
+    */
+  private[graft] def needsCompaction(spark: SparkSession, root: String,
+      layout: Layout, maxFragments: Int, maxPendingFraction: Double): Boolean = {
+    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
+    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
+    val dir = genDir(root, currentGen(root))
+    val frags = listBatchIds(spark, layout.dataDir(dir)).size
+    if (frags == 0) false
+    else if (frags >= maxFragments) true
+    else {
+      val pending = footerRowCount(spark, Seq(s"$dir/deletes"))
+      pending > 0 &&
+        pending.toDouble >= maxPendingFraction * layout.dataRows(spark, dir)
+    }
+  }
+
+  /** Run `compact` when [[needsCompaction]] says so — the
+    * maintenance-loop form that subsumes [[compactIfFragmented]].
+    */
+  private[graft] def compactIfNeeded(spark: SparkSession, root: String,
+      layout: Layout, maxFragments: Int, maxPendingFraction: Double)(
+      compact: Long => Long): Option[Long] =
+    if (!needsCompaction(spark, root, layout, maxFragments, maxPendingFraction)) None
+    else Some(compact(currentGen(root)))
+
+  /** The operational dashboard row the maintenance loop reads: one row
+    * of (generation, fragments, data_rows, pending_rows,
+    * pending_fraction, needs_compaction) for the current generation —
+    * the exact inputs [[needsCompaction]] evaluates, exposed so a
+    * scheduler (or a human) can see WHY a tick will or won't fire.
+    */
+  private[graft] def maintenanceStatus(spark: SparkSession, root: String,
+      layout: Layout, maxFragments: Int, maxPendingFraction: Double): DataFrame = {
     import spark.implicits._
-    Seq((gen, fragments, dataRows, pendingRows,
+    val gen = currentGen(root)
+    val dir = genDir(root, gen)
+    val frags = listBatchIds(spark, layout.dataDir(dir)).size.toLong
+    val dataRows = layout.dataRows(spark, dir)
+    val pendingRows = footerRowCount(spark, Seq(s"$dir/deletes"))
+    Seq((gen, frags, dataRows, pendingRows,
       if (dataRows == 0) (if (pendingRows > 0) 1.0 else 0.0)
       else pendingRows.toDouble / dataRows,
-      needs))
+      needsCompaction(spark, root, layout, maxFragments, maxPendingFraction)))
       .toDF("generation", "fragments", "data_rows", "pending_rows",
         "pending_fraction", "needs_compaction")
   }

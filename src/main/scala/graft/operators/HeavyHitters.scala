@@ -153,28 +153,16 @@ object HeavyHitters {
 
   /** Fragments of the current generation. */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      GenStore.genDir(root, GenStore.currentGen(root))).size.toLong
+    GenStore.fragmentCount(spark, root, GenStore.Flat)
 
   /** Admit one batch under the CURRENT generation — [[appendBatch]]
-    * routed through the pointer, with the sealed-id and pointer-recheck
-    * fences of the store-lifecycle family.
+    * routed through the pointer and the family's fences
+    * ([[GenStore.admit]]).
     */
   def admitBatch(spark: SparkSession, batch: DataFrame, keyCol: String,
-      m: Int, batchId: Long, root: String): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are refused")
-    appendBatch(batch, keyCol, m, batchId, GenStore.genDir(root, gen))
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      m: Int, batchId: Long, root: String): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+      appendBatch(batch, keyCol, m, batchId, _))
 
   /** COMPACT the current generation: [[mergeSummaries]] over every
     * fragment, materialized as a single sealed `batch_id=<hwm>` fragment
@@ -182,10 +170,8 @@ object HeavyHitters {
     * retry no-ops). The compacted summary keeps `m` entries, so the
     * survival/bounds guarantees above hold for all later merges with
     * appended batches. Straggler sweep as the family
-    * ([[KeySetStore.compactStore]]): batches admitted since the
-    * fragment listing are re-listed and copied through unmerged, once
-    * before the seal and once after the pointer move — an admit racing
-    * the compaction either lands or throws, never silently vanishes.
+    * ([[GenStore.publish]]): an admit racing the compaction either lands
+    * or throws, never silently vanishes.
     */
   def compactStore(spark: SparkSession, root: String, expectedGen: Long,
       m: Int): Long =
@@ -195,53 +181,28 @@ object HeavyHitters {
     * the merge — the test seam for the straggler-sweep race window.
     */
   private[graft] def compactStoreHooked(spark: SparkSession, root: String,
-      expectedGen: Long, m: Int, midHook: () => Unit): Long = {
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val src = GenStore.genDir(root, cur)
-    val ids = GenStore.listBatchIds(spark, src)
-    require(ids.nonEmpty, s"nothing to compact under $src")
-    val hwm = ids.max
-    midHook()
-    val dst = GenStore.genDir(root, cur + 1)
-    // merge the LISTED fragments explicitly (parquet listing is lazy):
-    // a directory-wide read would fold a straggler admitted after the
-    // listing into the merge AND the sweep — double-counting its
-    // estimates, which breaks est <= exact
-    mergeSummaries(Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*), m)
-      .write.mode("overwrite")
-      .parquet(s"$dst/batch_id=$hwm")
-    def sweep(): Unit =
-      (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        Tables.parquet(spark, s"$src/batch_id=$i")
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
-      }
-    sweep()
-    GenStore.seal(root, cur + 1, hwm)
-    GenStore.writePointer(root, cur + 1)
-    sweep()
-    cur + 1
-  }
+      expectedGen: Long, m: Int, midHook: () => Unit): Long =
+    GenStore.publish(spark, root, expectedGen, midHook = midHook) { l =>
+      mergeSummaries(Tables.parquet(spark, l.paths(l.src, l.ids): _*), m)
+        .write.mode("overwrite").parquet(s"${l.dst}/batch_id=${l.hwm}")
+      l.carry(spark)
+    }
 
-  /** The continuous-compaction policy ([[InvertedIndex
-    * .compactIfFragmented]]'s shape): compact once `maxFragments`
-    * accumulate. Returns the new generation when it fired.
+  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
+    * compact once `maxFragments` accumulate. Returns the new generation
+    * when it fired.
     */
   def compactIfFragmented(spark: SparkSession, root: String, m: Int,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, GenStore.currentGen(root), m))
-  }
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
+      compactStore(spark, root, _, m))
 
   /** The family's compaction-policy predicate, fragment leg only (MG
     * summaries have no delete surface — the TAKEDOWN contract below).
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    fragmentCount(spark, root) >= maxFragments
-  }
+      maxFragments: Int = 16): Boolean =
+    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** FEDERATION MERGE ([[GenStore.mergeFlatStores]]): K partitions
     * summarize independently, merge by fragment copies — the MG merge
@@ -252,19 +213,13 @@ object HeavyHitters {
       dstRoot: String): Long =
     GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
-    * shape): data cardinality is the summary row count (<= m per
-    * fragment, footer-read); the pending side is structurally zero.
+  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
+    * data cardinality is the summary row count (<= m per fragment,
+    * footer-read); the pending side is structurally zero.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16): DataFrame = {
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    val rows = GenStore.footerRowCount(spark, ids.map(i => s"$dir/batch_id=$i"))
-    GenStore.statusRow(spark, gen, ids.size.toLong, rows, 0L,
-      needsCompaction(spark, root, maxFragments))
-  }
+      maxFragments: Int = 16): DataFrame =
+    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** [[mergeSummaries]] through the pointer: the heavy hitters of the
     * union of everything admitted, from (compacted fragment + appended
@@ -308,43 +263,29 @@ object HeavyHitters {
   def rebuildBatches(spark: SparkSession, root: String, expectedGen: Long,
       keyCol: String, m: Int,
       survivorsByBatch: Seq[(Long, DataFrame)]): Long = {
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val src = GenStore.genDir(root, cur)
-    val ids = GenStore.listBatchIds(spark, src)
-    require(ids.nonEmpty, s"nothing to rebuild under $src")
     val affected = survivorsByBatch.map(_._1)
-    val unknown = affected.filterNot(ids.contains)
-    require(unknown.isEmpty,
-      s"rebuildBatches names fragments the store does not hold: " +
-        unknown.sorted.mkString(", "))
-    val dst = GenStore.genDir(root, cur + 1)
-    // rebuilt fragments from the surviving slices, under their own ids
-    survivorsByBatch.foreach { case (i, survivors) =>
-      appendBatch(survivors, keyCol, m, i, dst)
-    }
-    // carry every unaffected listed fragment bit-for-bit — LITERALLY:
-    // a byte-level parallel copy of the immutable summary fragments
-    // (GenStore.copyFragments), no decode, no Spark job per fragment
-    GenStore.copyFragments(spark,
-      (ids.toSet -- affected.toSet).toSeq.sorted.map(i =>
-        (s"$src/batch_id=$i", s"$dst/batch_id=$i")))
-    // family straggler sweep: an admit racing the rebuild rides through
-    def sweep(): Unit =
-      (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        Tables.parquet(spark, s"$src/batch_id=$i")
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
+    // the seal covers the REBUILT ids (and whatever the source
+    // generation already sealed): an admission replay of a rebuilt batch
+    // id would overwrite the post-takedown summary with the pre-takedown
+    // one — the exact overwrite the seal exists to refuse
+    GenStore.publish(spark, root, expectedGen, action = "rebuild",
+        sealAt = _ => (GenStore.compactedHwm(root, expectedGen) +: affected).max) { l =>
+      val unknown = affected.filterNot(l.ids.contains)
+      require(unknown.isEmpty,
+        s"rebuildBatches names fragments the store does not hold: " +
+          unknown.sorted.mkString(", "))
+      // rebuilt fragments from the surviving slices, under their own ids
+      survivorsByBatch.foreach { case (i, survivors) =>
+        appendBatch(survivors, keyCol, m, i, l.dst)
       }
-    sweep()
-    // seal covers the REBUILT ids (and whatever the source generation
-    // already sealed): an admission replay of a rebuilt batch id would
-    // overwrite the post-takedown summary with the pre-takedown one —
-    // the exact overwrite the seal exists to refuse
-    GenStore.seal(root, cur + 1,
-      (GenStore.compactedHwm(root, cur) +: affected).max)
-    GenStore.writePointer(root, cur + 1)
-    sweep()
-    cur + 1
+      // carry every unaffected listed fragment bit-for-bit — LITERALLY:
+      // a byte-level parallel copy of the immutable summary fragments
+      // (GenStore.copyFragments), no decode, no Spark job per fragment
+      GenStore.copyFragments(spark,
+        (l.ids.toSet -- affected.toSet).toSeq.sorted.map(i =>
+          (s"${l.src}/batch_id=$i", s"${l.dst}/batch_id=$i")))
+      l.carry(spark)
+    }
   }
 
   /** Folds pre-counted `(key, est)` rows through the MG merge algebra —

@@ -201,24 +201,17 @@ object InvertedIndex {
       // partition prune on the batch_id directory key)
       val raw = bound.map(b => raw0.filter(col("batch_id") <= b))
         .getOrElse(raw0)
-      val hwmCol = if (raw.columns.contains("hwm"))
-        coalesce(col("hwm"), lit(Long.MaxValue)) else lit(Long.MaxValue)
-      Some(broadcast(raw.groupBy(col("doc_id"))
-        .agg(max(hwmCol).as("del_hwm"))))
+      Some(broadcast(GenStore.deleteMask(raw, "doc_id")))
     }
   }
 
   /** Restrict a candidate frame (carrying the admission `batch_id`
-    * partition column) to rows that survive the scoped-delete mask:
-    * keep a row unless some delete row for its doc has `del_hwm >=
-    * batch_id`. With unbounded (takedown) deletes this is exactly the
-    * old anti-join; the broadcast shape is unchanged (left join against
-    * the same O(dead ids) broadcast set, then a filter).
+    * partition column) to rows that survive the scoped-delete mask
+    * ([[GenStore.maskLive]]) — a left join against the O(dead ids)
+    * broadcast set, then a filter.
     */
   private def maskLive(cands: DataFrame, del: DataFrame): DataFrame =
-    cands.join(del, Seq("doc_id"), "left")
-      .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
-      .drop("del_hwm")
+    GenStore.maskLive(cands, del, "doc_id")
 
   /** Term lookup across EVERY admitted batch, equal to [[lookup]] over a
     * fresh [[build]] of the union corpus — in ONE aggregation (the r9
@@ -492,12 +485,20 @@ object InvertedIndex {
   /** One generation's directory — the `path` the flat functions take. */
   def genDir(root: String, gen: Long): String = GenStore.genDir(root, gen)
 
+  /** The index store's generation layout: postings, doclens and stats
+    * fragments share each batch id; the data rows are the doclens rows
+    * (one per indexed doc), counted from footers.
+    */
+  private val layout = GenStore.Layout(Seq("postings", "doclens", "stats"),
+    (spark, dir) => GenStore.footerRowCount(spark,
+      GenStore.listBatchIds(spark, s"$dir/doclens")
+        .map(i => s"$dir/doclens/batch_id=$i")))
+
   /** Fragment (batch-directory) count of the current generation's
     * postings table — the quantity compaction exists to bound.
     */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      genDir(root, currentGen(root)) + "/postings").size.toLong
+    GenStore.fragmentCount(spark, root, layout)
 
   /** The compacted high-water mark of a generation ([[GenStore
     * .compactedHwm]]): -1 for a never-compacted generation; batch ids
@@ -507,13 +508,12 @@ object InvertedIndex {
     GenStore.compactedHwm(root, gen)
 
   /** Admit one tokenized batch under the CURRENT generation (the
-    * [[appendBatch]] pass routed through the pointer), with two fences:
-    * batch ids at or below the generation's compacted high-water mark
-    * are refused (they are INSIDE the compacted fragment — a replay
-    * would duplicate their postings), and the pointer is re-read after
-    * the write so an admission racing a compaction fails loudly instead
-    * of landing invisibly in a superseded generation (the
-    * [[VectorStore.admit]] discipline).
+    * [[appendBatch]] pass routed through the pointer) through the
+    * family's fences ([[GenStore.admit]]): batch ids at or below the
+    * generation's compacted high-water mark are refused (they are INSIDE
+    * the compacted fragment — a replay would duplicate their postings),
+    * and an admission racing a compaction fails loudly instead of
+    * landing invisibly in a superseded generation.
     */
   def admitBatch(spark: SparkSession, docs: DataFrame, idCol: String,
       toksCol: String, bucketSize: Long, batchId: Long, root: String): Unit =
@@ -525,20 +525,9 @@ object InvertedIndex {
     */
   private[graft] def admitBatchAt(spark: SparkSession, docs: DataFrame,
       idCol: String, toksCol: String, bucketSize: Long, batchId: Long,
-      root: String, gen: Long, midHook: () => Unit = () => ()): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val hwm = compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are refused")
-    appendBatch(docs, idCol, toksCol, bucketSize, batchId, genDir(root, gen))
-    midHook()
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      root: String, gen: Long, midHook: () => Unit = () => ()): Unit =
+    GenStore.admit(root, gen, batchId, midHook = midHook)(
+      appendBatch(docs, idCol, toksCol, bucketSize, batchId, _))
 
   /** TAKEDOWN: admit one batch of doc ids to delete under the CURRENT
     * generation ([[appendDeleteBatch]] routed through the pointer).
@@ -558,22 +547,9 @@ object InvertedIndex {
     */
   private[graft] def admitDeleteBatchAt(spark: SparkSession, ids: DataFrame,
       idCol: String, batchId: Long, root: String, gen: Long,
-      hwm: Long = Long.MaxValue): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val dhwm = GenStore.deletesHwm(root, gen)
-    require(batchId > dhwm,
-      s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
-        s"high-water mark $dhwm: a federation merge renumbered carried " +
-        "delete fragments into that id space — admitting under one of " +
-        "those ids would clobber a pending takedown; use a fresh id above " +
-        "the mark")
-    appendDeleteBatch(ids, idCol, batchId, genDir(root, gen), hwm)
-    GenStore.requireStillNotQuiesced(root, s"delete batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"delete batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      hwm: Long = Long.MaxValue): Unit =
+    GenStore.admit(root, gen, batchId, deletes = true)(
+      appendDeleteBatch(ids, idCol, batchId, _, hwm))
 
   /** UPSERT one batch of documents: a SCOPED delete at `hwm = batchId -
     * 1` (masks every copy admitted so far — for a new doc it masks
@@ -680,76 +656,10 @@ object InvertedIndex {
     * the sources' sole actor.
     */
   def mergeStores(spark: SparkSession, srcRoots: Seq[String],
-      dstRoot: String, compactFirst: Boolean = false): Long = {
-    require(srcRoots.size >= 2, "mergeStores needs at least two sources")
-    if (compactFirst) srcRoots.foreach { src =>
-      val g = currentGen(src)
-      val sdir = genDir(src, g)
-      if (GenStore.listBatchIds(spark, s"$sdir/postings").size > 1 ||
-        GenStore.listBatchIds(spark, s"$sdir/deletes").nonEmpty)
-        compactStore(spark, src, g)
-    }
-    // SCOPED-delete fence: a pending hwm-scoped delete references its
-    // source's LOCAL admission batch ids, which this merge renumbers —
-    // the carried mask would scope against the wrong batches. Unbounded
-    // takedowns (hwm = infinity) are renumber-invariant and carry fine.
-    // Cure: compact the source first (fold applies the mask and clears
-    // the pending set) — compactFirst=true does exactly that.
-    srcRoots.foreach { src =>
-      val sdir = genDir(src, currentGen(src))
-      val delIds = GenStore.listBatchIds(spark, s"$sdir/deletes")
-      if (delIds.nonEmpty) {
-        val dels = spark.read.option("mergeSchema", "true")
-          .parquet(delIds.map(i => s"$sdir/deletes/batch_id=$i"): _*)
-        if (dels.columns.contains("hwm") &&
-            dels.filter(col("hwm") =!= Long.MaxValue).limit(1).count() > 0)
-          throw new IllegalStateException(
-            s"source $src has pending SCOPED (hwm) deletes: their " +
-              "high-water marks reference source-local admission batch " +
-              "ids, which this merge renumbers — compact the source " +
-              "first (or pass compactFirst = true)")
-      }
-    }
-    GenStore.initIfAbsent(dstRoot)
-    require(currentGen(dstRoot) == 1L &&
-      GenStore.compactedHwm(dstRoot, 1L) == -1L,
-      s"merge target $dstRoot must be a fresh store root (an already " +
-        "sealed generation means a previous merge completed)")
-    val dst = genDir(dstRoot, 1L)
-    GenStore.mergeOpen(spark, dstRoot, 1L,
-      occupied = java.nio.file.Files.exists(java.nio.file.Paths.get(dst)))
-    var next = 0L
-    var delNext = 0L
-    val observed = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Seq[(String, Long, Long)])]
-    val pairs = srcRoots.flatMap { src =>
-      val sdir = genDir(src, currentGen(src))
-      val ids = GenStore.listBatchIds(spark, s"$sdir/postings")
-      val delIds = GenStore.listBatchIds(spark, s"$sdir/deletes")
-      // one file-level manifest per source generation covers postings,
-      // doclens, stats AND deletes — including in-place rewrites the
-      // old id-set compare missed
-      observed += ((sdir, GenStore.listManifest(spark, sdir)))
-      ids.flatMap { i =>
-        val ps = Seq("postings", "doclens", "stats").map { t =>
-          (s"$sdir/$t/batch_id=$i", s"$dst/$t/batch_id=$next")
-        }
-        next += 1; ps
-      } ++ delIds.map { i =>
-        val p = (s"$sdir/deletes/batch_id=$i",
-          s"$dst/deletes/batch_id=$delNext")
-        delNext += 1; p
-      }
-    }
-    require(next > 0, "no data fragments found under any source's " +
-      "current generation — refusing to seal an empty merged store " +
-      "(were the right roots passed?)")
-    GenStore.copyFragments(spark, pairs)
-    // live-merge fence: refuse to seal if a source moved since listing
-    GenStore.requireSourcesUnmoved(spark, observed.toSeq)
-    GenStore.mergeSeal(dstRoot, 1L, next - 1, delNext - 1)
-    1L
-  }
+      dstRoot: String, compactFirst: Boolean = false): Long =
+    GenStore.mergeStores(spark, srcRoots, dstRoot, layout.tables,
+      if (compactFirst) Some(compactStore(spark, _, _)) else None,
+      scopedFence = true)
 
   /** AGE-OUT RETENTION — the time-based sibling of the takedown
     * surface: compact the current generation keeping ONLY fragments
@@ -783,241 +693,127 @@ object InvertedIndex {
     */
   private[graft] def compactStoreHooked(spark: SparkSession, root: String,
       expectedGen: Long, midHook: () => Unit,
-      retain: Long => Boolean = _ => true): Long = {
-    val cur = currentGen(root)
-    if (cur != expectedGen) return cur
-    val src = genDir(root, cur)
-    val allIds = GenStore.listBatchIds(spark, s"$src/postings")
-    require(allIds.nonEmpty, s"nothing to compact under $src")
-    val ids = allIds.filter(retain)
-    require(ids.nonEmpty,
-      "retention would empty the store — at least one fragment must " +
-        "survive; to drop everything, initialize a fresh root instead")
-    // seal at the FULL listing's high-water mark: an expired fragment's
-    // batch id must refuse replay (re-admitting it would resurrect the
-    // aged-out docs), exactly like a compacted-away one
-    val hwm = allIds.max
-    // the delete set is listed HERE, alongside the data fragments (and
-    // before the race-test hook): anything landing later is a straggler
-    // for the sweep — carried pending if unbounded, refused if scoped
-    val delIdsListed = GenStore.listBatchIds(spark, s"$src/deletes")
-    midHook()
-    val dst = genDir(root, cur + 1)
-    // the merge reads the LISTED fragments explicitly, never the whole
-    // directory: parquet listing is lazy (it happens at write time, not
-    // at listBatchIds time), so a directory-wide read would fold a
-    // straggler admitted after the listing INTO the merge and then the
-    // sweep would copy it AGAIN — duplicating its postings and stats
-    def frag(table: String, is: Seq[Long]) =
-      Tables.parquet(spark, is.map(i => s"$src/$table/batch_id=$i"): _*)
-    // same fragments, with the admission batch_id retained as a column
-    // (basePath keeps partition discovery on explicit-path reads) — the
-    // scoped-delete mask is a per-(doc, batch) predicate
-    def fragB(table: String, is: Seq[Long]) =
-      Tables.parquet(spark, Map("basePath" -> s"$src/$table"),
-        is.map(i => s"$src/$table/batch_id=$i"): _*)
-    // pending deletes listed alongside the data fragments are applied
-    // PHYSICALLY here: the compacted generation holds no trace of the
-    // deleted docs (postings entries removed, doclens rows dropped,
-    // stats recomputed) and starts with no pending set — bit-identical
-    // to a store built without those documents. Scoped (hwm) deletes
-    // apply per batch: a replaced doc's OLD copies die, its live copy
-    // (admitted above the mask bound) folds through untouched.
-    val delIds = delIdsListed
-    val del = if (delIds.isEmpty) None
-      else Some(broadcast { // O(dead ids) — see pendingDeletes
-        val raw = spark.read.option("mergeSchema", "true")
-          .parquet(delIds.map(i => s"$src/deletes/batch_id=$i"): _*)
-        val hwmCol = if (raw.columns.contains("hwm"))
-          coalesce(col("hwm"), lit(Long.MaxValue)) else lit(Long.MaxValue)
-        raw.groupBy(col("doc_id")).agg(max(hwmCol).as("del_hwm"))
-      })
-    del match {
-      case None =>
-        frag("postings", ids)
-          .groupBy(col("tok"), col("bucket"))
-          .agg(array_sort(flatten(collect_list(col("postings")))).as("postings"))
-          .select(col("tok"), col("bucket"),
-            size(col("postings")).cast("long").as("n_docs"), col("postings"))
-          .write.mode("overwrite").parquet(s"$dst/postings/batch_id=$hwm")
-        frag("doclens", ids)
-          .select(col("doc_id"), col("dl"))
-          .write.mode("overwrite").parquet(s"$dst/doclens/batch_id=$hwm")
-        frag("stats", ids)
-          .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-            sum(col("sum_dl")).cast("long").as("sum_dl"))
-          .write.mode("overwrite").parquet(s"$dst/stats/batch_id=$hwm")
-      case Some(d) =>
-        // per-entry masked join (struct sort restores the doc_id order
-        // the admission layout guarantees); cells whose entries all die
-        // disappear entirely, exactly as a fresh build would have it —
-        // and a replaced doc folds exactly its LIVE copy through
-        maskLive(fragB("postings", ids)
-            .select(col("tok"), col("bucket"), col("batch_id"),
-              explode(col("postings")).as("p"))
-            .withColumn("doc_id", col("p.doc_id")), d)
-          .groupBy(col("tok"), col("bucket"))
+      retain: Long => Boolean = _ => true): Long =
+    GenStore.publish(spark, root, expectedGen, layout.table, retain,
+        midHook) { l =>
+      def frag(table: String, is: Seq[Long]) =
+        Tables.parquet(spark, l.paths(s"${l.src}/$table", is): _*)
+      // same fragments, with the admission batch_id retained as a column
+      // (basePath keeps partition discovery on explicit-path reads) — the
+      // scoped-delete mask is a per-(doc, batch) predicate
+      def fragB(table: String, is: Seq[Long]) =
+        Tables.parquet(spark, Map("basePath" -> s"${l.src}/$table"),
+          l.paths(s"${l.src}/$table", is): _*)
+      def write(df: DataFrame, table: String, id: Long): Unit =
+        df.write.mode("overwrite").parquet(s"${l.dst}/$table/batch_id=$id")
+      // stats recomputed from the surviving doclens rows — N, sum_dl
+      // shrink exactly, so post-compaction BM25 needs no pending set
+      def restat(id: Long): Unit =
+        write(Tables.parquet(spark, s"${l.dst}/doclens/batch_id=$id")
+          .agg(count(lit(1)).cast("long").as("n_docs"),
+            coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl")),
+          "stats", id)
+      // posting cells rebuilt from surviving entries (struct sort restores
+      // the doc_id order the admission layout guarantees); cells whose
+      // entries all die disappear entirely, as a fresh build would have it
+      def cells(entries: DataFrame): DataFrame =
+        entries.groupBy(col("tok"), col("bucket"))
           .agg(sort_array(collect_list(col("p"))).as("postings"))
           .select(col("tok"), col("bucket"),
             size(col("postings")).cast("long").as("n_docs"), col("postings"))
-          .write.mode("overwrite").parquet(s"$dst/postings/batch_id=$hwm")
-        maskLive(fragB("doclens", ids), d)
-          .select(col("doc_id"), col("dl"))
-          .write.mode("overwrite").parquet(s"$dst/doclens/batch_id=$hwm")
-        // stats recomputed from the surviving doclens rows — N, sum_dl
-        // shrink exactly, so post-compaction BM25 needs no pending set
-        Tables.parquet(spark, s"$dst/doclens/batch_id=$hwm")
-          .agg(count(lit(1)).cast("long").as("n_docs"),
-            coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
-          .write.mode("overwrite").parquet(s"$dst/stats/batch_id=$hwm")
-    }
-    // straggler sweep: batches admitted to gen=cur since the first
-    // listing ride through unmerged (idempotent per-path copies) —
-    // including DELETE batches, which stay pending in the new
-    // generation (the merge only applied the sets it listed). A LISTED
-    // delete, though, is purged by this compaction and NOT carried
-    // pending — so it must be re-applied to swept DATA stragglers here
-    // (a delete can land before a data batch admits inside the window;
-    // reads applied the pending set to every fragment, and the
-    // published generation must serve the same answers): postings
-    // entries anti-joined, doclens rows dropped, that fragment's stats
-    // recomputed from its surviving doclens.
-    def sweep(): Unit = {
-      // subtract the FULL listing (an expired fragment is not a
-      // straggler — copying it back would undo the retention) and
-      // retain-filter what remains for the same reason
-      (GenStore.listBatchIds(spark, s"$src/postings").toSet -- allIds)
-        .filter(retain).toSeq.sorted
-        .foreach { i =>
-          // a LISTED scoped delete masks this straggler only if its
-          // bound reaches batch i — within one fragment the mask is a
-          // plain anti-join against the reachable subset
-          val dI = del.map(_.filter(col("del_hwm") >= lit(i)))
-          dI match {
-            case None =>
-              Seq("postings", "doclens", "stats").foreach { t =>
-                frag(t, Seq(i))
-                  .write.mode("overwrite").parquet(s"$dst/$t/batch_id=$i")
-              }
-            case Some(d) =>
-              frag("postings", Seq(i))
-                .select(col("tok"), col("bucket"), explode(col("postings")).as("p"))
-                .withColumn("doc_id", col("p.doc_id"))
-                .join(d, Seq("doc_id"), "left_anti")
-                .groupBy(col("tok"), col("bucket"))
-                .agg(sort_array(collect_list(col("p"))).as("postings"))
-                .select(col("tok"), col("bucket"),
-                  size(col("postings")).cast("long").as("n_docs"), col("postings"))
-                .write.mode("overwrite").parquet(s"$dst/postings/batch_id=$i")
-              frag("doclens", Seq(i))
-                .select(col("doc_id"), col("dl"))
-                .join(d, Seq("doc_id"), "left_anti")
-                .write.mode("overwrite").parquet(s"$dst/doclens/batch_id=$i")
-              Tables.parquet(spark, s"$dst/doclens/batch_id=$i")
-                .agg(count(lit(1)).cast("long").as("n_docs"),
-                  coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
-                .write.mode("overwrite").parquet(s"$dst/stats/batch_id=$i")
-          }
-        }
-      (GenStore.listBatchIds(spark, s"$src/deletes").toSet -- delIds).toSeq.sorted
-        .foreach { i =>
-          val straggler = Tables.parquet(spark, s"$src/deletes/batch_id=$i")
-          // a SCOPED delete straggling into the compaction window is
-          // refused: its hwm references batch ids this fold just sealed
-          // into one fragment, so carrying it pending could unmask the
-          // folded old copy it meant to kill (resurrection). Scoped
-          // deletes are the upsert front's private discipline — that
-          // front serializes its ticks against compaction (single
-          // writer), so this throw marks a contract breach, not a race
-          // to tolerate. Unbounded takedowns stay carry-safe (infinity
-          // is renumber- and fold-invariant).
-          if (straggler.columns.contains("hwm") &&
-              straggler.filter(col("hwm") =!= Long.MaxValue).limit(1).count() > 0)
-            throw new IllegalStateException(
-              s"scoped (hwm) delete batch_id=$i landed during a compaction " +
-                s"of $root: scoped deletes reference pre-fold admission " +
-                "batch ids and cannot be carried pending across the fold — " +
-                "the upsert front must serialize its ticks against " +
-                "compaction (re-run the tick against the new generation)")
-          straggler
-            .write.mode("overwrite").parquet(s"$dst/deletes/batch_id=$i")
-        }
-    }
-    sweep()
-    // seal the barrier BEFORE publishing: a reader that sees the new
-    // generation must also see its retry fence
-    GenStore.seal(root, cur + 1, hwm)
-    GenStore.writePointer(root, cur + 1)
-    sweep() // the list->publish window, converged post-publish
-    cur + 1
-  }
-
-  /** The compaction POLICY: compact the current generation when its
-    * fragment count has reached `maxFragments` (the dial that bounds
-    * steady-state read amplification: reads touch at most
-    * maxFragments-1 appended fragments plus the compacted one between
-    * policy firings). Returns the new generation if a compaction ran.
-    * Single-writer discipline as everywhere in the store lifecycle.
-    */
-  def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, currentGen(root)))
-  }
-
-  /** The COMPACTION-POLICY predicate ([[KeySetStore.needsCompaction]]'s
-    * shape for this store): true when the fragment count reached
-    * `maxFragments` OR pending-delete ids grew past `maxPendingFraction`
-    * of the indexed documents — the r12-measured 1.61× pending-read tax
-    * persists until a compaction folds the delete set away, and this
-    * predicate is what bounds that window by contract. Footer-metadata
-    * reads only: doclens holds exactly one row per indexed doc, so both
-    * cardinalities come from parquet footers, never a Spark job.
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val dir = genDir(root, currentGen(root))
-    val ids = GenStore.listBatchIds(spark, s"$dir/postings")
-    if (ids.isEmpty) false
-    else if (ids.size >= maxFragments) true
-    else {
-      val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-      pending > 0 && {
-        val docs = GenStore.footerRowCount(spark,
-          GenStore.listBatchIds(spark, s"$dir/doclens")
-            .map(i => s"$dir/doclens/batch_id=$i"))
-        pending.toDouble >= maxPendingFraction * docs
+      // pending deletes listed alongside the data fragments are applied
+      // PHYSICALLY here: the compacted generation holds no trace of the
+      // deleted docs (postings entries removed, doclens rows dropped,
+      // stats recomputed) and starts with no pending set — bit-identical
+      // to a store built without those documents. Scoped (hwm) deletes
+      // apply per batch: a replaced doc's OLD copies die, its live copy
+      // (admitted above the mask bound) folds through untouched.
+      val del = if (l.delIds.isEmpty) None
+        else Some(broadcast( // O(dead ids) — see pendingDeletes
+          GenStore.deleteMask(spark.read.option("mergeSchema", "true")
+            .parquet(l.delPaths: _*), "doc_id")))
+      del match {
+        case None =>
+          write(frag("postings", l.ids)
+            .groupBy(col("tok"), col("bucket"))
+            .agg(array_sort(flatten(collect_list(col("postings")))).as("postings"))
+            .select(col("tok"), col("bucket"),
+              size(col("postings")).cast("long").as("n_docs"), col("postings")),
+            "postings", l.hwm)
+          write(frag("doclens", l.ids).select(col("doc_id"), col("dl")),
+            "doclens", l.hwm)
+          write(frag("stats", l.ids)
+            .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+              sum(col("sum_dl")).cast("long").as("sum_dl")),
+            "stats", l.hwm)
+        case Some(d) =>
+          write(cells(maskLive(fragB("postings", l.ids)
+              .select(col("tok"), col("bucket"), col("batch_id"),
+                explode(col("postings")).as("p"))
+              .withColumn("doc_id", col("p.doc_id")), d)),
+            "postings", l.hwm)
+          write(maskLive(fragB("doclens", l.ids), d)
+            .select(col("doc_id"), col("dl")), "doclens", l.hwm)
+          restat(l.hwm)
+      }
+      // a LISTED delete is purged by this compaction and NOT carried
+      // pending — so it is re-applied to swept DATA stragglers (a delete
+      // can land before a data batch admits inside the window; reads
+      // applied the pending set to every fragment, and the published
+      // generation must serve the same answers). A listed scoped delete
+      // masks straggler i only if its bound reaches i — within one
+      // fragment the mask is a plain anti-join against that subset.
+      i => del.map(_.filter(col("del_hwm") >= lit(i))) match {
+        case None => layout.tables.foreach(l.carry(spark, _)(i))
+        case Some(d) =>
+          write(cells(frag("postings", Seq(i))
+              .select(col("tok"), col("bucket"), explode(col("postings")).as("p"))
+              .withColumn("doc_id", col("p.doc_id"))
+              .join(d, Seq("doc_id"), "left_anti")),
+            "postings", i)
+          write(frag("doclens", Seq(i)).select(col("doc_id"), col("dl"))
+            .join(d, Seq("doc_id"), "left_anti"), "doclens", i)
+          restat(i)
       }
     }
-  }
+
+  /** The compaction POLICY ([[GenStore.compactIfFragmented]]): compact
+    * the current generation when its fragment count has reached
+    * `maxFragments` (reads then touch at most maxFragments-1 appended
+    * fragments plus the compacted one between policy firings). Returns
+    * the new generation if a compaction ran. Single-writer discipline as
+    * everywhere in the store lifecycle.
+    */
+  def compactIfFragmented(spark: SparkSession, root: String,
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, layout, maxFragments)(
+      compactStore(spark, root, _))
+
+  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]): the
+    * fragment count, or pending-delete ids against the indexed documents
+    * — the r12-measured 1.61× pending-read tax persists until a
+    * compaction folds the delete set away. Footer-metadata reads only.
+    */
+  def needsCompaction(spark: SparkSession, root: String,
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
+    GenStore.needsCompaction(spark, root, layout, maxFragments,
+      maxPendingFraction)
 
   /** Run [[compactStore]] when [[needsCompaction]] says so. */
   def compactIfNeeded(spark: SparkSession, root: String,
       maxFragments: Int = 16, maxPendingFraction: Double = 0.05):
       Option[Long] =
-    if (!needsCompaction(spark, root, maxFragments, maxPendingFraction)) None
-    else Some(compactStore(spark, root, currentGen(root)))
+    GenStore.compactIfNeeded(spark, root, layout, maxFragments,
+      maxPendingFraction)(compactStore(spark, root, _))
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
-    * shape): data cardinality is the doclens row count (one row per
-    * indexed doc), pending is the delete-marker row count — footer
-    * reads only.
+  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
+    * data cardinality is the doclens row count (one row per indexed
+    * doc), pending is the delete-marker row count — footer reads only.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame = {
-    val gen = currentGen(root)
-    val dir = genDir(root, gen)
-    val frags = GenStore.listBatchIds(spark, s"$dir/postings").size.toLong
-    val docs = GenStore.footerRowCount(spark,
-      GenStore.listBatchIds(spark, s"$dir/doclens")
-        .map(i => s"$dir/doclens/batch_id=$i"))
-    val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-    GenStore.statusRow(spark, gen, frags, docs, pending,
-      needsCompaction(spark, root, maxFragments, maxPendingFraction))
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
+    GenStore.maintenanceStatus(spark, root, layout, maxFragments,
+      maxPendingFraction)
 
   /** [[storeLookup]] through the pointer. */
   def lookupCurrent(spark: SparkSession, root: String,
@@ -1039,11 +835,4 @@ object InvertedIndex {
   def phraseSearchCurrent(spark: SparkSession, root: String,
       terms: Seq[String]): DataFrame =
     phraseSearchStore(spark, genDir(root, currentGen(root)), terms)
-
-  /** Retention for superseded generations (tombstone-renamed before
-    * deletion, so racing readers fail loudly, never read partial data):
-    * drop all but the newest `keepLast` published generations.
-    */
-  def vacuumStoreGenerations(root: String, keepLast: Int): Seq[Long] =
-    GenStore.vacuum(root, keepLast)
 }

@@ -42,16 +42,11 @@ object KeySetStore {
 
   /** Fragments of the current generation. */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      GenStore.genDir(root, GenStore.currentGen(root))).size.toLong
+    GenStore.fragmentCount(spark, root, GenStore.Flat)
 
   /** Admit one batch's key rows (made distinct here) under the CURRENT
-    * generation, with the family's sealed-id and pointer-recheck fences
-    * plus the post-write quiesce re-check
-    * ([[GenStore.requireStillNotQuiesced]] — an admission completing
-    * inside a live merge's copy-to-seal gap must fail loudly, never be
-    * silently absent from the merged store). Idempotent per batch id
-    * (mode overwrite).
+    * generation through the family's fences ([[GenStore.admit]]).
+    * Idempotent per batch id (mode overwrite).
     */
   def admitBatch(keys: DataFrame, batchId: Long, root: String): Unit =
     admitBatchHooked(keys, batchId, root, () => ())
@@ -62,23 +57,13 @@ object KeySetStore {
     * THIS admission throw, so its caller re-admits at the successor.
     */
   private[graft] def admitBatchHooked(keys: DataFrame, batchId: Long,
-      root: String, midHook: () => Unit): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are " +
-        "refused (a per-batch overwrite would drop the other merged batches' keys)")
-    keys.distinct().write.mode("overwrite")
-      .parquet(s"${GenStore.genDir(root, gen)}/batch_id=$batchId")
-    midHook()
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      root: String, midHook: () => Unit): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId,
+      sealedWhy = "replays of compacted batches are refused (a per-batch " +
+        "overwrite would drop the other merged batches' keys)",
+      midHook = midHook) { dir =>
+      keys.distinct().write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
+    }
 
   // ---------------------------------------------------------------------
   // DELETION/TAKEDOWN — the q161 LSM delete-marker discipline
@@ -106,24 +91,12 @@ object KeySetStore {
     * compaction seal on delete ids, only the family's pointer re-check
     * plus the merge-renumbered-id fence ([[GenStore.deletesHwm]]).
     */
-  def admitDeleteBatch(keys: DataFrame, batchId: Long, root: String): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val dhwm = GenStore.deletesHwm(root, gen)
-    require(batchId > dhwm,
-      s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
-        s"high-water mark $dhwm: a federation merge renumbered carried " +
-        "delete fragments into that id space — admitting under one of " +
-        "those ids would clobber a pending takedown; use a fresh id above " +
-        "the mark")
-    keys.distinct().write.mode("overwrite")
-      .parquet(s"${GenStore.genDir(root, gen)}/deletes/batch_id=$batchId")
-    GenStore.requireStillNotQuiesced(root, s"delete batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"delete batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+  def admitDeleteBatch(keys: DataFrame, batchId: Long, root: String): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId,
+        deletes = true) { dir =>
+      keys.distinct().write.mode("overwrite")
+        .parquet(s"$dir/deletes/batch_id=$batchId")
+    }
 
   /** Pending delete keys of one generation directory, or None when no
     * deletes were ever admitted (the zero-cost common case — read plans
@@ -221,16 +194,10 @@ object KeySetStore {
     * fronts only).
     */
   def mergeStores(spark: SparkSession, srcRoots: Seq[String],
-      dstRoot: String, compactFirst: Boolean = false): Long = {
-    if (compactFirst) srcRoots.foreach { src =>
-      val g = GenStore.currentGen(src)
-      val sdir = GenStore.genDir(src, g)
-      if (GenStore.listBatchIds(spark, sdir).size > 1 ||
-        GenStore.listBatchIds(spark, s"$sdir/deletes").nonEmpty)
-        compactStore(spark, src, g)
-    }
-    GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
-  }
+      dstRoot: String, compactFirst: Boolean = false): Long =
+    GenStore.mergeStores(spark, srcRoots, dstRoot, GenStore.Flat.tables,
+      if (compactFirst) Some(compactStore(spark, _, _)) else None,
+      scopedFence = false)
 
   /** AGE-OUT RETENTION for the dedup memory — forget signatures older
     * than the watermark so stale content can re-enter the corpus (the
@@ -255,146 +222,60 @@ object KeySetStore {
     */
   private[graft] def compactStoreHooked(spark: SparkSession, root: String,
       expectedGen: Long, midHook: () => Unit,
-      retain: Long => Boolean = _ => true): Long = {
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val ng = cur + 1
-    val src = GenStore.genDir(root, cur)
-    val dst = GenStore.genDir(root, ng)
-    val allIds = GenStore.listBatchIds(spark, src)
-    require(allIds.nonEmpty, s"nothing to compact under $src")
-    val ids = allIds.filter(retain)
-    require(ids.nonEmpty,
-      "retention would empty the store — at least one fragment must " +
-        "survive; to drop everything, initialize a fresh root instead")
-    // seal at the FULL listing's hwm: expired ids must refuse replay
-    val hwm = allIds.max
-    val delIds = GenStore.listBatchIds(spark, s"$src/deletes")
-    midHook()
-    // merge the LISTED fragments explicitly (parquet listing is lazy):
-    // a directory-wide read could fold a straggler admitted after the
-    // listing into the merge and the sweep both — harmless HERE (the
-    // key set is distinct, reads are semi-joins), but the family keeps
-    // one discipline so the lossy stores can't inherit the wrong shape
-    val merged = Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*).distinct()
-    val survivors =
-      if (delIds.isEmpty) merged
-      else merged.join(
-        broadcast( // O(dead docs' keys) — see pendingDeletes
-          Tables.parquet(spark, delIds.map(i => s"$src/deletes/batch_id=$i"): _*)
-            .distinct()),
-        merged.columns.toSeq, "left_anti")
-    survivors.write.mode("overwrite").parquet(s"$dst/batch_id=$hwm")
-    // the LISTED delete set, re-applied to swept data stragglers below:
-    // a delete fragment captured in delIds can target keys of a data
-    // batch admitted AFTER the fragment listing (delete lands, listing
-    // runs, data batch admits inside the window) — the merge applied it
-    // only to the listed fragments, and it is NOT carried pending (the
-    // new generation must not re-subtract it from genuinely-later
-    // re-admissions), so the swept copy must subtract it here or the
-    // takedown silently vanishes. This matches read semantics exactly:
-    // pre-compaction, [[keysAt]] applied the pending set to EVERY
-    // fragment of the generation, stragglers included.
-    lazy val listedDel: Option[DataFrame] =
-      if (delIds.isEmpty) None
-      else Some(Tables.parquet(spark, delIds.map(i => s"$src/deletes/batch_id=$i"): _*).distinct())
-    def sweep(): Unit = {
-      // subtract the FULL listing (an expired fragment is not a
-      // straggler) and retain-filter what remains
-      (GenStore.listBatchIds(spark, src).toSet -- allIds)
-        .filter(retain).toSeq.sorted.foreach { i =>
-        val raw = Tables.parquet(spark, s"$src/batch_id=$i")
-        listedDel.map(d =>
-            raw.join(broadcast(d), raw.columns.toSeq, "left_anti"))
-          .getOrElse(raw)
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
-      }
-      (GenStore.listBatchIds(spark, s"$src/deletes").toSet -- delIds).toSeq.sorted
-        .foreach { i =>
-          Tables.parquet(spark, s"$src/deletes/batch_id=$i")
-            .write.mode("overwrite").parquet(s"$dst/deletes/batch_id=$i")
-        }
+      retain: Long => Boolean = _ => true): Long =
+    GenStore.publish(spark, root, expectedGen, retain = retain,
+        midHook = midHook) { l =>
+      // the LISTED delete set, applied to the fold AND re-applied to
+      // swept data stragglers: a listed delete can target keys of a data
+      // batch admitted AFTER the listing (delete lands, listing runs,
+      // data batch admits inside the window), and it is NOT carried
+      // pending (the new generation must not re-subtract it from
+      // genuinely-later re-admissions), so the swept copy must subtract
+      // it or the takedown silently vanishes — the read semantics
+      // exactly: [[keysAt]] applied the pending set to EVERY fragment
+      val listedDel =
+        if (l.delIds.isEmpty) None
+        else Some(broadcast( // O(dead docs' keys) — see pendingDeletes
+          Tables.parquet(spark, l.delPaths: _*).distinct()))
+      def survivors(df: DataFrame): DataFrame =
+        listedDel.fold(df)(d => df.join(d, df.columns.toSeq, "left_anti"))
+      survivors(Tables.parquet(spark, l.paths(l.src, l.ids): _*).distinct())
+        .write.mode("overwrite").parquet(s"${l.dst}/batch_id=${l.hwm}")
+      i => survivors(Tables.parquet(spark, s"${l.src}/batch_id=$i"))
+        .write.mode("overwrite").parquet(s"${l.dst}/batch_id=$i")
     }
-    sweep()
-    GenStore.seal(root, ng, hwm)
-    GenStore.writePointer(root, ng)
-    sweep()
-    ng
-  }
 
-  /** The continuous-compaction policy ([[InvertedIndex
-    * .compactIfFragmented]]'s shape): compact once `maxFragments`
-    * accumulate. Returns the new generation when it fired.
+  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
+    * compact once `maxFragments` accumulate. Returns the new generation
+    * when it fired.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, GenStore.currentGen(root)))
-  }
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
+      compactStore(spark, root, _))
 
-  /** Retention for superseded generations ([[GenStore.vacuum]]). */
-  def vacuum(root: String, keepLast: Int): Seq[Long] =
-    GenStore.vacuum(root, keepLast)
-
-  /** The COMPACTION-POLICY predicate — [[VectorStore.needsRefit]]'s
-    * twin for layout, closing the loop [[compactIfFragmented]] only
-    * half-closed: true when the fragment count reached `maxFragments`
-    * (read amplification) OR the pending-delete rows grew past
-    * `maxPendingFraction` of the data rows (every read pays that
-    * anti-join until a compaction folds it away — the takedown serving
-    * window, bounded by CONTRACT once this predicate drives the
-    * maintenance loop instead of operator diligence). Footer-metadata
-    * reads only ([[GenStore.footerRowCount]]): no Spark job, so a
-    * maintenance tick can evaluate it every batch. A store with
-    * pending deletes but no data rows compacts (the fraction is
-    * +infinity there).
+  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]) —
+    * [[VectorStore.needsRefit]]'s twin for layout: the fragment count,
+    * or the pending-delete key rows against the data key rows, both
+    * from footers.
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    if (ids.isEmpty) false // nothing to compact (deletes alone can wait)
-    else if (ids.size >= maxFragments) true
-    else {
-      val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-      pending > 0 && {
-        val data = GenStore.footerRowCount(spark,
-          ids.map(i => s"$dir/batch_id=$i"))
-        pending.toDouble >= maxPendingFraction * data
-      }
-    }
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
+    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments,
+      maxPendingFraction)
 
-  /** Run [[compactStore]] when [[needsCompaction]] says so — the
-    * maintenance-loop form that subsumes [[compactIfFragmented]] (same
-    * fragment-count leg) and additionally bounds the pending-delete
-    * window. Returns the new generation when it fired.
+  /** Run [[compactStore]] when [[needsCompaction]] says so. Returns the
+    * new generation when it fired.
     */
   def compactIfNeeded(spark: SparkSession, root: String,
       maxFragments: Int = 16, maxPendingFraction: Double = 0.05):
       Option[Long] =
-    if (!needsCompaction(spark, root, maxFragments, maxPendingFraction)) None
-    else Some(compactStore(spark, root, GenStore.currentGen(root)))
+    GenStore.compactIfNeeded(spark, root, GenStore.Flat, maxFragments,
+      maxPendingFraction)(compactStore(spark, root, _))
 
-  /** The operational dashboard row the maintenance loop reads: one row
-    * of (generation, fragments, data_rows, pending_rows,
-    * pending_fraction, needs_compaction) for the current generation —
-    * the exact inputs [[needsCompaction]] evaluates, exposed so a
-    * scheduler (or a human) can see WHY a tick will or won't fire.
-    * Same footer-count cost model; no Spark job behind the frame.
-    */
+  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]). */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame = {
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    val data = GenStore.footerRowCount(spark, ids.map(i => s"$dir/batch_id=$i"))
-    val pending = GenStore.footerRowCount(spark, Seq(s"$dir/deletes"))
-    GenStore.statusRow(spark, gen, ids.size.toLong, data, pending,
-      needsCompaction(spark, root, maxFragments, maxPendingFraction))
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
+    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments,
+      maxPendingFraction)
 }

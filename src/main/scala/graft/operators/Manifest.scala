@@ -26,7 +26,7 @@ package graft.operators
   *   root/v<N>/PINS     # sorted `name=generation` lines
   * }}}
   *
-  * Retention mirrors the stores ([[GenStore.vacuum]] / CDC): old
+  * Retention mirrors the stores ([[GenStore.vacuumExcept]] / CDC): old
   * versions tombstone-delete, and resolving a vacuumed version fails
   * loudly, never silently re-resolves to something newer. The pattern
   * is ordinary snapshot-isolation catalog practice (Iceberg/Delta-style
@@ -41,14 +41,8 @@ object Manifest {
   private def versionDir(root: String, v: Long) =
     java.nio.file.Paths.get(root, s"v$v")
 
-  private def writePointer(root: String, v: Long): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val tmp = java.nio.file.Paths.get(root, "_CURRENT.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes)
-    java.nio.file.Files.move(tmp, pointerPath(root),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writePointer(root: String, v: Long): Unit =
+    GenStore.atomicWrite(pointerPath(root), v.toString)
 
   private def writePins(root: String, v: Long,
       pins: Map[String, Long]): Unit = {
@@ -56,15 +50,8 @@ object Manifest {
     pins.keys.foreach(n => require(
       n.nonEmpty && !n.exists(c => c == '=' || c == '\n' || c == '\r'),
       s"store name '$n' must be non-empty and free of '=' and newlines"))
-    val dir = versionDir(root, v)
-    java.nio.file.Files.createDirectories(dir)
-    val body = pins.toSeq.sortBy(_._1)
-      .map { case (n, g) => s"$n=$g" }.mkString("\n")
-    val tmp = dir.resolve("PINS.tmp")
-    java.nio.file.Files.write(tmp, body.getBytes)
-    java.nio.file.Files.move(tmp, dir.resolve("PINS"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    GenStore.atomicWrite(versionDir(root, v).resolve("PINS"),
+      pins.toSeq.sortBy(_._1).map { case (n, g) => s"$n=$g" }.mkString("\n"))
   }
 
   /** Create the manifest at version 1 with the given pins. Idempotent

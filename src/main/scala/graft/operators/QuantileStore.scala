@@ -181,21 +181,9 @@ object QuantileStore {
   /** [[admitBatch]] under HDR binning — the same lifecycle fences. */
   def admitBatchHdr(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       valueCol: String, subBits: Int, nbins: Int,
-      batchId: Long, root: String): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are refused")
-    appendBatchHdr(batch, keyCols, valueCol, subBits, nbins, batchId,
-      GenStore.genDir(root, gen))
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      batchId: Long, root: String): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+      appendBatchHdr(batch, keyCols, valueCol, subBits, nbins, batchId, _))
 
   /** [[quantilesOfHdr]] over the current generation's merged histogram. */
   def quantilesCurrentHdr(spark: SparkSession, root: String, keyCols: Seq[String],
@@ -220,30 +208,18 @@ object QuantileStore {
 
   /** Fragments of the current generation. */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      GenStore.genDir(root, GenStore.currentGen(root))).size.toLong
+    GenStore.fragmentCount(spark, root, GenStore.Flat)
 
-  /** Admit one batch under the CURRENT generation, with the family's
-    * two lifecycle fences: sealed batch ids refused, pointer re-read
-    * after the write so an admission racing a compaction fails loudly.
+  /** Admit one batch under the CURRENT generation through the family's
+    * fences ([[GenStore.admit]]): sealed batch ids refused, pointer
+    * re-read after the write so an admission racing a compaction fails
+    * loudly.
     */
   def admitBatch(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       valueCol: String, lo: Double, width: Double, nbins: Int,
-      batchId: Long, root: String): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are refused")
-    appendBatch(batch, keyCols, valueCol, lo, width, nbins, batchId,
-      GenStore.genDir(root, gen))
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      batchId: Long, root: String): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+      appendBatch(batch, keyCols, valueCol, lo, width, nbins, batchId, _))
 
   // -------------------------------------------------------------------------
   // EXACT RETRACTION — the takedown surface (q161/q165 family) restated
@@ -284,25 +260,16 @@ object QuantileStore {
 
   private def admitNegated(spark: SparkSession, batch: DataFrame,
       keyCols: Seq[String], binCol: Column, valueCol: String,
-      batchId: Long, root: String): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; a replayed retraction would " +
-        "subtract twice and is refused")
-    batch.filter(col(valueCol).isNotNull)
-      .groupBy((keyCols.map(col) :+ binCol.as("bin")): _*)
-      .agg((-count(lit(1))).cast("long").as("cnt"))
-      .write.mode("overwrite")
-      .parquet(s"${GenStore.genDir(root, gen)}/batch_id=$batchId")
-    GenStore.requireStillNotQuiesced(root, s"retraction batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"retraction batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      batchId: Long, root: String): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId,
+        verb = "retraction",
+        sealedWhy = "a replayed retraction would subtract twice and is refused") {
+      dir =>
+        batch.filter(col(valueCol).isNotNull)
+          .groupBy((keyCols.map(col) :+ binCol.as("bin")): _*)
+          .agg((-count(lit(1))).cast("long").as("cnt"))
+          .write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
+    }
 
   /** COMPACT the current generation: sum every fragment's (key, bin)
     * counts into ONE fragment at the high-water batch id under
@@ -331,55 +298,33 @@ object QuantileStore {
     * the merge — the test seam for the straggler-sweep race window.
     */
   private[graft] def compactStoreHooked(spark: SparkSession, root: String,
-      expectedGen: Long, keyCols: Seq[String], midHook: () => Unit): Long = {
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val src = GenStore.genDir(root, cur)
-    val ids = GenStore.listBatchIds(spark, src)
-    require(ids.nonEmpty, s"nothing to compact under $src")
-    val hwm = ids.max
-    midHook()
-    val dst = GenStore.genDir(root, cur + 1)
-    // merge the LISTED fragments explicitly (parquet listing is lazy):
-    // a directory-wide read would fold a straggler admitted after the
-    // listing into the merge AND the sweep — double-counting its bins.
-    // Fully retracted cells (sum 0) are dropped — the physical purge.
-    Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*)
-      .groupBy((keyCols :+ "bin").map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") =!= 0L)
-      .write.mode("overwrite")
-      .parquet(s"$dst/batch_id=$hwm")
-    // over-retraction fence: validate BEFORE sealing/publishing (one
-    // scan of the nbins-x-keys-sized fragment, never the raw stream)
-    val negatives = Tables.parquet(spark, s"$dst/batch_id=$hwm")
-      .filter(col("cnt") < 0L).count()
-    require(negatives == 0L,
-      s"compaction of $src found $negatives (key, bin) cells with negative " +
-        "merged counts: more rows were retracted than ingested — the new " +
-        "generation is NOT published; repair or remove the offending " +
-        "retraction fragment and retry")
-    def sweep(): Unit =
-      (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        Tables.parquet(spark, s"$src/batch_id=$i")
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
-      }
-    sweep()
-    GenStore.seal(root, cur + 1, hwm)
-    GenStore.writePointer(root, cur + 1)
-    sweep()
-    cur + 1
-  }
+      expectedGen: Long, keyCols: Seq[String], midHook: () => Unit): Long =
+    GenStore.publish(spark, root, expectedGen, midHook = midHook) { l =>
+      // fully retracted cells (sum 0) are dropped — the physical purge
+      val dst = s"${l.dst}/batch_id=${l.hwm}"
+      Tables.parquet(spark, l.paths(l.src, l.ids): _*)
+        .groupBy((keyCols :+ "bin").map(col): _*)
+        .agg(sum(col("cnt")).as("cnt"))
+        .filter(col("cnt") =!= 0L)
+        .write.mode("overwrite").parquet(dst)
+      // over-retraction fence: validate BEFORE sealing/publishing (one
+      // scan of the nbins-x-keys-sized fragment, never the raw stream)
+      val negatives = Tables.parquet(spark, dst).filter(col("cnt") < 0L).count()
+      require(negatives == 0L,
+        s"compaction of ${l.src} found $negatives (key, bin) cells with " +
+          "negative merged counts: more rows were retracted than ingested — " +
+          "the new generation is NOT published; repair or remove the " +
+          "offending retraction fragment and retry")
+      l.carry(spark)
+    }
 
   /** The continuous-compaction policy: compact once `maxFragments`
     * accumulate. Returns the new generation when it fired.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      keyCols: Seq[String], maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, GenStore.currentGen(root), keyCols))
-  }
+      keyCols: Seq[String], maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
+      compactStore(spark, root, _, keyCols))
 
   /** The family's compaction-policy predicate, fragment leg only:
     * retractions here ARE ordinary fragments (negated counts in the
@@ -388,10 +333,8 @@ object QuantileStore {
     * is no separate delete surface to fraction-bound.
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    fragmentCount(spark, root) >= maxFragments
-  }
+      maxFragments: Int = 16): Boolean =
+    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** FEDERATION MERGE ([[GenStore.mergeFlatStores]]): K partitions
     * histogram independently, merge by fragment copies — bin counts
@@ -402,20 +345,14 @@ object QuantileStore {
       dstRoot: String): Long =
     GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
-    * shape): data cardinality is the (key, bin) row count (footer-read,
-    * <= keys × nbins per fragment); pending is structurally zero —
-    * retraction fragments are data fragments, visible in `fragments`.
+  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
+    * data cardinality is the (key, bin) row count (footer-read, <= keys
+    * × nbins per fragment); pending is structurally zero — retraction
+    * fragments are data fragments, visible in `fragments`.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16): DataFrame = {
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    val rows = GenStore.footerRowCount(spark, ids.map(i => s"$dir/batch_id=$i"))
-    GenStore.statusRow(spark, gen, ids.size.toLong, rows, 0L,
-      needsCompaction(spark, root, maxFragments))
-  }
+      maxFragments: Int = 16): DataFrame =
+    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** [[quantilesOf]] over the current generation's merged histogram. */
   def quantilesCurrent(spark: SparkSession, root: String, keyCols: Seq[String],

@@ -83,32 +83,20 @@ object SketchStore {
 
   /** Fragments of the current generation. */
   def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.listBatchIds(spark,
-      GenStore.genDir(root, GenStore.currentGen(root))).size.toLong
+    GenStore.fragmentCount(spark, root, GenStore.Flat)
 
   /** Admit one batch under the CURRENT generation — [[appendBatch]]
-    * routed through the pointer, with the two lifecycle fences: sealed
-    * batch ids are refused (they are inside the compacted fragment),
-    * and the pointer is re-read after the write so an admission racing
-    * a compaction fails loudly instead of landing invisibly in a
-    * superseded generation.
+    * routed through the pointer and the family's fences
+    * ([[GenStore.admit]]): sealed batch ids are refused (they are inside
+    * the compacted fragment), and an admission racing a compaction
+    * fails loudly instead of landing invisibly in a superseded
+    * generation.
     */
   def admitBatch(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       valueCol: String, batchId: Long, root: String,
-      lgK: Int = DefaultLgK): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = GenStore.currentGen(root)
-    val hwm = GenStore.compactedHwm(root, gen)
-    require(batchId > hwm,
-      s"batch_id=$batchId is at or below gen=$gen's compacted high-water " +
-        s"mark $hwm: compaction sealed it; replays of compacted batches are refused")
-    appendBatch(batch, keyCols, valueCol, batchId, GenStore.genDir(root, gen), lgK)
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = GenStore.currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a compaction: wrote under gen=$gen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      lgK: Int = DefaultLgK): Unit =
+    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+      appendBatch(batch, keyCols, valueCol, batchId, _, lgK))
 
   /** COMPACT the current generation: union every fragment's sketch rows
     * into ONE row per key (the same register-max union the read path
@@ -118,11 +106,9 @@ object SketchStore {
     * (retry no-ops); readers are generation-isolated throughout. ONE
     * map-side-combined aggregation of KB-sized sketch rows — the raw
     * corpus is never touched. Straggler sweep as the family
-    * ([[KeySetStore.compactStore]]): batches admitted since the
-    * fragment listing are re-listed and copied through unmerged, once
-    * before the seal and once after the pointer move, so an admit
-    * racing the compaction either lands in the new generation or
-    * throws at its own pointer re-check — never silently vanishes.
+    * ([[GenStore.publish]]): an admit racing the compaction either
+    * lands in the new generation or throws at its own pointer re-check
+    * — never silently vanishes.
     */
   def compactStore(spark: SparkSession, root: String, expectedGen: Long,
       keyCols: Seq[String]): Long =
@@ -132,45 +118,24 @@ object SketchStore {
     * the merge — the test seam for the straggler-sweep race window.
     */
   private[graft] def compactStoreHooked(spark: SparkSession, root: String,
-      expectedGen: Long, keyCols: Seq[String], midHook: () => Unit): Long = {
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val src = GenStore.genDir(root, cur)
-    val ids = GenStore.listBatchIds(spark, src)
-    require(ids.nonEmpty, s"nothing to compact under $src")
-    val hwm = ids.max
-    midHook()
-    val dst = GenStore.genDir(root, cur + 1)
-    // merge the LISTED fragments explicitly (parquet listing is lazy):
-    // a straggler admitted after the listing belongs to the sweep only
-    Tables.parquet(spark, ids.map(i => s"$src/batch_id=$i"): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(hll_union_agg(col("sketch")).as("sketch"),
-        max(col("lgk")).as("lgk"))
-      .write.mode("overwrite")
-      .parquet(s"$dst/batch_id=$hwm")
-    def sweep(): Unit =
-      (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        Tables.parquet(spark, s"$src/batch_id=$i")
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
-      }
-    sweep()
-    GenStore.seal(root, cur + 1, hwm)
-    GenStore.writePointer(root, cur + 1)
-    sweep()
-    cur + 1
-  }
+      expectedGen: Long, keyCols: Seq[String], midHook: () => Unit): Long =
+    GenStore.publish(spark, root, expectedGen, midHook = midHook) { l =>
+      Tables.parquet(spark, l.paths(l.src, l.ids): _*)
+        .groupBy(keyCols.map(col): _*)
+        .agg(hll_union_agg(col("sketch")).as("sketch"),
+          max(col("lgk")).as("lgk"))
+        .write.mode("overwrite").parquet(s"${l.dst}/batch_id=${l.hwm}")
+      l.carry(spark)
+    }
 
-  /** The continuous-compaction policy ([[InvertedIndex
-    * .compactIfFragmented]]'s shape): compact once `maxFragments`
-    * accumulate. Returns the new generation when it fired.
+  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
+    * compact once `maxFragments` accumulate. Returns the new generation
+    * when it fired.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      keyCols: Seq[String], maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root) < maxFragments) None
-    else Some(compactStore(spark, root, GenStore.currentGen(root), keyCols))
-  }
+      keyCols: Seq[String], maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
+      compactStore(spark, root, _, keyCols))
 
   /** The family's compaction-policy predicate, fragment leg only: a
     * sketch store has no delete surface (HLL deletion is impossible —
@@ -178,10 +143,8 @@ object SketchStore {
     * purely by fragment count.
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    fragmentCount(spark, root) >= maxFragments
-  }
+      maxFragments: Int = 16): Boolean =
+    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** FEDERATION MERGE ([[GenStore.mergeFlatStores]]): K partitions
     * sketch independently, merge by fragment copies — register union
@@ -193,21 +156,14 @@ object SketchStore {
       dstRoot: String): Long =
     GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
-    * shape): data cardinality is the per-key sketch row count
-    * (footer-read); the pending side is structurally zero — nothing
-    * here can hold a delete, which the dashboard states rather than
-    * hides.
+  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
+    * data cardinality is the per-key sketch row count (footer-read);
+    * the pending side is structurally zero — nothing here can hold a
+    * delete, which the dashboard states rather than hides.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16): DataFrame = {
-    val gen = GenStore.currentGen(root)
-    val dir = GenStore.genDir(root, gen)
-    val ids = GenStore.listBatchIds(spark, dir)
-    val rows = GenStore.footerRowCount(spark, ids.map(i => s"$dir/batch_id=$i"))
-    GenStore.statusRow(spark, gen, ids.size.toLong, rows, 0L,
-      needsCompaction(spark, root, maxFragments))
-  }
+      maxFragments: Int = 16): DataFrame =
+    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** [[mergedEstimates]] through the pointer. `n_batches` counts the
     * FRAGMENTS contributing per key (post-compaction: the compacted
@@ -261,29 +217,15 @@ object SketchStore {
       affectedKeys: DataFrame, survivors: DataFrame,
       lgK: Int = DefaultLgK): Long = {
     require(keyCols.nonEmpty, "rebuildKeys needs at least one key column")
-    val cur = GenStore.currentGen(root)
-    if (cur != expectedGen) return cur
-    val src = GenStore.genDir(root, cur)
-    val ids = GenStore.listBatchIds(spark, src)
-    require(ids.nonEmpty, s"nothing to rebuild under $src")
-    val hwm = ids.max
-    val dst = GenStore.genDir(root, cur + 1)
-    rebuildFrame(spark, src, ids, keyCols, valueCol, affectedKeys,
-        survivors, lgK)
-      .write.mode("overwrite").parquet(s"$dst/batch_id=$hwm")
-    // family straggler sweep: an admit racing the rebuild rides through
-    // unmerged (its registers are NEW post-takedown data — carrying
-    // them raw is correct; the read union folds them in)
-    def sweep(): Unit =
-      (GenStore.listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        Tables.parquet(spark, s"$src/batch_id=$i")
-          .write.mode("overwrite").parquet(s"$dst/batch_id=$i")
-      }
-    sweep()
-    GenStore.seal(root, cur + 1, hwm)
-    GenStore.writePointer(root, cur + 1)
-    sweep()
-    cur + 1
+    GenStore.publish(spark, root, expectedGen, action = "rebuild") { l =>
+      rebuildFrame(spark, l.src, l.ids, keyCols, valueCol, affectedKeys,
+          survivors, lgK)
+        .write.mode("overwrite").parquet(s"${l.dst}/batch_id=${l.hwm}")
+      // an admit racing the rebuild rides through unmerged (its
+      // registers are NEW post-takedown data — carrying them raw is
+      // correct; the read union folds them in)
+      l.carry(spark)
+    }
   }
 
   /** The scoped-rebuild frame [[rebuildKeys]] materializes — exposed

@@ -18,9 +18,9 @@ import graft.functions.VectorFunctions
   * actuator turns the trigger into a safe swap: fit a new index
   * generation on the store's own vectors, re-encode every batch into a
   * `gen=N+1` directory (one narrow pass per batch — the admission
-  * encode reused), and atomically advance a `_CURRENT` pointer, the
-  * same reader-isolation discipline as the CDC snapshot store
-  * ([[graft.streaming.EventStreams.initCdcState]]).
+  * encode reused), and atomically advance the [[GenStore]] `_CURRENT`
+  * pointer, the same reader-isolation discipline as every store of the
+  * family.
   *
   * Layout under one root:
   * {{{
@@ -58,31 +58,24 @@ import graft.functions.VectorFunctions
   */
 object VectorStore {
 
-  private def genRoot(root: String, gen: Long) = s"$root/gen=$gen"
-  private def indexDir(root: String, gen: Long) = genRoot(root, gen) + "/index"
+  private def indexDir(root: String, gen: Long) = GenStore.genDir(root, gen) + "/index"
   /** The admission-store directory of one generation — the `path` that
     * [[Similarity.appendCodedBatch]]/[[Similarity.searchCodedStore]]
     * operate on (stats land beside it at `coded_stats`).
     */
-  def codedDir(root: String, gen: Long): String = genRoot(root, gen) + "/coded"
-
-  private def pointerPath(root: String) =
-    java.nio.file.Paths.get(root, "_CURRENT")
+  def codedDir(root: String, gen: Long): String = GenStore.genDir(root, gen) + "/coded"
 
   /** The generation readers currently see. */
-  def currentGen(root: String): Long =
-    new String(java.nio.file.Files.readAllBytes(pointerPath(root))).trim.toLong
+  def currentGen(root: String): Long = GenStore.currentGen(root)
 
-  // same tmp-write + ATOMIC_MOVE as the CDC `_CURRENT` pointer: readers
-  // see the old generation or the new one, never a torn pointer
-  private def writePointer(root: String, gen: Long): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val tmp = java.nio.file.Paths.get(root, "_CURRENT.tmp")
-    java.nio.file.Files.write(tmp, gen.toString.getBytes)
-    java.nio.file.Files.move(tmp, pointerPath(root),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** The vector store's generation layout: coded and coded-stats
+    * fragments share each batch id; the data rows are the admitted
+    * vectors, summed from the KB stats fragments (the [[needsRefit]]
+    * read).
+    */
+  private val layout = GenStore.Layout(Seq("coded", "coded_stats"),
+    (spark, dir) => Tables.parquet(spark, s"$dir/coded_stats")
+      .agg(coalesce(sum(col("n_vectors")), lit(0L))).head().getLong(0))
 
   /** Create the store: persist the generation-1 index and point
     * `_CURRENT` at it. Idempotent (overwrite + pointer rewrite).
@@ -91,7 +84,7 @@ object VectorStore {
       cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]]): Unit = {
     Similarity.saveIvfPqIndex(spark, cents, books, indexDir(root, 1L))
-    writePointer(root, 1L)
+    GenStore.init(root)
   }
 
   /** Load one generation's index artifact. */
@@ -102,18 +95,15 @@ object VectorStore {
   /** Admit one crawl batch under the CURRENT generation: load the (tiny)
     * index artifact, encode the batch against it in one narrow pass,
     * land it in `gen=cur/coded/batch_id=N` — exactly
-    * [[Similarity.appendCodedBatch]], routed through the pointer.
-    *
-    * Admit-vs-refit race fence (ENFORCED, not just documented): after
-    * the write lands, the pointer is re-read — if a refit published a
-    * new generation in between, the batch was written into a
-    * SUPERSEDED generation that the migration may not have seen, so
-    * admit fails loudly (the caller re-admits under the new
-    * generation; the orphan directory in the old generation is dead
-    * weight for the vacuum, never served). Together with
-    * [[refitFinish]]'s post-publish straggler sweep, an admission
-    * racing a refit either lands in both generations or throws —
-    * never silently vanishes.
+    * [[Similarity.appendCodedBatch]], routed through the pointer and the
+    * family's fences ([[GenStore.admit]]). If a refit published a new
+    * generation during the write, the batch landed in a SUPERSEDED
+    * generation the migration may not have seen, so admit fails loudly
+    * (the caller re-admits under the new generation; the orphan
+    * directory is dead weight for the vacuum, never served). Together
+    * with [[refitFinish]]'s post-publish straggler sweep, an admission
+    * racing a refit either lands in both generations or throws — never
+    * silently vanishes.
     */
   def admit(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, vecCol: String, batchId: Long, nassign: Int = 2): Unit =
@@ -127,22 +117,14 @@ object VectorStore {
     */
   private[graft] def admitAt(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, vecCol: String, batchId: Long, asOfGen: Long,
-      nassign: Int = 2): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val sealedHwm = GenStore.compactedHwm(root, asOfGen)
-    require(batchId > sealedHwm,
-      s"batch_id=$batchId is at or below gen=$asOfGen's compacted high-water " +
-        s"mark $sealedHwm: compaction sealed it; replays of compacted batches " +
-        "are refused (a per-batch overwrite would replace the MERGED fragment)")
-    val (cents, books) = loadGenIndex(spark, root, asOfGen)
-    Similarity.appendCodedBatch(batch, idCol, vecCol, cents, books,
-      batchId, codedDir(root, asOfGen), nassign)
-    GenStore.requireStillNotQuiesced(root, s"admit of batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != asOfGen) throw new IllegalStateException(
-      s"admit of batch_id=$batchId raced a refit: wrote under gen=$asOfGen " +
-        s"but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      nassign: Int = 2): Unit =
+    GenStore.admit(root, asOfGen, batchId, racedWith = "a refit",
+        sealedWhy = "replays of compacted batches are refused (a per-batch " +
+          "overwrite would replace the MERGED fragment)") { dir =>
+      val (cents, books) = loadGenIndex(spark, root, asOfGen)
+      Similarity.appendCodedBatch(batch, idCol, vecCol, cents, books,
+        batchId, s"$dir/coded", nassign)
+    }
 
   // -------------------------------------------------------------------------
   // DELETION (takedown): pending delete sets as `gen=N/deletes/
@@ -166,7 +148,7 @@ object VectorStore {
   // oldest survivor).
   // -------------------------------------------------------------------------
 
-  private def deletesDir(root: String, gen: Long) = genRoot(root, gen) + "/deletes"
+  private def deletesDir(root: String, gen: Long) = GenStore.genDir(root, gen) + "/deletes"
 
   /** TAKEDOWN: admit one batch of vec ids to delete under the CURRENT
     * generation, with the [[admit]] pointer-re-read fence. No
@@ -178,25 +160,13 @@ object VectorStore {
     * ordered-delete rule; default: unbounded — plain takedown).
     */
   def admitDeletes(spark: SparkSession, root: String, ids: DataFrame,
-      idCol: String, batchId: Long, hwm: Long = Long.MaxValue): Unit = {
-    GenStore.requireNotQuiesced(root)
-    val gen = currentGen(root)
-    val dhwm = GenStore.deletesHwm(root, gen)
-    require(batchId > dhwm,
-      s"delete batch_id=$batchId is at or below gen=$gen's delete-id " +
-        s"high-water mark $dhwm: a federation merge renumbered carried " +
-        "delete fragments into that id space — admitting under one of " +
-        "those ids would clobber a pending takedown; use a fresh id above " +
-        "the mark")
-    ids.select(col(idCol).cast("long").as("cid")).distinct()
-      .withColumn("hwm", lit(hwm))
-      .write.mode("overwrite").parquet(s"${deletesDir(root, gen)}/batch_id=$batchId")
-    GenStore.requireStillNotQuiesced(root, s"delete batch_id=$batchId")
-    val now = currentGen(root)
-    if (now != gen) throw new IllegalStateException(
-      s"delete batch_id=$batchId raced a refit/compaction: wrote under " +
-        s"gen=$gen but _CURRENT is now gen=$now — re-admit under the current generation")
-  }
+      idCol: String, batchId: Long, hwm: Long = Long.MaxValue): Unit =
+    GenStore.admit(root, currentGen(root), batchId, deletes = true,
+        racedWith = "a refit/compaction") { dir =>
+      ids.select(col(idCol).cast("long").as("cid")).distinct()
+        .withColumn("hwm", lit(hwm))
+        .write.mode("overwrite").parquet(s"$dir/deletes/batch_id=$batchId")
+    }
 
   /** UPSERT one batch of vectors: a SCOPED delete at `hwm = batchId -
     * 1` (masks every copy admitted so far; nothing, harmlessly, for a
@@ -235,13 +205,8 @@ object VectorStore {
     val p = new org.apache.hadoop.fs.Path(deletesDir(root, gen))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
-    else {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(deletesDir(root, gen))
-      val hwmCol = if (raw.columns.contains("hwm"))
-        coalesce(col("hwm"), lit(Long.MaxValue)) else lit(Long.MaxValue)
-      Some(raw.groupBy(col("cid")).agg(max(hwmCol).as("del_hwm")))
-    }
+    else Some(GenStore.deleteMask(spark.read.option("mergeSchema", "true")
+      .parquet(deletesDir(root, gen)), "cid"))
   }
 
   /** Excludes a generation's pending deletes from a coded frame — the
@@ -259,9 +224,7 @@ object VectorStore {
   private def minusDeleted(spark: SparkSession, root: String, gen: Long,
       coded: DataFrame): DataFrame =
     pendingDeletes(spark, root, gen)
-      .map(d => coded.join(broadcast(d), Seq("cid"), "left")
-        .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
-        .drop("del_hwm"))
+      .map(d => GenStore.maskLive(coded, broadcast(d), "cid"))
       .getOrElse(coded)
 
   /** The current generation's per-batch drift dashboard
@@ -306,20 +269,11 @@ object VectorStore {
     coded.filter(col("cell") === element_at(
       Similarity.bestCells(VectorFunctions.unit(col("cv")), cents, 1), 1))
 
-  private def listBatchIds(spark: SparkSession, coded: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(coded)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).sorted
-  }
-
   /** Batch ids already present under a generation's coded dir — for
     * generation N+1 mid-migration, the migrated prefix.
     */
   def migratedBatchIds(spark: SparkSession, root: String, gen: Long): Seq[Long] =
-    listBatchIds(spark, codedDir(root, gen))
+    GenStore.listBatchIds(spark, codedDir(root, gen))
 
   /** Phase 1 of a refit: fit generation `expectedGen + 1`'s index on the
     * store's own vectors (one narrow primary-replica filter recovers one
@@ -383,8 +337,8 @@ object VectorStore {
     */
   def refitFinish(spark: SparkSession, root: String, toGen: Long,
       nassign: Int = 2): Unit = {
-    val prev = listBatchIds(spark, codedDir(root, toGen - 1)).toSet
-    val got = listBatchIds(spark, codedDir(root, toGen)).toSet
+    val prev = GenStore.listBatchIds(spark, codedDir(root, toGen - 1)).toSet
+    val got = GenStore.listBatchIds(spark, codedDir(root, toGen)).toSet
     require(prev.subsetOf(got),
       s"refusing to publish gen=$toGen: batches ${(prev -- got).toSeq.sorted.mkString(",")} not migrated")
     // a refit migrates every admitted row, deleted or not (migration is
@@ -393,14 +347,14 @@ object VectorStore {
     // takedown admitted in the publish window is never lost — the next
     // compaction applies them physically
     def sweepDeletes(): Unit =
-      listBatchIds(spark, deletesDir(root, toGen - 1)).foreach { i =>
+      GenStore.listBatchIds(spark, deletesDir(root, toGen - 1)).foreach { i =>
         Tables.parquet(spark, s"${deletesDir(root, toGen - 1)}/batch_id=$i")
           .write.mode("overwrite").parquet(s"${deletesDir(root, toGen)}/batch_id=$i")
       }
     sweepDeletes()
-    writePointer(root, toGen)
+    GenStore.writePointer(root, toGen)
     sweepDeletes()
-    val stragglers = listBatchIds(spark, codedDir(root, toGen - 1)).toSet -- got
+    val stragglers = GenStore.listBatchIds(spark, codedDir(root, toGen - 1)).toSet -- got
     stragglers.toSeq.sorted.foreach(
       migrateBatch(spark, root, toGen - 1, toGen, _, nassign))
   }
@@ -416,7 +370,7 @@ object VectorStore {
     val cur = currentGen(root)
     if (cur != expectedGen) return cur
     val ng = refitStart(spark, root, cur, nlist, kmeansIters, m, kcode, pqIters)
-    listBatchIds(spark, codedDir(root, cur))
+    GenStore.listBatchIds(spark, codedDir(root, cur))
       .foreach(migrateBatch(spark, root, cur, ng, _, nassign))
     refitFinish(spark, root, ng, nassign)
     ng
@@ -465,112 +419,58 @@ object VectorStore {
     * and never serve rows a listed takedown covered.
     */
   private[graft] def compactGenHooked(spark: SparkSession, root: String,
-      expectedGen: Long, midHook: () => Unit): Long = {
-    val cur = currentGen(root)
-    if (cur != expectedGen) return cur
-    val ng = cur + 1
-    val src = codedDir(root, cur)
-    val ids = listBatchIds(spark, src)
-    require(ids.nonEmpty, s"nothing to compact under $src")
-    val hwm = ids.max
-    // same geometry, new generation directory: readers of gen=cur are
-    // byte-unaffected until the pointer moves
-    val (cents, books) = loadGenIndex(spark, root, cur)
-    Similarity.saveIvfPqIndex(spark, cents, books, indexDir(root, ng))
-    // pending takedowns listed alongside the data fragments are applied
-    // PHYSICALLY everywhere this compaction writes data rows: the
-    // merged fragment AND swept straggler copies (a listed delete can
-    // target rows of a data batch admitted after the listing — delete
-    // lands, listing runs, admit slips inside the window; reads applied
-    // the pending set to every fragment of the generation, and a listed
-    // delete is purged here, not carried, so skipping the straggler
-    // would lose the takedown). Delete fragments admitted after this
-    // listing stay pending (swept through below).
-    val delIds = listBatchIds(spark, deletesDir(root, cur))
-    val del = if (delIds.isEmpty) None
-      else Some(broadcast { // O(dead ids) — see minusDeleted
-        val raw = spark.read.option("mergeSchema", "true").parquet(
-          delIds.map(i => s"${deletesDir(root, cur)}/batch_id=$i"): _*)
-        val hwmCol = if (raw.columns.contains("hwm"))
-          coalesce(col("hwm"), lit(Long.MaxValue)) else lit(Long.MaxValue)
-        raw.groupBy(col("cid")).agg(max(hwmCol).as("del_hwm"))
-      })
-    midHook()
-    // compaction is layout-only, so it carries whatever code tiers the
-    // store was admitted with — a pre-SQ8 store (no sq column) compacts
-    // fine and stays pq-only; adding the tier is refit's job, not this
-    def mergeInto(dstId: Long, srcIds: Seq[Long], applyDeletes: Boolean): Unit = {
-      // basePath keeps the batch_id partition column on explicit-path
-      // reads — the scoped-delete mask is a per-(vector, batch)
-      // predicate: a replaced vector's live re-encode (admitted above
-      // its mask bound) folds through, its old copies die
-      val frags = Tables.parquet(spark, Map("basePath" -> src),
-        srcIds.map(i => s"$src/batch_id=$i"): _*)
-      val kept =
-        if (applyDeletes) del.map(d => frags.join(d, Seq("cid"), "left")
-            .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
-            .drop("del_hwm"))
-          .getOrElse(frags)
-        else frags
-      kept
-        .select(("cid" +: "cv" +: "cell" +: "codes" +:
-          (if (frags.columns.contains("sq")) Seq("sq") else Nil)).map(col): _*)
-        .repartitionByRange(col("cell"), col("cid"))
-        .sortWithinPartitions(col("cell"))
-        .write.mode("overwrite")
-        .parquet(s"${codedDir(root, ng)}/batch_id=$dstId")
-    }
-    mergeInto(hwm, ids, applyDeletes = true)
-    // stats: baseline copied bit-for-bit, the rest exactly-weighted
-    val statsDst = s"${codedDir(root, ng)}_stats"
-    val base = ids.min
-    Tables.parquet(spark, s"${src}_stats/batch_id=$base")
-      .write.mode("overwrite").parquet(s"$statsDst/batch_id=$base")
-    if (ids.size > 1)
-      Tables.parquet(spark, s"${src}_stats").filter(col("batch_id") > base)
-        .agg(sum(col("n_vectors")).as("n_vectors"),
-          (sum(col("mean_err") * col("n_vectors")) / sum(col("n_vectors")))
-            .as("mean_err"),
-          max(col("max_err")).as("max_err"))
-        .write.mode("overwrite").parquet(s"$statsDst/batch_id=$hwm")
-    // straggler sweep: batches admitted to gen=cur since the first
-    // listing ride through unmerged (idempotent copies, ids above hwm)
-    // with the LISTED deletes applied (see above) — delete batches
-    // admitted after the listing stay PENDING in the new generation
-    def sweep(): Unit = {
-      (listBatchIds(spark, src).toSet -- ids).toSeq.sorted.foreach { i =>
-        mergeInto(i, Seq(i), applyDeletes = true)
-        Tables.parquet(spark, s"${src}_stats/batch_id=$i")
-          .write.mode("overwrite").parquet(s"$statsDst/batch_id=$i")
+      expectedGen: Long, midHook: () => Unit): Long =
+    GenStore.publish(spark, root, expectedGen, layout.table,
+        midHook = midHook) { l =>
+      // same geometry, new generation directory: readers of the source
+      // generation are byte-unaffected until the pointer moves
+      val (cents, books) = loadGenIndex(spark, root, expectedGen)
+      Similarity.saveIvfPqIndex(spark, cents, books, s"${l.dst}/index")
+      val src = s"${l.src}/coded"
+      // pending takedowns listed alongside the data fragments are applied
+      // PHYSICALLY everywhere this compaction writes data rows: the
+      // merged fragment AND swept straggler copies (a listed delete can
+      // target rows of a data batch admitted after the listing; reads
+      // applied the pending set to every fragment of the generation, and
+      // a listed delete is purged here, not carried, so skipping the
+      // straggler would lose the takedown)
+      val del = if (l.delIds.isEmpty) None
+        else Some(broadcast( // O(dead ids) — see minusDeleted
+          GenStore.deleteMask(spark.read.option("mergeSchema", "true")
+            .parquet(l.delPaths: _*), "cid")))
+      // compaction is layout-only, so it carries whatever code tiers the
+      // store was admitted with — a pre-SQ8 store (no sq column) compacts
+      // fine and stays pq-only; adding the tier is refit's job, not this
+      def mergeInto(dstId: Long, srcIds: Seq[Long]): Unit = {
+        // basePath keeps the batch_id partition column on explicit-path
+        // reads — the scoped-delete mask is a per-(vector, batch)
+        // predicate: a replaced vector's live re-encode (admitted above
+        // its mask bound) folds through, its old copies die
+        val frags = Tables.parquet(spark, Map("basePath" -> src),
+          l.paths(src, srcIds): _*)
+        del.fold(frags)(GenStore.maskLive(frags, _, "cid"))
+          .select(("cid" +: "cv" +: "cell" +: "codes" +:
+            (if (frags.columns.contains("sq")) Seq("sq") else Nil)).map(col): _*)
+          .repartitionByRange(col("cell"), col("cid"))
+          .sortWithinPartitions(col("cell"))
+          .write.mode("overwrite")
+          .parquet(s"${l.dst}/coded/batch_id=$dstId")
       }
-      (listBatchIds(spark, deletesDir(root, cur)).toSet -- delIds).toSeq.sorted
-        .foreach { i =>
-          val straggler = Tables.parquet(spark,
-            s"${deletesDir(root, cur)}/batch_id=$i")
-          // a SCOPED delete straggling into the compaction window is
-          // refused, never mis-carried: its hwm references batch ids
-          // this fold just merged away, so carrying it pending could
-          // unmask the folded copy it meant to kill
-          // ([[InvertedIndex.compactStoreHooked]]'s rule — the upsert
-          // front serializes its ticks against compaction)
-          if (straggler.columns.contains("hwm") &&
-              straggler.filter(col("hwm") =!= Long.MaxValue).limit(1).count() > 0)
-            throw new IllegalStateException(
-              s"scoped (hwm) delete batch_id=$i landed during a " +
-                s"compaction of $root: scoped deletes reference pre-fold " +
-                "admission batch ids and cannot be carried pending " +
-                "across the fold — re-run the upsert tick against the " +
-                "new generation")
-          straggler
-            .write.mode("overwrite").parquet(s"${deletesDir(root, ng)}/batch_id=$i")
-        }
+      mergeInto(l.hwm, l.ids)
+      // stats: baseline copied bit-for-bit, the rest exactly-weighted
+      val base = l.ids.min
+      l.carry(spark, "coded_stats")(base)
+      if (l.ids.size > 1)
+        Tables.parquet(spark, s"${src}_stats").filter(col("batch_id") > base)
+          .agg(sum(col("n_vectors")).as("n_vectors"),
+            (sum(col("mean_err") * col("n_vectors")) / sum(col("n_vectors")))
+              .as("mean_err"),
+            max(col("max_err")).as("max_err"))
+          .write.mode("overwrite").parquet(s"${l.dst}/coded_stats/batch_id=${l.hwm}")
+      // a straggler rides through unmerged, its own id above the seal,
+      // with the LISTED deletes applied (see above)
+      i => { mergeInto(i, Seq(i)); l.carry(spark, "coded_stats")(i) }
     }
-    sweep()
-    GenStore.seal(root, ng, hwm)
-    writePointer(root, ng)
-    sweep() // the list->publish window, converged post-publish
-    ng
-  }
 
   /** FEDERATION MERGE — the vector half of the scale-out ingestion
     * pattern ([[InvertedIndex.mergeStores]]): FIT ONCE, ENCODE IN K
@@ -595,32 +495,6 @@ object VectorStore {
     */
   def mergeStores(spark: SparkSession, srcRoots: Seq[String],
       dstRoot: String, compactFirst: Boolean = false): Long = {
-    require(srcRoots.size >= 2, "mergeStores needs at least two sources")
-    if (compactFirst) srcRoots.foreach { src =>
-      val g = currentGen(src)
-      if (listBatchIds(spark, codedDir(src, g)).size > 1 ||
-        listBatchIds(spark, deletesDir(src, g)).nonEmpty)
-        compactGen(spark, src, g)
-    }
-    // SCOPED-delete fence ([[InvertedIndex.mergeStores]]'s rule): a
-    // pending hwm-scoped delete references source-local admission batch
-    // ids, which this merge renumbers — compact the source first
-    // (compactFirst=true does) so the mask is applied, not mis-carried
-    srcRoots.foreach { src =>
-      val g = currentGen(src)
-      val dIds = listBatchIds(spark, deletesDir(src, g))
-      if (dIds.nonEmpty) {
-        val dels = spark.read.option("mergeSchema", "true")
-          .parquet(dIds.map(i => s"${deletesDir(src, g)}/batch_id=$i"): _*)
-        if (dels.columns.contains("hwm") &&
-            dels.filter(col("hwm") =!= Long.MaxValue).limit(1).count() > 0)
-          throw new IllegalStateException(
-            s"source $src has pending SCOPED (hwm) deletes: their " +
-              "high-water marks reference source-local admission batch " +
-              "ids, which this merge renumbers — compact the source " +
-              "first (or pass compactFirst = true)")
-      }
-    }
     val arts = srcRoots.map(r => loadGenIndex(spark, r, currentGen(r)))
     val (c0, b0) = arts.head
     require(arts.tail.forall { case (c, b) =>
@@ -633,124 +507,52 @@ object VectorStore {
     }, "mergeStores requires every source to carry the SAME index " +
       "artifact — coded rows are not comparable across artifacts; " +
       "refit, don't merge")
-    require(!java.nio.file.Files.exists(pointerPath(dstRoot)) ||
-      (currentGen(dstRoot) == 1L &&
-        GenStore.compactedHwm(dstRoot, 1L) == -1L),
-      s"merge target $dstRoot must be a fresh store root (an already " +
-        "sealed generation means a previous merge completed)")
-    GenStore.mergeOpen(spark, dstRoot, 1L,
-      occupied = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(genRoot(dstRoot, 1L))))
-    init(spark, dstRoot, c0, b0)
-    var next = 0L
-    var delNext = 0L
-    // byte-level parallel fragment copy (GenStore.copyFragments): the
-    // coded/stats/delete fragments are immutable sealed parquet — no
-    // decode, no re-encode, no Spark job per fragment
-    val observed = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Seq[(String, Long, Long)])]
-    val pairs = srcRoots.flatMap { src =>
-      val gen = currentGen(src)
-      val coded = codedDir(src, gen)
-      val ids = listBatchIds(spark, coded)
-      val delIds = listBatchIds(spark, deletesDir(src, gen))
-      // one file-level manifest per source generation covers coded,
-      // coded stats AND deletes — including in-place rewrites the old
-      // id-set compare missed
-      observed += ((genRoot(src, gen), GenStore.listManifest(spark,
-        genRoot(src, gen))))
-      ids.flatMap { i =>
-        val ps = Seq(
-          (s"$coded/batch_id=$i",
-            s"${codedDir(dstRoot, 1L)}/batch_id=$next"),
-          (s"${coded}_stats/batch_id=$i",
-            s"${codedDir(dstRoot, 1L)}_stats/batch_id=$next"))
-        next += 1; ps
-      } ++ delIds.map { i =>
-        val p = (s"${deletesDir(src, gen)}/batch_id=$i",
-          s"${deletesDir(dstRoot, 1L)}/batch_id=$delNext")
-        delNext += 1; p
-      }
-    }
-    require(next > 0, "no data fragments found under any source's " +
-      "current generation — refusing to seal an empty merged store " +
-      "(were the right roots passed?)")
-    GenStore.copyFragments(spark, pairs)
-    // live-merge fence: refuse to seal if a source moved since listing
-    GenStore.requireSourcesUnmoved(spark, observed.toSeq)
-    GenStore.mergeSeal(dstRoot, 1L, next - 1, delNext - 1)
-    1L
+    GenStore.mergeStores(spark, srcRoots, dstRoot, layout.tables,
+      if (compactFirst) Some(compactGen(spark, _, _)) else None,
+      scopedFence = true, prepare = () => init(spark, dstRoot, c0, b0))
   }
 
   /** The continuous-compaction policy over [[compactGen]]
-    * ([[InvertedIndex.compactIfFragmented]]'s shape): compact once
-    * `maxFragments` accumulate. Returns the new generation when it
-    * fired. Layout-only, so it composes freely with the refit policy
+    * ([[GenStore.compactIfFragmented]]): compact once `maxFragments`
+    * accumulate. Returns the new generation when it fired.
+    * Layout-only, so it composes freely with the refit policy
     * ([[needsRefit]]) — drift decides WHEN the geometry changes,
     * fragmentation decides when the files do.
     */
   def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    val gen = currentGen(root)
-    if (listBatchIds(spark, codedDir(root, gen)).size < maxFragments) None
-    else Some(compactGen(spark, root, gen))
-  }
+      maxFragments: Int): Option[Long] =
+    GenStore.compactIfFragmented(spark, root, layout, maxFragments)(
+      compactGen(spark, root, _))
 
-  /** The COMPACTION-POLICY predicate — the layout twin of
-    * [[needsRefit]], and the contract that bounds the pending-takedown
-    * serving window (the r12-measured read tax every kNN query pays
-    * between a delete admit and the next compaction): true when the
-    * fragment count reached `maxFragments` OR pending-delete ids grew
-    * past `maxPendingFraction` of the admitted vectors. Cost model:
-    * the pending side is parquet-footer counts only
-    * ([[GenStore.footerRowCount]]); the vector count is one Spark read
-    * of the stats fragments (KBs — one row per batch, the same read
-    * [[needsRefit]] already budgets). Delete markers for never-admitted
-    * ids inflate the numerator — acceptable for a trigger: it fires
-    * early, never late.
+  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]) —
+    * the layout twin of [[needsRefit]], and the contract that bounds
+    * the pending-takedown serving window (the r12-measured read tax
+    * every kNN query pays between a delete admit and the next
+    * compaction). The pending side is parquet-footer counts; the vector
+    * count is one Spark read of the KB stats fragments. Delete markers
+    * for never-admitted ids inflate the numerator — acceptable for a
+    * trigger: it fires early, never late.
     */
   def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val gen = currentGen(root)
-    val ids = listBatchIds(spark, codedDir(root, gen))
-    if (ids.isEmpty) false
-    else if (ids.size >= maxFragments) true
-    else {
-      val pending = GenStore.footerRowCount(spark, Seq(deletesDir(root, gen)))
-      pending > 0 && {
-        val vectors = Tables.parquet(spark, s"${codedDir(root, gen)}_stats")
-          .agg(coalesce(sum(col("n_vectors")), lit(0L)))
-          .head().getLong(0)
-        pending.toDouble >= maxPendingFraction * vectors
-      }
-    }
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
+    GenStore.needsCompaction(spark, root, layout, maxFragments,
+      maxPendingFraction)
 
   /** Run [[compactGen]] when [[needsCompaction]] says so. */
   def compactIfNeeded(spark: SparkSession, root: String,
       maxFragments: Int = 16, maxPendingFraction: Double = 0.05):
       Option[Long] =
-    if (!needsCompaction(spark, root, maxFragments, maxPendingFraction)) None
-    else Some(compactGen(spark, root, currentGen(root)))
+    GenStore.compactIfNeeded(spark, root, layout, maxFragments,
+      maxPendingFraction)(compactGen(spark, root, _))
 
-  /** The maintenance dashboard row ([[KeySetStore.maintenanceStatus]]'s
-    * shape): data cardinality is the admitted-vector count from the KB
-    * stats fragments (the [[needsRefit]] read), pending is the
-    * delete-marker footer count.
+  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
+    * data cardinality is the admitted-vector count from the KB stats
+    * fragments, pending is the delete-marker footer count.
     */
   def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame = {
-    val gen = currentGen(root)
-    val frags = listBatchIds(spark, codedDir(root, gen)).size.toLong
-    val vectors = Tables.parquet(spark, s"${codedDir(root, gen)}_stats")
-      .agg(coalesce(sum(col("n_vectors")), lit(0L))).head().getLong(0)
-    val pending = GenStore.footerRowCount(spark, Seq(deletesDir(root, gen)))
-    GenStore.statusRow(spark, gen, frags, vectors, pending,
-      needsCompaction(spark, root, maxFragments, maxPendingFraction))
-  }
+      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
+    GenStore.maintenanceStatus(spark, root, layout, maxFragments,
+      maxPendingFraction)
 
   /** The admitted corpus reconstructed from the CURRENT generation's
     * own rows — one row per vector (the primary-replica filter
@@ -850,7 +652,7 @@ object VectorStore {
       nprobe: Int = 4, shortlistFactor: Int = 8,
       broadcastQueries: Boolean = true, tier: String = "pq"): DataFrame = {
     val migrated = migratedBatchIds(spark, root, newGen)
-    val remaining = listBatchIds(spark, codedDir(root, oldGen))
+    val remaining = GenStore.listBatchIds(spark, codedDir(root, oldGen))
       .filterNot(migrated.toSet)
     // a takedown admitted mid-migration lives in whichever generation
     // its admit landed in; both sides exclude the UNION of the two
@@ -870,9 +672,7 @@ object VectorStore {
         // applies identically on both sides of the transition
         val coded0 = Tables.parquet(spark, Map("basePath" -> codedDir(root, gen)),
           ids.map(i => s"${codedDir(root, gen)}/batch_id=$i"): _*)
-        val coded = del.map(d => coded0.join(broadcast(d), Seq("cid"), "left")
-            .filter(col("del_hwm").isNull || col("batch_id") > col("del_hwm"))
-            .drop("del_hwm"))
+        val coded = del.map(d => GenStore.maskLive(coded0, broadcast(d), "cid"))
           .getOrElse(coded0)
         Some(Similarity.searchCodedFrame(coded, queries, idCol, vecCol, k,
           cents, books, nprobe, shortlistFactor, broadcastQueries, tier))
@@ -889,19 +689,7 @@ object VectorStore {
   /** Published generations still on disk, ascending (at or below the
     * pointer — an unfinished refit's `gen=N+1` is not listed).
     */
-  def listGenerations(root: String): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    val cur = currentGen(root)
-    // closed listing stream (fd leak on long-lived drivers otherwise);
-    // `gen=<N>.deleted` tombstones don't match -> reported as vacuumed
-    scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(root))) { st =>
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("gen=\\d+") => s.drop(4).toLong }
-        .filter(_ <= cur).toSeq.sorted
-    }
-  }
+  def listGenerations(root: String): Seq[Long] = GenStore.listGenerations(root)
 
   /** Retention for superseded generations, the vector twin of
     * [[graft.streaming.EventStreams.vacuumCdc]]: drop every published
@@ -920,12 +708,6 @@ object VectorStore {
     * mid-vacuum or a racing reader can never observe a partial
     * generation that still resolves.
     */
-  def vacuumGenerations(root: String, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must retain at least the current generation")
-    graft.streaming.EventStreams.sweepTombstones(java.nio.file.Paths.get(root))
-    val drop = listGenerations(root).dropRight(keepLast)
-    drop.foreach(g => graft.streaming.EventStreams.tombstoneDelete(
-      java.nio.file.Paths.get(genRoot(root, g))))
-    drop
-  }
+  def vacuumGenerations(root: String, keepLast: Int): Seq[Long] =
+    GenStore.vacuumExcept(root, keepLast, Set.empty)
 }

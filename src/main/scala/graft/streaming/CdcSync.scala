@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{InvertedIndex, Similarity, VectorStore}
+import graft.operators.{GenStore, InvertedIndex, Similarity, VectorStore}
 
 /** CDC → DERIVED-STORE SYNC: keep a serving store (the retrieval index
   * here; [[graft.operators.VectorStore]] has the vector twin) tracking
@@ -87,18 +87,13 @@ object CdcSync {
     }
   }
 
-  // atomic pointer write (the _CURRENT discipline): tmp + ATOMIC_MOVE,
-  // so a reader never sees a torn watermark and a crash leaves the old
-  // one — the tick replays, which the hwm mask makes idempotent
+  // atomic pointer write (the _CURRENT discipline): a reader never sees
+  // a torn watermark and a crash leaves the old one — the tick replays,
+  // which the hwm mask makes idempotent
   private def writeApplied(root: String, v: Long, cdcDir: String,
-      base: Long = 0L): Unit = {
-    val tmp = java.nio.file.Paths.get(root, "_CDC_SYNC.tmp")
-    java.nio.file.Files.write(tmp,
-      s"version=$v\ncdcDir=$cdcDir\nbase=$base\n".getBytes)
-    java.nio.file.Files.move(tmp, watermarkPath(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      base: Long = 0L): Unit =
+    GenStore.atomicWrite(watermarkPath(root),
+      s"version=$v\ncdcDir=$cdcDir\nbase=$base\n")
 
   /** One sync TICK for the retrieval index: advance the store at
     * `root` to the CDC store's current version. First call bootstraps
@@ -249,7 +244,6 @@ object CdcSync {
     */
   def syncStatus(spark: SparkSession,
       pairs: Seq[(String, String)]): DataFrame = {
-    import graft.operators.GenStore
     val rows = pairs.map { case (cdcDir, root) =>
       val (applied, base) = readState(root) match {
         case Some((v, src, b)) =>

@@ -491,15 +491,9 @@ object EventStreams {
     else Some(new String(java.nio.file.Files.readAllBytes(p)).trim.toLong)
   }
 
-  private def writeLaneLast(root: String, sinkId: Int, mapped: Long): Unit = {
-    val dir = java.nio.file.Paths.get(root, "_LANES")
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = dir.resolve(s"sink$sinkId.tmp")
-    java.nio.file.Files.write(tmp, mapped.toString.getBytes)
-    java.nio.file.Files.move(tmp, dir.resolve(s"sink$sinkId"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeLaneLast(root: String, sinkId: Int, mapped: Long): Unit =
+    graft.operators.GenStore.atomicWrite(
+      java.nio.file.Paths.get(root, "_LANES", s"sink$sinkId"), mapped.toString)
 
   /** Streaming SIGNATURE admission under the LIVE-MERGE QUIESCE
     * contract ([[graft.operators.GenStore.quiesce]]) — the sink half of
@@ -1566,13 +1560,9 @@ object EventStreams {
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(stateDir, "_CURRENT"))).trim.toLong
 
-  private def writeCdcVersion(stateDir: String, v: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(stateDir, "_CURRENT.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(stateDir, "_CURRENT"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeCdcVersion(stateDir: String, v: Long): Unit =
+    graft.operators.GenStore.atomicWrite(
+      java.nio.file.Paths.get(stateDir, "_CURRENT"), v.toString)
 
   def readEventsStream(spark: SparkSession, eventsDir: String, schemaDir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}

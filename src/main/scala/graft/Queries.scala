@@ -26,6 +26,22 @@ import graft.operators.{AsOfJoin, AviContainer, BloomJoin, Bpe, Checks, ColeQuer
   *  - timestamps in outputs are converted to epoch millis BIGINT (parquet
   *    timestamp logical-type annotations differ between writers);
   *  - every ORDER-sensitive construct (window, top-k) orders by a unique key.
+  *
+  * Catalog building blocks, each written once and called by the queries:
+  *  - oracle: [[tokCte]] the `tok` CTE, optionally filtered;
+  *  - oracle: [[bm25Ctes]]/[[bm25Score]] the BM25 CTE chain and its score;
+  *  - oracle: [[keepCtes]] the curation quality gate (`qual`, `keep`);
+  *  - oracle: [[bandKeyCtes]] the portable MinHash band-key chain;
+  *  - oracle: [[gateOracle]] the per-query gate rows of the 10 query vectors;
+  *  - Spark: [[tokenized]]/[[docTokens]] tokenised documents;
+  *  - Spark: [[admitDocs]]/[[appendDocs]] the index admit and append;
+  *  - Spark: [[fitIvfPq]]/[[refitIvfPq]] the IVF-PQ fit and refit;
+  *  - Spark: [[storeSearch]]/[[searchRows]]/[[ivfPqSearch]] the vector
+  *    searches at the catalog's width ([[Nprobe]], [[Shortlist]]);
+  *  - Spark: [[refuses]] "refused with a message containing X";
+  *  - Spark: [[casRetryNoop]] the compaction-retry no-op check;
+  *  - Spark: `withGates` literal gate columns, [[gateFrame]] the frame
+  *    [[gateOracle]] states.
   */
 object Queries {
 
@@ -39,7 +55,7 @@ object Queries {
     Tables.load(s, dir, name)
 
   /** Per-invocation unique scratch directory for queries that exercise
-    * write paths (q72/q83): concurrent verify/bench processes must never
+    * write paths: concurrent verify/bench processes must never
     * race on a shared path (overwrite mode could interleave with the
     * other process's read). Best-effort deleted on JVM exit.
     */
@@ -340,15 +356,67 @@ object Queries {
     */
   private val CloneShift = 1L << 40
 
-  /** Shared DuckDB CTE: whitespace tokens / distinct word-trigram shingles. */
-  private val tokCte =
-    """WITH tok AS (
-      |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-      |  FROM documents
-      |)""".stripMargin
+  /** Shared DuckDB CTE `tok` (doc_id, tk): whitespace tokens of every
+    * document, or of those matching `where`.
+    */
+  private def tokCte(where: String = ""): String =
+    s"""WITH tok AS (
+       |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
+       |  FROM documents${if (where.isEmpty) "" else s" WHERE $where"}
+       |)""".stripMargin
+
+  /** Oracle twin of the curation quality gate over `tok`: `qual` scores
+    * each doc as TextFunctions.qualityScore does and `keep` holds the
+    * doc_ids scoring at least 0.5. Continues a WITH list.
+    */
+  private def keepCtes: String =
+    s""", qual AS (
+       |  SELECT doc_id,
+       |    least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
+       |    + least(1.0, (CASE WHEN len(tk) > 0
+       |        THEN CAST(len(list_filter(tk, x -> list_contains($stoplist, x))) AS DOUBLE) / len(tk)
+       |        ELSE 0.0 END) * 5.0) * 0.3
+       |    + least(1.0, (CASE WHEN len(tk) > 0
+       |        THEN CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
+       |        ELSE 0.0 END) / 8.0) * 0.3 AS quality
+       |  FROM tok
+       |), keep AS (
+       |  SELECT doc_id FROM qual WHERE quality >= 0.5
+       |)""".stripMargin
+
+  /** Portable MinHash band keys over `tok`, the oracle twin of Dedup's:
+    * distinct word trigrams (`tri`, docs of at least 3 tokens, narrowed
+    * by `triAnd`), 32 md5 min-hash signatures per doc (`sigs`) and 8
+    * bands of 4 (`bnd`: doc_id, band, bucket). Continues a WITH list and
+    * ends at bnd's closing parenthesis.
+    */
+  private def bandKeyCtes(triAnd: String = ""): String =
+    s""", tri AS (
+       |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
+       |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
+       |  FROM tok WHERE len(tk) >= 3${if (triAnd.isEmpty) "" else s" AND $triAnd"}
+       |), sigs AS (
+       |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
+       |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
+       |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
+       |  GROUP BY doc_id, i
+       |), bnd AS (
+       |  SELECT doc_id, i // 4 AS band,
+       |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
+       |  FROM sigs GROUP BY doc_id, i // 4
+       |)""".stripMargin
+
+  /** Oracle of a per-query gate frame ([[gateFrame]]): each of the 10
+    * query vectors (vec_id < 10) has 5 results and every `gates` column,
+    * one line each.
+    */
+  private def gateOracle(gates: String*): String =
+    s"""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
+       |  ${gates.mkString(",\n  ")}
+       |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin
 
   private val jaccardOracle =
-    s"""$tokCte,
+    s"""${tokCte()},
        |tri AS (
        |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
        |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
@@ -415,7 +483,7 @@ object Queries {
       (s, d) => Dedup.simHashFingerprintsPortable(t(s, d, "documents"), "doc_id", "text")
         .select(col("id").as("doc_id"), col("sim_hi"), col("sim_lo"))
         .orderBy(col("doc_id")),
-      Some(s"""$tokCte,
+      Some(s"""${tokCte()},
               |tri AS (
               |  SELECT doc_id, CASE WHEN len(tk) >= 3
               |    THEN list_distinct(list_transform(range(1, len(tk) - 1),
@@ -445,7 +513,7 @@ object Queries {
           TextFunctions.stopwordRatio(tk).as("stop_ratio"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
               |  CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct,
               |  CASE WHEN len(tk) > 0
@@ -460,7 +528,7 @@ object Queries {
       (s, d) => t(s, d, "documents")
         .select(col("doc_id"), TextFunctions.qualityScore(col("text")).as("quality"))
         .orderBy(col("doc_id")),
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT doc_id,
               |  least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
               |  + least(1.0, (CASE WHEN len(tk) > 0
@@ -481,7 +549,7 @@ object Queries {
         .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"),
           col("lang").as("lang_true"))
         .orderBy(col("doc_id")),
-      Some(s"""$tokCte,
+      Some(s"""${tokCte()},
               |sc AS (
               |  SELECT doc_id,
               |    len(list_filter(tk, x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS s_en,
@@ -677,9 +745,7 @@ object Queries {
               / sum(col("n_results")).over(w) >= 0.8).as("recall_ge_080"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS recall_ge_080
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS recall_ge_080"))),
 
     QDef("q36_jaccard_exact",
       // Exact all-pairs n-gram Jaccard (small-N tool / LSH verification
@@ -717,7 +783,7 @@ object Queries {
       // XXH64-family variant stays the fast path, cross-checked against
       // exact Jaccard in TextDedupSpec.
       (s, d) => Dedup.simHashNearDupPairsPortable(t(s, d, "documents"), "doc_id", "text"),
-      Some(s"""$tokCte,
+      Some(s"""${tokCte()},
               |tri AS (
               |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
               |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
@@ -948,7 +1014,7 @@ object Queries {
           .select("doc_id", "n_tokens", "quality")
           .orderBy(col("doc_id"))
       },
-      Some(s"""$tokCte,
+      Some(s"""${tokCte()},
               |q AS (
               |  SELECT doc_id, text, CAST(len(tk) AS BIGINT) AS n_tokens,
               |    least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
@@ -1130,7 +1196,7 @@ object Queries {
         .select(col("doc_id"),
           TextFunctions.duplicateBigramFraction(col("text")).as("dup_bigram_frac"))
         .orderBy(col("doc_id")),
-      Some(s"""$tokCte,
+      Some(s"""${tokCte()},
               |bg AS (
               |  SELECT doc_id, CASE WHEN len(tk) >= 2
               |    THEN list_transform(range(1, len(tk)), i -> array_to_string(tk[i:i+1], ' '))
@@ -1162,7 +1228,7 @@ object Queries {
               .otherwise(lit(0.0)).as("contamination"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""$tokCte,
+      Some(s"""${tokCte()},
               |tri AS (
               |  SELECT doc_id, CASE WHEN len(tk) >= 3
               |    THEN list_distinct(list_transform(range(1, len(tk) - 1),
@@ -1357,7 +1423,7 @@ object Queries {
         .select(explode(TextFunctions.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token")).limit(20),
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT token, count(*) AS cnt
               |FROM (SELECT unnest(tk) AS token FROM tok)
               |GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin))
@@ -1378,6 +1444,43 @@ object Queries {
     InvertedIndex.bm25Weight(n, df, tf, dl, avgdl)
 
   private val bm25Terms = Seq("join", "vector", "stream", "window")
+
+  /** BM25 oracle CTEs `dl → st → tf → dfc → w → p` over the token
+    * relation `src` (doc_id, tk): doc lengths, corpus N and avgdl, tf of
+    * each of `terms`, df, the [[bm25W]] weight, and `p` with one `w<i>`
+    * column per term. Continues a WITH list and ends at p's closing
+    * parenthesis.
+    */
+  private def bm25Ctes(src: String, terms: Seq[String] = bm25Terms): String =
+    s""", dl AS (
+       |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM $src
+       |), st AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS n,
+       |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
+       |  FROM dl
+       |), tf AS (
+       |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
+       |  FROM (SELECT doc_id, unnest(tk) AS tok FROM $src)
+       |  WHERE tok IN (${terms.map("'" + _ + "'").mkString(", ")})
+       |  GROUP BY doc_id, tok
+       |), dfc AS (
+       |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
+       |), w AS (
+       |  SELECT tf.doc_id, tf.tok,
+       |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
+       |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
+       |), p AS (
+       |  SELECT doc_id,
+       |    ${terms.zipWithIndex.map { case (t, i) =>
+              s"max(CASE WHEN tok = '$t' THEN w END) AS w$i" }.mkString(",\n    ")}
+       |  FROM w GROUP BY doc_id
+       |)""".stripMargin
+
+  /** [[bm25Ctes]]' score over `p`: the per-term weights summed in
+    * written order (never an order-free SUM over doubles), rounded to 6.
+    */
+  private def bm25Score(terms: Seq[String] = bm25Terms): String =
+    s"round(${terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6)"
 
   /** PageRank oracle: unrolled damped iterations as nested CTEs (DuckDB
     * recursive CTEs cannot carry aggregates over the recursive term).
@@ -1479,8 +1582,7 @@ object Queries {
       // matches; per-doc term weights are summed in FIXED written order
       // (w1+w2+w3+w4), never through an order-free SUM over doubles.
       (s, d) => {
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val docs = docTokens(s, d)
         val dl = docs.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
         val st = dl.agg(count(lit(1)).cast("long").as("n"),
           (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
@@ -1500,31 +1602,9 @@ object Queries {
           .select(col("doc_id"), round(score, 6).as("bm25"))
           .orderBy(col("bm25").desc, col("doc_id")).limit(15)
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t, i) =>
-                     s"max(CASE WHEN tok = '$t' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte()}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25
+              |  ${bm25Score()} AS bm25
               |FROM p ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin)),
 
     QDef("q69_bloom_semi",
@@ -1857,7 +1937,7 @@ object Queries {
           array_join(transform(col("postings_arr"), _.cast("string")), ",")
             .as("postings"))
         .orderBy(col("tok")),
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
               |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
               |    x -> CAST(x AS VARCHAR)), ',') AS postings
@@ -1882,6 +1962,98 @@ object Queries {
     t(s, d, "documents")
       .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("tok"))
 
+  /** `docs` tokenised: (doc_id, tk) with TextFunctions' whitespace tokens. */
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+
+  /** The tokenised `documents` table. */
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    tokenized(t(s, d, "documents"))
+
+  /** Admit one batch of tokenised docs into the index store at `root`. */
+  private def admitDocs(s: SparkSession, docs: DataFrame, batchId: Long,
+      root: String): Unit =
+    InvertedIndex.admitBatch(s, docs, "doc_id", "tk", IndexBucket, batchId, root)
+
+  /** Append one batch of tokenised docs to the flat index at `path`. */
+  private def appendDocs(docs: DataFrame, batchId: Long, path: String): Unit =
+    InvertedIndex.appendBatch(docs, "doc_id", "tk", IndexBucket, batchId, path)
+
+  /** The catalog's IVF-PQ fit over (vec_id, embedding): 16 lists, 16 codes
+    * per sub-quantizer, 2 PQ iterations; `kmeansIters` and `m` default to
+    * 3 and 16 (the smaller store fixtures fit with 2 and 8).
+    */
+  private def fitIvfPq(corpus: DataFrame, kmeansIters: Int = 3, m: Int = 16) =
+    Similarity.fitIvfPq(corpus, "vec_id", "embedding", nlist = 16,
+      kmeansIters = kmeansIters, m = m, kcode = 16, pqIters = 2)
+
+  /** A CAS refit of the vector store at `root` with [[fitIvfPq]]'s defaults. */
+  private def refitIvfPq(s: SparkSession, root: String, expectedGen: Long): Long =
+    VectorStore.refit(s, root, expectedGen,
+      nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+
+  /** The catalog's IVF-PQ search width: probe 12 of the 16 lists and
+    * re-rank a 32×k shortlist (q116 measures recall 0.94 with these at
+    * 10× scale, where narrower settings fall to 0.76).
+    */
+  private val Nprobe = 12
+  private val Shortlist = 32
+
+  /** The catalog's vector-store search: top-`k` over (vec_id, embedding)
+    * of `q` in generation `gen` (default: the current one).
+    */
+  private def storeSearch(s: SparkSession, root: String, q: DataFrame,
+      gen: Option[Long] = None, k: Int = 5): DataFrame =
+    VectorStore.searchGen(s, root, gen.getOrElse(VectorStore.currentGen(root)),
+      q, "vec_id", "embedding", k, nprobe = Nprobe, shortlistFactor = Shortlist)
+
+  /** [[storeSearch]] collected: (query_id, rank, neighbor_id, cosine). */
+  private def searchRows(s: SparkSession, root: String,
+      q: DataFrame): Seq[(Long, Long, Long, Double)] =
+    storeSearch(s, root, q).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+
+  /** In-memory IVF-PQ search of `q` over `emb` with fitted (cs, bs). */
+  private def ivfPqSearch(q: DataFrame, emb: DataFrame,
+      cs: Array[Array[Double]], bs: Array[Array[Array[Double]]]): DataFrame =
+    Similarity.ivfPqSearch(q, emb, "vec_id", "embedding", 5, cs, bs,
+      nprobe = Nprobe, nassign = 2, shortlistFactor = Shortlist)
+
+  /** True iff `body` is refused with an IllegalArgumentException whose
+    * message contains one of `anyOf`; any other failure propagates.
+    */
+  private def refuses(anyOf: String*)(body: => Any): Boolean =
+    try { body; false }
+    catch { case e: IllegalArgumentException => anyOf.exists(e.getMessage.contains(_)) }
+
+  /** Run a gen-1 → gen-2 compaction twice: the retry must be a CAS no-op
+    * (both answer gen 2 and no gen=3 appears under `root`).
+    */
+  private def casRetryNoop(root: String)(compact: => Long): Boolean = {
+    val gen2 = compact
+    val retry = compact
+    gen2 == 2L && retry == 2L &&
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+  }
+
+  private implicit class GateColumns(df: DataFrame) {
+    /** `df` with one literal column per (name, value) gate, in order. */
+    def withGates(gates: (String, Any)*): DataFrame =
+      gates.foldLeft(df) { case (acc, (n, v)) => acc.withColumn(n, lit(v)) }
+  }
+
+  /** Per-query gate frame of a served answer (rows keyed by query id):
+    * query_id, its n_results, then the literal `gates`, by query_id —
+    * what [[gateOracle]] states.
+    */
+  private def gateFrame(s: SparkSession, served: Seq[Product],
+      gates: (String, Any)*): DataFrame = {
+    import s.implicits._
+    val ids = served.map(_.productElement(0).asInstanceOf[Long])
+    ids.distinct.sorted.map(q => (q, ids.count(_ == q).toLong))
+      .toDF("query_id", "n_results").withGates(gates: _*).orderBy(col("query_id"))
+  }
+
   private val retrievalOps = Seq(
     QDef("q80_vocab_index",
       // Full-VOCABULARY bucketed inverted index: every token of every
@@ -1895,7 +2067,7 @@ object Queries {
           array_join(transform(col("postings"), _.cast("string")), ",")
             .as("postings"))
         .orderBy(col("tok"), col("bucket")),
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT tok, doc_id // $IndexBucket AS bucket,
               |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
               |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
@@ -1915,7 +2087,7 @@ object Queries {
           array_join(transform(col("postings"), _.cast("string")), ",")
             .as("postings"))
         .orderBy(col("tok")),
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
               |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
               |    x -> CAST(x AS VARCHAR)), ',') AS postings
@@ -2023,9 +2195,7 @@ object Queries {
             bool_and(col("n_fresh") <=> col("n_loaded")).as("loaded_eq_fresh"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS loaded_eq_fresh
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS loaded_eq_fresh"))),
 
     QDef("q85_video_decode",
       // REAL video decode: 48 planted RIFF-AVI containers (AviContainer,
@@ -2609,10 +2779,7 @@ object Queries {
       (s, d) => Dedup.duplicateSpans(
         t(s, d, "documents"), "doc_id", "text", minTokens = 8,
         portableKeys = true),
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), g AS (
+      Some(s"""${tokCte()}, g AS (
              |  SELECT doc_id,
              |    unnest(range(1, len(tk) - 6)) AS pos,
              |    unnest(list_transform(range(1, len(tk) - 6),
@@ -2816,9 +2983,7 @@ object Queries {
               / sum(col("n_results")).over(w) >= 0.8).as("recall_ge_080"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS recall_ge_080
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS recall_ge_080"))),
 
     QDef("q103_pq_persisted",
       // PQ codebook persistence end-to-end (q84's gate for the PQ
@@ -2846,9 +3011,7 @@ object Queries {
             bool_and(col("n_fresh") <=> col("n_loaded")).as("loaded_eq_fresh"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS loaded_eq_fresh
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS loaded_eq_fresh"))),
 
     QDef("q104_span_admission",
       // Incremental span dedup (the crawl-admission shape): even-id docs
@@ -2866,10 +3029,7 @@ object Queries {
         Dedup.spansAgainstStore(docs.filter(col("doc_id") % 2 === 1),
           "doc_id", "text", minTokens = 8, path = dir, portableKeys = true)
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), g AS (
+      Some(s"""${tokCte()}, g AS (
              |  SELECT doc_id,
              |    unnest(range(1, len(tk) - 6)) AS pos,
              |    unnest(list_transform(range(1, len(tk) - 6),
@@ -2916,23 +3076,7 @@ object Queries {
           path = dir, portableKeys = true)
           .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), tri AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-             |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-             |  FROM tok WHERE len(tk) >= 3
-             |), sigs AS (
-             |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-             |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-             |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-             |  GROUP BY doc_id, i
-             |), bnd AS (
-             |  SELECT doc_id, i // 4 AS band,
-             |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-             |  FROM sigs GROUP BY doc_id, i // 4
-             |), store AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 2 = 0
              |), hits AS (
              |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS hit_bands
@@ -3227,8 +3371,7 @@ object Queries {
       // positive probability, but only seen bigrams occur here by
       // construction (the model is trained on the scored corpus).
       (s, d) => {
-        val tok = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val tok = docTokens(s, d)
         val uni = tok.select(explode(col("tk")).as("w"))
         val ucnt = uni.groupBy(col("w")).agg(count(lit(1)).as("c1"))
         val v = uni.agg(countDistinct(col("w")).as("vocab"))
@@ -3253,10 +3396,7 @@ object Queries {
           .orderBy(col("avg_lp"), col("doc_id"))
           .limit(10)
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), uni AS (
+      Some(s"""${tokCte()}, uni AS (
              |  SELECT unnest(tk) AS w FROM tok
              |), ucnt AS (
              |  SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM uni GROUP BY w
@@ -3357,8 +3497,8 @@ object Queries {
         // at 0.76 there — trivially wide at 200 vectors, too narrow at
         // 2000 — while nprobe=12/sf=32 measures 0.94
         val ivfpq = Similarity.ivfPqTopK(q, emb, "vec_id", "embedding", 5,
-          nlist = 16, nprobe = 12, m = 16, kcode = 16,
-          nassign = 2, shortlistFactor = 32)
+          nlist = 16, nprobe = Nprobe, m = 16, kcode = 16,
+          nassign = 2, shortlistFactor = Shortlist)
           .select("query_id", "neighbor_id")
         val bf = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 5)
           .select("query_id", "neighbor_id")
@@ -3373,9 +3513,7 @@ object Queries {
               / sum(col("n_results")).over(w) >= 0.8).as("recall_ge_080"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS recall_ge_080
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS recall_ge_080"))),
 
     QDef("q117_tpch_q15",
       // TPC-H Q15 shape (top supplier): an aggregate compared against
@@ -3469,14 +3607,12 @@ object Queries {
         val dir = scratchDir("q119")
         val emb = t(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
-        val (cents, books) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (cents, books) = fitIvfPq(emb)
         Similarity.saveIvfPqIndex(s, cents, books, dir)
         val (lc, lb) = Similarity.loadIvfPqIndex(s, dir)
         def run(cs: Array[Array[Double]], bs: Array[Array[Array[Double]]],
             out: String) =
-          Similarity.ivfPqSearch(q, emb, "vec_id", "embedding", 5, cs, bs,
-            nprobe = 12, nassign = 2, shortlistFactor = 32)
+          ivfPqSearch(q, emb, cs, bs)
             .select(col("query_id"), col("rank"), col("neighbor_id").as(out))
         run(cents, books, "n_fresh")
           .join(run(lc, lb, "n_loaded"), Seq("query_id", "rank"), "full")
@@ -3485,9 +3621,7 @@ object Queries {
             bool_and(col("n_fresh") <=> col("n_loaded")).as("loaded_eq_fresh"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS loaded_eq_fresh
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS loaded_eq_fresh"))),
 
     QDef("q120_knn_join",
       // Distributed kNN JOIN: EVERY embedding to its top-k neighbors —
@@ -3503,10 +3637,9 @@ object Queries {
       // settings carry over from q116's measured sf0.1 sweep).
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val (cents, books) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (cents, books) = fitIvfPq(emb)
         val knn = Similarity.ivfPqKnnJoin(emb, "vec_id", "embedding", 5,
-          cents, books, nprobe = 12, nassign = 2, shortlistFactor = 32)
+          cents, books, nprobe = Nprobe, nassign = 2, shortlistFactor = Shortlist)
           .select("query_id", "neighbor_id")
         val bf = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 5)
           .select("query_id", "neighbor_id")
@@ -3544,8 +3677,7 @@ object Queries {
         val base = emb.filter(col("vec_id") % 10 < 8)
         val late = emb.filter(col("vec_id") % 10 >= 8)
         val q = emb.filter(col("vec_id") < 10)
-        val (cents, books) = Similarity.fitIvfPq(base, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (cents, books) = fitIvfPq(base)
         Similarity.saveIvfPqIndex(s, cents, books, dir + "/index")
         val (lc, lb) = Similarity.loadIvfPqIndex(s, dir + "/index")
         Similarity.appendCodedBatch(base, "vec_id", "embedding", lc, lb,
@@ -3554,10 +3686,9 @@ object Queries {
           batchId = 1L, path = dir + "/store")
         val admitted = Similarity.searchCodedStore(s, q,
             "vec_id", "embedding", 5, lc, lb, dir + "/store",
-            nprobe = 12, shortlistFactor = 32)
+            nprobe = Nprobe, shortlistFactor = Shortlist)
           .select(col("query_id"), col("rank"), col("neighbor_id").as("n_admitted"))
-        val fresh = Similarity.ivfPqSearch(q, emb, "vec_id", "embedding", 5,
-            cents, books, nprobe = 12, nassign = 2, shortlistFactor = 32)
+        val fresh = ivfPqSearch(q, emb, cents, books)
           .select(col("query_id"), col("rank"), col("neighbor_id").as("n_fresh"))
         admitted.join(fresh, Seq("query_id", "rank"), "full")
           .groupBy(col("query_id"))
@@ -3565,9 +3696,7 @@ object Queries {
             bool_and(col("n_admitted") <=> col("n_fresh")).as("admitted_eq_fresh"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS admitted_eq_fresh
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS admitted_eq_fresh"))),
 
     QDef("q124_semdedup_knn",
       // SemDeDup's corpus-scale form (kNN join -> threshold ->
@@ -3702,13 +3831,12 @@ object Queries {
           emb.select((col("vec_id") + CloneShift).as("vec_id"), col("embedding")))
         val b1 = recrawl.filter(col("vec_id") % 10 < 8)
         val b2 = recrawl.filter(col("vec_id") % 10 >= 8)
-        val (cents, books) = Similarity.fitIvfPq(b1, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (cents, books) = fitIvfPq(b1)
         Similarity.saveIvfPqIndex(s, cents, books, dir + "/index")
         val (lc, lb) = Similarity.loadIvfPqIndex(s, dir + "/index")
         def edgesFor(queries: DataFrame) =
           Similarity.searchCodedStore(s, queries, "vec_id", "embedding", 5,
-            lc, lb, dir + "/store", nprobe = 12, shortlistFactor = 32,
+            lc, lb, dir + "/store", nprobe = Nprobe, shortlistFactor = Shortlist,
             broadcastQueries = false)
             .filter(col("cos") >= 0.99)
             .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
@@ -3850,51 +3978,40 @@ object Queries {
         val base = emb.filter(col("vec_id") % 10 < 8)
         val late = emb.filter(col("vec_id") % 10 >= 8)
         val q = emb.filter(col("vec_id") < 10)
-        val (c1, b1) = Similarity.fitIvfPq(base, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (c1, b1) = fitIvfPq(base)
         VectorStore.init(s, root, c1, b1)
         VectorStore.admit(s, root, base, "vec_id", "embedding", 0L)
         VectorStore.admit(s, root, late, "vec_id", "embedding", 1L)
         // pre-refit gen-1 answer, captured EAGERLY: a lazy frame would
         // re-read gen-1 only after the refit ran and could not witness
         // that the refit left it untouched
-        val pre = VectorStore.searchGen(s, root, 1L, q, "vec_id", "embedding",
-            5, nprobe = 12, shortlistFactor = 32)
+        val pre = storeSearch(s, root, q, Some(1L))
           .select(col("query_id"), col("rank"), col("neighbor_id"))
           .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val gen2 = VectorStore.refit(s, root, expectedGen = 1L,
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
-        val retry = VectorStore.refit(s, root, expectedGen = 1L,
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
-        val postG1 = VectorStore.searchGen(s, root, 1L, q, "vec_id", "embedding",
-            5, nprobe = 12, shortlistFactor = 32)
+        val retryNoop = casRetryNoop(root)(refitIvfPq(s, root, 1L))
+        val postG1 = storeSearch(s, root, q, Some(1L))
           .select(col("query_id"), col("rank"), col("neighbor_id").as("n_post"))
         val stable = pre.toDF("query_id", "rank", "n_pre")
           .join(postG1, Seq("query_id", "rank"), "full")
           .agg(coalesce(bool_and(col("n_pre") <=> col("n_post")), lit(false))
             .as("gen1_stable"))
         val (c2, b2) = VectorStore.loadGenIndex(s, root, 2L)
-        val store = VectorStore.search(s, root, q, "vec_id", "embedding", 5,
-            nprobe = 12, shortlistFactor = 32)
+        val store = storeSearch(s, root, q)
           .select(col("query_id"), col("rank"), col("neighbor_id").as("n_store"))
-        val inline = Similarity.ivfPqSearch(q, emb, "vec_id", "embedding", 5,
-            c2, b2, nprobe = 12, nassign = 2, shortlistFactor = 32)
+        val inline = ivfPqSearch(q, emb, c2, b2)
           .select(col("query_id"), col("rank"), col("neighbor_id").as("n_inline"))
         store.join(inline, Seq("query_id", "rank"), "full")
           .groupBy(col("query_id"))
           .agg(count(lit(1)).cast("long").as("n_results"),
             bool_and(col("n_store") <=> col("n_inline")).as("store_eq_inline"))
           .crossJoin(broadcast(stable))
-          .withColumn("retry_noop", lit(retryNoop))
-          .withColumn("current_gen", lit(VectorStore.currentGen(root)).cast("long"))
+          .withGates("retry_noop" -> retryNoop,
+            "current_gen" -> VectorStore.currentGen(root))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS store_eq_inline, TRUE AS gen1_stable,
-             |  TRUE AS retry_noop, CAST(2 AS BIGINT) AS current_gen
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle(
+        "TRUE AS store_eq_inline, TRUE AS gen1_stable",
+        "TRUE AS retry_noop, CAST(2 AS BIGINT) AS current_gen"))),
 
     QDef("q129_tpch_q13",
       // TPC-H Q13 (customer order-count distribution): LEFT OUTER
@@ -3968,14 +4085,13 @@ object Queries {
           names(a, an).join(names(b, bn), Seq("query_id", "rank"), "full")
             .groupBy(col("query_id"))
             .agg(coalesce(bool_and(col(an) <=> col(bn)), lit(false)).as(out))
-        val (c1, bk1) = Similarity.fitIvfPq(b0, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (c1, bk1) = fitIvfPq(b0)
         VectorStore.init(s, root, c1, bk1)
         VectorStore.admit(s, root, b0, "vec_id", "embedding", 0L)
         VectorStore.admit(s, root, b1, "vec_id", "embedding", 1L)
         VectorStore.admit(s, root, b2, "vec_id", "embedding", 2L)
         def trans() = VectorStore.searchTransitional(s, root, 1L, 2L, q,
-          "vec_id", "embedding", k, nprobe = 12, shortlistFactor = 32)
+          "vec_id", "embedding", k, nprobe = Nprobe, shortlistFactor = Shortlist)
         // (a) gen 2 exists, zero batches migrated: transitional must BE
         // the old-generation answer (eagerly compared before any
         // migration mutates the gen-2 side it reads)
@@ -3983,8 +4099,7 @@ object Queries {
           nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
         val zeroEq = rowEq(
           trans(), "n_t0",
-          VectorStore.searchGen(s, root, 1L, q, "vec_id", "embedding", k,
-            nprobe = 12, shortlistFactor = 32), "n_g1", "zero_eq_old")
+          storeSearch(s, root, q, Some(1L), k), "n_g1", "zero_eq_old")
           .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
         // (b) batch 0 migrated: independent window-ranked merge of the
         // two per-side coded searches
@@ -3996,7 +4111,7 @@ object Queries {
             Tables.parquet(s, ids.map(i =>
               s"${VectorStore.codedDir(root, gen)}/batch_id=$i"): _*),
             q, "vec_id", "embedding", k, cs, bs,
-            nprobe = 12, shortlistFactor = 32)
+            nprobe = Nprobe, shortlistFactor = Shortlist)
         val manual = sideSearch(2L, c2, bk2, Seq(0L))
           .unionByName(sideSearch(1L, c1, bk1, Seq(1L, 2L)))
           .withColumn("mrank", row_number().over(Window.partitionBy(col("query_id"))
@@ -4012,8 +4127,7 @@ object Queries {
         VectorStore.refitFinish(s, root, toGen = 2L)
         val fullEq = rowEq(
           trans(), "n_tf",
-          VectorStore.searchGen(s, root, 2L, q, "vec_id", "embedding", k,
-            nprobe = 12, shortlistFactor = 32), "n_g2", "full_eq_new")
+          storeSearch(s, root, q, Some(2L), k), "n_g2", "full_eq_new")
         import s.implicits._
         zeroEq.toDF("query_id", "zero_eq_old")
           .join(midEq.toDF("query_id", "mid_eq_merge"), Seq("query_id"), "full")
@@ -4414,39 +4528,16 @@ object Queries {
       // touched once per batch, at admission, ever.
       (s, d) => {
         val dir = scratchDir("q139") + "/index"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val docs = docTokens(s, d)
         InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 < 8),
           "doc_id", "tk", bucketSize = 64, batchId = 0L, path = dir)
         InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 >= 8),
           "doc_id", "tk", bucketSize = 64, batchId = 1L, path = dir)
         InvertedIndex.bm25SearchStore(s, dir, bm25Terms, 15)
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte()}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25
+              |  ${bm25Score()} AS bm25
               |FROM p ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin)),
 
     QDef("q142_index_lookup_store",
@@ -4462,19 +4553,16 @@ object Queries {
       // terms' bucket rows across batch directories — never raw text.
       (s, d) => {
         val dir = scratchDir("q142") + "/index"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 < 8),
-          "doc_id", "tk", IndexBucket, batchId = 0L, path = dir)
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 >= 8),
-          "doc_id", "tk", IndexBucket, batchId = 1L, path = dir)
+        val docs = docTokens(s, d)
+        appendDocs(docs.filter(col("doc_id") % 10 < 8), 0L, dir)
+        appendDocs(docs.filter(col("doc_id") % 10 >= 8), 1L, dir)
         InvertedIndex.storeLookup(s, dir, bm25Terms)
           .select(col("tok"), col("n_docs"),
             array_join(transform(col("postings"), _.cast("string")), ",")
               .as("postings"))
           .orderBy(col("tok"))
       },
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
               |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
               |    x -> CAST(x AS VARCHAR)), ',') AS postings
@@ -4690,15 +4778,11 @@ object Queries {
       (s, d) => {
         import s.implicits._
         val root = scratchDir("q143") + "/istore"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val docs = docTokens(s, d)
         InvertedIndex.initStore(root)
-        InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 < 6),
-          "doc_id", "tk", IndexBucket, batchId = 0L, root = root)
-        InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8),
-          "doc_id", "tk", IndexBucket, batchId = 1L, root = root)
-        InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 === 8),
-          "doc_id", "tk", IndexBucket, batchId = 2L, root = root)
+        admitDocs(s, docs.filter(col("doc_id") % 10 < 6), 0L, root)
+        admitDocs(s, docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8), 1L, root)
+        admitDocs(s, docs.filter(col("doc_id") % 10 === 8), 2L, root)
         def lookupRows() = InvertedIndex.lookupCurrent(s, root, bm25Terms)
           .select(col("tok"), col("n_docs"),
             array_join(transform(col("postings"), _.cast("string")), ",").as("p"))
@@ -4708,49 +4792,22 @@ object Queries {
           .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
         val fragsBefore = InvertedIndex.fragmentCount(s, root)
         val (preL, preB) = (lookupRows(), bm25Rows())
-        val gen2 = InvertedIndex.compactStore(s, root, expectedGen = 1L)
-        val retry = InvertedIndex.compactStore(s, root, expectedGen = 1L)
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+        val retryNoop = casRetryNoop(root)(
+          InvertedIndex.compactStore(s, root, expectedGen = 1L))
         val fragsCompacted = InvertedIndex.fragmentCount(s, root)
         val preEqPost = lookupRows() == preL && bm25Rows() == preB
         // admissions keep appending ON TOP of the compacted fragment
-        InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 === 9),
-          "doc_id", "tk", IndexBucket, batchId = 3L, root = root)
+        admitDocs(s, docs.filter(col("doc_id") % 10 === 9), 3L, root)
         val fragsAfterAdmit = InvertedIndex.fragmentCount(s, root)
         InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
-          .withColumn("frags_before", lit(fragsBefore).cast("long"))
-          .withColumn("frags_compacted", lit(fragsCompacted).cast("long"))
-          .withColumn("frags_after_admit", lit(fragsAfterAdmit).cast("long"))
-          .withColumn("retry_noop", lit(retryNoop))
-          .withColumn("pre_eq_post", lit(preEqPost))
+          .withGates("frags_before" -> fragsBefore, "frags_compacted" -> fragsCompacted,
+            "frags_after_admit" -> fragsAfterAdmit, "retry_noop" -> retryNoop,
+            "pre_eq_post" -> preEqPost)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte()}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  CAST(3 AS BIGINT) AS frags_before, CAST(1 AS BIGINT) AS frags_compacted,
               |  CAST(2 AS BIGINT) AS frags_after_admit,
               |  TRUE AS retry_noop, TRUE AS pre_eq_post
@@ -4770,23 +4827,17 @@ object Queries {
       // are the store's dominant residual cost after a refit lands;
       // this gate is what makes dropping them safe to automate.
       (s, d) => {
-        import s.implicits._
         val root = scratchDir("q144") + "/vstore"
         val emb = t(s, d, "embeddings")
         val base = emb.filter(col("vec_id") % 10 < 8)
         val late = emb.filter(col("vec_id") % 10 >= 8)
         val q = emb.filter(col("vec_id") < 10)
-        val (c1, b1) = Similarity.fitIvfPq(base, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (c1, b1) = fitIvfPq(base)
         VectorStore.init(s, root, c1, b1)
         VectorStore.admit(s, root, base, "vec_id", "embedding", 0L)
         VectorStore.admit(s, root, late, "vec_id", "embedding", 1L)
-        VectorStore.refit(s, root, expectedGen = 1L,
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
-        def served() = VectorStore.search(s, root, q, "vec_id", "embedding", 5,
-            nprobe = 12, shortlistFactor = 32)
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        refitIvfPq(s, root, 1L)
+        def served() = searchRows(s, root, q)
         val pre = served()
         val dropped = VectorStore.vacuumGenerations(root, keepLast = 1)
         val droppedGen1 = dropped == Seq(1L) &&
@@ -4795,17 +4846,13 @@ object Queries {
         val gen1Fails =
           try { VectorStore.loadGenIndex(s, root, 1L); false }
           catch { case _: Exception => true }
-        pre.map(_._1).distinct.sorted.map { qid =>
-          (qid, pre.count(_._1 == qid).toLong, postEqPre, droppedGen1,
-            gen1Fails, VectorStore.currentGen(root))
-        }.toDF("query_id", "n_results", "post_eq_pre", "dropped_gen1_only",
-          "gen1_read_fails", "current_gen")
-          .orderBy(col("query_id"))
+        gateFrame(s, pre, "post_eq_pre" -> postEqPre,
+          "dropped_gen1_only" -> droppedGen1, "gen1_read_fails" -> gen1Fails,
+          "current_gen" -> VectorStore.currentGen(root))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS post_eq_pre, TRUE AS dropped_gen1_only,
-             |  TRUE AS gen1_read_fails, CAST(2 AS BIGINT) AS current_gen
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle(
+        "TRUE AS post_eq_pre, TRUE AS dropped_gen1_only",
+        "TRUE AS gen1_read_fails, CAST(2 AS BIGINT) AS current_gen"))),
 
     QDef("q145_phrase_search",
       // EXACT-PHRASE retrieval over POSITIONAL postings — the index
@@ -4824,15 +4871,12 @@ object Queries {
       // output — index rows only, never the corpus.
       (s, d) => {
         val dir = scratchDir("q145") + "/index"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 < 8),
-          "doc_id", "tk", IndexBucket, batchId = 0L, path = dir)
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 >= 8),
-          "doc_id", "tk", IndexBucket, batchId = 1L, path = dir)
+        val docs = docTokens(s, d)
+        appendDocs(docs.filter(col("doc_id") % 10 < 8), 0L, dir)
+        appendDocs(docs.filter(col("doc_id") % 10 >= 8), 1L, dir)
         InvertedIndex.phraseSearchStore(s, dir, phrase)
       },
-      Some(s"""$tokCte
+      Some(s"""${tokCte()}
               |SELECT doc_id,
               |  CAST(len(list_filter(range(1, len(tk)),
               |    i -> ${phrase.zipWithIndex.map { case (w, i) =>
@@ -4858,39 +4902,14 @@ object Queries {
       // doclens appear nowhere.
       (s, d) => {
         val dir = scratchDir("q147") + "/index"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 < 8),
-          "doc_id", "tk", IndexBucket, batchId = 0L, path = dir)
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 >= 8),
-          "doc_id", "tk", IndexBucket, batchId = 1L, path = dir)
+        val docs = docTokens(s, d)
+        appendDocs(docs.filter(col("doc_id") % 10 < 8), 0L, dir)
+        appendDocs(docs.filter(col("doc_id") % 10 >= 8), 1L, dir)
         InvertedIndex.phraseBm25SearchStore(s, dir, phrase, 15)
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${phrase.distinct.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
+      Some(s"""${tokCte()}${bm25Ctes("tok", phrase.distinct)}, scores AS (
               |  SELECT doc_id,
-              |    ${phrase.distinct.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |), scores AS (
-              |  SELECT doc_id,
-              |    round(${phrase.distinct.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25
+              |    ${bm25Score(phrase.distinct)} AS bm25
               |  FROM p
               |), ph AS (
               |  SELECT doc_id,
@@ -4937,12 +4956,8 @@ object Queries {
           .collect().toSeq.map(r => (r.getString(0), r.getLong(1))).sorted
         val fragsBefore = SketchStore.fragmentCount(s, root)
         val pre = ests()
-        val gen2 = SketchStore.compactStore(s, root, expectedGen = 1L,
-          Seq("event_type"))
-        val retry = SketchStore.compactStore(s, root, expectedGen = 1L,
-          Seq("event_type"))
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+        val retryNoop = casRetryNoop(root)(
+          SketchStore.compactStore(s, root, expectedGen = 1L, Seq("event_type")))
         val fragsCompacted = SketchStore.fragmentCount(s, root)
         val estIdentical = ests() == pre
         SketchStore.admitBatch(s, ev.filter(pmod(col("event_id"), lit(4)) === 3),
@@ -5006,10 +5021,8 @@ object Queries {
             "k", m, b, root)
         }
         val fragsBefore = HeavyHitters.fragmentCount(s, root)
-        val gen2 = HeavyHitters.compactStore(s, root, expectedGen = 1L, m)
-        val retry = HeavyHitters.compactStore(s, root, expectedGen = 1L, m)
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+        val retryNoop = casRetryNoop(root)(
+          HeavyHitters.compactStore(s, root, expectedGen = 1L, m))
         val fragsCompacted = HeavyHitters.fragmentCount(s, root)
         // prefix gate: the compacted summary still honors the MG
         // contract against the 3-batch prefix's exact counts — checked
@@ -5096,12 +5109,8 @@ object Queries {
         val emb = t(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
         val fit = emb.filter(col("vec_id") % 5 === 0)
-        val (c1, b1) = Similarity.fitIvfPq(fit, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
-        def served() = VectorStore.search(s, root, q, "vec_id", "embedding", 5,
-            nprobe = 12, shortlistFactor = 32)
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        val (c1, b1) = fitIvfPq(fit)
+        def served() = searchRows(s, root, q)
         def frags() = VectorStore.migratedBatchIds(s, root,
           VectorStore.currentGen(root)).size.toLong
         def stats() = VectorStore.driftStats(s, root)
@@ -5120,10 +5129,8 @@ object Queries {
           val pre = served()
           val statsPre = stats()
           val refitPre = VectorStore.needsRefit(s, root)
-          val gen2 = VectorStore.compactGen(s, root, expectedGen = 1L)
-          val retry = VectorStore.compactGen(s, root, expectedGen = 1L)
-          val retryNoop = gen2 == 2L && retry == 2L &&
-            !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+          val retryNoop = casRetryNoop(root)(
+            VectorStore.compactGen(s, root, expectedGen = 1L))
           val fragsCompacted = frags()
           val postEqPre = served() == pre
           val statsPost = stats()
@@ -5131,12 +5138,10 @@ object Queries {
           val statsMerged = statsPost.size == 2 &&
             statsPost.map(_._2).sum == statsPre.map(_._2).sum
           val refitUnchanged = VectorStore.needsRefit(s, root) == refitPre
-          val sealedRefused =
-            try {
-              VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 0),
-                "vec_id", "embedding", 0L); false
-            } catch { case e: IllegalArgumentException =>
-              e.getMessage.contains("compact") }
+          val sealedRefused = refuses("compact") {
+            VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 0),
+              "vec_id", "embedding", 0L)
+          }
           VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 4),
             "vec_id", "embedding", 4L)
           val fragsAfter = frags()
@@ -5150,7 +5155,7 @@ object Queries {
           val flat = scratchDir("q150") + "/flat"
           Similarity.appendCodedBatch(emb, "vec_id", "embedding", c1, b1, 0L, flat)
           Similarity.searchCodedStore(s, q, "vec_id", "embedding", 5,
-              c1, b1, flat, nprobe = 12, shortlistFactor = 32)
+              c1, b1, flat, nprobe = Nprobe, shortlistFactor = Shortlist)
             .collect().toSeq
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         }
@@ -5158,26 +5163,23 @@ object Queries {
           postEqPre, baselineIdentical, statsMerged, refitUnchanged,
           sealedRefused), oneShot) = Par.both(lifecycleSection(), flatSection())
         val eqOneShot = served() == oneShot
-        pre.map(_._1).distinct.sorted.map { qid =>
-          (qid, pre.count(_._1 == qid).toLong, postEqPre, eqOneShot,
-            fragsBefore, fragsCompacted, fragsAfter, retryNoop, sealedRefused,
-            baselineIdentical, statsMerged, refitUnchanged,
-            VectorStore.currentGen(root))
-        }.toDF("query_id", "n_results", "post_eq_pre", "eq_one_shot",
-          "frags_before", "frags_compacted", "frags_after_admit",
-          "retry_noop", "sealed_replay_refused", "baseline_stat_identical",
-          "stats_merged_weighted", "drift_signal_unchanged", "current_gen")
-          .orderBy(col("query_id"))
+        gateFrame(s, pre, "post_eq_pre" -> postEqPre, "eq_one_shot" -> eqOneShot,
+          "frags_before" -> fragsBefore, "frags_compacted" -> fragsCompacted,
+          "frags_after_admit" -> fragsAfter, "retry_noop" -> retryNoop,
+          "sealed_replay_refused" -> sealedRefused,
+          "baseline_stat_identical" -> baselineIdentical,
+          "stats_merged_weighted" -> statsMerged,
+          "drift_signal_unchanged" -> refitUnchanged,
+          "current_gen" -> VectorStore.currentGen(root))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS post_eq_pre, TRUE AS eq_one_shot,
-             |  CAST(4 AS BIGINT) AS frags_before,
-             |  CAST(1 AS BIGINT) AS frags_compacted,
-             |  CAST(2 AS BIGINT) AS frags_after_admit,
-             |  TRUE AS retry_noop, TRUE AS sealed_replay_refused,
-             |  TRUE AS baseline_stat_identical, TRUE AS stats_merged_weighted,
-             |  TRUE AS drift_signal_unchanged, CAST(2 AS BIGINT) AS current_gen
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle(
+        "TRUE AS post_eq_pre, TRUE AS eq_one_shot",
+        "CAST(4 AS BIGINT) AS frags_before",
+        "CAST(1 AS BIGINT) AS frags_compacted",
+        "CAST(2 AS BIGINT) AS frags_after_admit",
+        "TRUE AS retry_noop, TRUE AS sealed_replay_refused",
+        "TRUE AS baseline_stat_identical, TRUE AS stats_merged_weighted",
+        "TRUE AS drift_signal_unchanged, CAST(2 AS BIGINT) AS current_gen"))),
 
     QDef("q151_signature_compaction",
       // COMPACTION of the DEDUP SIGNATURE store — the GenStore family
@@ -5220,10 +5222,8 @@ object Queries {
           .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
         val fragsBefore = KeySetStore.fragmentCount(s, root)
         val pre = decisions()
-        val gen2 = KeySetStore.compactStore(s, root, expectedGen = 1L)
-        val retry = KeySetStore.compactStore(s, root, expectedGen = 1L)
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+        val retryNoop = casRetryNoop(root)(
+          KeySetStore.compactStore(s, root, expectedGen = 1L))
         val fragsCompacted = KeySetStore.fragmentCount(s, root)
         val postEqPre = decisions() == pre && pre.nonEmpty
         // compaction dedups keys ACROSS batches: the compacted fragment
@@ -5234,12 +5234,10 @@ object Queries {
         val crossBatchDedup = keyRowsCompacted <= keyRowsFragmented &&
           keyRowsCompacted ==
             Tables.parquet(s, root + "/gen=1").drop("batch_id").distinct().count()
-        val sealedRefused =
-          try {
-            Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 0),
-              batchId = 0L, root = root); false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("compact") }
+        val sealedRefused = refuses("compact") {
+          Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 0),
+            batchId = 0L, root = root)
+        }
         Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 3),
           batchId = 3L, root = root)
         val fragsAfter = KeySetStore.fragmentCount(s, root)
@@ -5258,23 +5256,7 @@ object Queries {
             lit(crossBatchDedup).as("cross_batch_dedup"),
             lit(sealedRefused).as("sealed_replay_refused"))
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), tri AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-             |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-             |  FROM tok WHERE len(tk) >= 3
-             |), sigs AS (
-             |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-             |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-             |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-             |  GROUP BY doc_id, i
-             |), bnd AS (
-             |  SELECT doc_id, i // 4 AS band,
-             |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-             |  FROM sigs GROUP BY doc_id, i // 4
-             |), store AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 5 < 4
              |), hits AS (
              |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS hit_bands
@@ -5315,27 +5297,21 @@ object Queries {
       // a fleet of query nodes sees index+vector refits land as one
       // atomic cutover with zero read downtime.
       (s, d) => {
-        import s.implicits._
         val root = scratchDir("q152")
         val iroot = root + "/istore"
         val vroot = root + "/vstore"
         val mroot = root + "/manifest"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val docs = docTokens(s, d)
         val emb = t(s, d, "embeddings")
         // the two stores live in disjoint roots — builds overlap (Par, §2.6)
         Par.both(
           {
             InvertedIndex.initStore(iroot)
-            InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 < 8),
-              "doc_id", "tk", IndexBucket, batchId = 0L, root = iroot)
-            InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 >= 8),
-              "doc_id", "tk", IndexBucket, batchId = 1L, root = iroot)
+            admitDocs(s, docs.filter(col("doc_id") % 10 < 8), 0L, iroot)
+            admitDocs(s, docs.filter(col("doc_id") % 10 >= 8), 1L, iroot)
           },
           {
-            val (c1, bk1) = Similarity.fitIvfPq(
-              emb.filter(col("vec_id") % 10 < 8), "vec_id", "embedding",
-              nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+            val (c1, bk1) = fitIvfPq(emb.filter(col("vec_id") % 10 < 8))
             VectorStore.init(s, vroot, c1, bk1)
             VectorStore.admit(s, vroot, emb.filter(col("vec_id") % 10 < 8),
               "vec_id", "embedding", 0L)
@@ -5362,8 +5338,7 @@ object Queries {
         }
         def hybridAt(version: Long): Seq[(Long, Long, Long)] = {
           val p = Manifest.pins(mroot, version)
-          val knn = VectorStore.searchGen(s, vroot, p("vectors"), q,
-              "vec_id", "embedding", 10, nprobe = 12, shortlistFactor = 32)
+          val knn = storeSearch(s, vroot, q, Some(p("vectors")), 10)
             .select(col("query_id"), col("neighbor_id").as("doc_id"),
               col("rank").as("rk"))
           val bm = InvertedIndex.bm25SearchStore(s,
@@ -5378,8 +5353,7 @@ object Queries {
         // (independent stores — the compaction and the refit overlap)
         Par.both(
           InvertedIndex.compactStore(s, iroot, expectedGen = 1L),
-          VectorStore.refit(s, vroot, expectedGen = 1L,
-            nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2))
+          refitIvfPq(s, vroot, 1L))
         val v1Stable = hybridAt(1L) == r1
         val v2 = Manifest.publish(mroot, expectedVersion = 1L,
           Map("index" -> InvertedIndex.currentGen(iroot),
@@ -5390,8 +5364,7 @@ object Queries {
           Manifest.pins(mroot, 2L) == Map("index" -> 2L, "vectors" -> 2L)
         val r2 = hybridAt(2L)
         // v2 == reads through the stores' own current pointers
-        val knnCur = VectorStore.search(s, vroot, q,
-            "vec_id", "embedding", 10, nprobe = 12, shortlistFactor = 32)
+        val knnCur = storeSearch(s, vroot, q, k = 10)
           .select(col("query_id"), col("neighbor_id").as("doc_id"),
             col("rank").as("rk"))
         val bmCur = InvertedIndex.bm25SearchCurrent(s, iroot, bm25Terms, 20)
@@ -5416,14 +5389,12 @@ object Queries {
           Manifest.vacuumStore(mroot, "index", iroot, keepLast = 1) == Seq(1L) &&
           Manifest.vacuumStore(mroot, "vectors", vroot, keepLast = 1) == Seq(1L)
         val postVacuum = hybridAt(2L) == r2 && storeDrops
-        r2.map(_._1).distinct.sorted.map { qid =>
-          (qid, r2.count(_._1 == qid).toLong, v1Stable, v2EqCurrent,
-            retryNoop, dropped && staleFails && retainedOk && retainedAfter,
-            postVacuum, Manifest.currentVersion(mroot))
-        }.toDF("query_id", "n_results", "v1_stable_under_publishes",
-          "v2_eq_current", "retry_noop", "retention_contract_ok",
-          "post_vacuum_identical", "current_version")
-          .orderBy(col("query_id"))
+        gateFrame(s, r2, "v1_stable_under_publishes" -> v1Stable,
+          "v2_eq_current" -> v2EqCurrent, "retry_noop" -> retryNoop,
+          "retention_contract_ok" ->
+            (dropped && staleFails && retainedOk && retainedAfter),
+          "post_vacuum_identical" -> postVacuum,
+          "current_version" -> Manifest.currentVersion(mroot))
       },
       Some("""SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_results,
              |  TRUE AS v1_stable_under_publishes, TRUE AS v2_eq_current,
@@ -5483,32 +5454,7 @@ object Queries {
           "source", "doc_id", "n_tokens", 2048L)
           .orderBy(col("source"), col("doc_id"))
       },
-      Some(s"""$tokCte, qual AS (
-              |  SELECT doc_id,
-              |    least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(len(list_filter(tk, x -> list_contains($stoplist, x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) * 5.0) * 0.3
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) / 8.0) * 0.3 AS quality
-              |  FROM tok
-              |), keep AS (
-              |  SELECT doc_id FROM qual WHERE quality >= 0.5
-              |), tri AS (
-              |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-              |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-              |  FROM tok WHERE len(tk) >= 3 AND doc_id IN (SELECT doc_id FROM keep)
-              |), sigs AS (
-              |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-              |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-              |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-              |  GROUP BY doc_id, i
-              |), bnd AS (
-              |  SELECT doc_id, i // 4 AS band,
-              |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-              |  FROM sigs GROUP BY doc_id, i // 4
-              |), store AS (
+      Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, store AS (
               |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 2 = 0
               |), hits AS (
               |  SELECT b.doc_id, count(*) AS hit_bands
@@ -5654,9 +5600,7 @@ object Queries {
               / sum(col("n_results")).over(w) >= 0.9).as("recall_ge_090"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS recall_ge_090
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS recall_ge_090"))),
 
     QDef("q157_sq_store_tier",
       // The SQ8 tier served FROM THE STORE (q123's admission gate at
@@ -5676,8 +5620,7 @@ object Queries {
         val base = emb.filter(col("vec_id") % 10 < 8)
         val late = emb.filter(col("vec_id") % 10 >= 8)
         val q = emb.filter(col("vec_id") < 10)
-        val (cents, books) = Similarity.fitIvfPq(base, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (cents, books) = fitIvfPq(base)
         Similarity.appendCodedBatch(base, "vec_id", "embedding", cents, books,
           batchId = 0L, path = dir + "/store")
         Similarity.appendCodedBatch(late, "vec_id", "embedding", cents, books,
@@ -5695,9 +5638,7 @@ object Queries {
             bool_and(col("n_admitted") <=> col("n_fresh")).as("store_eq_fresh"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS store_eq_fresh
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS store_eq_fresh"))),
 
     QDef("q158_quantile_store",
       // The QUANTILE store completes the sketch-store family triad
@@ -5731,12 +5672,8 @@ object Queries {
           .collect().map(_.toString).sorted.toSeq
         val fragsBefore = QuantileStore.fragmentCount(s, root)
         val pre = quants()
-        val gen2 = QuantileStore.compactStore(s, root, expectedGen = 1L,
-          Seq("l_returnflag"))
-        val retry = QuantileStore.compactStore(s, root, expectedGen = 1L,
-          Seq("l_returnflag"))
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+        val retryNoop = casRetryNoop(root)(
+          QuantileStore.compactStore(s, root, expectedGen = 1L, Seq("l_returnflag")))
         val fragsCompacted = QuantileStore.fragmentCount(s, root)
         val estIdentical = quants() == pre
         QuantileStore.admitBatch(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
@@ -5907,17 +5844,13 @@ object Queries {
         val root = scratchDir("q146")
         val idir = root + "/istore"
         val vroot = root + "/vstore"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 < 8),
-          "doc_id", "tk", IndexBucket, batchId = 0L, path = idir)
-        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 >= 8),
-          "doc_id", "tk", IndexBucket, batchId = 1L, path = idir)
+        val docs = docTokens(s, d)
+        appendDocs(docs.filter(col("doc_id") % 10 < 8), 0L, idir)
+        appendDocs(docs.filter(col("doc_id") % 10 >= 8), 1L, idir)
         val emb = t(s, d, "embeddings")
         val b1 = emb.filter(col("vec_id") % 10 < 8)
         val b2 = emb.filter(col("vec_id") % 10 >= 8)
-        val (c1, bk1) = Similarity.fitIvfPq(b1, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (c1, bk1) = fitIvfPq(b1)
         VectorStore.init(s, vroot, c1, bk1)
         VectorStore.admit(s, vroot, b1, "vec_id", "embedding", 0L)
         VectorStore.admit(s, vroot, b2, "vec_id", "embedding", 1L)
@@ -5942,31 +5875,9 @@ object Queries {
           .select(col("query_id"), col("hrank"), col("doc_id"), col("rrf"))
           .orderBy(col("query_id"), col("hrank"))
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
+      Some(s"""${tokCte()}${bm25Ctes("tok")}, bmtop AS (
               |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |), bmtop AS (
-              |  SELECT doc_id,
-              |    round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25
+              |    ${bm25Score()} AS bm25
               |  FROM p ORDER BY bm25 DESC, doc_id LIMIT 20
               |), bmr AS (
               |  SELECT doc_id,
@@ -6039,13 +5950,10 @@ object Queries {
         // OverlapSpec gates this exact shape against its sequential twin.
         val root = scratchDir("q161") + "/istore"
         def indexSection(): (Boolean, Boolean, Boolean) = {
-          val docs = t(s, d, "documents")
-            .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+          val docs = docTokens(s, d)
           InvertedIndex.initStore(root)
-          InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 < 5),
-            "doc_id", "tk", IndexBucket, batchId = 0L, root = root)
-          InvertedIndex.admitBatch(s, docs.filter(col("doc_id") % 10 >= 5),
-            "doc_id", "tk", IndexBucket, batchId = 1L, root = root)
+          admitDocs(s, docs.filter(col("doc_id") % 10 < 5), 0L, root)
+          admitDocs(s, docs.filter(col("doc_id") % 10 >= 5), 1L, root)
           val dead = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
           InvertedIndex.admitDeleteBatch(s, dead, "doc_id", 0L, root)
           def bm25Rows() = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
@@ -6068,8 +5976,7 @@ object Queries {
         }
         def vectorSection(): (Boolean, Boolean) = {
           val emb = t(s, d, "embeddings")
-          val (vc, vb) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-            nlist = 16, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
+          val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
           val vroot = scratchDir("q161") + "/vstore"
           val vclean = scratchDir("q161") + "/vclean"
           VectorStore.init(s, vroot, vc, vb)
@@ -6099,41 +6006,14 @@ object Queries {
         val ((replayNoop, postEqPending, purged), (vPending, vCompacted)) =
           Par.both(indexSection(), vectorSection())
         InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
-          .withColumn("replay_noop", lit(replayNoop))
-          .withColumn("post_eq_pending", lit(postEqPending))
-          .withColumn("physical_purge", lit(purged))
-          .withColumn("vector_pending_ok", lit(vPending))
-          .withColumn("vector_compacted_ok", lit(vCompacted))
+          .withGates("replay_noop" -> replayNoop, "post_eq_pending" -> postEqPending,
+            "physical_purge" -> purged, "vector_pending_ok" -> vPending,
+            "vector_compacted_ok" -> vCompacted)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-              |  FROM documents WHERE doc_id % 7 <> 3
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte("doc_id % 7 <> 3")}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS replay_noop, TRUE AS post_eq_pending,
               |  TRUE AS physical_purge, TRUE AS vector_pending_ok,
               |  TRUE AS vector_compacted_ok
@@ -6157,8 +6037,7 @@ object Queries {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val root = scratchDir("q162") + "/vstore"
-        val (vc, vb) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
+        val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
         VectorStore.init(s, root, vc, vb)
         VectorStore.admit(s, root, emb.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", 0L)
@@ -6272,12 +6151,8 @@ object Queries {
           .collect().map(_.toString).sorted.toSeq
         val fragsBefore = QuantileStore.fragmentCount(s, root)
         val pre = quants()
-        val gen2 = QuantileStore.compactStore(s, root, expectedGen = 1L,
-          Seq("l_returnflag"))
-        val retry = QuantileStore.compactStore(s, root, expectedGen = 1L,
-          Seq("l_returnflag"))
-        val retryNoop = gen2 == 2L && retry == 2L &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(root, "gen=3"))
+        val retryNoop = casRetryNoop(root)(
+          QuantileStore.compactStore(s, root, expectedGen = 1L, Seq("l_returnflag")))
         val fragsCompacted = QuantileStore.fragmentCount(s, root)
         val estIdentical = quants() == pre
         QuantileStore.admitBatchHdr(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
@@ -6395,32 +6270,7 @@ object Queries {
           .withColumn("mid_stream_compaction", lit(midStream))
           .orderBy(col("source"), col("doc_id"))
       },
-      Some(s"""$tokCte, qual AS (
-              |  SELECT doc_id,
-              |    least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(len(list_filter(tk, x -> list_contains($stoplist, x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) * 5.0) * 0.3
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) / 8.0) * 0.3 AS quality
-              |  FROM tok
-              |), keep AS (
-              |  SELECT doc_id FROM qual WHERE quality >= 0.5
-              |), tri AS (
-              |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-              |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-              |  FROM tok WHERE len(tk) >= 3 AND doc_id IN (SELECT doc_id FROM keep)
-              |), sigs AS (
-              |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-              |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-              |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-              |  GROUP BY doc_id, i
-              |), bnd AS (
-              |  SELECT doc_id, i // 4 AS band,
-              |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-              |  FROM sigs GROUP BY doc_id, i // 4
-              |), adm0 AS (
+      Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, adm0 AS (
               |  SELECT doc_id FROM keep WHERE doc_id % 3 = 0
               |), store1 AS (
               |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 0
@@ -6537,20 +6387,7 @@ object Queries {
             lit(readmitted).as("readmitted_exists"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""$tokCte, tri AS (
-              |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-              |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-              |  FROM tok WHERE len(tk) >= 3
-              |), sigs AS (
-              |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-              |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-              |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-              |  GROUP BY doc_id, i
-              |), bnd AS (
-              |  SELECT doc_id, i // 4 AS band,
-              |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-              |  FROM sigs GROUP BY doc_id, i // 4
-              |), store AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
               |  SELECT DISTINCT band, bucket FROM bnd
               |  EXCEPT
               |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 7 = 3
@@ -6623,14 +6460,12 @@ object Queries {
         val frag = Tables.parquet(s, GenStore.genDir(root, 2L)).drop("batch_id")
         val physical = frag.filter(col("cnt") <= 0).isEmpty &&
           Checks.multisetEq(hist(root), hist(froot))
-        val sealedRefused = try {
+        val sealedRefused = refuses("subtract twice") {
           QuantileStore.retractBatch(s,
             li.filter(pmod(col("l_orderkey"), lit(4)) === 1),
             Seq("l_returnflag"), "l_quantity", lo = 1.0, width = 1.0,
             nbins = 50, batchId = 3L, root = root)
-          false
-        } catch { case e: IllegalArgumentException =>
-          e.getMessage.contains("subtract twice") }
+        }
         // over-retraction: a store that never saw orderkey%4==3 rows
         // retracts them — the compaction must refuse to publish
         val oroot = scratchDir("q166") + "/over"
@@ -6639,11 +6474,9 @@ object Queries {
         QuantileStore.retractBatch(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
           Seq("l_returnflag"), "l_quantity", lo = 1.0, width = 1.0,
           nbins = 50, batchId = 1L, root = oroot)
-        val overLoud = (try {
+        val overLoud = refuses("NOT published") {
           QuantileStore.compactStore(s, oroot, expectedGen = 1L, Seq("l_returnflag"))
-          false
-        } catch { case e: IllegalArgumentException =>
-          e.getMessage.contains("NOT published") }) &&
+        } &&
           GenStore.currentGen(oroot) == 1L
         QuantileStore.quantilesCurrent(s, root, Seq("l_returnflag"), qs,
             lo = 1.0, width = 1.0)
@@ -6772,8 +6605,7 @@ object Queries {
         val kroot = base + "/sigstore"
         val mroot = base + "/manifest"
         val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"))
+        val toks = tokenized(docs)
         val emb = t(s, d, "embeddings")
         // The three store families land in disjoint roots with no exchanged
         // values, so their builds overlap (Par, guide §2.6). The signature
@@ -6782,14 +6614,11 @@ object Queries {
         // the same checkpointed key set instead of re-shingling raw text.
         def indexSection(): Unit = {
           InvertedIndex.initStore(iroot)
-          InvertedIndex.admitBatch(s, toks.filter(col("doc_id") % 2 === 0),
-            "doc_id", "tk", IndexBucket, batchId = 0L, root = iroot)
-          InvertedIndex.admitBatch(s, toks.filter(col("doc_id") % 2 === 1),
-            "doc_id", "tk", IndexBucket, batchId = 1L, root = iroot)
+          admitDocs(s, toks.filter(col("doc_id") % 2 === 0), 0L, iroot)
+          admitDocs(s, toks.filter(col("doc_id") % 2 === 1), 1L, iroot)
         }
         def vectorSection(): Unit = {
-          val (vc, vb) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-            nlist = 16, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
+          val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
           VectorStore.init(s, vroot, vc, vb)
           VectorStore.admit(s, vroot, emb, "vec_id", "embedding", 0L)
         }
@@ -6869,39 +6698,14 @@ object Queries {
         InvertedIndex.bm25SearchStore(s,
             InvertedIndex.genDir(iroot, Manifest.resolve(mroot, 2L, "index")),
             bm25Terms, 15)
-          .withColumn("v1_pre_takedown_stable", lit(v1Stable))
-          .withColumn("vector_purged_at_v2", lit(vectorPurged))
-          .withColumn("recrawl_readmitted_at_v2", lit(readmitted))
+          .withGates("v1_pre_takedown_stable" -> v1Stable,
+            "vector_purged_at_v2" -> vectorPurged,
+            "recrawl_readmitted_at_v2" -> readmitted)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-              |  FROM documents WHERE doc_id % 7 <> 3
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte("doc_id % 7 <> 3")}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS v1_pre_takedown_stable,
               |  TRUE AS vector_purged_at_v2,
               |  TRUE AS recrawl_readmitted_at_v2
@@ -6973,10 +6777,7 @@ object Queries {
             lit(shrank).as("total_flags_shrank"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), g AS (
+      Some(s"""${tokCte()}, g AS (
              |  SELECT doc_id,
              |    unnest(range(1, len(tk) - 6)) AS pos,
              |    unnest(list_transform(range(1, len(tk) - 6),
@@ -7081,32 +6882,7 @@ object Queries {
           "source", "doc_id", "n_tokens", 2048L)
           .orderBy(col("source"), col("doc_id"))
       },
-      Some(s"""$tokCte, qual AS (
-              |  SELECT doc_id,
-              |    least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(len(list_filter(tk, x -> list_contains($stoplist, x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) * 5.0) * 0.3
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) / 8.0) * 0.3 AS quality
-              |  FROM tok
-              |), keep AS (
-              |  SELECT doc_id FROM qual WHERE quality >= 0.5
-              |), tri AS (
-              |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-              |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-              |  FROM tok WHERE len(tk) >= 3 AND doc_id IN (SELECT doc_id FROM keep)
-              |), sigs AS (
-              |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-              |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-              |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-              |  GROUP BY doc_id, i
-              |), bnd AS (
-              |  SELECT doc_id, i // 4 AS band,
-              |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-              |  FROM sigs GROUP BY doc_id, i // 4
-              |), adm0 AS (
+      Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, adm0 AS (
               |  SELECT doc_id FROM keep WHERE doc_id % 3 = 0
               |), store1 AS (
               |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 0
@@ -7187,11 +6963,9 @@ object Queries {
       // manifest-pinned form).
       (s, d) => {
         val root = scratchDir("q171") + "/istore"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val docs = docTokens(s, d)
         InvertedIndex.initStore(root)
-        InvertedIndex.admitBatch(s, docs, "doc_id", "tk", IndexBucket,
-          batchId = 0L, root = root)
+        admitDocs(s, docs, 0L, root)
         def top15() = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
           .withColumn("rank", row_number()
             .over(Window.orderBy(col("bm25").desc, col("doc_id"))).cast("long"))
@@ -7219,32 +6993,10 @@ object Queries {
               .otherwise(lit("moved")).as("status"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
+      Some(s"""${tokCte()}${bm25Ctes("tok")}, rb AS (
               |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |), rb AS (
-              |  SELECT doc_id,
-              |    round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25_before,
-              |    CAST(row_number() OVER (ORDER BY round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) DESC, doc_id) AS BIGINT) AS rank_before
+              |    ${bm25Score()} AS bm25_before,
+              |    CAST(row_number() OVER (ORDER BY ${bm25Score()} DESC, doc_id) AS BIGINT) AS rank_before
               |  FROM p QUALIFY rank_before <= 15
               |), dlc AS (
               |  SELECT doc_id, dl FROM dl WHERE doc_id % 7 <> 3
@@ -7267,8 +7019,8 @@ object Queries {
               |  FROM wc GROUP BY doc_id
               |), ra AS (
               |  SELECT doc_id,
-              |    round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25_after,
-              |    CAST(row_number() OVER (ORDER BY round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) DESC, doc_id) AS BIGINT) AS rank_after
+              |    ${bm25Score()} AS bm25_after,
+              |    CAST(row_number() OVER (ORDER BY ${bm25Score()} DESC, doc_id) AS BIGINT) AS rank_after
               |  FROM pc QUALIFY rank_after <= 15
               |)
               |SELECT doc_id,
@@ -7329,32 +7081,7 @@ object Queries {
               .cast("long").as("tokens_retained"))
           .orderBy(col("source"))
       },
-      Some(s"""$tokCte, qual AS (
-              |  SELECT doc_id,
-              |    least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) * 0.4
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(len(list_filter(tk, x -> list_contains($stoplist, x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) * 5.0) * 0.3
-              |    + least(1.0, (CASE WHEN len(tk) > 0
-              |        THEN CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
-              |        ELSE 0.0 END) / 8.0) * 0.3 AS quality
-              |  FROM tok
-              |), keep AS (
-              |  SELECT doc_id FROM qual WHERE quality >= 0.5
-              |), tri AS (
-              |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-              |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-              |  FROM tok WHERE len(tk) >= 3 AND doc_id IN (SELECT doc_id FROM keep)
-              |), sigs AS (
-              |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-              |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-              |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-              |  GROUP BY doc_id, i
-              |), bnd AS (
-              |  SELECT doc_id, i // 4 AS band,
-              |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-              |  FROM sigs GROUP BY doc_id, i // 4
-              |), store AS (
+      Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, store AS (
               |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 2 = 0
               |), hits AS (
               |  SELECT b.doc_id, count(*) AS hit_bands
@@ -7407,9 +7134,7 @@ object Queries {
         Dedup.admitGramBatch(bench, "doc_id", "text", minTokens = 8,
           batchId = 0L, root = groot, portableKeys = true)
         InvertedIndex.initStore(iroot)
-        InvertedIndex.admitBatch(s,
-          train.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk")),
-          "doc_id", "tk", IndexBucket, batchId = 0L, root = iroot)
+        admitDocs(s, tokenized(train), 0L, iroot)
         // detection: training docs sharing any 8-gram run with the bench
         val contaminated = Dedup.spansAgainstStoreGen(train, "doc_id",
             "text", minTokens = 8, root = groot, portableKeys = true)
@@ -7421,7 +7146,7 @@ object Queries {
           .withColumn("n_contaminated", lit(nContaminated))
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""$tokCte, g AS (
+      Some(s"""${tokCte()}, g AS (
               |  SELECT doc_id, unnest(list_transform(range(1, len(tk) - 6),
               |    i -> substring(md5(array_to_string(tk[i:i+7], ' ')), 1, 16))) AS gram
               |  FROM tok WHERE len(tk) >= 8
@@ -7434,31 +7159,9 @@ object Queries {
               |  SELECT doc_id, tk FROM tok
               |  WHERE doc_id % 17 <> 0
               |    AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM clean
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM clean)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+              |)${bm25Ctes("clean")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  (SELECT CAST(count(*) AS BIGINT) FROM contaminated) AS n_contaminated
               |FROM p ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin)),
 
@@ -7706,13 +7409,11 @@ object Queries {
         val rebuilt = hitters()
         val staleIsFull = ev.groupBy(col("event_type")).count()
           .collect().forall(r => stale(r.getString(0)) == r.getLong(1))
-        val sealedRefused =
-          try {
-            HeavyHitters.admitBatch(s,
-              ev.filter(pmod(col("event_id"), lit(2)) === 0), "event_type",
-              m, 0L, root); false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("compact") || e.getMessage.contains("seal") }
+        val sealedRefused = refuses("compact", "seal") {
+          HeavyHitters.admitBatch(s,
+            ev.filter(pmod(col("event_id"), lit(2)) === 0), "event_type",
+            m, 0L, root)
+        }
         import s.implicits._
         rebuilt.toDF("event_type", "est_rebuilt")
           .select(col("event_type"), col("est_rebuilt"),
@@ -7825,8 +7526,7 @@ object Queries {
         val emb = t(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
         val fit = emb.filter(col("vec_id") % 3 === 0)
-        val (c1, b1) = Similarity.fitIvfPq(fit, "vec_id", "embedding",
-          nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2)
+        val (c1, b1) = fitIvfPq(fit)
         VectorStore.init(s, root, c1, b1)
         VectorStore.admit(s, root, emb, "vec_id", "embedding", 0L)
         val freshQuiet = !VectorStore.needsCompaction(s, root)
@@ -7836,10 +7536,7 @@ object Queries {
           maxPendingFraction = 0.5)
         val tightFires = VectorStore.needsCompaction(s, root,
           maxPendingFraction = 0.05)
-        def served() = VectorStore.search(s, root, q, "vec_id", "embedding",
-            5, nprobe = 12, shortlistFactor = 32)
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        def served() = searchRows(s, root, q)
         val pending = served()
         // the from-scratch twin (survivors, same artifact, own root)
         // overlaps the policy fold and its gates (Par, guide §2.6)
@@ -7860,31 +7557,24 @@ object Queries {
             VectorStore.init(s, clean, c1, b1)
             VectorStore.admit(s, clean, emb.filter(col("vec_id") % 10 =!= 2),
               "vec_id", "embedding", 0L)
-            VectorStore.search(s, clean, q, "vec_id",
-                "embedding", 5, nprobe = 12, shortlistFactor = 32)
-              .collect().toSeq
-              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+            searchRows(s, clean, q)
           })
         val stableAcrossFold = postFold == pending
         // the store is not mutated between the two post-fold reads, so
         // the same serve answers both gates (guide §1.2)
         val eqClean = postFold == cleanServed
-        import s.implicits._
-        pending.map(_._1).distinct.sorted.map { qid =>
-          (qid, pending.count(_._1 == qid).toLong, freshQuiet, looseQuiet,
-            tightFires, fired, quietAfter, purged, stableAcrossFold, eqClean)
-        }.toDF("query_id", "n_results", "fresh_quiet",
-          "loose_threshold_quiet", "tight_threshold_fires",
-          "policy_fired_gen2", "quiet_after_fold", "pending_set_purged",
-          "serving_stable_across_fold", "eq_survivor_store")
-          .orderBy(col("query_id"))
+        gateFrame(s, pending, "fresh_quiet" -> freshQuiet,
+          "loose_threshold_quiet" -> looseQuiet,
+          "tight_threshold_fires" -> tightFires, "policy_fired_gen2" -> fired,
+          "quiet_after_fold" -> quietAfter, "pending_set_purged" -> purged,
+          "serving_stable_across_fold" -> stableAcrossFold,
+          "eq_survivor_store" -> eqClean)
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS fresh_quiet, TRUE AS loose_threshold_quiet,
-             |  TRUE AS tight_threshold_fires, TRUE AS policy_fired_gen2,
-             |  TRUE AS quiet_after_fold, TRUE AS pending_set_purged,
-             |  TRUE AS serving_stable_across_fold, TRUE AS eq_survivor_store
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle(
+        "TRUE AS fresh_quiet, TRUE AS loose_threshold_quiet",
+        "TRUE AS tight_threshold_fires, TRUE AS policy_fired_gen2",
+        "TRUE AS quiet_after_fold, TRUE AS pending_set_purged",
+        "TRUE AS serving_stable_across_fold, TRUE AS eq_survivor_store"))),
 
     QDef("q180_maintenance_sweep",
       // THE MAINTENANCE TICK — q168's takedown cutover with the purge
@@ -7912,8 +7602,7 @@ object Queries {
         val kroot = base + "/sigstore"
         val mroot = base + "/manifest"
         val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"))
+        val toks = tokenized(docs)
         val emb = t(s, d, "embeddings")
         // three disjoint store families: builds overlap (Par, §2.6), and
         // the signature pass runs ONCE (guide §1.2) — the takedown below
@@ -7931,12 +7620,10 @@ object Queries {
           Par.both(
             {
               InvertedIndex.initStore(iroot)
-              InvertedIndex.admitBatch(s, toks, "doc_id", "tk", IndexBucket,
-                batchId = 0L, root = iroot)
+              admitDocs(s, toks, 0L, iroot)
             },
             {
-              val (vc, vb) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-                nlist = 16, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
+              val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
               VectorStore.init(s, vroot, vc, vb)
               VectorStore.admit(s, vroot, emb, "vec_id", "embedding", 0L)
             }))
@@ -7996,41 +7683,15 @@ object Queries {
         InvertedIndex.bm25SearchStore(s,
             InvertedIndex.genDir(iroot, Manifest.resolve(mroot, 2L, "index")),
             bm25Terms, 15)
-          .withColumn("tick_quiet_on_clean_stores", lit(quietOnClean))
-          .withColumn("tick_fired_all_after_deletes", lit(firedAll))
-          .withColumn("tick_quiet_after_purge", lit(quietAfter))
-          .withColumn("v1_pre_takedown_stable", lit(v1Stable))
-          .withColumn("vector_purged_at_v2", lit(vectorPurged))
+          .withGates("tick_quiet_on_clean_stores" -> quietOnClean,
+            "tick_fired_all_after_deletes" -> firedAll,
+            "tick_quiet_after_purge" -> quietAfter,
+            "v1_pre_takedown_stable" -> v1Stable, "vector_purged_at_v2" -> vectorPurged)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-              |  FROM documents WHERE doc_id % 7 <> 3
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte("doc_id % 7 <> 3")}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS tick_quiet_on_clean_stores,
               |  TRUE AS tick_fired_all_after_deletes,
               |  TRUE AS tick_quiet_after_purge,
@@ -8075,14 +7736,10 @@ object Queries {
           Par.both(
             {
               InvertedIndex.initStore(iroot)
-              InvertedIndex.admitBatch(s,
-                docs.select(col("doc_id"),
-                  TextFunctions.tokens(col("text")).as("tk")),
-                "doc_id", "tk", IndexBucket, batchId = 0L, root = iroot)
+              admitDocs(s, tokenized(docs), 0L, iroot)
             },
             {
-              val (vc, vb) = Similarity.fitIvfPq(emb, "vec_id", "embedding",
-                nlist = 16, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
+              val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
               VectorStore.init(s, vroot, vc, vb)
               VectorStore.admit(s, vroot, emb, "vec_id", "embedding", 0L)
             }))
@@ -8108,23 +7765,7 @@ object Queries {
             col("needs_compaction"))
           .orderBy(col("store"))
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), tri AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-             |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-             |  FROM tok WHERE len(tk) >= 3
-             |), sigs AS (
-             |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-             |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-             |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-             |  GROUP BY doc_id, i
-             |), bnd AS (
-             |  SELECT doc_id, i // 4 AS band,
-             |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-             |  FROM sigs GROUP BY doc_id, i // 4
-             |), sigstore AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, sigstore AS (
              |  SELECT CAST(count(DISTINCT band || '|' || bucket) AS BIGINT) AS data_rows
              |  FROM bnd
              |), sigdead AS (
@@ -8464,13 +8105,10 @@ object Queries {
       (s, d) => {
         val root = scratchDir("q187") + "/istore"
         val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"))
+        val toks = tokenized(docs)
         InvertedIndex.initStore(root)
         (0L to 2L).foreach { b =>
-          InvertedIndex.admitBatch(s,
-            toks.filter(pmod(col("doc_id"), lit(3)) === b),
-            "doc_id", "tk", IndexBucket, batchId = b, root = root)
+          admitDocs(s, toks.filter(pmod(col("doc_id"), lit(3)) === b), b, root)
         }
         val gen2 = InvertedIndex.expireBatches(s, root, expectedGen = 1L,
           minRetainedBatch = 1L)
@@ -8481,55 +8119,24 @@ object Queries {
         val statsShrunk = Tables.parquet(s,
             InvertedIndex.genDir(root, gen2) + "/stats")
           .agg(sum(col("n_docs"))).head.getLong(0) == nSurv
-        val replayRefused =
-          try {
-            InvertedIndex.admitBatch(s,
-              toks.filter(pmod(col("doc_id"), lit(3)) === 0),
-              "doc_id", "tk", IndexBucket, batchId = 0L, root = root); false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("seal") }
-        InvertedIndex.admitBatch(s,
-          toks.filter(pmod(col("doc_id"), lit(3)) === 0),
-          "doc_id", "tk", IndexBucket, batchId = 10L, root = root)
+        val replayRefused = refuses("seal") {
+          admitDocs(s, toks.filter(pmod(col("doc_id"), lit(3)) === 0), 0L, root)
+        }
+        admitDocs(s, toks.filter(pmod(col("doc_id"), lit(3)) === 0), 10L, root)
         val readmitted = Tables.parquet(s,
             InvertedIndex.genDir(root, gen2) + "/doclens")
           .filter(pmod(col("doc_id"), lit(3)) === 0).count() > 0
         import s.implicits._
         served.toDF("doc_id", "bm25")
-          .withColumn("gen_rolled", lit(gen2 == 2L))
-          .withColumn("stats_shrunk_to_survivors", lit(statsShrunk))
-          .withColumn("expired_replay_refused", lit(replayRefused))
-          .withColumn("expired_content_readmitted", lit(readmitted))
+          .withGates("gen_rolled" -> (gen2 == 2L),
+            "stats_shrunk_to_survivors" -> statsShrunk,
+            "expired_replay_refused" -> replayRefused,
+            "expired_content_readmitted" -> readmitted)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-              |  FROM documents WHERE doc_id % 3 <> 0
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte("doc_id % 3 <> 0")}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS gen_rolled,
               |  TRUE AS stats_shrunk_to_survivors,
               |  TRUE AS expired_replay_refused,
@@ -8582,37 +8189,18 @@ object Queries {
           .forall(r => r._2 == !withKeys.contains(r._1))
         val gen2 = KeySetStore.expireBatches(s, root, expectedGen = 1L,
           minRetainedBatch = 1L)
-        val replayRefused =
-          try {
-            Dedup.admitMinHashKeysBatch(oldKeys, batchId = 0L, root = root)
-            false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("seal") }
+        val replayRefused = refuses("seal") {
+          Dedup.admitMinHashKeysBatch(oldKeys, batchId = 0L, root = root)
+        }
         Dedup.admitKeysAgainstMinHashStoreGen(
             old.select(col("doc_id").as("id")), oldKeys, root = root)
           .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
-          .withColumn("gen_rolled", lit(gen2 == 2L))
-          .withColumn("pre_expiry_self_rejected", lit(preRejects))
-          .withColumn("expired_replay_refused", lit(replayRefused))
+          .withGates("gen_rolled" -> (gen2 == 2L),
+            "pre_expiry_self_rejected" -> preRejects,
+            "expired_replay_refused" -> replayRefused)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), tri AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-             |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-             |  FROM tok WHERE len(tk) >= 3
-             |), sigs AS (
-             |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-             |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-             |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-             |  GROUP BY doc_id, i
-             |), bnd AS (
-             |  SELECT doc_id, i // 4 AS band,
-             |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-             |  FROM sigs GROUP BY doc_id, i // 4
-             |), store AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 1
              |), hits AS (
              |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS hit_bands
@@ -8649,8 +8237,7 @@ object Queries {
       (s, d) => {
         val base = scratchDir("q190")
         val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"))
+        val toks = tokenized(docs)
         val deadPred = col("doc_id") % 4 >= 2 && col("doc_id") % 7 === 3
         val (ra, rb, twin, merged) =
           (s"$base/a", s"$base/b", s"$base/twin", s"$base/merged")
@@ -8665,36 +8252,25 @@ object Queries {
         def mergedSection(): (Seq[(Long, Double)], Boolean) = {
           Par.both(
             (0L to 1L).foreach { b =>
-              InvertedIndex.admitBatch(s,
-                toks.filter(pmod(col("doc_id"), lit(4)) === b),
-                "doc_id", "tk", IndexBucket, batchId = b, root = ra)
+              admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === b), b, ra)
             },
             {
               (0L to 1L).foreach { b =>
-                InvertedIndex.admitBatch(s,
-                  toks.filter(pmod(col("doc_id"), lit(4)) === b + 2),
-                  "doc_id", "tk", IndexBucket, batchId = b, root = rb)
+                admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === b + 2), b, rb)
               }
               InvertedIndex.admitDeleteBatch(s,
                 docs.filter(deadPred).select("doc_id"), "doc_id", 0L, rb)
             })
           InvertedIndex.mergeStores(s, Seq(ra, rb), merged)
           val mergedBm = bm(merged)
-          val sealRefused =
-            try {
-              InvertedIndex.admitBatch(s,
-                toks.filter(pmod(col("doc_id"), lit(4)) === 0),
-                "doc_id", "tk", IndexBucket, batchId = 0L, root = merged)
-              false
-            } catch { case e: IllegalArgumentException =>
-              e.getMessage.contains("seal") }
+          val sealRefused = refuses("seal") {
+            admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === 0), 0L, merged)
+          }
           (mergedBm, sealRefused)
         }
         def twinSection(): Seq[(Long, Double)] = {
           (0L to 3L).foreach { b =>
-            InvertedIndex.admitBatch(s,
-              toks.filter(pmod(col("doc_id"), lit(4)) === b),
-              "doc_id", "tk", IndexBucket, batchId = b, root = twin)
+            admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === b), b, twin)
           }
           InvertedIndex.admitDeleteBatch(s,
             docs.filter(deadPred).select("doc_id"), "doc_id", 0L, twin)
@@ -8704,39 +8280,17 @@ object Queries {
           Par.both(mergedSection(), twinSection())
         val eqTwin = mergedBm == twinBm
         InvertedIndex.bm25SearchCurrent(s, merged, bm25Terms, 15)
-          .withColumn("merged_eq_single_pipeline", lit(eqTwin))
-          .withColumn("occupied_id_sealed", lit(sealRefused))
+          .withGates("merged_eq_single_pipeline" -> eqTwin,
+            "occupied_id_sealed" -> sealRefused)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
       Some(s"""WITH tok AS (
               |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
               |  FROM documents
               |  WHERE NOT (doc_id % 4 >= 2 AND doc_id % 7 = 3)
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+              |)${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS merged_eq_single_pipeline,
               |  TRUE AS occupied_id_sealed
               |FROM p ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin)),
@@ -8781,35 +8335,16 @@ object Queries {
             probeIds, kP, r)
           .collect().toSeq.map(x => (x.getLong(0), x.getBoolean(2)))
         val eqTwin = dec(merged) == dec(twin)
-        val sealRefused =
-          try {
-            Dedup.admitMinHashKeysBatch(kA, batchId = 0L, root = merged)
-            false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("seal") }
+        val sealRefused = refuses("seal") {
+          Dedup.admitMinHashKeysBatch(kA, batchId = 0L, root = merged)
+        }
         Dedup.admitKeysAgainstMinHashStoreGen(probeIds, kP, merged)
           .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
-          .withColumn("merged_eq_single_pipeline", lit(eqTwin))
-          .withColumn("occupied_id_sealed", lit(sealRefused))
+          .withGates("merged_eq_single_pipeline" -> eqTwin,
+            "occupied_id_sealed" -> sealRefused)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), tri AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-             |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-             |  FROM tok WHERE len(tk) >= 3
-             |), sigs AS (
-             |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-             |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-             |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-             |  GROUP BY doc_id, i
-             |), bnd AS (
-             |  SELECT doc_id, i // 4 AS band,
-             |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-             |  FROM sigs GROUP BY doc_id, i // 4
-             |), store AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 IN (0, 1)
              |), hits AS (
              |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS hit_bands
@@ -8843,9 +8378,7 @@ object Queries {
         val base = scratchDir("q192")
         val emb = t(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
-        val (c1, b1) = Similarity.fitIvfPq(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", nlist = 16, kmeansIters = 3, m = 16,
-          kcode = 16, pqIters = 2)
+        val (c1, b1) = fitIvfPq(emb.filter(col("vec_id") % 3 === 0))
         val (ra, rb, twin, merged) =
           (s"$base/a", s"$base/b", s"$base/twin", s"$base/merged")
         Seq(ra, rb, twin).foreach(r => VectorStore.init(s, r, c1, b1))
@@ -8861,8 +8394,7 @@ object Queries {
           VectorStore.admit(s, ra, pa, "vec_id", "embedding", 0L),
           { VectorStore.admit(s, rb, pb, "vec_id", "embedding", 0L)
             VectorStore.admitDeletes(s, rb, deadIds, "vec_id", 0L) })
-        def served(r: String) = VectorStore.search(s, r, q, "vec_id",
-            "embedding", 5, nprobe = 12, shortlistFactor = 32)
+        def served(r: String) = storeSearch(s, r, q)
           .collect().toSeq
           .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getDouble(3)))
         // Three independent sections over finalized builders: the merged
@@ -8889,33 +8421,24 @@ object Queries {
           served(twin)
         }
         def alienSection(): Boolean = {
-          val (c2, b2) = Similarity.fitIvfPq(
-            emb.filter(col("vec_id") % 3 === 1), "vec_id", "embedding",
-            nlist = 16, kmeansIters = 2, m = 16, kcode = 16, pqIters = 2)
+          val (c2, b2) = fitIvfPq(emb.filter(col("vec_id") % 3 === 1), kmeansIters = 2)
           val alien = s"$base/alien"
           VectorStore.init(s, alien, c2, b2)
-          try { VectorStore.mergeStores(s, Seq(ra, alien), s"$base/bad"); false }
-          catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("artifact") }
+          refuses("artifact") { VectorStore.mergeStores(s, Seq(ra, alien), s"$base/bad") }
         }
         val ((pending, purged, stableAcrossFold), (twinServed, mismatchRefused)) =
           Par.both(mergedSection(), Par.both(twinSection(), alienSection()))
         val eqTwin = pending == twinServed
-        import s.implicits._
-        pending.map(_._1).distinct.sorted.map { qid =>
-          (qid, pending.count(_._1 == qid).toLong, eqTwin, mismatchRefused,
-            purged, stableAcrossFold)
-        }.toDF("query_id", "n_results", "merged_eq_single_pipeline",
-          "alien_artifact_refused", "takedown_purged_after_fold",
-          "serving_stable_across_fold")
-          .orderBy(col("query_id"))
+        gateFrame(s, pending, "merged_eq_single_pipeline" -> eqTwin,
+          "alien_artifact_refused" -> mismatchRefused,
+          "takedown_purged_after_fold" -> purged,
+          "serving_stable_across_fold" -> stableAcrossFold)
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS merged_eq_single_pipeline,
-             |  TRUE AS alien_artifact_refused,
-             |  TRUE AS takedown_purged_after_fold,
-             |  TRUE AS serving_stable_across_fold
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle(
+        "TRUE AS merged_eq_single_pipeline",
+        "TRUE AS alien_artifact_refused",
+        "TRUE AS takedown_purged_after_fold",
+        "TRUE AS serving_stable_across_fold"))),
 
     QDef("q193_mergeable_federation",
       // FEDERATION across the MERGEABLE family (sketch / frequency /
@@ -9034,16 +8557,14 @@ object Queries {
         val base = scratchDir("q194")
         val docs = t(s, d, "documents")
         val emb = t(s, d, "embeddings")
-        val toks = docs.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"))
+        val toks = tokenized(docs)
         // The IVF-PQ fit reads only embeddings, the signature pass only
         // documents — independent jobs, overlapped (Par, guide §2.6). The
         // signature pass runs ONCE for both fleets AND the takedown (guide
         // §1.2, the q165 pattern): admits and the delete below slice the
         // checkpointed key set by doc id.
         val ((vc, vb), sigKeys) = Par.both(
-          Similarity.fitIvfPq(emb, "vec_id", "embedding",
-            nlist = 16, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2),
+          fitIvfPq(emb, kmeansIters = 2, m = 8),
           Dedup.minHashBandKeys(
             docs.select(col("doc_id"), col("text")), "doc_id", "text",
             n = 3, numHashes = 32, bands = 8, portableKeys = true)
@@ -9058,9 +8579,7 @@ object Queries {
           Par.all(Seq(
             () => {
               InvertedIndex.initStore(i)
-              InvertedIndex.admitBatch(s,
-                toks.filter(pmod(col("doc_id"), lit(2)) === h),
-                "doc_id", "tk", IndexBucket, batchId = 0L, root = i)
+              admitDocs(s, toks.filter(pmod(col("doc_id"), lit(2)) === h), 0L, i)
             },
             () => {
               KeySetStore.init(k)
@@ -9131,40 +8650,14 @@ object Queries {
         InvertedIndex.bm25SearchStore(s,
             InvertedIndex.genDir(im, Manifest.resolve(mroot, 2L, "index")),
             bm25Terms, 15)
-          .withColumn("sweep_quiet_on_clean_merged_stores", lit(quietOnClean))
-          .withColumn("sweep_fired_all_after_deletes", lit(firedAll))
-          .withColumn("v1_pre_takedown_stable", lit(v1Stable))
-          .withColumn("vector_purged_at_v2", lit(vectorPurged))
+          .withGates("sweep_quiet_on_clean_merged_stores" -> quietOnClean,
+            "sweep_fired_all_after_deletes" -> firedAll,
+            "v1_pre_takedown_stable" -> v1Stable, "vector_purged_at_v2" -> vectorPurged)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-              |  FROM documents WHERE doc_id % 7 <> 3
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte("doc_id % 7 <> 3")}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS sweep_quiet_on_clean_merged_stores,
               |  TRUE AS sweep_fired_all_after_deletes,
               |  TRUE AS v1_pre_takedown_stable,
@@ -9189,13 +8682,10 @@ object Queries {
         val root = scratchDir("q195") + "/istore"
         val mroot = scratchDir("q195m") + "/manifest"
         val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"))
+        val toks = tokenized(docs)
         InvertedIndex.initStore(root)
         (0L to 2L).foreach { b =>
-          InvertedIndex.admitBatch(s,
-            toks.filter(pmod(col("doc_id"), lit(3)) === b),
-            "doc_id", "tk", IndexBucket, batchId = b, root = root)
+          admitDocs(s, toks.filter(pmod(col("doc_id"), lit(3)) === b), b, root)
         }
         Manifest.init(mroot, Map("index" -> 1L))
         def bmAt(ver: Long) = InvertedIndex.bm25SearchStore(s,
@@ -9220,40 +8710,15 @@ object Queries {
         InvertedIndex.bm25SearchStore(s,
             InvertedIndex.genDir(root, Manifest.resolve(mroot, 2L, "index")),
             bm25Terms, 15)
-          .withColumn("v1_full_history_stable", lit(v1Stable))
-          .withColumn("pinned_gen_vacuum_refused", lit(pinHolds))
-          .withColumn("dropped_after_manifest_retire", lit(droppedAfterRetire))
-          .withColumn("v2_unmoved_by_vacuum", lit(v2Unmoved))
+          .withGates("v1_full_history_stable" -> v1Stable,
+            "pinned_gen_vacuum_refused" -> pinHolds,
+            "dropped_after_manifest_retire" -> droppedAfterRetire,
+            "v2_unmoved_by_vacuum" -> v2Unmoved)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-              |  FROM documents WHERE doc_id % 3 <> 0
-              |), dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte("doc_id % 3 <> 0")}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25,
+              |  ${bm25Score()} AS bm25,
               |  TRUE AS v1_full_history_stable,
               |  TRUE AS pinned_gen_vacuum_refused,
               |  TRUE AS dropped_after_manifest_retire,
@@ -9370,31 +8835,15 @@ object Queries {
           Dedup.admitKeysAgainstMinHashStoreGen(probeIds, probeKeys,
               root = merged)
             .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
-            .withColumn("quiesce_fence_names_successor", lit(fenceNamed))
-            .withColumn("sink_repointed_to_merged", lit(repointed))
-            .withColumn("merged_eq_single_pipeline", lit(eqTwin))
-            .withColumn("zero_lost_zero_duplicated", lit(keysEq))
-            .withColumn("sources_retired_cleanly", lit(retired))
+            .withGates("quiesce_fence_names_successor" -> fenceNamed,
+              "sink_repointed_to_merged" -> repointed,
+              "merged_eq_single_pipeline" -> eqTwin,
+              "zero_lost_zero_duplicated" -> keysEq,
+              "sources_retired_cleanly" -> retired)
             .orderBy(col("doc_id"))
         } finally q.stop()
       },
-      Some("""WITH tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM documents
-             |), tri AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-             |    i -> array_to_string(tk[i:i+2], ' '))) AS sh
-             |  FROM tok WHERE len(tk) >= 3
-             |), sigs AS (
-             |  SELECT doc_id, i, min(md5(CAST(i AS VARCHAR) || ':' || s)) AS sig
-             |  FROM (SELECT doc_id, unnest(sh) AS s FROM tri)
-             |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-             |  GROUP BY doc_id, i
-             |), bnd AS (
-             |  SELECT doc_id, i // 4 AS band,
-             |    md5(string_agg(sig, '|' ORDER BY i)) AS bucket
-             |  FROM sigs GROUP BY doc_id, i // 4
-             |), store AS (
+      Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 4 IN (0, 1, 2)
              |), hits AS (
              |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS hit_bands
@@ -9509,20 +8958,18 @@ object Queries {
         EventStreams.initCdcState(
           cust.filter(col("key") % 4 === 0).withColumn("seq", lit(0L)), sc)
         val overlapRefused =
-          (try {
+          refuses("disjoint") {
             EventStreams.mergeCdcStores(s, Seq(sa, sc), s"$base/bad",
-              verifyKeyCols = Seq("key")); false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("disjoint") }) &&
+              verifyKeyCols = Seq("key"))
+          } &&
           !java.nio.file.Files.exists(
             java.nio.file.Paths.get(s"$base/bad", "_CURRENT"))
         EventStreams.currentCdcSnapshot(s, m)
           .select(col("key"), col("bal"), col("seq"))
-          .withColumn("merged_v0_is_cut", lit(cutEq))
-          .withColumn("quiesced_publish_refused", lit(fenceNamed))
-          .withColumn("stale_premerge_replay_noop", lit(staleNoop))
-          .withColumn("asof_v0_stable", lit(asOfStable))
-          .withColumn("overlap_merge_refused", lit(overlapRefused))
+          .withGates("merged_v0_is_cut" -> cutEq,
+            "quiesced_publish_refused" -> fenceNamed,
+            "stale_premerge_replay_noop" -> staleNoop, "asof_v0_stable" -> asOfStable,
+            "overlap_merge_refused" -> overlapRefused)
           .orderBy(col("key"))
       },
       Some("""SELECT c_custkey AS key,
@@ -9694,14 +9141,12 @@ object Queries {
         val q = emb.filter(col("vec_id") < 10)
           .select(col("vec_id"), col("embedding"))
         val allowed = emb.filter(col("label") % 2 === 0).select("vec_id")
-        val (cents, books) = Similarity.fitIvfPq(emb, "vec_id",
-          "embedding", nlist = 16, kmeansIters = 3, m = 16, kcode = 16,
-          pqIters = 2)
+        val (cents, books) = fitIvfPq(emb)
         VectorStore.init(s, dir + "/store", cents, books)
         VectorStore.admit(s, dir + "/store", emb, "vec_id", "embedding", 0L)
         val filt = VectorStore.searchWhere(s, dir + "/store", q,
             "vec_id", "embedding", 5, allowed,
-            nprobe = 12, shortlistFactor = 32)
+            nprobe = Nprobe, shortlistFactor = Shortlist)
           .select("query_id", "neighbor_id")
         val bf = Similarity.bruteForceTopK(q,
             emb.join(allowed, Seq("vec_id"), "left_semi"),
@@ -9724,9 +9169,7 @@ object Queries {
               / sum(col("n_results")).over(w) >= 0.8).as("recall_ge_080"))
           .orderBy(col("query_id"))
       },
-      Some("""SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS n_results,
-             |  TRUE AS all_match_filter, TRUE AS recall_ge_080
-             |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin)),
+      Some(gateOracle("TRUE AS all_match_filter, TRUE AS recall_ge_080"))),
 
     QDef("q200_filtered_bm25",
       // FILTERED BM25 (InvertedIndex.bm25SearchCurrentWhere) — the
@@ -9744,42 +9187,18 @@ object Queries {
       // rows of the query's terms, never the corpus.
       (s, d) => {
         val root = scratchDir("q200") + "/istore"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val docs = docTokens(s, d)
         InvertedIndex.initStore(root)
-        InvertedIndex.admitBatch(s, docs, "doc_id", "tk", IndexBucket,
-          batchId = 0L, root = root)
+        admitDocs(s, docs, 0L, root)
         val allowed = t(s, d, "documents")
           .filter(col("doc_id") % 4 =!= 1).select("doc_id")
         InvertedIndex.bm25SearchCurrentWhere(s, root, bm25Terms, 15,
             allowed)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
-      Some(s"""$tokCte, dl AS (
-              |  SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tok
-              |), st AS (
-              |  SELECT CAST(count(*) AS BIGINT) AS n,
-              |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-              |  FROM dl
-              |), tf AS (
-              |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |  WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |  GROUP BY doc_id, tok
-              |), dfc AS (
-              |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
-              |), w AS (
-              |  SELECT tf.doc_id, tf.tok,
-              |    ${bm25W("st.n", "dfc.df", "tf.tf", "dl.dl", "st.avgdl")} AS w
-              |  FROM tf JOIN dfc USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
-              |), p AS (
-              |  SELECT doc_id,
-              |    ${bm25Terms.zipWithIndex.map { case (t2, i) =>
-                     s"max(CASE WHEN tok = '$t2' THEN w END) AS w$i" }.mkString(",\n              |    ")}
-              |  FROM w GROUP BY doc_id
-              |)
+      Some(s"""${tokCte()}${bm25Ctes("tok")}
               |SELECT doc_id,
-              |  round(${bm25Terms.indices.map(i => s"COALESCE(w$i, 0.0)").mkString(" + ")}, 6) AS bm25
+              |  ${bm25Score()} AS bm25
               |FROM p WHERE doc_id % 4 <> 1
               |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin)),
 
@@ -9808,8 +9227,7 @@ object Queries {
         val (cdc, root, fresh) = (s"$base/cdc", s"$base/idx", s"$base/fresh")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
-        val prep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val prep: DataFrame => DataFrame = tokenized
         def tick() = CdcSync.syncIndexFromCdc(s, cdc, root, "doc_id", "tk",
           IndexBucket, prep)
         require(tick() == 0L, "bootstrap tick must land at v0")
@@ -9999,8 +9417,7 @@ object Queries {
           (s"$base/cdc", s"$base/idx", s"$base/fresh", s"$base/feed")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
-        val prep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val prep: DataFrame => DataFrame = tokenized
         val b1 = docs.filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"),
             concat(col("text"), lit(" graftsync graftsync")).as("text"),
@@ -10089,8 +9506,7 @@ object Queries {
           .select(col("vec_id").as("doc_id"), col("embedding"))
         val corpus = docs.join(emb, "doc_id")
         EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), cdc)
-        val iprep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val iprep: DataFrame => DataFrame = tokenized
         val vprep: DataFrame => DataFrame =
           _.select(col("doc_id"), col("embedding"))
         def itick() = CdcSync.syncIndexFromCdc(s, cdc, iroot, "doc_id",
@@ -10221,8 +9637,7 @@ object Queries {
         import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q205")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val prep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val prep: DataFrame => DataFrame = tokenized
         // two pipelines on disjoint key partitions
         val (cdcA, cdcB, idxA, idxB) =
           (s"$base/cdcA", s"$base/cdcB", s"$base/idxA", s"$base/idxB")
@@ -10362,8 +9777,7 @@ object Queries {
           .select(col("vec_id").as("doc_id"), col("embedding"))
         val corpus = docs.join(emb, "doc_id")
         EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), cdc)
-        val iprep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val iprep: DataFrame => DataFrame = tokenized
         val vprep: DataFrame => DataFrame =
           _.select(col("doc_id"), col("embedding"))
         def itick() = CdcSync.syncIndexFromCdc(s, cdc, iroot, "doc_id",
@@ -10435,8 +9849,7 @@ object Queries {
         val (cdc, r1, r2, mroot) =
           (s"$base/cdc", s"$base/idx-r1", s"$base/idx-r2", s"$base/manifest")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val prep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val prep: DataFrame => DataFrame = tokenized
         def tick(root: String) = CdcSync.syncIndexFromCdc(s, cdc, root,
           "doc_id", "tk", IndexBucket, prep)
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
@@ -10456,10 +9869,7 @@ object Queries {
               lit("D").as("op")),
           Seq("doc_id"), "seq", "op", maxDeltas = 0)
         EventStreams.vacuumCdc(s, cdc, keepLast = 1)
-        val refused =
-          try { tick(r1); false }
-          catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("vacuumed") }
+        val refused = refuses("vacuumed") { tick(r1) }
         require(refused, "a vacuumed watermark must refuse the tick")
         // resync: fresh root bootstraps; the manifest cutover re-pins
         tick(r2)
@@ -10548,8 +9958,7 @@ object Queries {
         val base = scratchDir("q208")
         val (cdc, root) = (s"$base/cdc", s"$base/idx")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val prep: DataFrame => DataFrame = df =>
-          df.select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
+        val prep: DataFrame => DataFrame = tokenized
         def tick() = CdcSync.syncIndexFromCdc(s, cdc, root, "doc_id",
           "tk", IndexBucket, prep)
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
@@ -10599,10 +10008,7 @@ object Queries {
         require(canon(CdcSync.lookupIndexAsOf(s, root, terms, 2L)) ==
             canon(InvertedIndex.lookupCurrent(s, root, terms)),
           "post-fold, the newest version must still serve as-of")
-        val folded =
-          try { CdcSync.lookupIndexAsOf(s, root, terms, 1L); false }
-          catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("folded away") }
+        val folded = refuses("folded away") { CdcSync.lookupIndexAsOf(s, root, terms, 1L) }
         require(folded, "a pre-fold version must refuse, never mis-serve")
         v1Rows.toDF("tok", "n_docs", "postings").orderBy(col("tok"))
       },

@@ -1,6 +1,8 @@
 package graft.operators
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+
+import org.apache.spark.sql.GraftBridge
 
 /** In-query overlap of INDEPENDENT store-building sections (guide §2.6:
   * Spark's scheduler happily runs several jobs at once; actions are only
@@ -21,6 +23,11 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   * q87, runs in Verify's exclusive tail). Results are therefore
   * bit-identical to the sequential order; OverlapSpec proves it on the
   * q161/q194 shapes.
+  *
+  * Pooled threads are reused across callers, so each section runs with
+  * the Spark thread state (local properties, active session) of the
+  * caller that submitted it, never that of the caller whose section
+  * created the thread.
   */
 object Par {
 
@@ -32,13 +39,18 @@ object Par {
     t
   })
 
+  private def submit[A](section: () => A): Future[A] = {
+    val state = GraftBridge.captureThreadState()
+    pool.submit(new Callable[A] { def call(): A = state.run(section()) })
+  }
+
   /** Run `a` on the calling thread while `b` runs on the pool; return
     * both. If `a` throws, `b` is still awaited (never left racing a
     * caller that believes the query finished) before the failure
     * propagates; `b`'s own failure propagates unwrapped.
     */
   def both[A, B](a: => A, b: => B): (A, B) = {
-    val fb = pool.submit(new Callable[B] { def call(): B = b })
+    val fb = submit(() => b)
     val ra =
       try a
       catch {
@@ -60,8 +72,7 @@ object Par {
     */
   def all[A](thunks: Seq[() => A]): Seq[A] = {
     require(thunks.nonEmpty, "Par.all needs at least one section")
-    val fs = thunks.tail.map(t =>
-      pool.submit(new Callable[A] { def call(): A = t() }))
+    val fs = thunks.tail.map(submit(_))
     val r0: Either[Throwable, A] =
       try Right(thunks.head()) catch { case t: Throwable => Left(t) }
     val rs = r0 +: fs.map { f =>

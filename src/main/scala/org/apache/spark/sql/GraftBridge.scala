@@ -1,5 +1,8 @@
 package org.apache.spark.sql
 
+import java.util.Properties
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DoubleType, FloatType, IntegerType, LongType, TypeCollection}
 
@@ -84,4 +87,32 @@ object GraftBridge {
   val vectorInputTypes: AbstractDataType = TypeCollection(
     ArrayType(DoubleType), ArrayType(FloatType),
     ArrayType(IntegerType), ArrayType(LongType))
+
+  /** The calling thread's Spark job state, for a body run on another
+    * thread: a clone of the active SparkContext's local properties and
+    * the active session. `run` installs it on the running thread and
+    * restores that thread's own state afterwards, as Spark's
+    * `SQLExecution.withThreadLocalCaptured` does; with no active
+    * SparkContext it just runs the body.
+    */
+  def captureThreadState(): ThreadState = {
+    val sc = SparkContext.getActive
+    new ThreadState(sc, sc.map(c => org.apache.spark.util.Utils
+      .cloneProperties(c.getLocalProperties)).orNull, SparkSession.getActiveSession)
+  }
+
+  final class ThreadState private[GraftBridge] (sc: Option[SparkContext],
+      props: Properties, session: Option[SparkSession]) {
+    def run[A](body: => A): A = sc match {
+      case None => body
+      case Some(c) =>
+        def install(p: Properties, s: Option[SparkSession]): Unit = {
+          c.setLocalProperties(p)
+          s.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+        }
+        val (prevProps, prevSession) = (c.getLocalProperties, SparkSession.getActiveSession)
+        install(props, session)
+        try body finally install(prevProps, prevSession)
+    }
+  }
 }

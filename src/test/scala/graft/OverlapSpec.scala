@@ -52,6 +52,31 @@ class OverlapSpec extends AnyFunSuite {
     assert(first.getMessage == "first", "the first failure in section order propagates")
   }
 
+  test("Par sections run with the submitting caller's Spark local properties") {
+    val sc = spark.sparkContext
+    val key = "graft.test.par.caller"
+    // each caller is its own thread (as Verify's workers are); a pooled
+    // section reports the property it sees and the thread it ran on
+    def caller(value: String): (String, Long) = {
+      val seen = new java.util.concurrent.atomic.AtomicReference[(String, Long)]()
+      val t = new Thread(() => {
+        sc.setLocalProperty(key, value)
+        seen.set(Par.both((), (sc.getLocalProperty(key), Thread.currentThread().getId))._2)
+      })
+      t.start()
+      t.join()
+      // let the pool thread go idle, so the next caller's section reuses it
+      Thread.sleep(100)
+      seen.get()
+    }
+    val (seenA, _) = caller("A")
+    val (seenB, threadB) = caller("B")
+    val (seenNone, _) = caller(null)
+    assert(seenA == "A")
+    assert(seenB == "B", s"caller B's section on pool thread $threadB read '$seenB'")
+    assert(seenNone == null, s"a caller without the property saw '$seenNone'")
+  }
+
   test("concurrent disjoint-root key-set stores == sequential twins (the q194 fleet shape)") {
     val docs = Tables.load(spark, TestSpark.sf0001, "documents")
       .select(col("doc_id"), col("text"))

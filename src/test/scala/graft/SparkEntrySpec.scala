@@ -14,10 +14,51 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("every oracle key names a query; names are well-formed") {
+    // queries and oracles are built with toMap, which keeps only the last
+    // of two defs sharing a name
+    val names = Queries.defs.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct)}")
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
-    assert(os.subsetOf(qs), s"orphan oracles: ${os.diff(qs)}")
+    assert(os == qs, s"orphan oracles: ${os.diff(qs)}; no oracle: ${qs.diff(os)}")
+    assert(qs.size == 208, s"catalog has ${qs.size} queries")
     assert(qs.forall(_.matches("q\\d+_[a-z0-9_]+")), qs.mkString(","))
+  }
+
+  test("lint: Queries.scala spells each catalog building block only in its definition") {
+    // signature text -> lines allowed to contain it: the block's one
+    // definition, plus the real variants named here
+    val allowed = Map(
+      // bm25Ctes; q171's second stats CTE re-scores the survivors of a
+      // takedown over its own dlc/tfc relations
+      "CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl" -> 2,
+      "min(md5(CAST(i AS VARCHAR) || ':' || s))" -> 1, // bandKeyCtes
+      "CAST(5 AS BIGINT) AS n_results" -> 1, // gateOracle
+      // the search width is Nprobe/Shortlist; q202 and q204 probe 8
+      // lists for their k = 1 and k = 20 searches
+      "shortlistFactor = 32" -> 2,
+      "Similarity.fitIvfPq(" -> 1, // fitIvfPq
+      // refitIvfPq; q130 starts its refit with refitStart to migrate
+      // the batches one at a time
+      "nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2" -> 2,
+      // tokenized; q111's bigram model keeps no doc_id
+      "TextFunctions.tokens(col(\"text\")).as(\"tk\")" -> 2,
+      // admitDocs, appendDocs; q207's CDC index sync takes the same
+      // columns and bucket
+      "\"doc_id\", \"tk\", IndexBucket" -> 3,
+      "case e: IllegalArgumentException" -> 1, // refuses
+      "Paths.get(root, \"gen=3\")" -> 1) // casRetryNoop
+    val src = java.nio.file.Paths.get("src/main/scala/graft/Queries.scala")
+    assert(java.nio.file.Files.exists(src),
+      s"run from the repository root, not ${java.nio.file.Paths.get("").toAbsolutePath}")
+    val lines = new String(java.nio.file.Files.readAllBytes(src), "UTF-8").split("\n", -1).toSeq
+    val offenders = allowed.toSeq.flatMap { case (text, n) =>
+      val sites = lines.indices.filter(i => lines(i).contains(text))
+      if (sites.size <= n) Nil else sites.map(i => s"Queries.scala:${i + 1} $text")
+    }
+    assert(offenders.isEmpty,
+      offenders.mkString("call the catalog building block instead: ", ", ", ""))
   }
 
   test("all catalog queries execute and return rows at sf0.001") {

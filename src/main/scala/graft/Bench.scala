@@ -40,7 +40,7 @@ object Bench {
   /** Decode-and-count over the scan's ColumnarBatches — the reference's
     * full-scan semantics (decode all pages, count rows; no row pivot).
     */
-  private def consumeColumnar(df: DataFrame): Long = {
+  private[graft] def consumeColumnar(df: DataFrame): Long = {
     val scan = df.queryExecution.executedPlan.collectFirst {
       case s: FileSourceScanExec => s
     }.getOrElse(sys.error("no file scan in plan"))
@@ -50,7 +50,7 @@ object Bench {
   }
 
   /** Iterate the plan's InternalRows without external-row conversion. */
-  private def consumeRows(df: DataFrame): Long =
+  private[graft] def consumeRows(df: DataFrame): Long =
     df.queryExecution.toRdd
       .mapPartitions { it =>
         var n = 0L

@@ -1,15 +1,133 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev harness: measure the four bench shapes under config variants to
-  * attribute fixed overhead (AQE re-planning, shuffle width, scheduling)
-  * vs actual scan/agg cost. Not part of the driver contract.
+/** The measurement harness: one probe per `--flag`, run as
+  * `sbt "runMain graft.BenchTune --flag [n ...] [word ...]"`. Each probe
+  * is one entry of [[probes]]; the runner resolves the flag before Spark
+  * starts, builds the session once and gives the probe a scratch
+  * directory that is deleted when it ends. SCALE.md records what the
+  * scale probes measured, with their commands; `--floor` is README's
+  * filtered-scan floor decomposition. Measurement only: `Verify`,
+  * `Bench` and `SparkEntry` do not call it.
   */
 object BenchTune {
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+
+  /** A probe's arguments: its positional numbers, defaults filled in
+    * where the command gives fewer, and the word options given.
+    */
+  final case class Args(nums: Seq[Long], words: Set[String]) {
+    def int(i: Int): Int = nums(i).toInt
+  }
+
+  /** What the runner hands a probe body. */
+  final case class Ctx(spark: SparkSession, sfDir: String, scratch: String)
+
+  /** One probe: `flag [n0] [n1] ... [word ...]`, the numbers overriding
+    * `defaults` in order, the words drawn from `words`. `disk` is the
+    * probe's on-disk footprint under its scratch directory, checked
+    * before the session starts.
+    */
+  final case class Probe(flag: String, defaults: Seq[Long],
+      run: (Ctx, Args) => Unit, words: Set[String] = Set.empty,
+      disk: Args => Long = _ => 0L)
+
+  private val OpNames = Set("token_quality", "pack_sequences", "minhash_128",
+    "dedup_exact", "temperature_mix", "quality_gate", "inverted_index",
+    "sketch_store_merge", "duplicate_spans", "bpe_merges_3", "triangle_count")
+
+  val probes: Seq[Probe] = Seq(
+    Probe("--scale", Seq(10000000L), (c, a) => scaleDemo(c.spark, a.nums(0))),
+    Probe("--ops", Seq(1000000L),
+      (c, a) => opsDemo(c.spark, c.scratch, a.nums(0), a.words), OpNames),
+    Probe("--bpe", Seq(1000L), (c, a) => bpeDemo(c.spark, a.nums(0))),
+    Probe("--skew", Seq(10000000L), (c, a) => skewDemo(c.spark, a.nums(0))),
+    Probe("--events", Seq(10000000L), (c, a) => eventsDemo(c.spark, a.nums(0))),
+    Probe("--pq", Seq(1000000L), (c, a) => pqDemo(c.spark, a.nums(0))),
+    Probe("--ivf", Nil, (c, _) => ivfSweep(c.spark, c.sfDir)),
+    Probe("--knn", Seq(100000L, 0L, 32L, 1L, 8L, 16L), (c, a) =>
+      knnDemo(c.spark, a.nums(0), a.int(1), a.int(2), a.int(3), a.int(4), a.int(5))),
+    // the SQ8 tier at the same gate geometry; SQ has no PQ geometry args
+    Probe("--knnsq", Seq(100000L, 0L, 4L, 1L), (c, a) =>
+      knnDemo(c.spark, a.nums(0), a.int(1), a.int(2), a.int(3), tier = "sq")),
+    Probe("--saltprobe", Seq(100000L, 100L),
+      (c, a) => saltProbe(c.spark, a.nums(0), a.int(1))),
+    Probe("--rangejoin", Seq(10000000L, 100000L),
+      (c, a) => rangeJoinDemo(c.spark, a.nums(0), a.nums(1))),
+    Probe("--components", Seq(10000000L),
+      (c, a) => componentsDemo(c.spark, a.nums(0), a.words),
+      Set("path", "star", "random")),
+    Probe("--ccinc", Seq(10000000L, 100000L),
+      (c, a) => ccIncDemo(c.spark, a.nums(0), a.nums(1))),
+    Probe("--compaction", Seq(32L, 20000L, 10000L), (c, a) =>
+      compactionDemo(c.spark, c.scratch, a.int(0), a.nums(1), a.nums(2))),
+    Probe("--policy", Seq(1000000L),
+      (c, a) => policyDemo(c.spark, c.scratch, a.nums(0))),
+    Probe("--takedown", Seq(1000000L, 10L),
+      (c, a) => takedownDemo(c.spark, c.scratch, a.nums(0), a.int(1))),
+    // byte model: three sig stores + folds ≈ 50 B/key over 4 keys/doc;
+    // the index triplet adds ≈ 600 B/doc
+    Probe("--retention", Seq(1000000L, 8L), (c, a) =>
+      retentionDemo(c.spark, c.scratch, a.nums(0), a.int(1), a.words("sigonly")),
+      Set("sigonly"), a =>
+        a.nums(0) * 4 * 50L + (if (a.words("sigonly")) 0L else a.nums(0) * 600L)),
+    Probe("--rebuild", Seq(1000000L, 100L),
+      (c, a) => rebuildDemo(c.spark, c.scratch, a.nums(0), a.nums(1))),
+    // byte model from the 40M×8 run (SCALE.md): sources+merged ≈ 650 B/doc
+    // all-in; the single-pipeline leg adds its own store; the
+    // compactFirst leg (batchesPerBuilder > 1) adds folded source
+    // generations plus a second merged store, both near-compacted size
+    Probe("--federation", Seq(1000000L, 2L, 1L), (c, a) =>
+      federationDemo(c.spark, c.scratch, a.nums(0), a.int(1),
+        withSingle = !a.words("nosingle"), batchesPerBuilder = a.int(2)),
+      Set("nosingle"), a =>
+        a.nums(0) * ((if (a.words("nosingle")) 650L else 900L) +
+          (if (a.int(2) > 1) 400L else 0L))),
+    Probe("--cdc", Seq(10000000L, 10000L, 4L),
+      (c, a) => cdcDemo(c.spark, c.scratch, a.nums(0), a.nums(1), a.int(2)),
+      disk = a => a.nums(0) * 80L + a.int(2) * a.nums(1) * 40L),
+    Probe("--cdcsync", Seq(1000000L, 20000L, 4L),
+      (c, a) => cdcSyncDemo(c.spark, c.scratch, a.nums(0), a.nums(1), a.int(2)),
+      disk = a => a.nums(0) * 900L + (a.int(2) + 1) * a.nums(1) * 900L),
+    Probe("--curation", Seq(1000000L, 16L),
+      (c, a) => curationDemo(c.spark, c.scratch, a.nums(0), a.int(1))),
+    Probe("--floor", Nil, (c, _) => floorProbe(c.spark, c.sfDir)))
+
+  /** The probe `args` names and its arguments: the first argument is the
+    * flag, every all-digit argument after it a positional number, every
+    * other one a word option. Refuses an unknown flag with the list of
+    * probes, more numbers than the probe takes, and words it does not
+    * know.
+    */
+  def resolve(args: Seq[String]): (Probe, Args) = {
+    val probe = args.headOption.flatMap(f => probes.find(_.flag == f))
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown probe ${args.headOption.getOrElse("(none)")}; " +
+          s"probes: ${probes.map(_.flag).mkString(" ")}"))
+    val (nums, words) = args.tail.partition(s => s.nonEmpty && s.forall(_.isDigit))
+    require(nums.size <= probe.defaults.size,
+      s"${probe.flag} takes at most ${probe.defaults.size} numbers, got ${nums.mkString(" ")}")
+    val unknown = words.filterNot(probe.words)
+    require(unknown.isEmpty, s"${probe.flag} has no option ${unknown.mkString(" ")}" +
+      s"; its options: ${probe.words.toSeq.sorted.mkString(" ")}")
+    (probe, Args(nums.map(_.toLong) ++ probe.defaults.drop(nums.size), words.toSet))
+  }
+
+  /** `f`'s value and its wall seconds. */
+  private def timed[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def wall(f: => Any): Double = timed(f)._2
+
+  /** One warm-up run of `f`, then the fastest of `n` timed runs. */
+  private def minOf(n: Int)(f: => Any): Double = {
+    f; (1 to n).map(_ => wall(f)).min
   }
 
   /** Probe-disk PREFLIGHT: large probes (federation at 100M docs,
@@ -26,11 +144,76 @@ object BenchTune {
       .getFileStore(java.nio.file.Paths.get(dir)).getUsableSpace
     require(free > estBytes * 1.2,
       f"$what probe needs ~${estBytes / 1e9}%.1f GB (+20%% headroom) " +
-        f"under $dir but only ${free / 1e9}%.1f GB is free — clear " +
-        "/tmp/graft-*probe* leftovers or shrink the probe")
+        f"under $dir but only ${free / 1e9}%.1f GB is free — free space " +
+        "or shrink the probe")
     println(f"[budget] $what est=${estBytes / 1e9}%.1f GB " +
       f"free=${free / 1e9}%.1f GB under $dir")
   }
+
+  private val Dim = 64
+
+  /** Near-uniform `Dim`-dim vectors keyed `vec_id`, components in
+    * [-1, 1] — the no-structure pessimal floor for ANN recall.
+    */
+  private def uniformVectors(ids: Dataset[java.lang.Long]): DataFrame =
+    ids.select(col("id").as("vec_id"), array((0 until Dim).map(j =>
+      ((pmod(xxhash64(col("id"), lit(j)), lit(2001L)) - 1000L) / 1000.0)
+        .cast("double")): _*).as("embedding"))
+
+  /** Mixture-of-Gaussians (uniform-ball noise) `Dim`-dim vectors keyed
+    * `vec_id`: a hash-assigned cluster center plus per-vector noise.
+    */
+  private def clusteredVectors(ids: Dataset[java.lang.Long],
+      clusters: Int): DataFrame = {
+    val cl = pmod(xxhash64(col("id"), lit(777)), lit(clusters.toLong))
+    ids.select(col("id").as("vec_id"), array((0 until Dim).map { j =>
+      val center = (pmod(xxhash64(cl, lit(j + 10000)), lit(2001L)) - 1000L) / 1000.0
+      val noise = (pmod(xxhash64(col("id"), lit(j + 20000)), lit(2001L)) - 1000L) / 5000.0
+      (center + noise).cast("double")
+    }: _*).as("embedding"))
+  }
+
+  /** Tokenised docs keyed `doc_id`: 40 hash-derived tokens `tk` over a
+    * 2000-word vocabulary.
+    */
+  private def tkDocs(ids: Dataset[java.lang.Long]): DataFrame =
+    ids.select(col("id").as("doc_id"),
+      transform(sequence(lit(0), lit(39)), j =>
+        concat(lit("w"), pmod(xxhash64(col("id"), j), lit(2000L))
+          .cast("string"))).as("tk"))
+
+  /** `gen` written once to `/tmp/graft-<name>-<rows>` across 32 files;
+    * later runs reuse the files.
+    */
+  private def cachedInput(spark: SparkSession, name: String, rows: Long)(
+      gen: => DataFrame): DataFrame = {
+    val dir = s"/tmp/graft-$name-$rows"
+    if (!new File(dir).exists())
+      gen.repartition(32).write.mode("overwrite").parquet(dir)
+    Tables.parquet(spark, dir)
+  }
+
+  /** The ops text corpus: `rows` docs of 30 hash-derived tokens from a
+    * 500-word vocabulary over 20 sources.
+    */
+  private def opsCorpus(spark: SparkSession, rows: Long): DataFrame =
+    cachedInput(spark, "ops", rows)(spark.range(rows).select(
+      col("id").as("doc_id"),
+      array_join(transform(sequence(lit(0), lit(29)),
+        i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500)))), " ")
+        .as("text"),
+      pmod(col("id"), lit(20)).cast("string").as("source")))
+
+  /** Random sparse graph: `edges` hash-derived edges whose endpoints are
+    * drawn from a 2x-edge-count id space — supercritical (mean degree ~1
+    * per endpoint space), so a giant component plus many small ones: the
+    * near-dup-graph shape.
+    */
+  private def randomEdges(spark: SparkSession, edges: Long): DataFrame =
+    spark.range(edges).select(
+      pmod(xxhash64(col("id"), lit(1)), lit(edges * 2)).as("a"),
+      pmod(xxhash64(col("id"), lit(2)), lit(edges * 2)).as("b"))
+      .repartition(32)
 
   /** `--scale [rows]`: generate the reference bench schema at `rows`
     * (default 10M) across 32 files and measure the four shapes with real
@@ -39,57 +222,32 @@ object BenchTune {
     * to one task, like-for-like with the single-threaded reference).
     */
   private def scaleDemo(spark: SparkSession, rows: Long): Unit = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = s"/tmp/graft-scale-$rows"
-    if (!new java.io.File(dir).exists()) {
-      DataGen.benchTable(spark, rows, 42).repartition(32)
-        .write.mode("overwrite").parquet(dir)
-    }
-    val df = Tables.parquet(spark, dir)
-    def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
-    def consumeColumnar(d: org.apache.spark.sql.DataFrame): Unit = {
-      val scan = d.queryExecution.executedPlan.collectFirst {
-        case s: FileSourceScanExec => s }.get
-      scan.executeColumnar()
-        .mapPartitions(it => Iterator(it.map(_.numRows().toLong).sum)).collect()
-    }
+    val df = cachedInput(spark, "scale", rows)(DataGen.benchTable(spark, rows, 42))
     val filtered = df.filter(col("value") > 50000)
     val agg = df.agg(sum(col("value")))
     val gb = df.groupBy(col("region")).agg(count(lit(1)), sum(col("value")))
     val r = Seq(
-      "full_scan" -> minT(consumeColumnar(df)),
-      "filtered_scan" -> minT(filtered.queryExecution.toRdd
-        .mapPartitions { it => var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator(n) }
-        .collect()),
-      "aggregation" -> minT(agg.collect()),
-      "group_by" -> minT(gb.collect()))
+      "full_scan" -> minOf(3)(Bench.consumeColumnar(df)),
+      "filtered_scan" -> minOf(3)(Bench.consumeRows(filtered)),
+      "aggregation" -> minOf(3)(agg.collect()),
+      "group_by" -> minOf(3)(gb.collect()))
     r.foreach { case (n, t) =>
       println(f"[scale] $n%s: $t%.3f s  (${rows / t / 1e6}%.1f M rows/s)")
     }
   }
 
-  /** `--ops [rows]`: generate a synthetic document corpus at `rows`
+  /** `--ops [rows] [op ...]`: the synthetic document corpus at `rows`
     * (default 1M docs of 30 hash-derived tokens) across 32 files and
     * measure the training-data operators' throughput with real
     * parallelism — the scale evidence for the curation surface that the
-    * 6k-doc testdata cannot give.
+    * 6k-doc testdata cannot give. Named ops select a subset.
     */
-  private def opsDemo(spark: SparkSession, rows: Long, only: Set[String]): Unit = {
+  private def opsDemo(spark: SparkSession, scratch: String, rows: Long,
+      only: Set[String]): Unit = {
     import graft.functions.{HashExprs, TextFunctions}
     import graft.operators.{Bpe, Checks, Dedup, InvertedIndex, Packing, SketchStore, Splits, Triangles}
     import org.apache.spark.sql.GraftBridge
-    val dir = s"/tmp/graft-ops-$rows"
-    if (!new java.io.File(dir).exists()) {
-      spark.range(rows).select(
-        col("id").as("doc_id"),
-        array_join(transform(sequence(lit(0), lit(29)),
-          i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500)))), " ")
-          .as("text"),
-        pmod(col("id"), lit(20)).cast("string").as("source"))
-        .repartition(32).write.mode("overwrite").parquet(dir)
-    }
-    val docs = Tables.parquet(spark, dir)
-    def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
+    val docs = opsCorpus(spark, rows)
     def drain(d: DataFrame): Unit =
       d.write.mode("overwrite").format("noop").save()
     val sized = docs.select(col("doc_id"), col("source"),
@@ -121,8 +279,8 @@ object BenchTune {
           explode(TextFunctions.tokens(col("text"))).as("tok")),
         bucketSize = 100000L))),
       "sketch_store_merge" -> (() => {
-        val path = s"/tmp/graft-ops-sketch-$rows"
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+        val path = s"$scratch/sketch"
+        FileUtils.deleteQuietly(new File(path))
         val keyed = docs.select(col("source"), col("doc_id"))
         SketchStore.appendBatch(keyed.filter(col("doc_id") % 2 === 0),
           Seq("source"), "doc_id", batchId = 0L, path)
@@ -154,7 +312,7 @@ object BenchTune {
           pmod(xxhash64(col("id"), lit(1)), lit(rows / 10)).as("dst")),
         "src", "dst").collect()))
     ops.filter(o => only.isEmpty || only(o._1)).foreach { case (n, f) =>
-      val t = minT(f())
+      val t = minOf(3)(f())
       println(f"[ops] $n%s: $t%.3f s  (${rows / t / 1e6}%.1f M docs/s)")
     }
   }
@@ -169,22 +327,12 @@ object BenchTune {
     */
   private def bpeDemo(spark: SparkSession, merges: Long): Unit = {
     import graft.operators.Bpe
-    val dir = "/tmp/graft-ops-1000000"
-    if (!new java.io.File(dir).exists()) {
-      spark.range(1000000L).select(
-        col("id").as("doc_id"),
-        array_join(transform(sequence(lit(0), lit(29)),
-          i => concat(lit("w"), pmod(xxhash64(col("id"), i), lit(500)))), " ")
-          .as("text"),
-        pmod(col("id"), lit(20)).cast("string").as("source"))
-        .repartition(32).write.mode("overwrite").parquet(dir)
+    val docs = opsCorpus(spark, 1000000L)
+    val ((learned, rounds), t) = timed {
+      val (df, rounds) =
+        Bpe.learnMergesBatched(docs, "text", merges.toInt, maxBatch = 32)
+      (df.count(), rounds)
     }
-    val docs = Tables.parquet(spark, dir)
-    val t0 = System.nanoTime()
-    val (df, rounds) =
-      Bpe.learnMergesBatched(docs, "text", merges.toInt, maxBatch = 32)
-    val learned = df.count()
-    val t = (System.nanoTime() - t0) / 1e9
     println(f"[bpe] merges=$learned%d rounds=$rounds%d " +
       f"(${learned.toDouble / rounds}%.1f merges/round) time=$t%.1f s " +
       f"— sequential would be $learned%d rounds")
@@ -216,12 +364,11 @@ object BenchTune {
     def drain(d: DataFrame): Long = // pmod keeps the ANSI sum in range
       d.agg(count(lit(1)), sum(pmod(col("attr"), lit(1000000L))))
         .collect().head.getLong(0)
-    def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
     val plainN = drain(fact.join(dim, "k"))
     val saltedN = drain(SkewJoin.saltedJoin(fact, dim, "k", buckets = 32))
     require(plainN == saltedN, s"salted join changed the result: $plainN vs $saltedN")
-    val tPlain = minT(drain(fact.join(dim, "k")))
-    val tSalted = minT(drain(SkewJoin.saltedJoin(fact, dim, "k", buckets = 32)))
+    val tPlain = minOf(3)(drain(fact.join(dim, "k")))
+    val tSalted = minOf(3)(drain(SkewJoin.saltedJoin(fact, dim, "k", buckets = 32)))
     println(f"[skew] rows=$rows hot_share=0.30 plain_aqe=$tPlain%.2f s " +
       f"salted_32=$tSalted%.2f s rows_match=$plainN")
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -234,28 +381,22 @@ object BenchTune {
     * they stay linear when the event count is 1000x the catalog's.
     */
   private def eventsDemo(spark: SparkSession, rows: Long): Unit = {
-    val dir = s"/tmp/graft-events-$rows"
-    if (!new java.io.File(dir).exists()) {
-      val types = array(Seq("view", "click", "purchase", "signup", "error")
-        .map(lit): _*)
-      spark.range(rows).select(
-        col("id").as("event_id"),
-        timestamp_millis(lit(1704067200000L) + // 2024-01-01
-          pmod(xxhash64(col("id")), lit(30L * 86400000L))).as("ts"),
-        pmod(xxhash64(col("id"), lit(1)), lit(rows / 1000)).as("user_id"),
-        element_at(types,
-          (pmod(xxhash64(col("id"), lit(2)), lit(5)) + 1).cast("int"))
-          .as("event_type"),
-        (pmod(xxhash64(col("id"), lit(3)), lit(10000)) / 100.0).as("value"))
-        .repartition(32).write.mode("overwrite").parquet(dir)
-    }
-    val ev = Tables.parquet(spark, dir)
+    val types = array(Seq("view", "click", "purchase", "signup", "error")
+      .map(lit): _*)
+    val ev = cachedInput(spark, "events", rows)(spark.range(rows).select(
+      col("id").as("event_id"),
+      timestamp_millis(lit(1704067200000L) + // 2024-01-01
+        pmod(xxhash64(col("id")), lit(30L * 86400000L))).as("ts"),
+      pmod(xxhash64(col("id"), lit(1)), lit(rows / 1000)).as("user_id"),
+      element_at(types,
+        (pmod(xxhash64(col("id"), lit(2)), lit(5)) + 1).cast("int"))
+        .as("event_type"),
+      (pmod(xxhash64(col("id"), lit(3)), lit(10000)) / 100.0).as("value")))
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"),
         floor(unix_millis(col("ts")) / lit(3600000)).cast("long").as("h"),
         col("ts"), col("value"))
-    def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
-    val tFunnel = minT {
+    val tFunnel = minOf(3) {
       val s1 = ev.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("us")).as("t1"))
       val s2 = ev.join(s1, "user_id")
@@ -269,7 +410,7 @@ object BenchTune {
       s1.agg(count(lit(1))).crossJoin(s2.agg(count(lit(1))))
         .crossJoin(s3.agg(count(lit(1)))).collect()
     }
-    val tGap = minT {
+    val tGap = minOf(3) {
       val hourly = ev.groupBy(col("user_id"), col("h"))
         .agg(max_by(col("value"), col("us")).as("v"))
       val grid = hourly.groupBy(col("user_id"))
@@ -283,7 +424,7 @@ object BenchTune {
           last(col("v"), ignoreNulls = true).over(w).as("fv"))
         .agg(count(lit(1)), sum(col("fv"))).collect()
     }
-    val tCohort = minT {
+    val tCohort = minOf(3) {
       val wk = ev.select(col("user_id"),
         floor(col("h") / lit(168)).as("wk"))
       val fs = wk.groupBy(col("user_id")).agg(min(col("wk")).as("w0"))
@@ -303,28 +444,21 @@ object BenchTune {
     */
   private def pqDemo(spark: SparkSession, rows: Long): Unit = {
     import graft.operators.Similarity
-    val dir = s"/tmp/graft-pq-$rows"
-    if (!new java.io.File(dir).exists()) {
-      spark.range(rows).select(col("id").as("vec_id"),
-        transform(sequence(lit(1), lit(64)), i =>
-          ((pmod(xxhash64(col("id"), i), lit(2000)) - 1000) / 1000.0))
-          .as("embedding"))
-        .repartition(32).write.mode("overwrite").parquet(dir)
-    }
-    val emb = Tables.parquet(spark, dir).cache()
+    val emb = cachedInput(spark, "pq", rows)(spark.range(rows).select(
+      col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(64)), i =>
+        ((pmod(xxhash64(col("id"), i), lit(2000)) - 1000) / 1000.0))
+        .as("embedding"))).cache()
     emb.count()
-    def minT(f: => Unit): Double = { f; (1 to 3).map(_ => time(f)).min }
     val sample = emb.filter(pmod(xxhash64(col("vec_id"), lit(99)), lit(10)) === 0)
-    val t0 = System.nanoTime()
-    val books = Similarity.fitPqCodebooks(sample, "vec_id", "embedding",
-      m = 16, k = 16, iters = 2)
-    val tFit = (System.nanoTime() - t0) / 1e9
-    val tEncode = minT(
+    val (books, tFit) = timed(Similarity.fitPqCodebooks(sample, "vec_id",
+      "embedding", m = 16, k = 16, iters = 2))
+    val tEncode = minOf(3)(
       emb.select(Similarity.pqEncodeExpr(
         transform(col("embedding"), x => x.cast("double")), books).as("c"))
         .write.mode("overwrite").format("noop").save())
     val q = emb.filter(col("vec_id") < 10)
-    val tBf = minT(Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 10)
+    val tBf = minOf(3)(Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 10)
       .collect())
     val bfIds = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").collect()
@@ -332,7 +466,7 @@ object BenchTune {
     println(f"[pq] rows=$rows fit_10pct_sample=$tFit%.2f s " +
       f"encode=$tEncode%.2f s search_brute=$tBf%.2f s")
     Seq(16, 64).foreach { f =>
-      val tPq = minT(Similarity.pqSearch(q, emb, "vec_id", "embedding", 10,
+      val tPq = minOf(3)(Similarity.pqSearch(q, emb, "vec_id", "embedding", 10,
         books, shortlistFactor = f).collect())
       val pqIds = Similarity.pqSearch(q, emb, "vec_id", "embedding", 10,
         books, shortlistFactor = f)
@@ -369,7 +503,7 @@ object BenchTune {
         .join(bf, Seq("query_id", "neighbor_id"))
         .count()
       val hits = run()
-      val t = (1 to 3).map(_ => time(run())).min
+      val t = (1 to 3).map(_ => wall(run())).min
       println(f"[ivf] n=$n nlist=16 nassign=3 nprobe=$nprobe%2d  " +
         f"recall=${hits / denom}%.3f  search=$t%.2f s")
     }
@@ -421,46 +555,29 @@ object BenchTune {
       shortlist: Int, cellSalt: Int, m: Int = 8, kcode: Int = 16,
       tier: String = "pq"): Unit = {
     import graft.operators.Similarity
-    val dim = 64
-    val vec = if (clusters <= 0) {
-      // near-uniform: the no-structure pessimal floor
-      array((0 until dim).map(j =>
-        ((pmod(xxhash64(col("id"), lit(j)), lit(2001L)) - 1000L) / 1000.0)
-          .cast("double")): _*)
-    } else {
-      // mixture-of-Gaussians (uniform-ball noise): center[cl][j] + noise
-      val cl = pmod(xxhash64(col("id"), lit(777)), lit(clusters.toLong))
-      array((0 until dim).map { j =>
-        val center = (pmod(xxhash64(cl, lit(j + 10000)), lit(2001L)) - 1000L) / 1000.0
-        val noise = (pmod(xxhash64(col("id"), lit(j + 20000)), lit(2001L)) - 1000L) / 5000.0
-        (center + noise).cast("double")
-      }: _*)
-    }
-    val emb = spark.range(n).select(col("id").as("vec_id"), vec.as("embedding"))
-      .repartition(32).cache()
+    val emb = (if (clusters <= 0) uniformVectors(spark.range(n))
+      else clusteredVectors(spark.range(n), clusters)).repartition(32).cache()
     emb.count()
     val nlist = math.max(16, math.sqrt(n.toDouble).toInt / 2)
-    val t0 = System.nanoTime()
     // the SQ tier needs only the coarse index: no codebook fit at all —
     // part of the point (m sequential subspace Lloyd loops vanish)
-    val (cents, books) =
+    val ((cents, books), fitT) = timed(
       if (tier == "sq")
         (Similarity.fitCentroids(emb, "vec_id", "embedding", nlist, 2), null)
       else Similarity.fitIvfPq(emb, "vec_id", "embedding",
-        nlist = nlist, kmeansIters = 2, m = m, kcode = kcode, pqIters = 2)
-    val fitT = (System.nanoTime() - t0) / 1e9
+        nlist = nlist, kmeansIters = 2, m = m, kcode = kcode, pqIters = 2))
     val k = 10
-    val t1 = System.nanoTime()
-    val out =
-      if (tier == "sq")
-        Similarity.ivfSqKnnJoin(emb, "vec_id", "embedding", k,
-          cents, nprobe = 12, nassign = 2, shortlistFactor = shortlist,
+    val ((out, rows), joinT) = timed {
+      val out =
+        if (tier == "sq")
+          Similarity.ivfSqKnnJoin(emb, "vec_id", "embedding", k,
+            cents, nprobe = 12, nassign = 2, shortlistFactor = shortlist,
+            cellSalt = cellSalt)
+        else Similarity.ivfPqKnnJoin(emb, "vec_id", "embedding", k,
+          cents, books, nprobe = 12, nassign = 2, shortlistFactor = shortlist,
           cellSalt = cellSalt)
-      else Similarity.ivfPqKnnJoin(emb, "vec_id", "embedding", k,
-        cents, books, nprobe = 12, nassign = 2, shortlistFactor = shortlist,
-        cellSalt = cellSalt)
-    val rows = out.count()
-    val joinT = (System.nanoTime() - t1) / 1e9
+      (out, out.count())
+    }
     require(rows <= n * k, s"expected at most ${n * k} rows, got $rows")
     // recall@k on a deterministic 200-query sample vs exact brute force
     // (broadcast 200 queries x full corpus — cheap, and only the probe)
@@ -474,7 +591,7 @@ object BenchTune {
     val denom = exact.count()
     val corpusKind = if (clusters <= 0) "uniform" else s"clustered($clusters)"
     val codeKind = if (tier == "sq") "sq8" else s"m=$m kcode=$kcode"
-    println(f"[knn] tier=$tier%s corpus=$corpusKind%s n=$n%d dim=$dim nlist=$nlist nprobe=12 nassign=2 " +
+    println(f"[knn] tier=$tier%s corpus=$corpusKind%s n=$n%d dim=$Dim nlist=$nlist nprobe=12 nassign=2 " +
       f"shortlist=${shortlist}%dx salt=$cellSalt%d codes=$codeKind%s " +
       f"fit=$fitT%.1f s knn_join=$joinT%.1f s " +
       f"rows_out=$rows%d served=${rows.toDouble / (n * k)}%.3f " +
@@ -483,20 +600,16 @@ object BenchTune {
     emb.unpersist()
   }
 
-  /** `--saltprobe [n] [clusters]`: see the dispatch note — the cell
-    * histogram and derived auto-salt of the knnDemo clustered corpus.
+  /** `--saltprobe [n] [clusters]`: the cell histogram behind the AUTO
+    * hot-cell salt (Similarity.autoCellSalt, the kNN joins' default) —
+    * max/median replica-rows per cell on the knnDemo clustered corpus,
+    * and the S the auto rule derives at several per-task targets. The
+    * equality gate (auto == unsalted, row for row) is spec-side; this
+    * probe documents the DECISION surface.
     */
   private def saltProbe(spark: SparkSession, n: Long, clusters: Int): Unit = {
     import graft.operators.Similarity
-    val dim = 64
-    val cl = pmod(xxhash64(col("id"), lit(777)), lit(clusters.toLong))
-    val vec = array((0 until dim).map { j =>
-      val center = (pmod(xxhash64(cl, lit(j + 10000)), lit(2001L)) - 1000L) / 1000.0
-      val noise = (pmod(xxhash64(col("id"), lit(j + 20000)), lit(2001L)) - 1000L) / 5000.0
-      (center + noise).cast("double")
-    }: _*)
-    val emb = spark.range(n).select(col("id").as("vec_id"), vec.as("embedding"))
-      .repartition(32).cache()
+    val emb = clusteredVectors(spark.range(n), clusters).repartition(32).cache()
     emb.count()
     val nlist = math.max(16, math.sqrt(n.toDouble).toInt / 2)
     val cents = Similarity.fitCentroids(emb, "vec_id", "embedding", nlist, 2)
@@ -536,11 +649,8 @@ object BenchTune {
         pmod(xxhash64(col("id"), lit(2)), lit(spanMs)).as("s"),
         (pmod(xxhash64(col("id"), lit(3)), lit(59L * 60000L)) + 60000L).as("len"))
       .select(col("iid"), col("s"), (col("s") + col("len")).as("e"))
-    val t0 = System.nanoTime()
-    val joined = RangeJoin.pointInInterval(pts, ivs, "p", "s", "e",
-      bucketWidth = 3600000L)
-    val rows = joined.count()
-    val joinT = (System.nanoTime() - t0) / 1e9
+    val (rows, joinT) = timed(RangeJoin.pointInInterval(pts, ivs, "p", "s", "e",
+      bucketWidth = 3600000L).count())
     // pair-exactness on a slice small enough for the nested-loop plan
     val ptsS = pts.filter(col("pid") % 200 === 0).limit(50000)
     val ivsS = ivs.filter(col("iid") % 100 === 0).limit(1000)
@@ -557,59 +667,40 @@ object BenchTune {
       f"slice_check=${naive.size}%d pairs equal (bucketed == nested-loop)")
   }
 
-  /** `--components [edges]`: connected components at scale (default 10M
-    * edges) on the three structurally extreme graphs:
+  /** `--components [edges] [shape ...]`: connected components at scale
+    * (default 10M edges) on the three structurally extreme graphs:
     *  - path: worst-case diameter (= edge count) — pins the
     *    O(log diameter) pointer-jumping claim, since naive propagation
     *    would need `edges` rounds;
     *  - star: maximum key skew (every edge shares the hub endpoint) —
     *    pins the per-round join/groupBy under a single hot key (AQE
     *    skew split);
-    *  - random: xxhash-derived sparse graph, the typical near-dup-pair
-    *    workload shape.
-    * Prints rounds + wall time per graph; recorded in SCALE.md. Extra
-    * non-numeric args select a subset of shapes (e.g. `--components
-    * 100000000 random` for the 100M-edge critical-regime ceiling probe
-    * without paying for path/star at that scale).
+    *  - random: [[randomEdges]], the typical near-dup-pair workload
+    *    shape.
+    * Prints rounds + wall time per graph; recorded in SCALE.md. Named
+    * shapes select a subset (e.g. `--components 100000000 random` for
+    * the 100M-edge critical-regime ceiling probe without paying for
+    * path/star at that scale).
     */
   private def componentsDemo(spark: SparkSession, edges: Long,
       only: Set[String]): Unit = {
     import graft.operators.Components
     def want(name: String) = only.isEmpty || only(name)
     val maxIters = 64 // path diameter 10M needs ~log2 rounds; headroom
-    def run(name: String, df: DataFrame, expected: Long): Unit = {
-      val t0 = System.nanoTime()
-      val (labels, rounds) = Components.componentsWithRounds(df, "a", "b", maxIters)
-      val nComp = labels.select(col("comp")).distinct().count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      require(nComp == expected, s"$name: got $nComp components, want $expected")
+    def run(name: String, df: DataFrame, expected: Option[Long]): Unit = {
+      val ((rounds, nComp), secs) = timed {
+        val (labels, rounds) = Components.componentsWithRounds(df, "a", "b", maxIters)
+        (rounds, labels.select(col("comp")).distinct().count())
+      }
+      expected.foreach(e => require(nComp == e, s"$name: got $nComp components, want $e"))
       println(f"[components] $name%s edges=$edges rounds=$rounds%d " +
         f"components=$nComp%d time=$secs%.1f s")
     }
-    if (want("path")) {
-      val path = spark.range(edges).select(col("id").as("a"), (col("id") + 1).as("b"))
-        .repartition(32)
-      run("path", path, 1L)
-    }
-    if (want("star")) {
-      val star = spark.range(edges).select(lit(0L).as("a"), (col("id") + 1).as("b"))
-        .repartition(32)
-      run("star", star, 1L)
-    }
-    if (want("random")) {
-      // random sparse: endpoints drawn from a 2x-edge-count id space —
-      // supercritical (mean degree ~1 per endpoint space), so a giant
-      // component plus many small ones: the near-dup-graph shape
-      val rand = spark.range(edges).select(
-        pmod(xxhash64(col("id"), lit(1)), lit(edges * 2)).as("a"),
-        pmod(xxhash64(col("id"), lit(2)), lit(edges * 2)).as("b"))
-        .repartition(32)
-      val t0 = System.nanoTime()
-      val (labels, rounds) = Components.componentsWithRounds(rand, "a", "b", maxIters)
-      val nComp = labels.select(col("comp")).distinct().count()
-      println(f"[components] random edges=$edges rounds=$rounds%d " +
-        f"components=$nComp%d time=${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
+    if (want("path")) run("path", spark.range(edges)
+      .select(col("id").as("a"), (col("id") + 1).as("b")).repartition(32), Some(1L))
+    if (want("star")) run("star", spark.range(edges)
+      .select(lit(0L).as("a"), (col("id") + 1).as("b")).repartition(32), Some(1L))
+    if (want("random")) run("random", randomEdges(spark, edges), None)
   }
 
   /** `--ccinc [edges] [batch]`: incremental component admission at
@@ -625,14 +716,11 @@ object BenchTune {
     */
   private def ccIncDemo(spark: SparkSession, edges: Long, batch: Long): Unit = {
     import graft.operators.Components
-    val rand = spark.range(edges).select(
-      pmod(xxhash64(col("id"), lit(1)), lit(edges * 2)).as("a"),
-      pmod(xxhash64(col("id"), lit(2)), lit(edges * 2)).as("b"))
-      .repartition(32)
-    val t0 = System.nanoTime()
-    val (labels, r0) = Components.componentsWithRounds(rand, "a", "b", 64)
-    val n0 = labels.count()
-    val full = (System.nanoTime() - t0) / 1e9
+    val rand = randomEdges(spark, edges)
+    val ((labels, r0, n0), full) = timed {
+      val (labels, r0) = Components.componentsWithRounds(rand, "a", "b", 64)
+      (labels, r0, labels.count())
+    }
     println(f"[ccinc] history edges=$edges rounds=$r0%d nodes=$n0%d " +
       f"scratch_time=$full%.1f s")
     // new batch drawn from the same id space (seeds 3/4): bridges
@@ -641,10 +729,10 @@ object BenchTune {
       pmod(xxhash64(col("id"), lit(3)), lit(edges * 3)).as("a"),
       pmod(xxhash64(col("id"), lit(4)), lit(edges * 3)).as("b"))
       .repartition(32)
-    val t1 = System.nanoTime()
-    val (inc, r1) = Components.incrementalWithRounds(labels, nb, "a", "b", 64)
-    val n1 = inc.count()
-    val incT = (System.nanoTime() - t1) / 1e9
+    val ((r1, n1), incT) = timed {
+      val (inc, r1) = Components.incrementalWithRounds(labels, nb, "a", "b", 64)
+      (r1, inc.count())
+    }
     println(f"[ccinc] admit batch=$batch rounds=$r1%d nodes=$n1%d " +
       f"time=$incT%.1f s (vs $r0%d rounds / $full%.1f s from scratch)")
   }
@@ -662,7 +750,7 @@ object BenchTune {
     * tokens/vectors, the knnDemo recipe) so fragment count is the only
     * variable.
     */
-  private def compactionDemo(spark: SparkSession, batches: Int,
+  private def compactionDemo(spark: SparkSession, base: String, batches: Int,
       docsPerBatch: Long, vecsPerBatch: Long): Unit = {
     import graft.operators.{GenStore, InvertedIndex, Similarity, VectorStore}
     def fileCount(dir: String): Long = {
@@ -676,51 +764,36 @@ object BenchTune {
         n
       }
     }
-    def timeIt(body: => Unit): Double = {
-      body // warm
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
+    // one store's legs: files and read fragmented, the compaction,
+    // files and read compacted
+    def legs(what: String, read: String, run: => Any, dir: => String,
+        compact: => Any): Unit = {
+      val filesBefore = fileCount(dir)
+      val fragT = minOf(1)(run)
+      val compT = wall(compact)
+      val filesAfter = fileCount(dir)
+      val oneT = minOf(1)(run)
+      println(f"[compaction] $what " +
+        f"${read}_fragmented=$fragT%.2f s ${read}_compacted=$oneT%.2f s " +
+        f"speedup=${fragT / oneT}%.2fx compact_cost=$compT%.1f s " +
+        f"files=$filesBefore%d->$filesAfter%d")
     }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-compaction-probe").toString
     // ---- retrieval index: `batches` fragments of hash-token docs ----
     val iroot = s"$base/istore"
     InvertedIndex.initStore(iroot)
-    val vocabSize = 2000
-    def docBatch(b: Int): DataFrame =
-      spark.range(b * docsPerBatch, (b + 1) * docsPerBatch)
-        .select(col("id").as("doc_id"),
-          transform(sequence(lit(0), lit(39)), j =>
-            concat(lit("w"), pmod(xxhash64(col("id"), j), lit(vocabSize.toLong))
-              .cast("string"))).as("tk"))
     (0 until batches).foreach(b =>
-      InvertedIndex.admitBatch(spark, docBatch(b), "doc_id", "tk",
-        bucketSize = 4096L, batchId = b.toLong, root = iroot))
+      InvertedIndex.admitBatch(spark,
+        tkDocs(spark.range(b * docsPerBatch, (b + 1) * docsPerBatch)),
+        "doc_id", "tk", bucketSize = 4096L, batchId = b.toLong, root = iroot))
     val terms = Seq("w10", "w20", "w30", "w40")
-    def bm25() = InvertedIndex.bm25SearchCurrent(spark, iroot, terms, 15)
-      .collect()
-    val genBefore = GenStore.genDir(iroot, InvertedIndex.currentGen(iroot))
-    val idxFilesBefore = fileCount(genBefore)
-    val idxFragT = timeIt(bm25())
-    val idxCompT = { val t0 = System.nanoTime()
-      InvertedIndex.compactStore(spark, iroot, InvertedIndex.currentGen(iroot))
-      (System.nanoTime() - t0) / 1e9 }
-    val genAfter = GenStore.genDir(iroot, InvertedIndex.currentGen(iroot))
-    val idxFilesAfter = fileCount(genAfter)
-    val idxOneT = timeIt(bm25())
-    println(f"[compaction] index batches=$batches%d docs=${batches * docsPerBatch}%d " +
-      f"bm25_fragmented=$idxFragT%.2f s bm25_compacted=$idxOneT%.2f s " +
-      f"speedup=${idxFragT / idxOneT}%.2fx compact_cost=$idxCompT%.1f s " +
-      f"files=$idxFilesBefore%d->$idxFilesAfter%d")
+    legs(s"index batches=$batches docs=${batches * docsPerBatch}", "bm25",
+      InvertedIndex.bm25SearchCurrent(spark, iroot, terms, 15).collect(),
+      GenStore.genDir(iroot, InvertedIndex.currentGen(iroot)),
+      InvertedIndex.compactStore(spark, iroot, InvertedIndex.currentGen(iroot)))
     // ---- coded vector store: `batches` fragments of hash vectors ----
     val vroot = s"$base/vstore"
-    val dim = 64
     def vecBatch(b: Int): DataFrame =
-      spark.range(b * vecsPerBatch, (b + 1) * vecsPerBatch)
-        .select(col("id").as("vec_id"),
-          array((0 until dim).map(j =>
-            ((pmod(xxhash64(col("id"), lit(j)), lit(2001L)) - 1000L) / 1000.0)
-              .cast("double")): _*).as("embedding"))
+      uniformVectors(spark.range(b * vecsPerBatch, (b + 1) * vecsPerBatch))
     val (cents, books) = Similarity.fitIvfPq(vecBatch(0), "vec_id", "embedding",
       nlist = 64, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
     VectorStore.init(spark, vroot, cents, books)
@@ -728,21 +801,11 @@ object BenchTune {
       VectorStore.admit(spark, vroot, vecBatch(b), "vec_id", "embedding",
         b.toLong))
     val queries = vecBatch(0).filter(col("vec_id") < 100)
-    def knn() = VectorStore.search(spark, vroot, queries,
-      "vec_id", "embedding", 10, nprobe = 12, shortlistFactor = 32).collect()
-    val vgBefore = s"${VectorStore.codedDir(vroot, VectorStore.currentGen(vroot))}"
-    val vecFilesBefore = fileCount(vgBefore)
-    val vecFragT = timeIt(knn())
-    val vecCompT = { val t0 = System.nanoTime()
-      VectorStore.compactGen(spark, vroot, VectorStore.currentGen(vroot))
-      (System.nanoTime() - t0) / 1e9 }
-    val vecFilesAfter = fileCount(
-      s"${VectorStore.codedDir(vroot, VectorStore.currentGen(vroot))}")
-    val vecOneT = timeIt(knn())
-    println(f"[compaction] vector batches=$batches%d vecs=${batches * vecsPerBatch}%d " +
-      f"search_fragmented=$vecFragT%.2f s search_compacted=$vecOneT%.2f s " +
-      f"speedup=${vecFragT / vecOneT}%.2fx compact_cost=$vecCompT%.1f s " +
-      f"files=$vecFilesBefore%d->$vecFilesAfter%d")
+    legs(s"vector batches=$batches vecs=${batches * vecsPerBatch}", "search",
+      VectorStore.search(spark, vroot, queries,
+        "vec_id", "embedding", 10, nprobe = 12, shortlistFactor = 32).collect(),
+      VectorStore.codedDir(vroot, VectorStore.currentGen(vroot)),
+      VectorStore.compactGen(spark, vroot, VectorStore.currentGen(vroot)))
   }
 
   /** `--policy [docs]`: the needsCompaction COST MODEL, as numbers —
@@ -755,37 +818,25 @@ object BenchTune {
     * spark.read count of doclens + deletes). The gap is what makes
     * evaluating the policy every tick free in practice.
     */
-  private def policyDemo(spark: SparkSession, docs: Long): Unit = {
+  private def policyDemo(spark: SparkSession, base: String, docs: Long): Unit = {
     import graft.operators.InvertedIndex
-    def timeIt(body: => Unit): Double = {
-      body // warm
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-policy-probe").toString
     val iroot = s"$base/istore"
     InvertedIndex.initStore(iroot)
-    val vocab = 2000L
-    val corpus = spark.range(docs).select(col("id").as("doc_id"),
-      transform(sequence(lit(0), lit(39)), j =>
-        concat(lit("w"), pmod(xxhash64(col("id"), j), lit(vocab))
-          .cast("string"))).as("tk"))
-    InvertedIndex.admitBatch(spark, corpus, "doc_id", "tk",
+    InvertedIndex.admitBatch(spark, tkDocs(spark.range(docs)), "doc_id", "tk",
       bucketSize = 4096L, batchId = 0L, root = iroot)
     InvertedIndex.compactStore(spark, iroot, expectedGen = 1L)
     InvertedIndex.admitDeleteBatch(spark,
       spark.range(docs).filter(pmod(col("id"), lit(100)) === 0)
         .select(col("id").as("doc_id")), "doc_id", 0L, iroot)
-    val predT = timeIt {
+    val predT = minOf(1) {
       assert(InvertedIndex.needsCompaction(spark, iroot,
         maxPendingFraction = 0.005))
     }
-    val dashT = timeIt {
+    val dashT = minOf(1) {
       InvertedIndex.maintenanceStatus(spark, iroot).collect()
     }
     val dir = InvertedIndex.genDir(iroot, InvertedIndex.currentGen(iroot))
-    val naiveT = timeIt {
+    val naiveT = minOf(1) {
       val d = Tables.parquet(spark, s"$dir/doclens").count()
       val p = Tables.parquet(spark, s"$dir/deletes").count()
       assert(p.toDouble >= 0.005 * d)
@@ -810,49 +861,38 @@ object BenchTune {
     * one more nbins-bounded fragment in the merge the read already
     * performs.
     */
-  private def takedownDemo(spark: SparkSession, docs: Long,
+  private def takedownDemo(spark: SparkSession, base: String, docs: Long,
       deadPermille: Int): Unit = {
-    import graft.operators.{InvertedIndex, QuantileStore}
-    def timeIt(body: => Unit): Double = {
-      body // warm
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
+    import graft.operators.{InvertedIndex, QuantileStore, Similarity, VectorStore}
+    // one store's legs: clean read, takedown admission, pending read,
+    // purging compaction, post-purge read
+    def legs(what: String, admitted: String, read: => Any, admit: => Any,
+        purge: => Any): Unit = {
+      val cleanT = minOf(1)(read)
+      val admitT = wall(admit)
+      val pendT = minOf(1)(read)
+      val purgeT = wall(purge)
+      val postT = minOf(1)(read)
+      println(f"[takedown] $what " +
+        f"clean_read=$cleanT%.2f s $admitted=$admitT%.2f s " +
+        f"pending_read=$pendT%.2f s (${pendT / cleanT}%.2fx clean) " +
+        f"purge_compact=$purgeT%.1f s post_read=$postT%.2f s")
     }
-    def wall(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-takedown-probe").toString
     // ---- retrieval index: delete-marker takedown ----
     val iroot = s"$base/istore"
     InvertedIndex.initStore(iroot)
-    val vocab = 2000L
-    val corpus = spark.range(docs).select(col("id").as("doc_id"),
-      transform(sequence(lit(0), lit(39)), j =>
-        concat(lit("w"), pmod(xxhash64(col("id"), j), lit(vocab))
-          .cast("string"))).as("tk"))
-    InvertedIndex.admitBatch(spark, corpus, "doc_id", "tk",
+    InvertedIndex.admitBatch(spark, tkDocs(spark.range(docs)), "doc_id", "tk",
       bucketSize = 4096L, batchId = 0L, root = iroot)
     InvertedIndex.compactStore(spark, iroot, expectedGen = 1L)
     val terms = Seq("w10", "w20", "w30", "w40")
-    def bm25() = InvertedIndex.bm25SearchCurrent(spark, iroot, terms, 15)
-      .collect()
-    val cleanT = timeIt(bm25())
     val dead = spark.range(docs)
       .filter(pmod(col("id"), lit(1000)) < deadPermille)
       .select(col("id").as("doc_id"))
     val nDead = dead.count()
-    val delT = wall(InvertedIndex.admitDeleteBatch(spark, dead, "doc_id",
-      0L, iroot))
-    val pendT = timeIt(bm25())
-    val purgeT = wall(InvertedIndex.compactStore(spark, iroot,
-      InvertedIndex.currentGen(iroot)))
-    val postT = timeIt(bm25())
-    println(f"[takedown] index docs=$docs%d dead=$nDead%d " +
-      f"clean_read=$cleanT%.2f s delete_admit=$delT%.2f s " +
-      f"pending_read=$pendT%.2f s (${pendT / cleanT}%.2fx clean) " +
-      f"purge_compact=$purgeT%.1f s post_read=$postT%.2f s")
+    legs(s"index docs=$docs dead=$nDead", "delete_admit",
+      InvertedIndex.bm25SearchCurrent(spark, iroot, terms, 15).collect(),
+      InvertedIndex.admitDeleteBatch(spark, dead, "doc_id", 0L, iroot),
+      InvertedIndex.compactStore(spark, iroot, InvertedIndex.currentGen(iroot)))
     // ---- quantile store: group-inverse retraction ----
     val qroot = s"$base/qstore"
     QuantileStore.initStore(qroot)
@@ -862,80 +902,49 @@ object BenchTune {
     QuantileStore.admitBatch(spark, qrows, Seq("k"), "v",
       lo = 1.0, width = 1.0, nbins = 50, batchId = 0L, root = qroot)
     val qs = Seq(("p50", 1, 2), ("p95", 19, 20))
-    def quants() = QuantileStore.quantilesCurrent(spark, qroot, Seq("k"),
-      qs, lo = 1.0, width = 1.0).collect()
-    val qCleanT = timeIt(quants())
     val slice = qrows.filter(pmod(col("id"), lit(1000)) < deadPermille)
-    val retractT = wall(QuantileStore.retractBatch(spark, slice, Seq("k"),
-      "v", lo = 1.0, width = 1.0, nbins = 50, batchId = 1L, root = qroot))
-    val qPendT = timeIt(quants())
-    val qPurgeT = wall(QuantileStore.compactStore(spark, qroot,
-      graft.operators.GenStore.currentGen(qroot), Seq("k")))
-    val qPostT = timeIt(quants())
-    println(f"[takedown] quantile rows=$docs%d retracted=${nDead}%d " +
-      f"clean_read=$qCleanT%.2f s retract_admit=$retractT%.2f s " +
-      f"pending_read=$qPendT%.2f s (${qPendT / qCleanT}%.2fx clean) " +
-      f"purge_compact=$qPurgeT%.1f s post_read=$qPostT%.2f s")
+    legs(s"quantile rows=$docs retracted=$nDead", "retract_admit",
+      QuantileStore.quantilesCurrent(spark, qroot, Seq("k"),
+        qs, lo = 1.0, width = 1.0).collect(),
+      QuantileStore.retractBatch(spark, slice, Seq("k"),
+        "v", lo = 1.0, width = 1.0, nbins = 50, batchId = 1L, root = qroot),
+      QuantileStore.compactStore(spark, qroot,
+        graft.operators.GenStore.currentGen(qroot), Seq("k")))
     // ---- coded vector store: delete-marker takedown (q161's other half) ----
-    import graft.operators.{Similarity, VectorStore}
     val vroot = s"$base/vstore"
     val nVecs = docs / 5
-    val dim = 64
-    val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
-      array((0 until dim).map(j =>
-        ((pmod(xxhash64(col("id"), lit(j)), lit(2001L)) - 1000L) / 1000.0)
-          .cast("double")): _*).as("embedding"))
+    val vecs = uniformVectors(spark.range(nVecs))
     val (cents, books) = Similarity.fitIvfPq(vecs, "vec_id", "embedding",
       nlist = 64, kmeansIters = 2, m = 8, kcode = 16, pqIters = 2)
     VectorStore.init(spark, vroot, cents, books)
     VectorStore.admit(spark, vroot, vecs, "vec_id", "embedding", 0L)
     VectorStore.compactGen(spark, vroot, expectedGen = 1L)
     val queries = vecs.filter(col("vec_id") < 100)
-    def knn() = VectorStore.search(spark, vroot, queries,
-      "vec_id", "embedding", 10, nprobe = 12, shortlistFactor = 32).collect()
-    val vCleanT = timeIt(knn())
     val deadV = spark.range(nVecs)
       .filter(pmod(col("id"), lit(1000)) < deadPermille)
       .select(col("id").as("vec_id"))
-    val vDelT = wall(VectorStore.admitDeletes(spark, vroot, deadV, "vec_id", 0L))
-    val vPendT = timeIt(knn())
-    val vPurgeT = wall(VectorStore.compactGen(spark, vroot,
-      VectorStore.currentGen(vroot)))
-    val vPostT = timeIt(knn())
-    println(f"[takedown] vector vecs=$nVecs%d dead=${deadV.count()}%d " +
-      f"clean_read=$vCleanT%.2f s delete_admit=$vDelT%.2f s " +
-      f"pending_read=$vPendT%.2f s (${vPendT / vCleanT}%.2fx clean) " +
-      f"purge_compact=$vPurgeT%.1f s post_read=$vPostT%.2f s")
+    legs(s"vector vecs=$nVecs dead=${deadV.count()}", "delete_admit",
+      VectorStore.search(spark, vroot, queries,
+        "vec_id", "embedding", 10, nprobe = 12, shortlistFactor = 32).collect(),
+      VectorStore.admitDeletes(spark, vroot, deadV, "vec_id", 0L),
+      VectorStore.compactGen(spark, vroot, VectorStore.currentGen(vroot)))
   }
 
-  /** `--retention [docs] [batches]`: the age-out economics q187/q188
-    * claim ("expiry is a compaction over the SURVIVORS — the dropped
-    * fragments are never read"), as numbers. Builds three identical
-    * `batches`-fragment stores (index + signature twins) at `docs`
-    * scale and times expireBatches keeping the newest quarter, the
-    * newest three quarters, and a full no-expiry compaction: the
+  /** `--retention [docs] [batches] [sigonly]`: the age-out economics
+    * q187/q188 claim ("expiry is a compaction over the SURVIVORS — the
+    * dropped fragments are never read"), as numbers. Builds three
+    * identical `batches`-fragment stores (index + signature twins) at
+    * `docs` scale and times expireBatches keeping the newest quarter,
+    * the newest three quarters, and a full no-expiry compaction: the
     * keep-a-quarter fold must cost a fraction of the full one, and the
     * ordering quarter < three-quarters < full is the scaling claim —
-    * retention cost tracks surviving bytes, not corpus age.
+    * retention cost tracks surviving bytes, not corpus age. `sigonly`
+    * skips the index stores.
     */
-  private def retentionDemo(spark: SparkSession, docs: Long,
-      batches: Int, sigOnly: Boolean = false): Unit = {
+  private def retentionDemo(spark: SparkSession, base: String, docs: Long,
+      batches: Int, sigOnly: Boolean): Unit = {
     import graft.operators.{InvertedIndex, KeySetStore}
-    def wall(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-retention-probe").toString
-    // byte model: three sig stores + folds ≈ 50 B/key over 4 keys/doc;
-    // the index triplet adds ≈ 600 B/doc
-    requireDiskBudget(base,
-      docs * 4 * 50L + (if (sigOnly) 0L else docs * 600L), "retention")
-    val vocab = 2000L
-    val corpus = spark.range(docs).select(col("id").as("doc_id"),
-      transform(sequence(lit(0), lit(39)), j =>
-        concat(lit("w"), pmod(xxhash64(col("id"), j), lit(vocab))
-          .cast("string"))).as("tk"))
+    val corpus = tkDocs(spark.range(docs))
     def buildIndex(root: String): Unit = {
       InvertedIndex.initStore(root)
       (0 until batches).foreach { b =>
@@ -1006,15 +1015,9 @@ object BenchTune {
     * frequency store's per-fragment scope: rebuild 1 of 4 fragments vs
     * all 4.
     */
-  private def rebuildDemo(spark: SparkSession, rows: Long,
+  private def rebuildDemo(spark: SparkSession, base: String, rows: Long,
       keys: Long): Unit = {
     import graft.operators.{HeavyHitters, SketchStore}
-    def wall(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-rebuild-probe").toString
     import spark.implicits._
     // a REAL parquet corpus, partitioned by key (the 100 TB layout a
     // takedown-rebuild pipeline would keep): the scoped-rebuild claim
@@ -1045,7 +1048,7 @@ object BenchTune {
       0L, warm)
     val legs = Seq(1L -> "1pct", (keys / 10).max(1L) -> "10pct",
       (keys / 2).max(1L) -> "50pct")
-    val timed = legs.map { case (n, tag) =>
+    val timings = legs.map { case (n, tag) =>
       val root = s"$base/s$tag"
       buildSketch(root)
       val names = (0L until n).map(i => s"k$i")
@@ -1059,7 +1062,7 @@ object BenchTune {
     val fresh = s"$base/fresh"
     val fullBuild = wall(buildSketch(fresh))
     println(f"[rebuild] sketch rows=$rows%d keys=$keys%d " +
-      timed.map { case (t, s2) => f"affected_$t=$s2%.1f s" }
+      timings.map { case (t, s2) => f"affected_$t=$s2%.1f s" }
         .mkString(" ") + f" full_from_scratch=$fullBuild%.1f s")
     // frequency store: per-FRAGMENT scope — 1 of 4 batches recomputed
     def buildHh(root: String): Unit = {
@@ -1093,30 +1096,14 @@ object BenchTune {
     * parallel on the driver pool, no Spark job, no re-encode), flat in
     * K beyond dispatch, far under any build leg; federated serving
     * equals the single pipeline's (spec-gated; here both BM25 reads
-    * are warmed once and then timed, symmetrically).
+    * are warmed once and then timed, symmetrically). A third number
+    * sets batches per builder; the word `nosingle` skips the
+    * single-pipeline leg.
     */
-  private def federationDemo(spark: SparkSession, docs: Long,
-      builders: Int, withSingle: Boolean = true,
-      batchesPerBuilder: Int = 1): Unit = {
+  private def federationDemo(spark: SparkSession, base: String, docs: Long,
+      builders: Int, withSingle: Boolean, batchesPerBuilder: Int): Unit = {
     import graft.operators.InvertedIndex
-    def wall(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-federation-probe").toString
-    // byte model from the 40M×8 run (SCALE.md): sources+merged ≈ 650 B/doc
-    // all-in; the single-pipeline leg adds its own store; the
-    // compactFirst leg (batchesPerBuilder > 1) adds folded source
-    // generations plus a second merged store, both near-compacted size
-    requireDiskBudget(base,
-      docs * ((if (withSingle) 900L else 650L) +
-        (if (batchesPerBuilder > 1) 400L else 0L)), "federation")
-    val vocab = 2000L
-    val corpus = spark.range(docs).select(col("id").as("doc_id"),
-      transform(sequence(lit(0), lit(39)), j =>
-        concat(lit("w"), pmod(xxhash64(col("id"), j), lit(vocab))
-          .cast("string"))).as("tk"))
+    val corpus = tkDocs(spark.range(docs))
     val roots = (0 until builders).map(k => s"$base/b$k")
     val (merged, single) = (s"$base/m", s"$base/single")
     (roots :+ single).foreach(InvertedIndex.initStore)
@@ -1171,21 +1158,19 @@ object BenchTune {
         f"merge=$cfT%.1f s fragments=$cfFrags%d read=$cfRead%.2f s " +
         f"(plain merge above copied the unfolded bytes)")
     }
+    val summary = f"[federation] index docs=$docs%d builders=$builders%d " +
+      f"fragments=$fragments%d build_max=${builds.max}%.1f s " +
+      f"build_sum=${builds.sum}%.1f s (legs overlap on a fleet) " +
+      f"merge=$mergeT%.1f s "
     if (withSingle) {
       val singleT = wall(InvertedIndex.admitBatch(spark, corpus, "doc_id",
         "tk", bucketSize = 4096L, batchId = 0L, root = single))
       bm(single) // warm (symmetrically with the merged read)
       val singleRead = wall(bm(single))
-      println(f"[federation] index docs=$docs%d builders=$builders%d " +
-        f"fragments=$fragments%d build_max=${builds.max}%.1f s " +
-        f"build_sum=${builds.sum}%.1f s (legs overlap on a fleet) " +
-        f"merge=$mergeT%.1f s single_pipeline_build=$singleT%.1f s " +
+      println(summary + f"single_pipeline_build=$singleT%.1f s " +
         f"federated_read=$fedRead%.2f s single_read=$singleRead%.2f s")
     } else
-      println(f"[federation] index docs=$docs%d builders=$builders%d " +
-        f"fragments=$fragments%d build_max=${builds.max}%.1f s " +
-        f"build_sum=${builds.sum}%.1f s (legs overlap on a fleet) " +
-        f"merge=$mergeT%.1f s federated_read=$fedRead%.2f s " +
+      println(summary + f"federated_read=$fedRead%.2f s " +
         "(single-pipeline leg skipped)")
   }
 
@@ -1201,17 +1186,9 @@ object BenchTune {
     * batch size: delta_publish should stay ~flat while checkpoint
     * scales with state.
     */
-  private def cdcDemo(spark: SparkSession, stateRows: Long,
+  private def cdcDemo(spark: SparkSession, base: String, stateRows: Long,
       batchRows: Long, publishes: Int): Unit = {
     import graft.streaming.EventStreams
-    def wall(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-cdc-probe").toString
-    requireDiskBudget(base,
-      stateRows * 80L + publishes * batchRows * 40L, "cdc")
     val dir = s"$base/cdc"
     val initT = wall(EventStreams.initCdcState(
       spark.range(stateRows).select(col("id").as("key"),
@@ -1256,17 +1233,9 @@ object BenchTune {
     * Run at several corpus sizes with the same batch size:
     * tick_avg should stay ~flat while bootstrap/compact scale.
     */
-  private def cdcSyncDemo(spark: SparkSession, docs: Long,
+  private def cdcSyncDemo(spark: SparkSession, base: String, docs: Long,
       batchRows: Long, ticks: Int): Unit = {
     import graft.streaming.{CdcSync, EventStreams}
-    def wall(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      (System.nanoTime() - t0) / 1e9
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-cdcsync-probe").toString
-    requireDiskBudget(base,
-      docs * 900L + (ticks + 1) * batchRows * 900L, "cdcsync")
     val (cdc, root) = (s"$base/cdc", s"$base/idx")
     def text(idCol: org.apache.spark.sql.Column, salt: Int) =
       concat_ws(" ", transform(sequence(lit(0), lit(39)), j =>
@@ -1314,12 +1283,11 @@ object BenchTune {
     * hash tokens score below any real threshold, and this probe
     * measures the store machinery, not the (narrow, codegen'd) gate.
     */
-  private def curationDemo(spark: SparkSession, docs: Long, batches: Int): Unit = {
+  private def curationDemo(spark: SparkSession, base: String, docs: Long,
+      batches: Int): Unit = {
     import graft.streaming.EventStreams
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-curation-probe").toString
     val feed = s"$base/feed"
-    new java.io.File(feed).mkdirs()
+    new File(feed).mkdirs()
     val per = docs / batches
     def batchDf(b: Int): DataFrame = {
       // ~10% of every later batch re-crawls a BATCH-0 doc's text
@@ -1345,9 +1313,7 @@ object BenchTune {
     val times = try {
       (0 until batches).map { b =>
         batchDf(b).coalesce(1).write.mode("append").parquet(feed)
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
+        wall(q.processAllAvailable())
       }
     } finally q.stop()
     val retainedN = Tables.parquet(spark, retained).count()
@@ -1359,261 +1325,61 @@ object BenchTune {
       f"retained=$retainedN%d rejected=${docs - retainedN}%d gen=$gen%d")
   }
 
+  /** `--floor`: fixed-cost decomposition for the bench's filtered-scan
+    * shape — the measurement behind README's "filtered scan floor"
+    * paragraph. Four probes, interleaved round-robin so machine drift
+    * cancels, min per probe (GC/scheduler jitter only adds time):
+    *
+    *  - job_launch_1task: a 1-task no-op job — Spark's per-query floor;
+    *  - scan_skip_all: the filtered scan with a predicate the row-group
+    *    stats refute (l_quantity > 100 over 1..50) — footer read +
+    *    vectorized-reader setup + stats skip, ZERO data pages decoded;
+    *  - unfiltered_rows: 4-column decode + InternalRow iteration;
+    *  - filtered_rows: the actual bench shape (50% selective).
+    *
+    * The deltas between successive lines isolate (a) scan fixed cost,
+    * (b) decode+iterate cost, (c) the marginal cost of predicating.
+    */
+  private def floorProbe(spark: SparkSession, sfDir: String): Unit = {
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "16384")
+    val li4 = Tables.load(spark, sfDir, "lineitem")
+      .select("l_orderkey", "l_quantity", "l_linenumber", "l_returnflag")
+    val one = spark.sparkContext.parallelize(Seq(1), 1)
+    val probes: Seq[(String, () => Unit)] = Seq(
+      "job_launch_1task" -> (() => { one.map(_ + 1).collect(); () }),
+      "scan_skip_all" -> (() => { Bench.consumeRows(li4.filter(col("l_quantity") > 100)); () }),
+      "unfiltered_rows" -> (() => { Bench.consumeRows(li4); () }),
+      "filtered_rows" -> (() => { Bench.consumeRows(li4.filter(col("l_quantity") > 25)); () }))
+    val best = scala.collection.mutable.Map[String, Double]().withDefaultValue(Double.MaxValue)
+    (1 to 3).foreach(_ => probes.foreach(_._2()))
+    (1 to 9).foreach { _ =>
+      probes.foreach { case (n, f) => best(n) = math.min(best(n), wall(f())) }
+    }
+    probes.foreach { case (n, _) => println(f"$n%-18s ${best(n) * 1000}%8.1f ms") }
+  }
+
+  /** Runs the probe `args` names (see [[resolve]]) in one session, with a
+    * scratch directory deleted when the probe ends, on success or
+    * failure. Input caches under `/tmp/graft-{ops,scale,events,pq}-<rows>`
+    * are kept for later runs.
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench-tune")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // probe-width override for memory-shape experiments (e.g. the knn
-    // hot-cell OOM diagnosis in SCALE.md): per-task memory scales with
-    // partition volume, so widening the shuffle is the first dial a real
-    // cluster turns before adding heap
-    sys.env.get("SPARK_GRAFT_SHUFFLE").foreach { v =>
-      spark.conf.set("spark.sql.shuffle.partitions", v)
-    }
-
-    if (args.contains("--ops")) {
-      val tail = args.dropWhile(_ != "--ops").drop(1)
-      val rows = tail.headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(1000000L)
-      opsDemo(spark, rows, tail.filterNot(s => s.nonEmpty && s.forall(_.isDigit)).toSet)
-      spark.stop()
-      return
-    }
-    if (args.contains("--knn")) {
-      val nums = args.dropWhile(_ != "--knn").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      knnDemo(spark, nums.headOption.getOrElse(100000L),
-        nums.drop(1).headOption.getOrElse(0L).toInt,
-        nums.drop(2).headOption.getOrElse(32L).toInt,
-        nums.drop(3).headOption.getOrElse(1L).toInt,
-        nums.drop(4).headOption.getOrElse(8L).toInt,
-        nums.drop(5).headOption.getOrElse(16L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--saltprobe")) {
-      // `--saltprobe [n] [clusters]`: the cell histogram behind the
-      // AUTO hot-cell salt (Similarity.autoCellSalt, the kNN joins'
-      // default) — max/median replica-rows per cell on the knnDemo
-      // corpus recipe, and the S the auto rule derives at several
-      // per-task targets. The equality gate (auto == unsalted, row for
-      // row) is spec-side; this probe documents the DECISION surface.
-      val nums = args.dropWhile(_ != "--saltprobe").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      saltProbe(spark, nums.headOption.getOrElse(100000L),
-        nums.drop(1).headOption.getOrElse(100L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--rangejoin")) {
-      val nums = args.dropWhile(_ != "--rangejoin").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      rangeJoinDemo(spark, nums.headOption.getOrElse(10000000L),
-        nums.drop(1).headOption.getOrElse(100000L))
-      spark.stop()
-      return
-    }
-    if (args.contains("--knnsq")) {
-      // the SQ8 tier at the same gate geometry: `--knnsq n [clusters]
-      // [shortlist] [cellSalt]` — no PQ geometry args (SQ has none)
-      val nums = args.dropWhile(_ != "--knnsq").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      knnDemo(spark, nums.headOption.getOrElse(100000L),
-        nums.drop(1).headOption.getOrElse(0L).toInt,
-        nums.drop(2).headOption.getOrElse(4L).toInt,
-        nums.drop(3).headOption.getOrElse(1L).toInt,
-        tier = "sq")
-      spark.stop()
-      return
-    }
-    if (args.contains("--compaction")) {
-      val nums = args.dropWhile(_ != "--compaction").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      compactionDemo(spark, nums.headOption.getOrElse(32L).toInt,
-        nums.drop(1).headOption.getOrElse(20000L),
-        nums.drop(2).headOption.getOrElse(10000L))
-      spark.stop()
-      return
-    }
-    if (args.contains("--curation")) {
-      val nums = args.dropWhile(_ != "--curation").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      curationDemo(spark, nums.headOption.getOrElse(1000000L),
-        nums.drop(1).headOption.getOrElse(16L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--policy")) {
-      val nums = args.dropWhile(_ != "--policy").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      policyDemo(spark, nums.headOption.getOrElse(1000000L))
-      spark.stop()
-      return
-    }
-    if (args.contains("--rebuild")) {
-      val nums = args.dropWhile(_ != "--rebuild").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      rebuildDemo(spark, nums.headOption.getOrElse(1000000L),
-        nums.drop(1).headOption.getOrElse(100L))
-      spark.stop()
-      return
-    }
-    if (args.contains("--federation")) {
-      val tail = args.dropWhile(_ != "--federation").drop(1)
-      val nums = tail
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      federationDemo(spark, nums.headOption.getOrElse(1000000L),
-        nums.drop(1).headOption.getOrElse(2L).toInt,
-        withSingle = !tail.contains("nosingle"),
-        batchesPerBuilder = nums.drop(2).headOption.getOrElse(1L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--cdcsync")) {
-      val nums = args.dropWhile(_ != "--cdcsync").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      cdcSyncDemo(spark, nums.headOption.getOrElse(1000000L),
-        nums.drop(1).headOption.getOrElse(20000L),
-        nums.drop(2).headOption.getOrElse(4L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--cdc")) {
-      val nums = args.dropWhile(_ != "--cdc").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      cdcDemo(spark, nums.headOption.getOrElse(10000000L),
-        nums.drop(1).headOption.getOrElse(10000L),
-        nums.drop(2).headOption.getOrElse(4L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--retention")) {
-      val tail = args.dropWhile(_ != "--retention").drop(1)
-      val nums = tail
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      retentionDemo(spark, nums.headOption.getOrElse(1000000L),
-        nums.drop(1).headOption.getOrElse(8L).toInt,
-        sigOnly = tail.contains("sigonly"))
-      spark.stop()
-      return
-    }
-    if (args.contains("--takedown")) {
-      val nums = args.dropWhile(_ != "--takedown").drop(1)
-        .takeWhile(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      takedownDemo(spark, nums.headOption.getOrElse(1000000L),
-        nums.drop(1).headOption.getOrElse(10L).toInt)
-      spark.stop()
-      return
-    }
-    if (args.contains("--bpe")) {
-      val m = args.dropWhile(_ != "--bpe").drop(1).headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(1000L)
-      bpeDemo(spark, m)
-      spark.stop()
-      return
-    }
-    if (args.contains("--components")) {
-      val tail = args.dropWhile(_ != "--components").drop(1)
-      val edges = tail.headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(10000000L)
-      componentsDemo(spark, edges,
-        tail.filterNot(s => s.nonEmpty && s.forall(_.isDigit)).toSet)
-      spark.stop()
-      return
-    }
-    if (args.contains("--ccinc")) {
-      val rest = args.dropWhile(_ != "--ccinc").drop(1)
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-      ccIncDemo(spark, rest.headOption.getOrElse(10000000L),
-        rest.drop(1).headOption.getOrElse(100000L))
-      spark.stop()
-      return
-    }
-    if (args.contains("--ivf")) {
-      ivfSweep(spark, sfDir)
-      spark.stop()
-      return
-    }
-    if (args.contains("--pq")) {
-      val rows = args.dropWhile(_ != "--pq").drop(1).headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(1000000L)
-      pqDemo(spark, rows)
-      spark.stop()
-      return
-    }
-    if (args.contains("--events")) {
-      val rows = args.dropWhile(_ != "--events").drop(1).headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(10000000L)
-      eventsDemo(spark, rows)
-      spark.stop()
-      return
-    }
-    if (args.contains("--skew")) {
-      val rows = args.dropWhile(_ != "--skew").drop(1).headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(10000000L)
-      skewDemo(spark, rows)
-      spark.stop()
-      return
-    }
-    if (args.contains("--scale")) {
-      val rows = args.dropWhile(_ != "--scale").drop(1).headOption
-        .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).getOrElse(10000000L)
-      scaleDemo(spark, rows)
-      spark.stop()
-      return
-    }
-
-    def li: DataFrame = Tables.load(spark, sfDir, "lineitem")
-    def shapes: Seq[(String, () => Unit)] = Seq(
-      "full_scan" -> (() => li.write.mode("overwrite").format("noop").save()),
-      "filtered_scan" -> (() => li.filter(col("l_quantity") > 25)
-        .write.mode("overwrite").format("noop").save()),
-      "aggregation" -> (() => { li.agg(sum(col("l_extendedprice"))).collect(); () }),
-      "group_by" -> (() => { li.groupBy(col("l_returnflag"))
-        .agg(count(lit(1)), sum(col("l_quantity")), min(col("l_quantity")), max(col("l_quantity")))
-        .orderBy(col("l_returnflag")).collect(); () }))
-
-    // floor probes: irreducible per-job cost and consumer-cost variants
-    def minT(f: => Unit): Double = { f; (1 to 5).map(_ => time(f)).min }
-    println(f"[tune] floor_tiny_job_1slice=${minT(spark.sparkContext.parallelize(Seq(1), 1).count())}%.3f")
-    println(f"[tune] floor_tiny_job_32slice=${minT(spark.range(1).count())}%.3f")
-    val liOnce = li // hoisted: file listing + footer read happen once
-    println(f"[tune] scan_reused_df_noop=${minT(liOnce.write.mode("overwrite").format("noop").save())}%.3f")
-    val li4 = li.select("l_orderkey", "l_extendedprice", "l_linenumber", "l_returnflag")
-    println(f"[tune] scan_4col_reused_noop=${minT(li4.write.mode("overwrite").format("noop").save())}%.3f")
-    val agg1 = li.agg(sum(col("l_extendedprice")))
-    println(f"[tune] agg_reused=${minT({ agg1.collect(); () })}%.3f")
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    val gb1 = li.groupBy(col("l_returnflag"))
-      .agg(count(lit(1)), sum(col("l_quantity")), min(col("l_quantity")), max(col("l_quantity")))
-      .orderBy(col("l_returnflag"))
-    println(f"[tune] groupby_reused_shuffle1=${minT({ gb1.collect(); () })}%.3f")
-    spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-
-    val variants: Seq[(String, Map[String, String])] = Seq(
-      "base" -> Map(),
-      "no_aqe_shuffle1" -> Map(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "1"),
-      "shuffle4" -> Map("spark.sql.shuffle.partitions" -> "4"),
-      "shuffle8" -> Map("spark.sql.shuffle.partitions" -> "8"))
-
-    for ((vname, confs) <- variants) {
-      val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      shapes.foreach { case (_, f) => f() } // warm
-      val res = shapes.map { case (n, f) =>
-        val ts = (1 to 5).map(_ => time(f()))
-        f"$n=${ts.min}%.3f"
-      }
-      println(s"[tune] $vname: ${res.mkString(" ")}")
-      saved.foreach { case (k, vOpt) =>
-        vOpt.fold(spark.conf.unset(k))(v => spark.conf.set(k, v)) }
-    }
-    spark.stop()
+    val (probe, parsed) = resolve(args.toSeq)
+    val name = probe.flag.drop(2)
+    val scratch = Files.createTempDirectory(s"graft-$name-probe").toString
+    try {
+      val est = probe.disk(parsed)
+      if (est > 0) requireDiskBudget(scratch, est, name)
+      val spark = GraftSession.configure(
+        SparkSession.builder().master(s"local[$cpus]").appName("graft-bench-tune")
+      ).getOrCreate()
+      try {
+        spark.sparkContext.setLogLevel("WARN")
+        probe.run(Ctx(spark, sfDir, scratch), parsed)
+      } finally spark.stop()
+    } finally FileUtils.deleteQuietly(new File(scratch))
   }
 }

@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
   * the `.explain` review the build rules require, kept as a committed
   * artifact so plan regressions show up in diffs.
   *
-  * Usage: `sbt "runMain graft.ExplainDump"` (writes /root/repo/PLANS.md).
+  * Usage: `sbt "runMain graft.ExplainDump"` from the repository root
+  * (writes PLANS.md in the working directory).
   */
 object ExplainDump {
 
@@ -430,7 +431,7 @@ object ExplainDump {
     }
     val aux = auxPlans(spark, sf)
     aux.foreach { case (name, note, df) => dump(name, note, df) }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${picks.size + aux.size} plans)")
     spark.stop()
   }

@@ -28,6 +28,15 @@ import org.apache.spark.sql.GraftBridge
   * the Spark thread state (local properties, active session) of the
   * caller that submitted it, never that of the caller whose section
   * created the thread.
+  *
+  * CONCURRENCY BOUND (structural; the pool itself is unbounded): a query
+  * runs at most as many sections at once as it writes, counting each
+  * nested level (`Par.both(a, Par.both(b, c))` is three), and Verify
+  * runs at most 4 queries at once (its pool, `SPARK_GRAFT_VERIFY_PAR`).
+  * So the threads submitting Spark jobs number at most (sections per
+  * query) × 4 — with today's 2–6 sections per query, 24. A query that
+  * would need many more sections must run them in bounded groups
+  * rather than hand them all to one call.
   */
 object Par {
 

@@ -101,7 +101,7 @@ object Bench {
       "group_by" -> (() => { groupBy.collect(); () }))
 
     // Warm-up and timing are INTERLEAVED round-robin across the four
-    // shapes (the BenchFloor protocol). Rationale, measured this round:
+    // shapes (`BenchTune --floor`'s protocol). Rationale, measured this round:
     // C2 compiles the codegen'd stages in the BACKGROUND, so a shape
     // timed in a tight back-to-back loop right after JVM start can run
     // interpreted/C1 for all of its runs (observed: the same filtered

@@ -640,6 +640,16 @@ object BenchTune {
     * rides along: a deterministic small slice re-joins through Spark's
     * own nested-loop plan and must agree pair-for-pair.
     */
+  /** `--rangejoin`'s slice strides (points, intervals): the smallest that
+    * keep at most 50,000 points and 1,000 intervals, so the nested-loop
+    * check stays affordable at any size and takes every row of a small run
+    * (10M x 100k gives 200 and 100).
+    */
+  private[graft] def rangeSliceStrides(nPoints: Long, nIntervals: Long): (Long, Long) = {
+    def stride(n: Long, cap: Long) = math.max(1L, (n + cap - 1) / cap)
+    (stride(nPoints, 50000L), stride(nIntervals, 1000L))
+  }
+
   private def rangeJoinDemo(spark: SparkSession, nPoints: Long, nIntervals: Long): Unit = {
     import graft.operators.RangeJoin
     val spanMs = 365L * 86400000L
@@ -652,11 +662,14 @@ object BenchTune {
     val (rows, joinT) = timed(RangeJoin.pointInInterval(pts, ivs, "p", "s", "e",
       bucketWidth = 3600000L).count())
     // pair-exactness on a slice small enough for the nested-loop plan
-    val ptsS = pts.filter(col("pid") % 200 === 0).limit(50000)
-    val ivsS = ivs.filter(col("iid") % 100 === 0).limit(1000)
+    val (pStride, iStride) = rangeSliceStrides(nPoints, nIntervals)
+    val ptsS = pts.filter(col("pid") % pStride === 0)
+    val ivsS = ivs.filter(col("iid") % iStride === 0)
     val naive = ptsS.join(ivsS,
         col("p") >= col("s") && col("p") <= col("e"))
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    require(naive.nonEmpty, s"the nested-loop slice (every ${pStride}th point, " +
+      s"every ${iStride}th interval) matched no pair, so it checks nothing")
     val bucketed = RangeJoin.pointInInterval(ptsS, ivsS, "p", "s", "e", 3600000L)
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     require(bucketed == naive,

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{HashExprs, TextFunctions, VectorFunctions}
 import graft.operators.ColeQuery._
-import graft.operators.{AsOfJoin, AviContainer, BloomJoin, Bpe, Checks, ColeQuery, Components, Dedup, FuzzyJoin, HeavyHitters, InvertedIndex, KeySetStore, Layout, Manifest, Merge, Multimodal, Packing, PageRank, Par, ParquetWrite, Profile, QuantileStore, RangeJoin, Sessionize, Similarity, SketchStore, Splits, Triangles, VectorStore}
+import graft.operators.{AsOfJoin, AviContainer, BloomJoin, Bpe, Checks, ColeQuery, Components, Dedup, FuzzyJoin, GenStore, HeavyHitters, InvertedIndex, KeySetStore, Layout, Manifest, Merge, Multimodal, Packing, PageRank, Par, ParquetWrite, Profile, QuantileStore, RangeJoin, Sessionize, Similarity, SketchStore, Splits, Triangles, VectorStore}
+import graft.streaming.{CdcSync, EventStreams}
 
 /** The engine's query catalog: every operator from SURVEY.md §2 (reference
   * parity O1-O13) plus the capability-parity-plus surface (joins, windows,
@@ -41,7 +42,23 @@ import graft.operators.{AsOfJoin, AviContainer, BloomJoin, Bpe, Checks, ColeQuer
   *  - Spark: [[refuses]] "refused with a message containing X";
   *  - Spark: [[casRetryNoop]] the compaction-retry no-op check;
   *  - Spark: `withGates` literal gate columns, [[gateFrame]] the frame
-  *    [[gateOracle]] states.
+  *    [[gateOracle]] states;
+  *  - Spark: [[indexStore]]/[[vectorStore]]/[[signatureStore]] the store
+  *    bootstraps (init, then one batch per part);
+  *  - Spark: [[signatureKeys]] the portable MinHash band keys, derived once;
+  *  - Spark: [[compactionCycle]] the fragment-count/compact/re-read/admit
+  *    cycle and its gates, [[takedownCycle]] the delete/replay/compact
+  *    cycle, [[noPendingDeletes]] the purge check;
+  *  - Spark: [[bm25Rows]]/[[pinnedBm25]] collected and manifest-pinned BM25;
+  *  - Spark: [[exhaustiveFrame]]/[[exhaustiveSearch]] the all-lists search
+  *    that store equalities use;
+  *  - Spark: [[fleetCompact]]/[[fleetTakedown]] the three-store fleet's
+  *    compaction and takedown;
+  *  - Spark: [[cdcMutations]] (from [[cdcUpserts]]/[[cdcInserts]]/
+  *    [[cdcDeletes]]) the sync change script, [[publishDocs]],
+  *    [[syncIndex]]/[[syncVectors]] the sync ticks, [[freshIndex]] the
+  *    one-shot comparator, [[postingsFrame]]/[[indexSurfaces]] the synced
+  *    index's served surfaces.
   */
 object Queries {
 
@@ -2053,6 +2070,221 @@ object Queries {
     ids.distinct.sorted.map(q => (q, ids.count(_ == q).toLong))
       .toDF("query_id", "n_results").withGates(gates: _*).orderBy(col("query_id"))
   }
+
+  /** The index store at `root`: initialised, then one [[admitDocs]] per
+    * part with batch ids 0, 1, ….
+    */
+  private def indexStore(s: SparkSession, root: String, parts: DataFrame*): Unit = {
+    InvertedIndex.initStore(root)
+    parts.zipWithIndex.foreach { case (p, b) => admitDocs(s, p, b.toLong, root) }
+  }
+
+  /** The vector store at `root` under the fitted `index`: initialised,
+    * then one (vec_id, embedding) admit per part with batch ids 0, 1, ….
+    */
+  private def vectorStore(s: SparkSession, root: String,
+      index: (Array[Array[Double]], Array[Array[Array[Double]]]),
+      parts: DataFrame*): Unit = {
+    VectorStore.init(s, root, index._1, index._2)
+    parts.zipWithIndex.foreach { case (p, b) =>
+      VectorStore.admit(s, root, p, "vec_id", "embedding", b.toLong)
+    }
+  }
+
+  /** The catalog's portable MinHash band keys (id, band, bucket) of
+    * (doc_id, text) `docs`, derived once per query: admits, deletes and
+    * probes slice this checkpointed key set by id, which is bit-identical
+    * to deriving from the sliced docs because the derivation is row-local.
+    */
+  private def signatureKeys(docs: DataFrame): DataFrame =
+    Dedup.minHashBandKeys(docs, "doc_id", "text",
+      n = 3, numHashes = 32, bands = 8, portableKeys = true).localCheckpoint()
+
+  /** The signature store at `root`: initialised, then one key-set part per
+    * batch with batch ids 0, 1, ….
+    */
+  private def signatureStore(root: String, parts: DataFrame*): Unit = {
+    KeySetStore.init(root)
+    parts.zipWithIndex.foreach { case (p, b) =>
+      Dedup.admitMinHashKeysBatch(p, batchId = b.toLong, root = root)
+    }
+  }
+
+  /** What a [[compactionCycle]] saw: the read captured before compaction,
+    * the fragment counts before, after compaction and after the admit on
+    * top, the CAS retry no-op, and whether the read survived compaction.
+    */
+  private final case class Compaction[A](pre: A, before: Long, compacted: Long,
+      afterAdmit: Long, retryNoop: Boolean, readEq: Boolean) {
+    /** The fragment and retry gates, as the catalog names them. */
+    def gates: Seq[(String, Any)] = Seq("frags_before" -> before,
+      "frags_compacted" -> compacted, "frags_after_admit" -> afterAdmit,
+      "retry_noop" -> retryNoop)
+  }
+
+  /** The admission-store family's compaction cycle on a gen-1 store at
+    * `root`: count the fragments, capture `read`, compact to gen 2 through
+    * [[casRetryNoop]], count again and re-read; then `onTop` (checks of
+    * the compacted store, ending with one batch admitted on top) and count
+    * once more. Returns what the cycle saw and what `onTop` returned.
+    */
+  private def compactionCycle[A, B](root: String, frags: => Long, read: => A)(
+      compact: => Long)(onTop: => B): (Compaction[A], B) = {
+    val before = frags
+    val pre = read
+    val retryNoop = casRetryNoop(root)(compact)
+    val compacted = frags
+    val readEq = read == pre
+    val checks = onTop
+    (Compaction(pre, before, compacted, frags, retryNoop, readEq), checks)
+  }
+
+  /** The takedown cycle on a gen-1 store: `delete`, read the pending
+    * answer, replay the delete (and `alsoReplay`), which must leave the
+    * read unmoved, then `compact` and read again. Returns the pending read,
+    * replay_noop and post_eq_pending.
+    */
+  private def takedownCycle[A](read: => A)(delete: => Unit,
+      alsoReplay: => Unit = ())(compact: => Any): (A, Boolean, Boolean) = {
+    delete
+    val pending = read
+    delete
+    alsoReplay
+    val replayNoop = read == pending
+    compact
+    (pending, replayNoop, read == pending)
+  }
+
+  /** The purge check: generation directory `genDir` holds no pending
+    * deletes.
+    */
+  private def noPendingDeletes(genDir: String): Boolean =
+    !java.nio.file.Files.exists(java.nio.file.Paths.get(genDir, "deletes"))
+
+  /** BM25 rows collected as (doc_id, bm25). */
+  private def bm25Rows(bm25: DataFrame): Seq[(Long, Double)] =
+    bm25.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+
+  /** BM25 top-15 of the index generation manifest version `ver` pins. */
+  private def pinnedBm25(s: SparkSession, root: String, mroot: String,
+      ver: Long): DataFrame =
+    InvertedIndex.bm25SearchStore(s,
+      InvertedIndex.genDir(root, Manifest.resolve(mroot, ver, "index")), bm25Terms, 15)
+
+  /** Exhaustive store search of generation `gen` (default: the current
+    * one): all 16 lists probed and a shortlist covering the corpus, so the
+    * exact-cosine re-rank returns the brute-force top-`k` and store
+    * equalities are strict.
+    */
+  private def exhaustiveFrame(s: SparkSession, root: String, q: DataFrame,
+      gen: Option[Long] = None, k: Int = 5, tier: String = "pq"): DataFrame =
+    VectorStore.searchGen(s, root, gen.getOrElse(VectorStore.currentGen(root)),
+      q, "vec_id", "embedding", k, nprobe = 16, shortlistFactor = 1000, tier = tier)
+
+  /** [[exhaustiveFrame]] collected and sorted: (query_id, rank, neighbor_id). */
+  private def exhaustiveSearch(s: SparkSession, root: String, q: DataFrame,
+      gen: Option[Long] = None): Seq[(Long, Long, Long)] =
+    exhaustiveFrame(s, root, q, gen)
+      .select(col("query_id"), col("rank").cast("long"), col("neighbor_id"))
+      .collect().toSeq.map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).sorted
+
+  /** The three-store fleet (index, vectors, signatures) compacted from
+    * generation `gen`; disjoint roots, so the three folds overlap.
+    */
+  private def fleetCompact(s: SparkSession, iroot: String, vroot: String,
+      kroot: String, gen: Long): Unit =
+    Par.all(Seq(
+      () => InvertedIndex.compactStore(s, iroot, expectedGen = gen): Unit,
+      () => VectorStore.compactGen(s, vroot, expectedGen = gen): Unit,
+      () => KeySetStore.compactStore(s, kroot, expectedGen = gen): Unit))
+
+  /** The fleet takedown: doc_id % 7 == 3 deleted from all three stores,
+    * as doc ids, vector ids and the dead docs' `sigKeys`; overlapped.
+    */
+  private def fleetTakedown(s: SparkSession, docs: DataFrame, emb: DataFrame,
+      sigKeys: DataFrame, iroot: String, vroot: String, kroot: String): Unit =
+    Par.all(Seq(
+      () => InvertedIndex.admitDeleteBatch(s,
+        docs.filter(col("doc_id") % 7 === 3).select("doc_id"), "doc_id", 0L, iroot): Unit,
+      () => VectorStore.admitDeletes(s, vroot,
+        emb.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id", 0L): Unit,
+      () => Dedup.deleteMinHashKeysBatch(sigKeys.filter(col("id") % 7 === 3),
+        batchId = 0L, root = kroot): Unit))
+
+  /** The CDC sync scenarios' query terms. */
+  private val syncTerms = Seq("graftsync", "join", "vector")
+
+  /** A CDC upsert batch at `seq`: the docs with doc_id % `every` == 0,
+    * re-crawled with `suffix` appended.
+    */
+  private def cdcUpserts(docs: DataFrame, every: Int, suffix: String,
+      seq: Long): DataFrame =
+    docs.filter(col("doc_id") % every === 0)
+      .select(col("doc_id"), concat(col("text"), lit(suffix)).as("text"),
+        lit(seq).as("seq"), lit("U").as("op"))
+
+  /** A CDC insert batch at seq 1: the docs with doc_id % 10 == `klass`,
+    * re-crawled under ids shifted by 1,000,000 with "graftsync " prepended.
+    */
+  private def cdcInserts(docs: DataFrame, klass: Int): DataFrame =
+    docs.filter(col("doc_id") % 10 === klass)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(lit("graftsync "), col("text")).as("text"),
+        lit(1L).as("seq"), lit("I").as("op"))
+
+  /** A CDC delete batch at `seq`: the docs with doc_id % 10 == `klass`. */
+  private def cdcDeletes(docs: DataFrame, klass: Int, seq: Long = 1L): DataFrame =
+    docs.filter(col("doc_id") % 10 === klass)
+      .select(col("doc_id"), col("text"), lit(seq).as("seq"), lit("D").as("op"))
+
+  /** The sync scenarios' change script over (doc_id, text), the corpus
+    * [[cdcSyncLookupOracle]] states: v1 re-crawls doc_id % 10 == 0 with
+    * two extra tokens; v2 inserts shifted re-crawls of % 10 == 2 and
+    * deletes % 10 == 7; v3 re-crawls % 20 == 0 again with one.
+    */
+  private def cdcMutations(docs: DataFrame): Seq[DataFrame] = Seq(
+    cdcUpserts(docs, 10, " graftsync graftsync", 1L),
+    cdcInserts(docs, 2).unionByName(cdcDeletes(docs, 7)),
+    cdcUpserts(docs, 20, " graftsync", 2L))
+
+  /** Publish one change batch keyed on doc_id to the CDC store at `cdc`. */
+  private def publishDocs(s: SparkSession, cdc: String, changes: DataFrame): Long =
+    EventStreams.publishCdcBatch(s, cdc, changes, Seq("doc_id"), "seq", "op")
+
+  /** One CdcSync tick of the index store at `root` from the CDC store at
+    * `cdc`, whose (doc_id, text) payload is tokenised as [[tokenized]].
+    */
+  private def syncIndex(s: SparkSession, cdc: String, root: String): Long =
+    CdcSync.syncIndexFromCdc(s, cdc, root, "doc_id", "tk", IndexBucket, tokenized)
+
+  /** One CdcSync tick of the vector store at `root` over (`id`, embedding);
+    * the bootstrap tick fits the sync artifact: 16 lists, 16 sub-quantizers
+    * of 16 codes, 5 k-means and 5 PQ iterations.
+    */
+  private def syncVectors(s: SparkSession, cdc: String, root: String,
+      id: String): Long =
+    CdcSync.syncVectorsFromCdc(s, cdc, root, id, "embedding",
+      _.select(col(id), col("embedding")),
+      nlist = 16, kmeansIters = 5, m = 16, kcode = 16, pqIters = 5)
+
+  /** A one-shot index store at `root` over the CDC store's current snapshot. */
+  private def freshIndex(s: SparkSession, cdc: String, root: String): Unit =
+    indexStore(s, root, tokenized(EventStreams.currentCdcSnapshot(s, cdc)))
+
+  /** A lookup frame as the sync scenarios emit it: (tok, n_docs, postings
+    * joined by commas), by tok.
+    */
+  private def postingsFrame(lookup: DataFrame): DataFrame =
+    lookup.select(col("tok"), col("n_docs"),
+        array_join(transform(col("postings"), _.cast("string")), ",").as("postings"))
+      .orderBy(col("tok"))
+
+  /** The index store's served surfaces for [[syncTerms]], collected: the
+    * postings frame and the BM25 top-10.
+    */
+  private def indexSurfaces(s: SparkSession, root: String) = (
+    postingsFrame(InvertedIndex.lookupCurrent(s, root, syncTerms)).collect().toSeq,
+    InvertedIndex.bm25SearchCurrent(s, root, syncTerms, 10).collect().toSeq)
 
   private val retrievalOps = Seq(
     QDef("q80_vocab_index",
@@ -4597,7 +4829,6 @@ object Queries {
       // never a log replay.
       (s, d) => {
         import s.implicits._
-        import graft.streaming.EventStreams
         val dir = scratchDir("q140") + "/cdc"
         val cust = t(s, d, "customer")
           .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
@@ -4682,7 +4913,6 @@ object Queries {
       // round-trip property (applyChanges(v0, diff) == v2 row-for-row)
       // is spec-gated (StreamingSpec).
       (s, d) => {
-        import graft.streaming.EventStreams
         val dir = scratchDir("q141") + "/cdc"
         val cust = t(s, d, "customer")
           .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
@@ -4776,33 +5006,21 @@ object Queries {
       // batches, the raw corpus never touched — and it bounds every
       // future read at (1 compacted fragment + batches since).
       (s, d) => {
-        import s.implicits._
         val root = scratchDir("q143") + "/istore"
         val docs = docTokens(s, d)
-        InvertedIndex.initStore(root)
-        admitDocs(s, docs.filter(col("doc_id") % 10 < 6), 0L, root)
-        admitDocs(s, docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8), 1L, root)
-        admitDocs(s, docs.filter(col("doc_id") % 10 === 8), 2L, root)
-        def lookupRows() = InvertedIndex.lookupCurrent(s, root, bm25Terms)
-          .select(col("tok"), col("n_docs"),
-            array_join(transform(col("postings"), _.cast("string")), ",").as("p"))
-          .orderBy(col("tok"))
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-        def bm25Rows() = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
-          .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
-        val fragsBefore = InvertedIndex.fragmentCount(s, root)
-        val (preL, preB) = (lookupRows(), bm25Rows())
-        val retryNoop = casRetryNoop(root)(
-          InvertedIndex.compactStore(s, root, expectedGen = 1L))
-        val fragsCompacted = InvertedIndex.fragmentCount(s, root)
-        val preEqPost = lookupRows() == preL && bm25Rows() == preB
-        // admissions keep appending ON TOP of the compacted fragment
-        admitDocs(s, docs.filter(col("doc_id") % 10 === 9), 3L, root)
-        val fragsAfterAdmit = InvertedIndex.fragmentCount(s, root)
+        indexStore(s, root, docs.filter(col("doc_id") % 10 < 6),
+          docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8),
+          docs.filter(col("doc_id") % 10 === 8))
+        def surfaces() = (
+          postingsFrame(InvertedIndex.lookupCurrent(s, root, bm25Terms)).collect().toSeq,
+          bm25Rows(InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)))
+        val (c, _) = compactionCycle(root, InvertedIndex.fragmentCount(s, root),
+            surfaces())(InvertedIndex.compactStore(s, root, expectedGen = 1L)) {
+          // admissions keep appending ON TOP of the compacted fragment
+          admitDocs(s, docs.filter(col("doc_id") % 10 === 9), 3L, root)
+        }
         InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
-          .withGates("frags_before" -> fragsBefore, "frags_compacted" -> fragsCompacted,
-            "frags_after_admit" -> fragsAfterAdmit, "retry_noop" -> retryNoop,
-            "pre_eq_post" -> preEqPost)
+          .withGates(c.gates :+ ("pre_eq_post" -> c.readEq): _*)
           .orderBy(col("bm25").desc, col("doc_id"))
       },
       Some(s"""${tokCte()}${bm25Ctes("tok")}
@@ -4832,10 +5050,7 @@ object Queries {
         val base = emb.filter(col("vec_id") % 10 < 8)
         val late = emb.filter(col("vec_id") % 10 >= 8)
         val q = emb.filter(col("vec_id") < 10)
-        val (c1, b1) = fitIvfPq(base)
-        VectorStore.init(s, root, c1, b1)
-        VectorStore.admit(s, root, base, "vec_id", "embedding", 0L)
-        VectorStore.admit(s, root, late, "vec_id", "embedding", 1L)
+        vectorStore(s, root, fitIvfPq(base), base, late)
         refitIvfPq(s, root, 1L)
         def served() = searchRows(s, root, q)
         val pre = served()
@@ -4954,31 +5169,23 @@ object Queries {
         def ests() = SketchStore.estimatesCurrent(s, root, Seq("event_type"))
           .select(col("event_type"), col("est"))
           .collect().toSeq.map(r => (r.getString(0), r.getLong(1))).sorted
-        val fragsBefore = SketchStore.fragmentCount(s, root)
-        val pre = ests()
-        val retryNoop = casRetryNoop(root)(
-          SketchStore.compactStore(s, root, expectedGen = 1L, Seq("event_type")))
-        val fragsCompacted = SketchStore.fragmentCount(s, root)
-        val estIdentical = ests() == pre
-        SketchStore.admitBatch(s, ev.filter(pmod(col("event_id"), lit(4)) === 3),
-          Seq("event_type"), "user_id", 3L, root)
-        val fragsAfter = SketchStore.fragmentCount(s, root)
+        val (c, _) = compactionCycle(root, SketchStore.fragmentCount(s, root), ests())(
+            SketchStore.compactStore(s, root, expectedGen = 1L, Seq("event_type"))) {
+          SketchStore.admitBatch(s, ev.filter(pmod(col("event_id"), lit(4)) === 3),
+            Seq("event_type"), "user_id", 3L, root)
+        }
         val whole = ev.groupBy(col("event_type"))
           .agg(count_distinct(col("user_id")).cast("long").as("n_exact"),
             hll_sketch_estimate(hll_sketch_agg(col("user_id"), lit(12)))
               .as("whole_est"))
         SketchStore.estimatesCurrent(s, root, Seq("event_type"))
           .join(whole, "event_type")
-          .select(col("event_type"), col("n_exact"),
-            lit(fragsBefore).cast("long").as("frags_before"),
-            lit(fragsCompacted).cast("long").as("frags_compacted"),
-            lit(fragsAfter).cast("long").as("frags_after_admit"),
-            lit(retryNoop).as("retry_noop"),
-            lit(estIdentical).as("est_identical"),
+          .select(Seq(col("event_type"), col("n_exact")) ++
+            (c.gates :+ ("est_identical" -> c.readEq)).map { case (n, v) => lit(v).as(n) } ++ Seq(
             (abs(col("est") - col("whole_est")) <= col("whole_est") * 0.01)
               .as("merged_tracks_whole"),
             (abs(col("est") - col("n_exact")).cast("double") <=
-              col("n_exact") * 0.05).as("within_5pct"))
+              col("n_exact") * 0.05).as("within_5pct")): _*)
           .orderBy(col("event_type"))
       },
       Some("""SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
@@ -5020,31 +5227,30 @@ object Queries {
           HeavyHitters.admitBatch(s, keyed.filter(pmod(col("doc_id"), lit(4)) === b),
             "k", m, b, root)
         }
-        val fragsBefore = HeavyHitters.fragmentCount(s, root)
-        val retryNoop = casRetryNoop(root)(
-          HeavyHitters.compactStore(s, root, expectedGen = 1L, m))
-        val fragsCompacted = HeavyHitters.fragmentCount(s, root)
-        // prefix gate: the compacted summary still honors the MG
-        // contract against the 3-batch prefix's exact counts — checked
-        // DISTRIBUTIVELY (the exact histogram is corpus-keyed, so it
-        // must never cross to the driver: the m-row summary broadcasts
-        // onto it and only the 1-row min-verdict collects)
         import s.implicits._
-        val prefix = keyed.filter(pmod(col("doc_id"), lit(4)) < 3)
-        val nPrefix = prefix.count()
-        val prefixEsts = HeavyHitters.hittersCurrent(s, root, m).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-        val prefixOk = prefix.groupBy(col("k"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-          .join(broadcast(prefixEsts.toDF("key", "est")),
-            col("k") === col("key"), "left")
-          .select(((col("cnt") * (m + 1) <= nPrefix || col("est").isNotNull) &&
-            (col("est").isNull || (col("est") <= col("cnt") &&
-              (col("cnt") - col("est")) * (m + 1) <= nPrefix))).as("ok"))
-          .agg(coalesce(min(col("ok")), lit(true))).head.getBoolean(0)
-        HeavyHitters.admitBatch(s, keyed.filter(pmod(col("doc_id"), lit(4)) === 3),
-          "k", m, 3L, root)
-        val fragsAfter = HeavyHitters.fragmentCount(s, root)
+        val (c, prefixOk) = compactionCycle(root, HeavyHitters.fragmentCount(s, root), ())(
+            HeavyHitters.compactStore(s, root, expectedGen = 1L, m)) {
+          // prefix gate: the compacted summary still honors the MG
+          // contract against the 3-batch prefix's exact counts — checked
+          // DISTRIBUTIVELY (the exact histogram is corpus-keyed, so it
+          // must never cross to the driver: the m-row summary broadcasts
+          // onto it and only the 1-row min-verdict collects)
+          val prefix = keyed.filter(pmod(col("doc_id"), lit(4)) < 3)
+          val nPrefix = prefix.count()
+          val prefixEsts = HeavyHitters.hittersCurrent(s, root, m).collect()
+            .map(r => (r.getString(0), r.getLong(1))).toSeq
+          val ok = prefix.groupBy(col("k"))
+            .agg(count(lit(1)).cast("long").as("cnt"))
+            .join(broadcast(prefixEsts.toDF("key", "est")),
+              col("k") === col("key"), "left")
+            .select(((col("cnt") * (m + 1) <= nPrefix || col("est").isNotNull) &&
+              (col("est").isNull || (col("est") <= col("cnt") &&
+                (col("cnt") - col("est")) * (m + 1) <= nPrefix))).as("ok"))
+            .agg(coalesce(min(col("ok")), lit(true))).head.getBoolean(0)
+          HeavyHitters.admitBatch(s, keyed.filter(pmod(col("doc_id"), lit(4)) === 3),
+            "k", m, 3L, root)
+          ok
+        }
         // final gate over the FULL stream, q92's closed form
         val mg = HeavyHitters.hittersCurrent(s, root, m)
         val exact = keyed.groupBy(col("k"))
@@ -5056,12 +5262,8 @@ object Queries {
           .select(col("k"), col("exact_cnt"),
             col("est").isNotNull.as("found"),
             (col("est") <= col("exact_cnt") &&
-              (col("exact_cnt") - col("est")) * (m + 1) <= col("n")).as("bounds_ok"),
-            lit(fragsBefore).cast("long").as("frags_before"),
-            lit(fragsCompacted).cast("long").as("frags_compacted"),
-            lit(fragsAfter).cast("long").as("frags_after_admit"),
-            lit(retryNoop).as("retry_noop"),
-            lit(prefixOk).as("prefix_contract_ok"))
+              (col("exact_cnt") - col("est")) * (m + 1) <= col("n")).as("bounds_ok"))
+          .withGates(c.gates :+ ("prefix_contract_ok" -> prefixOk): _*)
           .orderBy(col("k"))
       },
       Some("""WITH keyed AS (
@@ -5120,34 +5322,27 @@ object Queries {
         // lifecycle (Par, guide §2.6); encoding is pure, so nothing about
         // the interleaving can move a byte of either store
         def lifecycleSection() = {
-          VectorStore.init(s, root, c1, b1)
-          (0L to 3L).foreach { b =>
-            VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === b),
-              "vec_id", "embedding", b)
-          }
-          val fragsBefore = frags()
-          val pre = served()
+          vectorStore(s, root, (c1, b1),
+            (0L to 3L).map(b => emb.filter(col("vec_id") % 5 === b)): _*)
+          // the fragmented store's drift inputs (read-only, like the
+          // cycle's own read)
           val statsPre = stats()
           val refitPre = VectorStore.needsRefit(s, root)
-          val retryNoop = casRetryNoop(root)(
-            VectorStore.compactGen(s, root, expectedGen = 1L))
-          val fragsCompacted = frags()
-          val postEqPre = served() == pre
-          val statsPost = stats()
-          val baselineIdentical = statsPost.headOption == statsPre.headOption
-          val statsMerged = statsPost.size == 2 &&
-            statsPost.map(_._2).sum == statsPre.map(_._2).sum
-          val refitUnchanged = VectorStore.needsRefit(s, root) == refitPre
-          val sealedRefused = refuses("compact") {
-            VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 0),
-              "vec_id", "embedding", 0L)
+          compactionCycle(root, frags(), served())(
+              VectorStore.compactGen(s, root, expectedGen = 1L)) {
+            val statsPost = stats()
+            val baselineIdentical = statsPost.headOption == statsPre.headOption
+            val statsMerged = statsPost.size == 2 &&
+              statsPost.map(_._2).sum == statsPre.map(_._2).sum
+            val refitUnchanged = VectorStore.needsRefit(s, root) == refitPre
+            val sealedRefused = refuses("compact") {
+              VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 0),
+                "vec_id", "embedding", 0L)
+            }
+            VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 4),
+              "vec_id", "embedding", 4L)
+            (baselineIdentical, statsMerged, refitUnchanged, sealedRefused)
           }
-          VectorStore.admit(s, root, emb.filter(col("vec_id") % 5 === 4),
-            "vec_id", "embedding", 4L)
-          val fragsAfter = frags()
-          (pre, fragsBefore, fragsCompacted, fragsAfter, retryNoop,
-            postEqPre, baselineIdentical, statsMerged, refitUnchanged,
-            sealedRefused)
         }
         def flatSection() = {
           // the whole corpus through a from-scratch single-batch store:
@@ -5159,18 +5354,15 @@ object Queries {
             .collect().toSeq
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         }
-        val ((pre, fragsBefore, fragsCompacted, fragsAfter, retryNoop,
-          postEqPre, baselineIdentical, statsMerged, refitUnchanged,
-          sealedRefused), oneShot) = Par.both(lifecycleSection(), flatSection())
+        val ((c, (baselineIdentical, statsMerged, refitUnchanged, sealedRefused)),
+          oneShot) = Par.both(lifecycleSection(), flatSection())
         val eqOneShot = served() == oneShot
-        gateFrame(s, pre, "post_eq_pre" -> postEqPre, "eq_one_shot" -> eqOneShot,
-          "frags_before" -> fragsBefore, "frags_compacted" -> fragsCompacted,
-          "frags_after_admit" -> fragsAfter, "retry_noop" -> retryNoop,
-          "sealed_replay_refused" -> sealedRefused,
+        gateFrame(s, c.pre, Seq("post_eq_pre" -> c.readEq, "eq_one_shot" -> eqOneShot) ++
+          c.gates ++ Seq("sealed_replay_refused" -> sealedRefused,
           "baseline_stat_identical" -> baselineIdentical,
           "stats_merged_weighted" -> statsMerged,
           "drift_signal_unchanged" -> refitUnchanged,
-          "current_gen" -> VectorStore.currentGen(root))
+          "current_gen" -> VectorStore.currentGen(root)): _*)
       },
       Some(gateOracle(
         "TRUE AS post_eq_pre, TRUE AS eq_one_shot",
@@ -5206,55 +5398,43 @@ object Queries {
         // ONE signature pass for every admit, probe, and replay attempt
         // (guide §1.2, the q165 pattern): all the store touches below
         // slice this checkpointed key set by doc id
-        val sigKeys = Dedup.minHashBandKeys(
-          docs.select(col("doc_id"), col("text")), "doc_id", "text",
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
-          .localCheckpoint()
-        KeySetStore.init(root)
-        (0L to 2L).foreach { b =>
-          Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === b),
-            batchId = b, root = root)
-        }
+        val sigKeys = signatureKeys(docs.select(col("doc_id"), col("text")))
+        signatureStore(root, (0L to 2L).map(b => sigKeys.filter(col("id") % 5 === b)): _*)
         def decisions() = Dedup.admitKeysAgainstMinHashStoreGen(
             probe.select(col("doc_id").as("id")),
             sigKeys.filter(col("id") % 5 === 4), root = root)
           .collect().toSeq
           .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        val fragsBefore = KeySetStore.fragmentCount(s, root)
-        val pre = decisions()
-        val retryNoop = casRetryNoop(root)(
-          KeySetStore.compactStore(s, root, expectedGen = 1L))
-        val fragsCompacted = KeySetStore.fragmentCount(s, root)
-        val postEqPre = decisions() == pre && pre.nonEmpty
-        // compaction dedups keys ACROSS batches: the compacted fragment
-        // must hold exactly the distinct union, never more rows than
-        // the fragments it merged
-        val keyRowsFragmented = Tables.parquet(s, root + "/gen=1").count()
-        val keyRowsCompacted = Tables.parquet(s, root + "/gen=2").count()
-        val crossBatchDedup = keyRowsCompacted <= keyRowsFragmented &&
-          keyRowsCompacted ==
-            Tables.parquet(s, root + "/gen=1").drop("batch_id").distinct().count()
-        val sealedRefused = refuses("compact") {
-          Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 0),
-            batchId = 0L, root = root)
+        val (c, (crossBatchDedup, sealedRefused)) = compactionCycle(root,
+            KeySetStore.fragmentCount(s, root), decisions())(
+            KeySetStore.compactStore(s, root, expectedGen = 1L)) {
+          // compaction dedups keys ACROSS batches: the compacted fragment
+          // must hold exactly the distinct union, never more rows than
+          // the fragments it merged
+          val keyRowsFragmented = Tables.parquet(s, root + "/gen=1").count()
+          val keyRowsCompacted = Tables.parquet(s, root + "/gen=2").count()
+          val crossBatchDedup = keyRowsCompacted <= keyRowsFragmented &&
+            keyRowsCompacted ==
+              Tables.parquet(s, root + "/gen=1").drop("batch_id").distinct().count()
+          val sealedRefused = refuses("compact") {
+            Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 0),
+              batchId = 0L, root = root)
+          }
+          Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 3),
+            batchId = 3L, root = root)
+          (crossBatchDedup, sealedRefused)
         }
-        Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 3),
-          batchId = 3L, root = root)
-        val fragsAfter = KeySetStore.fragmentCount(s, root)
         // the oracle-stated surface: the probe batch's decisions against
         // the FULL admitted history (batches 0-3), from the compacted
         // store + the appended fragment
         Dedup.admitKeysAgainstMinHashStoreGen(
             probe.select(col("doc_id").as("id")),
             sigKeys.filter(col("id") % 5 === 4), root = root)
-          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"),
-            lit(fragsBefore).cast("long").as("frags_before"),
-            lit(fragsCompacted).cast("long").as("frags_compacted"),
-            lit(fragsAfter).cast("long").as("frags_after_admit"),
-            lit(retryNoop).as("retry_noop"),
-            lit(postEqPre).as("decisions_identical"),
-            lit(crossBatchDedup).as("cross_batch_dedup"),
-            lit(sealedRefused).as("sealed_replay_refused"))
+          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+          .withGates(c.gates ++ Seq(
+            "decisions_identical" -> (c.readEq && c.pre.nonEmpty),
+            "cross_batch_dedup" -> crossBatchDedup,
+            "sealed_replay_refused" -> sealedRefused): _*)
       },
       Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 5 < 4
@@ -5305,19 +5485,10 @@ object Queries {
         val emb = t(s, d, "embeddings")
         // the two stores live in disjoint roots — builds overlap (Par, §2.6)
         Par.both(
-          {
-            InvertedIndex.initStore(iroot)
-            admitDocs(s, docs.filter(col("doc_id") % 10 < 8), 0L, iroot)
-            admitDocs(s, docs.filter(col("doc_id") % 10 >= 8), 1L, iroot)
-          },
-          {
-            val (c1, bk1) = fitIvfPq(emb.filter(col("vec_id") % 10 < 8))
-            VectorStore.init(s, vroot, c1, bk1)
-            VectorStore.admit(s, vroot, emb.filter(col("vec_id") % 10 < 8),
-              "vec_id", "embedding", 0L)
-            VectorStore.admit(s, vroot, emb.filter(col("vec_id") % 10 >= 8),
-              "vec_id", "embedding", 1L)
-          })
+          indexStore(s, iroot, docs.filter(col("doc_id") % 10 < 8),
+            docs.filter(col("doc_id") % 10 >= 8)),
+          vectorStore(s, vroot, fitIvfPq(emb.filter(col("vec_id") % 10 < 8)),
+            emb.filter(col("vec_id") % 10 < 8), emb.filter(col("vec_id") % 10 >= 8)))
         Manifest.init(mroot, Map("index" -> 1L, "vectors" -> 1L))
         val q = emb.filter(col("vec_id") < 3)
         // the q146 hybrid, every store read resolved through ONE
@@ -5434,13 +5605,8 @@ object Queries {
         val b2 = qual.filter(col("doc_id") % 2 === 1 && col("quality") >= 0.5)
         // ONE signature pass over the quality-surviving corpus (guide
         // §1.2): batch 1's admission and batch 2's probe slice it by id
-        val sigKeys = Dedup.minHashBandKeys(
-          qual.filter(col("quality") >= 0.5), "doc_id", "text",
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
-          .localCheckpoint()
-        KeySetStore.init(root)
-        Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") % 2 === 0),
-          batchId = 0L, root = root)
+        val sigKeys = signatureKeys(qual.filter(col("quality") >= 0.5))
+        signatureStore(root, sigKeys.filter(col("id") % 2 === 0))
         val admitted = b2.join(
           Dedup.admitKeysAgainstMinHashStoreGen(
               b2.select(col("doc_id").as("id")),
@@ -5670,25 +5836,16 @@ object Queries {
         def quants() = QuantileStore.quantilesCurrent(s, root,
             Seq("l_returnflag"), qs, lo = 1.0, width = 1.0)
           .collect().map(_.toString).sorted.toSeq
-        val fragsBefore = QuantileStore.fragmentCount(s, root)
-        val pre = quants()
-        val retryNoop = casRetryNoop(root)(
-          QuantileStore.compactStore(s, root, expectedGen = 1L, Seq("l_returnflag")))
-        val fragsCompacted = QuantileStore.fragmentCount(s, root)
-        val estIdentical = quants() == pre
-        QuantileStore.admitBatch(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
-          Seq("l_returnflag"), "l_quantity", lo = 1.0, width = 1.0,
-          nbins = 50, batchId = 3L, root = root)
-        val fragsAfter = QuantileStore.fragmentCount(s, root)
+        val (c, _) = compactionCycle(root, QuantileStore.fragmentCount(s, root), quants())(
+            QuantileStore.compactStore(s, root, expectedGen = 1L, Seq("l_returnflag"))) {
+          QuantileStore.admitBatch(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
+            Seq("l_returnflag"), "l_quantity", lo = 1.0, width = 1.0,
+            nbins = 50, batchId = 3L, root = root)
+        }
         QuantileStore.quantilesCurrent(s, root, Seq("l_returnflag"), qs,
             lo = 1.0, width = 1.0)
-          .select(col("l_returnflag"),
-            col("p25"), col("p50"), col("p75"), col("p95"),
-            lit(fragsBefore).cast("long").as("frags_before"),
-            lit(fragsCompacted).cast("long").as("frags_compacted"),
-            lit(fragsAfter).cast("long").as("frags_after_admit"),
-            lit(retryNoop).as("retry_noop"),
-            lit(estIdentical).as("est_identical"))
+          .select(col("l_returnflag"), col("p25"), col("p50"), col("p75"), col("p95"))
+          .withGates(c.gates :+ ("est_identical" -> c.readEq): _*)
           .orderBy(col("l_returnflag"))
       },
       Some("""WITH c AS (
@@ -5850,10 +6007,7 @@ object Queries {
         val emb = t(s, d, "embeddings")
         val b1 = emb.filter(col("vec_id") % 10 < 8)
         val b2 = emb.filter(col("vec_id") % 10 >= 8)
-        val (c1, bk1) = fitIvfPq(b1)
-        VectorStore.init(s, vroot, c1, bk1)
-        VectorStore.admit(s, vroot, b1, "vec_id", "embedding", 0L)
-        VectorStore.admit(s, vroot, b2, "vec_id", "embedding", 1L)
+        vectorStore(s, vroot, fitIvfPq(b1), b1, b2)
         val q = emb.filter(col("vec_id") < 3)
         val knn = Similarity.bruteForceTopK(q,
             VectorStore.vectors(s, vroot, "vec_id", "embedding"),
@@ -5951,50 +6105,35 @@ object Queries {
         val root = scratchDir("q161") + "/istore"
         def indexSection(): (Boolean, Boolean, Boolean) = {
           val docs = docTokens(s, d)
-          InvertedIndex.initStore(root)
-          admitDocs(s, docs.filter(col("doc_id") % 10 < 5), 0L, root)
-          admitDocs(s, docs.filter(col("doc_id") % 10 >= 5), 1L, root)
+          indexStore(s, root, docs.filter(col("doc_id") % 10 < 5),
+            docs.filter(col("doc_id") % 10 >= 5))
           val dead = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
-          InvertedIndex.admitDeleteBatch(s, dead, "doc_id", 0L, root)
-          def bm25Rows() = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
-            .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
-          val pending = bm25Rows()
-          InvertedIndex.admitDeleteBatch(s, dead, "doc_id", 0L, root)
-          InvertedIndex.admitDeleteBatch(s,
-            Seq(Long.MaxValue - 1).toDF("doc_id"), "doc_id", 1L, root)
-          val replayNoop = bm25Rows() == pending
-          InvertedIndex.compactStore(s, root, expectedGen = 1L)
-          val postEqPending = bm25Rows() == pending
+          val (_, replayNoop, postEqPending) = takedownCycle(
+              bm25Rows(InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)))(
+            InvertedIndex.admitDeleteBatch(s, dead, "doc_id", 0L, root),
+            InvertedIndex.admitDeleteBatch(s,
+              Seq(Long.MaxValue - 1).toDF("doc_id"), "doc_id", 1L, root))(
+            InvertedIndex.compactStore(s, root, expectedGen = 1L))
           val gen2 = InvertedIndex.genDir(root, 2L)
           val purged = Tables.parquet(s, s"$gen2/postings")
             .select(explode(col("postings")).as("p"))
             .filter(col("p.doc_id") % 7 === 3).isEmpty &&
             Tables.parquet(s, s"$gen2/doclens")
               .filter(col("doc_id") % 7 === 3).isEmpty &&
-            !java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "deletes"))
+            noPendingDeletes(gen2)
           (replayNoop, postEqPending, purged)
         }
         def vectorSection(): (Boolean, Boolean) = {
           val emb = t(s, d, "embeddings")
-          val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
+          val index = fitIvfPq(emb, kmeansIters = 2, m = 8)
           val vroot = scratchDir("q161") + "/vstore"
           val vclean = scratchDir("q161") + "/vclean"
-          VectorStore.init(s, vroot, vc, vb)
-          VectorStore.admit(s, vroot, emb.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", 0L)
-          VectorStore.admit(s, vroot, emb.filter(col("vec_id") % 2 === 1),
-            "vec_id", "embedding", 1L)
-          VectorStore.init(s, vclean, vc, vb)
-          VectorStore.admit(s, vclean, emb.filter(col("vec_id") % 5 =!= 2),
-            "vec_id", "embedding", 0L)
+          vectorStore(s, vroot, index, emb.filter(col("vec_id") % 2 === 0),
+            emb.filter(col("vec_id") % 2 === 1))
+          vectorStore(s, vclean, index, emb.filter(col("vec_id") % 5 =!= 2))
           VectorStore.admitDeletes(s, vroot,
             emb.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", 0L)
-          def vsearch(r: String) = VectorStore.search(s, r,
-              emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
-              nprobe = 16, shortlistFactor = 1000)
-            .select(col("query_id"), col("rank").cast("long"), col("neighbor_id"))
-            .collect().toSeq.map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
-            .sorted
+          def vsearch(r: String) = exhaustiveSearch(s, r, emb.filter(col("vec_id") < 8))
           val vwant = vsearch(vclean)
           val vPending = vsearch(vroot) == vwant
           VectorStore.compactGen(s, vroot, expectedGen = 1L)
@@ -6037,14 +6176,9 @@ object Queries {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val root = scratchDir("q162") + "/vstore"
-        val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
-        VectorStore.init(s, root, vc, vb)
-        VectorStore.admit(s, root, emb.filter(col("vec_id") % 2 === 0),
-          "vec_id", "embedding", 0L)
-        VectorStore.admit(s, root, emb.filter(col("vec_id") % 2 === 1),
-          "vec_id", "embedding", 1L)
-        val pool = VectorStore.search(s, root, emb.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 25, nprobe = 16, shortlistFactor = 1000,
+        vectorStore(s, root, fitIvfPq(emb, kmeansIters = 2, m = 8),
+          emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1))
+        val pool = exhaustiveFrame(s, root, emb.filter(col("vec_id") < 10), k = 25,
           tier = "sq")
         Similarity.mmrRerank(pool,
             VectorStore.vectors(s, root, "vec_id", "embedding"),
@@ -6149,16 +6283,12 @@ object Queries {
         def quants() = QuantileStore.quantilesCurrentHdr(s, root,
             Seq("l_returnflag"), qs, subBits = 4)
           .collect().map(_.toString).sorted.toSeq
-        val fragsBefore = QuantileStore.fragmentCount(s, root)
-        val pre = quants()
-        val retryNoop = casRetryNoop(root)(
-          QuantileStore.compactStore(s, root, expectedGen = 1L, Seq("l_returnflag")))
-        val fragsCompacted = QuantileStore.fragmentCount(s, root)
-        val estIdentical = quants() == pre
-        QuantileStore.admitBatchHdr(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
-          Seq("l_returnflag"), "v", subBits = 4, nbins = 2048,
-          batchId = 3L, root = root)
-        val fragsAfter = QuantileStore.fragmentCount(s, root)
+        val (c, _) = compactionCycle(root, QuantileStore.fragmentCount(s, root), quants())(
+            QuantileStore.compactStore(s, root, expectedGen = 1L, Seq("l_returnflag"))) {
+          QuantileStore.admitBatchHdr(s, li.filter(pmod(col("l_orderkey"), lit(4)) === 3),
+            Seq("l_returnflag"), "v", subBits = 4, nbins = 2048,
+            batchId = 3L, root = root)
+        }
         // the fixed-range CLAMP: the same stream through q158's
         // unit-bin store bounded at 50 collapses every percentile to
         // the top edge — the failure mode HDR binning exists to fix
@@ -6171,14 +6301,9 @@ object Queries {
           .collect().forall(r => (1 to 4).forall(i => r.getDouble(i) == 50.0))
         QuantileStore.quantilesCurrentHdr(s, root, Seq("l_returnflag"), qs,
             subBits = 4)
-          .select(col("l_returnflag"),
-            col("p25"), col("p50"), col("p75"), col("p95"),
-            lit(fragsBefore).cast("long").as("frags_before"),
-            lit(fragsCompacted).cast("long").as("frags_compacted"),
-            lit(fragsAfter).cast("long").as("frags_after_admit"),
-            lit(retryNoop).as("retry_noop"),
-            lit(estIdentical).as("est_identical"),
-            lit(fixedClamps).as("fixed_clamps"))
+          .select(col("l_returnflag"), col("p25"), col("p50"), col("p75"), col("p95"))
+          .withGates(c.gates ++ Seq("est_identical" -> c.readEq,
+            "fixed_clamps" -> fixedClamps): _*)
           .orderBy(col("l_returnflag"))
       },
       Some("""WITH v AS (
@@ -6237,8 +6362,6 @@ object Queries {
       // At 100 TB: each micro-batch is narrow maps plus one key-set
       // semi-join; no stage ever rescans prior batches' raw docs.
       (s, d) => {
-        import graft.streaming.EventStreams
-        import graft.operators.GenStore
         val base = scratchDir("q164")
         val feed = base + "/feed"
         val root = base + "/sigstore"
@@ -6334,22 +6457,15 @@ object Queries {
       // index-sized key rows until compaction folds the subtraction in.
       (s, d) => {
         import s.implicits._
-        import graft.operators.GenStore
         val root = scratchDir("q165") + "/sigstore"
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        KeySetStore.init(root)
         // ONE signature pass over the corpus (guide §1.2): every admit,
         // delete, and probe below filters this checkpointed key set by
-        // doc id instead of re-shingling raw text — the derivation is
-        // row-local per doc, so a filtered slice is bit-identical to
-        // deriving from the filtered docs. In-query materialization
-        // only; nothing survives the query.
-        val keys = Dedup.minHashBandKeys(docs, "doc_id", "text", n = 3,
-          numHashes = 32, bands = 8, portableKeys = true).localCheckpoint()
-        Dedup.admitMinHashKeysBatch(keys.filter(col("id") % 2 === 0),
-          batchId = 0L, root = root)
-        Dedup.admitMinHashKeysBatch(keys.filter(col("id") % 2 === 1),
-          batchId = 1L, root = root)
+        // doc id instead of re-shingling raw text. In-query
+        // materialization only; nothing survives the query.
+        val keys = signatureKeys(docs)
+        signatureStore(root, keys.filter(col("id") % 2 === 0),
+          keys.filter(col("id") % 2 === 1))
         val dead = docs.filter(col("doc_id") % 7 === 3)
         val deadIds = dead.select(col("doc_id").as("id"))
         val deadKeyRows = keys.filter(col("id") % 7 === 3)
@@ -6357,34 +6473,29 @@ object Queries {
             deadKeyRows, root)
           .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
         val before = probe()
-        Dedup.deleteMinHashKeysBatch(deadKeyRows, batchId = 0L, root = root)
-        val pending = probe()
-        // replayed delete: same batch id, same keys — decisions unmoved
-        Dedup.deleteMinHashKeysBatch(deadKeyRows, batchId = 0L, root = root)
-        // delete of keys the store never admitted: subtracting an
-        // absent key removes nothing
-        Dedup.deleteMinHashBatch(
-          Seq((Long.MaxValue - 1, "zqx jvk wpl qrm vtn")).toDF("doc_id", "text"),
-          "doc_id", "text", n = 3, numHashes = 32, bands = 8,
-          batchId = 1L, root = root, portableKeys = true)
-        val replayNoop = probe() == pending
-        KeySetStore.compactStore(s, root, expectedGen = 1L)
-        val postEqPending = probe() == pending
+        // the replay repeats the delete (same batch id, same keys) and
+        // deletes keys the store never admitted: subtracting an absent
+        // key removes nothing
+        val (pending, replayNoop, postEqPending) = takedownCycle(probe())(
+          Dedup.deleteMinHashKeysBatch(deadKeyRows, batchId = 0L, root = root),
+          Dedup.deleteMinHashBatch(
+            Seq((Long.MaxValue - 1, "zqx jvk wpl qrm vtn")).toDF("doc_id", "text"),
+            "doc_id", "text", n = 3, numHashes = 32, bands = 8,
+            batchId = 1L, root = root, portableKeys = true))(
+          KeySetStore.compactStore(s, root, expectedGen = 1L))
         val gen2 = GenStore.genDir(root, 2L)
         val deadKeys = deadKeyRows
           .select(col("band"), col("bucket")).distinct()
         val frag2 = GenStore.listBatchIds(s, gen2)
         val purged = Tables.parquet(s, frag2.map(i => s"$gen2/batch_id=$i"): _*)
           .join(deadKeys, Seq("band", "bucket"), "left_semi").isEmpty &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "deletes"))
+          noPendingDeletes(gen2)
         val byId = pending.map(p => p._1 -> p._3).toMap
         val readmitted = before.exists(b => !b._3 && byId(b._1))
         Dedup.admitKeysAgainstMinHashStoreGen(deadIds, deadKeyRows, root)
-          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"),
-            lit(replayNoop).as("replay_noop"),
-            lit(postEqPending).as("post_eq_pending"),
-            lit(purged).as("physical_purge"),
-            lit(readmitted).as("readmitted_exists"))
+          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+          .withGates("replay_noop" -> replayNoop, "post_eq_pending" -> postEqPending,
+            "physical_purge" -> purged, "readmitted_exists" -> readmitted)
           .orderBy(col("doc_id"))
       },
       Some(s"""${tokCte()}${bandKeyCtes()}, store AS (
@@ -6430,7 +6541,6 @@ object Queries {
       // retraction costs one map-side-combined aggregation over the
       // retracted slice; no read ever rescans the surviving stream.
       (s, d) => {
-        import graft.operators.GenStore
         val root = scratchDir("q166") + "/qstore"
         val froot = scratchDir("q166") + "/fresh"
         val li = t(s, d, "lineitem")
@@ -6480,13 +6590,10 @@ object Queries {
           GenStore.currentGen(oroot) == 1L
         QuantileStore.quantilesCurrent(s, root, Seq("l_returnflag"), qs,
             lo = 1.0, width = 1.0)
-          .select(col("l_returnflag"),
-            col("p25"), col("p50"), col("p75"), col("p95"),
-            lit(freshEq).as("fresh_eq"),
-            lit(postEqPending).as("post_eq_pending"),
-            lit(physical).as("physical_purge"),
-            lit(sealedRefused).as("sealed_replay_refused"),
-            lit(overLoud).as("over_retraction_loud"))
+          .select(col("l_returnflag"), col("p25"), col("p50"), col("p75"), col("p95"))
+          .withGates("fresh_eq" -> freshEq, "post_eq_pending" -> postEqPending,
+            "physical_purge" -> physical, "sealed_replay_refused" -> sealedRefused,
+            "over_retraction_loud" -> overLoud)
           .orderBy(col("l_returnflag"))
       },
       Some("""WITH c AS (
@@ -6598,7 +6705,6 @@ object Queries {
       // and two compactions it was scheduled to do anyway; readers
       // never block and never see a half-purged world.
       (s, d) => {
-        import graft.operators.GenStore
         val base = scratchDir("q168")
         val iroot = base + "/istore"
         val vroot = base + "/vstore"
@@ -6612,44 +6718,24 @@ object Queries {
         // section derives the corpus band keys ONCE (guide §1.2, the q165
         // pattern) — the takedown and all three pinned probes below slice
         // the same checkpointed key set instead of re-shingling raw text.
-        def indexSection(): Unit = {
-          InvertedIndex.initStore(iroot)
-          admitDocs(s, toks.filter(col("doc_id") % 2 === 0), 0L, iroot)
-          admitDocs(s, toks.filter(col("doc_id") % 2 === 1), 1L, iroot)
-        }
-        def vectorSection(): Unit = {
-          val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
-          VectorStore.init(s, vroot, vc, vb)
-          VectorStore.admit(s, vroot, emb, "vec_id", "embedding", 0L)
-        }
         def signatureSection(): DataFrame = {
-          val sigKeys = Dedup.minHashBandKeys(
-            docs.select(col("doc_id"), col("text")), "doc_id", "text",
-            n = 3, numHashes = 32, bands = 8, portableKeys = true)
-            .localCheckpoint()
-          KeySetStore.init(kroot)
-          Dedup.admitMinHashKeysBatch(sigKeys, batchId = 0L, root = kroot)
+          val sigKeys = signatureKeys(docs.select(col("doc_id"), col("text")))
+          signatureStore(kroot, sigKeys)
           sigKeys
         }
-        val (sigKeys, _) = Par.both(signatureSection(),
-          Par.both(indexSection(), vectorSection()))
+        val (sigKeys, _) = Par.both(signatureSection(), Par.both(
+          indexStore(s, iroot, toks.filter(col("doc_id") % 2 === 0),
+            toks.filter(col("doc_id") % 2 === 1)),
+          vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
         Manifest.init(mroot,
           Map("index" -> 1L, "vectors" -> 1L, "signatures" -> 1L))
         val deadDocs = docs.filter(col("doc_id") % 7 === 3)
           .select(col("doc_id"), col("text"))
         val deadKeys = sigKeys.filter(col("id") % 7 === 3)
         val deadVecs = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
-        def bmAt(v: Long) = InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(iroot, Manifest.resolve(mroot, v, "index")),
-            bm25Terms, 15)
-          .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
-        def vsAt(v: Long) = VectorStore.searchGen(s, vroot,
-            Manifest.resolve(mroot, v, "vectors"),
-            emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
-            nprobe = 16, shortlistFactor = 1000)
-          .select(col("query_id"), col("rank").cast("long"), col("neighbor_id"))
-          .collect().toSeq.map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
-          .sorted
+        def bmAt(v: Long) = bm25Rows(pinnedBm25(s, iroot, mroot, v))
+        def vsAt(v: Long) = exhaustiveSearch(s, vroot, emb.filter(col("vec_id") < 8),
+          Some(Manifest.resolve(mroot, v, "vectors")))
         def sigAt(v: Long) = Dedup.admitKeysAgainstMinHashStoreAt(
             deadDocs.select(col("doc_id").as("id")), deadKeys,
             root = kroot, gen = Manifest.resolve(mroot, v, "signatures"))
@@ -6659,21 +6745,10 @@ object Queries {
           Par.both(bmAt(1L), Par.both(vsAt(1L), sigAt(1L)))
         // ROLL: a pure compaction moves every store off the pinned
         // generation, so the deletes below never touch gen 1
-        Par.all(Seq(
-          () => InvertedIndex.compactStore(s, iroot, expectedGen = 1L): Unit,
-          () => VectorStore.compactGen(s, vroot, expectedGen = 1L): Unit,
-          () => KeySetStore.compactStore(s, kroot, expectedGen = 1L): Unit))
+        fleetCompact(s, iroot, vroot, kroot, 1L)
         // TAKEDOWN into the rolled generation, then purge physically
-        Par.all(Seq(
-          () => InvertedIndex.admitDeleteBatch(s, deadDocs.select("doc_id"),
-            "doc_id", 0L, iroot): Unit,
-          () => VectorStore.admitDeletes(s, vroot, deadVecs, "vec_id", 0L): Unit,
-          () => Dedup.deleteMinHashKeysBatch(deadKeys, batchId = 0L,
-            root = kroot): Unit))
-        Par.all(Seq(
-          () => InvertedIndex.compactStore(s, iroot, expectedGen = 2L): Unit,
-          () => VectorStore.compactGen(s, vroot, expectedGen = 2L): Unit,
-          () => KeySetStore.compactStore(s, kroot, expectedGen = 2L): Unit))
+        fleetTakedown(s, docs, emb, sigKeys, iroot, vroot, kroot)
+        fleetCompact(s, iroot, vroot, kroot, 2L)
         val v2 = Manifest.publish(mroot, expectedVersion = 1L,
           Map("index" -> 3L, "vectors" -> 3L, "signatures" -> 3L))
         // the compliance pin: v1 serves the pre-takedown world, bit
@@ -6688,16 +6763,10 @@ object Queries {
         val deadSet = deadVecs.collect().map(_.getLong(0)).toSet
         val vectorPurged = postVs.nonEmpty &&
           postVs.forall(x => !deadSet.contains(x._3)) &&
-          postVs == VectorStore.search(s, vroot, emb.filter(col("vec_id") < 8),
-              "vec_id", "embedding", 5, nprobe = 16, shortlistFactor = 1000)
-            .select(col("query_id"), col("rank").cast("long"), col("neighbor_id"))
-            .collect().toSeq.map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
-            .sorted
+          postVs == exhaustiveSearch(s, vroot, emb.filter(col("vec_id") < 8))
         val postSig = sigAt(2L)
         val readmitted = preSig.zip(postSig).exists { case (b, p) => !b._3 && p._3 }
-        InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(iroot, Manifest.resolve(mroot, 2L, "index")),
-            bm25Terms, 15)
+        pinnedBm25(s, iroot, mroot, 2L)
           .withGates("v1_pre_takedown_stable" -> v1Stable,
             "vector_purged_at_v2" -> vectorPurged,
             "recrawl_readmitted_at_v2" -> readmitted)
@@ -6732,7 +6801,6 @@ object Queries {
       // pending, folded away by scheduled compaction.
       (s, d) => {
         import s.implicits._
-        import graft.operators.GenStore
         val root = scratchDir("q169") + "/gstore"
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         KeySetStore.init(root)
@@ -6745,23 +6813,19 @@ object Queries {
           .agg(count(lit(1)).cast("long").as("n"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
         val before = spanCounts()
-        Dedup.deleteGramBatch(dead, "doc_id", "text", minTokens = 8,
-          batchId = 0L, root = root, portableKeys = true)
-        val pending = spanCounts()
-        Dedup.deleteGramBatch(dead, "doc_id", "text", minTokens = 8,
-          batchId = 0L, root = root, portableKeys = true)
-        val replayNoop = spanCounts() == pending
+        val (pending, replayNoop, postEqPending) = takedownCycle(spanCounts())(
+          Dedup.deleteGramBatch(dead, "doc_id", "text", minTokens = 8,
+            batchId = 0L, root = root, portableKeys = true))(
+          KeySetStore.compactStore(s, root, expectedGen = 1L))
         val shrank = pending.map(_._2).sum < before.map(_._2).sum
-        // the admitted delete keys, read back for the purge check
+        // the admitted delete keys, read back from the compacted-away
+        // generation for the purge check
         val delKeys = Tables.parquet(s, s"$root/gen=1/deletes")
           .select(col("g")).distinct()
-        KeySetStore.compactStore(s, root, expectedGen = 1L)
-        val postEqPending = spanCounts() == pending
         val gen2 = GenStore.genDir(root, 2L)
         val frag2 = GenStore.listBatchIds(s, gen2)
         val purged = Tables.parquet(s, frag2.map(i => s"$gen2/batch_id=$i"): _*)
-          .join(delKeys, Seq("g"), "left_semi").isEmpty &&
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(gen2, "deletes"))
+          .join(delKeys, Seq("g"), "left_semi").isEmpty && noPendingDeletes(gen2)
         val beforeDf = before.toDF("doc_id", "spans_before")
         val afterDf = pending.toDF("doc_id", "spans_after")
         dead.select(col("doc_id"))
@@ -6770,11 +6834,9 @@ object Queries {
           .select(col("doc_id"),
             coalesce(col("spans_before"), lit(0L)).as("spans_before"),
             coalesce(col("spans_after"), lit(0L)).as("spans_after"),
-            (coalesce(col("spans_after"), lit(0L)) === 0L).as("fully_deflagged"),
-            lit(replayNoop).as("replay_noop"),
-            lit(postEqPending).as("post_eq_pending"),
-            lit(purged).as("physical_purge"),
-            lit(shrank).as("total_flags_shrank"))
+            (coalesce(col("spans_after"), lit(0L)) === 0L).as("fully_deflagged"))
+          .withGates("replay_noop" -> replayNoop, "post_eq_pending" -> postEqPending,
+            "physical_purge" -> purged, "total_flags_shrank" -> shrank)
           .orderBy(col("doc_id"))
       },
       Some(s"""${tokCte()}, g AS (
@@ -6836,7 +6898,6 @@ object Queries {
       // takedown is one delete-fragment write, the corpus purge one
       // anti-join per read until the corpus store's own compaction.
       (s, d) => {
-        import graft.streaming.EventStreams
         val base = scratchDir("q170")
         val feed = base + "/feed"
         val root = base + "/sigstore"
@@ -6963,9 +7024,7 @@ object Queries {
       // manifest-pinned form).
       (s, d) => {
         val root = scratchDir("q171") + "/istore"
-        val docs = docTokens(s, d)
-        InvertedIndex.initStore(root)
-        admitDocs(s, docs, 0L, root)
+        indexStore(s, root, docTokens(s, d))
         def top15() = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
           .withColumn("rank", row_number()
             .over(Window.orderBy(col("bm25").desc, col("doc_id"))).cast("long"))
@@ -7133,8 +7192,7 @@ object Queries {
         KeySetStore.init(groot)
         Dedup.admitGramBatch(bench, "doc_id", "text", minTokens = 8,
           batchId = 0L, root = groot, portableKeys = true)
-        InvertedIndex.initStore(iroot)
-        admitDocs(s, tokenized(train), 0L, iroot)
+        indexStore(s, iroot, tokenized(train))
         // detection: training docs sharing any 8-gram run with the bench
         val contaminated = Dedup.spansAgainstStoreGen(train, "doc_id",
             "text", minTokens = 8, root = groot, portableKeys = true)
@@ -7182,15 +7240,13 @@ object Queries {
       // (GenStore.footerRowCount) — no Spark job, evaluable every
       // batch at 100 TB.
       (s, d) => {
-        import graft.operators.GenStore
         val root = scratchDir("q174") + "/sigstore"
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         // ONE signature pass (native XXH64 keys) for the admit, the
         // takedown, both probes, and the re-arm batch (guide §1.2)
         val sigKeys = Dedup.minHashBandKeys(docs, "doc_id", "text",
           n = 3, numHashes = 32, bands = 8).localCheckpoint()
-        KeySetStore.init(root)
-        Dedup.admitMinHashKeysBatch(sigKeys, batchId = 0L, root = root)
+        signatureStore(root, sigKeys)
         val freshQuiet = !KeySetStore.needsCompaction(s, root)
         Dedup.deleteMinHashKeysBatch(sigKeys.filter(col("id") % 7 === 3),
           batchId = 0L, root = root)
@@ -7206,8 +7262,7 @@ object Queries {
           maxPendingFraction = 0.05) == Some(2L)
         val quietAfter = !KeySetStore.needsCompaction(s, root,
           maxPendingFraction = 0.05)
-        val purged = !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(root, "gen=2", "deletes"))
+        val purged = noPendingDeletes(GenStore.genDir(root, 2L))
         val decisionsStable = decisions() == pre
         Dedup.admitMinHashKeysBatch(sigKeys.filter(col("id") < 5),
           batchId = 10L, root = root)
@@ -7218,16 +7273,12 @@ object Queries {
           count(lit(1)).cast("long").as("n_docs"),
           count(when(col("doc_id") % 7 === 3, lit(1))).cast("long")
             .as("n_dead"))
-          .select(col("n_docs"), col("n_dead"),
-            lit(freshQuiet).as("fresh_quiet"),
-            lit(looseQuiet).as("loose_threshold_quiet"),
-            lit(tightFires).as("tight_threshold_fires"),
-            lit(fired).as("policy_fired_gen2"),
-            lit(quietAfter).as("quiet_after_fold"),
-            lit(purged).as("pending_set_purged"),
-            lit(decisionsStable).as("decisions_stable_across_fold"),
-            lit(fragLegRearms).as("fragment_leg_rearms"),
-            lit(GenStore.currentGen(root)).as("current_gen"))
+          .withGates("fresh_quiet" -> freshQuiet, "loose_threshold_quiet" -> looseQuiet,
+            "tight_threshold_fires" -> tightFires, "policy_fired_gen2" -> fired,
+            "quiet_after_fold" -> quietAfter, "pending_set_purged" -> purged,
+            "decisions_stable_across_fold" -> decisionsStable,
+            "fragment_leg_rearms" -> fragLegRearms,
+            "current_gen" -> GenStore.currentGen(root))
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_docs,
              |  CAST(count(CASE WHEN doc_id % 7 = 3 THEN 1 END) AS BIGINT) AS n_dead,
@@ -7416,10 +7467,9 @@ object Queries {
         }
         import s.implicits._
         rebuilt.toDF("event_type", "est_rebuilt")
-          .select(col("event_type"), col("est_rebuilt"),
-            lit(gen2 == 2L).as("rebuild_published_gen2"),
-            lit(staleIsFull).as("stale_counted_dead_rows"),
-            lit(sealedRefused).as("pre_takedown_replay_refused"))
+          .withGates("rebuild_published_gen2" -> (gen2 == 2L),
+            "stale_counted_dead_rows" -> staleIsFull,
+            "pre_takedown_replay_refused" -> sealedRefused)
           .orderBy(col("event_type"))
       },
       Some("""SELECT event_type, CAST(count(*) AS BIGINT) AS est_rebuilt,
@@ -7447,8 +7497,6 @@ object Queries {
       // per-micro-batch cost is one tiny fragment write plus two footer
       // reads; compactions amortize at the operator's chosen fraction.
       (s, d) => {
-        import graft.streaming.EventStreams
-        import graft.operators.GenStore
         val base = scratchDir("q178")
         val root = s"$base/sig"
         val twin = s"$base/twin"
@@ -7459,14 +7507,8 @@ object Queries {
         // disjoint-root bootstraps overlap (Par, §2.6). The STREAM still
         // derives its micro-batches' keys itself — that machinery is the
         // thing under test.
-        val sigKeys = Dedup.minHashBandKeys(docs, "doc_id", "text",
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
-          .localCheckpoint()
-        Par.both(
-          { KeySetStore.init(root)
-            Dedup.admitMinHashKeysBatch(sigKeys, batchId = 0L, root = root) },
-          { KeySetStore.init(twin)
-            Dedup.admitMinHashKeysBatch(sigKeys, batchId = 0L, root = twin) })
+        val sigKeys = signatureKeys(docs)
+        Par.both(signatureStore(root, sigKeys), signatureStore(twin, sigKeys))
         val feed = s"$base/feed"
         dead.repartition(2).write.parquet(feed)
         val stream = s.readStream.schema(docs.schema)
@@ -7492,11 +7534,10 @@ object Queries {
         docs.agg(count(lit(1)).cast("long").as("n_docs"),
             count(when(col("doc_id") % 5 === 1, lit(1))).cast("long")
               .as("n_taken_down"))
-          .select(col("n_docs"), col("n_taken_down"),
-            lit(genRolled).as("compaction_fired_in_stream"),
-            lit(quietAtDrain).as("window_closed_at_drain"),
-            lit(eqBatch).as("stream_eq_batch_closed_form"),
-            lit(deadReadmit).as("taken_down_docs_readmittable"))
+          .withGates("compaction_fired_in_stream" -> genRolled,
+            "window_closed_at_drain" -> quietAtDrain,
+            "stream_eq_batch_closed_form" -> eqBatch,
+            "taken_down_docs_readmittable" -> deadReadmit)
       },
       Some("""SELECT CAST(count(*) AS BIGINT) AS n_docs,
              |  CAST(count(CASE WHEN doc_id % 5 = 1 THEN 1 END) AS BIGINT)
@@ -7526,9 +7567,8 @@ object Queries {
         val emb = t(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
         val fit = emb.filter(col("vec_id") % 3 === 0)
-        val (c1, b1) = fitIvfPq(fit)
-        VectorStore.init(s, root, c1, b1)
-        VectorStore.admit(s, root, emb, "vec_id", "embedding", 0L)
+        val index = fitIvfPq(fit)
+        vectorStore(s, root, index, emb)
         val freshQuiet = !VectorStore.needsCompaction(s, root)
         VectorStore.admitDeletes(s, root,
           emb.filter(col("vec_id") % 10 === 2).select("vec_id"), "vec_id", 0L)
@@ -7546,17 +7586,14 @@ object Queries {
               maxPendingFraction = 0.05) == Some(2L)
             val quietAfter = !VectorStore.needsCompaction(s, root,
               maxPendingFraction = 0.05)
-            val purged = !java.nio.file.Files.exists(
-              java.nio.file.Paths.get(root, "gen=2", "deletes")) &&
+            val purged = noPendingDeletes(GenStore.genDir(root, 2L)) &&
               Tables.parquet(s, VectorStore.codedDir(root, 2L))
                 .filter(col("cid") % 10 === 2).count() == 0L
             (fired, quietAfter, purged, served())
           },
           {
             val clean = s"$base/clean"
-            VectorStore.init(s, clean, c1, b1)
-            VectorStore.admit(s, clean, emb.filter(col("vec_id") % 10 =!= 2),
-              "vec_id", "embedding", 0L)
+            vectorStore(s, clean, index, emb.filter(col("vec_id") % 10 =!= 2))
             searchRows(s, clean, q)
           })
         val stableAcrossFold = postFold == pending
@@ -7595,7 +7632,6 @@ object Queries {
       // the v2 coded fragments. Emitted rows are v2's BM25 top-15 over
       // the clean-corpus closed form.
       (s, d) => {
-        import graft.operators.GenStore
         val base = scratchDir("q180")
         val iroot = base + "/istore"
         val vroot = base + "/vstore"
@@ -7609,36 +7645,18 @@ object Queries {
         // slices the same checkpointed key set
         val (sigKeys, _) = Par.both(
           {
-            val keys = Dedup.minHashBandKeys(
-              docs.select(col("doc_id"), col("text")), "doc_id", "text",
-              n = 3, numHashes = 32, bands = 8, portableKeys = true)
-              .localCheckpoint()
-            KeySetStore.init(kroot)
-            Dedup.admitMinHashKeysBatch(keys, batchId = 0L, root = kroot)
+            val keys = signatureKeys(docs.select(col("doc_id"), col("text")))
+            signatureStore(kroot, keys)
             keys
           },
-          Par.both(
-            {
-              InvertedIndex.initStore(iroot)
-              admitDocs(s, toks, 0L, iroot)
-            },
-            {
-              val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
-              VectorStore.init(s, vroot, vc, vb)
-              VectorStore.admit(s, vroot, emb, "vec_id", "embedding", 0L)
-            }))
+          Par.both(indexStore(s, iroot, toks),
+            vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
         Manifest.init(mroot,
           Map("index" -> 1L, "vectors" -> 1L, "signatures" -> 1L))
-        def bmAt(v: Long) = InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(iroot, Manifest.resolve(mroot, v, "index")),
-            bm25Terms, 15)
-          .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+        def bmAt(v: Long) = bm25Rows(pinnedBm25(s, iroot, mroot, v))
         val preBm = bmAt(1L)
         // ROLL off the pinned generations (pure compactions, disjoint roots)
-        Par.all(Seq(
-          () => InvertedIndex.compactStore(s, iroot, expectedGen = 1L): Unit,
-          () => VectorStore.compactGen(s, vroot, expectedGen = 1L): Unit,
-          () => KeySetStore.compactStore(s, kroot, expectedGen = 1L): Unit))
+        fleetCompact(s, iroot, vroot, kroot, 1L)
         // the sweep, as a production scheduler would run it: one
         // generic needsCompaction/compactIfNeeded pass per store
         // (disjoint roots — the per-store ticks overlap)
@@ -7657,17 +7675,7 @@ object Queries {
         // caller, knows nothing is pending
         val quietOnClean = sweep().values.forall(_.isEmpty)
         // the takedown lands in the rolled generations
-        val deadDocs = docs.filter(col("doc_id") % 7 === 3)
-          .select(col("doc_id"), col("text"))
-        Par.all(Seq(
-          () => InvertedIndex.admitDeleteBatch(s, deadDocs.select("doc_id"),
-            "doc_id", 0L, iroot): Unit,
-          () => VectorStore.admitDeletes(s, vroot,
-            emb.filter(col("vec_id") % 7 === 3).select("vec_id"),
-            "vec_id", 0L): Unit,
-          () => Dedup.deleteMinHashKeysBatch(
-            sigKeys.filter(col("id") % 7 === 3), batchId = 0L,
-            root = kroot): Unit))
+        fleetTakedown(s, docs, emb, sigKeys, iroot, vroot, kroot)
         // next tick: all three fire, to generation 3
         val fired = sweep()
         val firedAll = fired.values.forall(_ == Some(3L))
@@ -7677,12 +7685,8 @@ object Queries {
           Map("index" -> 3L, "vectors" -> 3L, "signatures" -> 3L))
         val v1Stable = v2 == 2L && bmAt(1L) == preBm
         val vectorPurged = Tables.parquet(s, VectorStore.codedDir(vroot, 3L))
-          .filter(col("cid") % 7 === 3).isEmpty &&
-          !java.nio.file.Files.exists(
-            java.nio.file.Paths.get(vroot, "gen=3", "deletes"))
-        InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(iroot, Manifest.resolve(mroot, 2L, "index")),
-            bm25Terms, 15)
+          .filter(col("cid") % 7 === 3).isEmpty && noPendingDeletes(GenStore.genDir(vroot, 3L))
+        pinnedBm25(s, iroot, mroot, 2L)
           .withGates("tick_quiet_on_clean_stores" -> quietOnClean,
             "tick_fired_all_after_deletes" -> firedAll,
             "tick_quiet_after_purge" -> quietAfter,
@@ -7725,35 +7729,13 @@ object Queries {
         // slices the same checkpointed key set
         val (sigKeys, _) = Par.both(
           {
-            val keys = Dedup.minHashBandKeys(
-              docs.select(col("doc_id"), col("text")), "doc_id", "text",
-              n = 3, numHashes = 32, bands = 8, portableKeys = true)
-              .localCheckpoint()
-            KeySetStore.init(kroot)
-            Dedup.admitMinHashKeysBatch(keys, batchId = 0L, root = kroot)
+            val keys = signatureKeys(docs.select(col("doc_id"), col("text")))
+            signatureStore(kroot, keys)
             keys
           },
-          Par.both(
-            {
-              InvertedIndex.initStore(iroot)
-              admitDocs(s, tokenized(docs), 0L, iroot)
-            },
-            {
-              val (vc, vb) = fitIvfPq(emb, kmeansIters = 2, m = 8)
-              VectorStore.init(s, vroot, vc, vb)
-              VectorStore.admit(s, vroot, emb, "vec_id", "embedding", 0L)
-            }))
-        val deadDocs = docs.filter(col("doc_id") % 7 === 3)
-          .select(col("doc_id"), col("text"))
-        Par.all(Seq(
-          () => InvertedIndex.admitDeleteBatch(s, deadDocs.select("doc_id"),
-            "doc_id", 0L, iroot): Unit,
-          () => VectorStore.admitDeletes(s, vroot,
-            emb.filter(col("vec_id") % 7 === 3).select("vec_id"),
-            "vec_id", 0L): Unit,
-          () => Dedup.deleteMinHashKeysBatch(
-            sigKeys.filter(col("id") % 7 === 3), batchId = 0L,
-            root = kroot): Unit))
+          Par.both(indexStore(s, iroot, tokenized(docs)),
+            vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
+        fleetTakedown(s, docs, emb, sigKeys, iroot, vroot, kroot)
         InvertedIndex.maintenanceStatus(s, iroot)
           .withColumn("store", lit("index"))
           .unionByName(KeySetStore.maintenanceStatus(s, kroot)
@@ -8029,7 +8011,6 @@ object Queries {
       // the same batch split. Scale-invariant by construction: the
       // row counts depend on key/bin structure, not event volume.
       (s, d) => {
-        import graft.operators.GenStore
         val base = scratchDir("q185")
         val ev = t(s, d, "events")
         val sroot = s"$base/sketch"
@@ -8106,15 +8087,11 @@ object Queries {
         val root = scratchDir("q187") + "/istore"
         val docs = t(s, d, "documents")
         val toks = tokenized(docs)
-        InvertedIndex.initStore(root)
-        (0L to 2L).foreach { b =>
-          admitDocs(s, toks.filter(pmod(col("doc_id"), lit(3)) === b), b, root)
-        }
+        indexStore(s, root, (0L to 2L).map(b => toks.filter(pmod(col("doc_id"), lit(3)) === b)): _*)
         val gen2 = InvertedIndex.expireBatches(s, root, expectedGen = 1L,
           minRetainedBatch = 1L)
         // post-expiry serving, pinned before the re-admission probe
-        val served = InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15)
-          .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+        val served = bm25Rows(InvertedIndex.bm25SearchCurrent(s, root, bm25Terms, 15))
         val nSurv = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0).count()
         val statsShrunk = Tables.parquet(s,
             InvertedIndex.genDir(root, gen2) + "/stats")
@@ -8167,16 +8144,9 @@ object Queries {
         // ONE signature pass over both crawl batches (guide §1.2, the
         // q165 pattern) — admits, probes, and the replay attempt slice
         // this checkpointed key set
-        val sigKeys = Dedup.minHashBandKeys(
-          docs.filter(pmod(col("doc_id"), lit(3)) < 2), "doc_id", "text",
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
-          .localCheckpoint()
+        val sigKeys = signatureKeys(docs.filter(pmod(col("doc_id"), lit(3)) < 2))
         val oldKeys = sigKeys.filter(pmod(col("id"), lit(3)) === 0)
-        KeySetStore.init(root)
-        Dedup.admitMinHashKeysBatch(oldKeys, batchId = 0L, root = root)
-        Dedup.admitMinHashKeysBatch(
-          sigKeys.filter(pmod(col("id"), lit(3)) === 1),
-          batchId = 1L, root = root)
+        signatureStore(root, oldKeys, sigKeys.filter(pmod(col("id"), lit(3)) === 1))
         def probeOld() = Dedup.admitKeysAgainstMinHashStoreGen(
             old.select(col("doc_id").as("id")), oldKeys, root = root)
           .collect().toSeq.map(r => (r.getLong(0), r.getBoolean(2)))
@@ -8241,37 +8211,27 @@ object Queries {
         val deadPred = col("doc_id") % 4 >= 2 && col("doc_id") % 7 === 3
         val (ra, rb, twin, merged) =
           (s"$base/a", s"$base/b", s"$base/twin", s"$base/merged")
-        Seq(ra, rb, twin).foreach(InvertedIndex.initStore)
-        def bm(r: String) = InvertedIndex.bm25SearchCurrent(s, r,
-            bm25Terms, 15)
-          .collect().toSeq.map(x => (x.getLong(0), x.getDouble(1)))
+        def bm(r: String) = bm25Rows(InvertedIndex.bm25SearchCurrent(s, r, bm25Terms, 15))
+        def quarter(b: Long) = toks.filter(pmod(col("doc_id"), lit(4)) === b)
         // builder A, builder B, and the single-pipeline twin own disjoint
         // roots with zero coordination (the query's premise) — the merge
         // leg waits only on the builders while the twin runs through
         // (Par, guide §2.6); each store's internal batch order unchanged
         def mergedSection(): (Seq[(Long, Double)], Boolean) = {
           Par.both(
-            (0L to 1L).foreach { b =>
-              admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === b), b, ra)
-            },
+            indexStore(s, ra, quarter(0L), quarter(1L)),
             {
-              (0L to 1L).foreach { b =>
-                admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === b + 2), b, rb)
-              }
+              indexStore(s, rb, quarter(2L), quarter(3L))
               InvertedIndex.admitDeleteBatch(s,
                 docs.filter(deadPred).select("doc_id"), "doc_id", 0L, rb)
             })
           InvertedIndex.mergeStores(s, Seq(ra, rb), merged)
           val mergedBm = bm(merged)
-          val sealRefused = refuses("seal") {
-            admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === 0), 0L, merged)
-          }
+          val sealRefused = refuses("seal") { admitDocs(s, quarter(0L), 0L, merged) }
           (mergedBm, sealRefused)
         }
         def twinSection(): Seq[(Long, Double)] = {
-          (0L to 3L).foreach { b =>
-            admitDocs(s, toks.filter(pmod(col("doc_id"), lit(4)) === b), b, twin)
-          }
+          indexStore(s, twin, (0L to 3L).map(quarter): _*)
           InvertedIndex.admitDeleteBatch(s,
             docs.filter(deadPred).select("doc_id"), "doc_id", 0L, twin)
           bm(twin)
@@ -8315,22 +8275,18 @@ object Queries {
         val probe = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
         val (ra, rb, twin, merged) =
           (s"$base/a", s"$base/b", s"$base/twin", s"$base/merged")
-        Seq(ra, rb, twin).foreach(KeySetStore.init)
         // ONE signature pass for all three partitions (guide §1.2): the
         // q165 pattern — each admit/probe below slices this checkpointed
-        // key set by doc id; slices are bit-identical to per-partition
-        // derivation because the derivation is row-local per doc.
-        val keys = Dedup.minHashBandKeys(docs, "doc_id", "text", n = 3,
-          numHashes = 32, bands = 8, portableKeys = true).localCheckpoint()
+        // key set by doc id
+        val keys = signatureKeys(docs)
         val kA = keys.filter(pmod(col("id"), lit(3)) === 0)
         val kB = keys.filter(pmod(col("id"), lit(3)) === 1)
         val kP = keys.filter(pmod(col("id"), lit(3)) === 2)
         val probeIds = probe.select(col("doc_id").as("id"))
-        Dedup.admitMinHashKeysBatch(kA, batchId = 0L, root = ra)
-        Dedup.admitMinHashKeysBatch(kB, batchId = 0L, root = rb)
+        signatureStore(ra, kA)
+        signatureStore(rb, kB)
         KeySetStore.mergeStores(s, Seq(ra, rb), merged)
-        Dedup.admitMinHashKeysBatch(kA, batchId = 0L, root = twin)
-        Dedup.admitMinHashKeysBatch(kB, batchId = 1L, root = twin)
+        signatureStore(twin, kA, kB)
         def dec(r: String) = Dedup.admitKeysAgainstMinHashStoreGen(
             probeIds, kP, r)
           .collect().toSeq.map(x => (x.getLong(0), x.getBoolean(2)))
@@ -8378,10 +8334,9 @@ object Queries {
         val base = scratchDir("q192")
         val emb = t(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
-        val (c1, b1) = fitIvfPq(emb.filter(col("vec_id") % 3 === 0))
+        val index = fitIvfPq(emb.filter(col("vec_id") % 3 === 0))
         val (ra, rb, twin, merged) =
           (s"$base/a", s"$base/b", s"$base/twin", s"$base/merged")
-        Seq(ra, rb, twin).foreach(r => VectorStore.init(s, r, c1, b1))
         val pa = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
         val pb = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
         val deadIds = emb.filter(pmod(col("vec_id"), lit(2)) === 1 &&
@@ -8391,8 +8346,8 @@ object Queries {
         // jobs overlap (Par, guide §2.6); each store's internal batch order
         // is unchanged.
         Par.both(
-          VectorStore.admit(s, ra, pa, "vec_id", "embedding", 0L),
-          { VectorStore.admit(s, rb, pb, "vec_id", "embedding", 0L)
+          vectorStore(s, ra, index, pa),
+          { vectorStore(s, rb, index, pb)
             VectorStore.admitDeletes(s, rb, deadIds, "vec_id", 0L) })
         def served(r: String) = storeSearch(s, r, q)
           .collect().toSeq
@@ -8408,15 +8363,12 @@ object Queries {
           VectorStore.compactGen(s, merged, expectedGen = 1L)
           val purged = Tables.parquet(s, VectorStore.codedDir(merged, 2L))
             .join(deadIds.withColumnRenamed("vec_id", "cid"), Seq("cid"),
-              "left_semi").isEmpty &&
-            !java.nio.file.Files.exists(
-              java.nio.file.Paths.get(merged, "gen=2", "deletes"))
+              "left_semi").isEmpty && noPendingDeletes(GenStore.genDir(merged, 2L))
           val stableAcrossFold = served(merged) == pending
           (pending, purged, stableAcrossFold)
         }
         def twinSection(): Seq[(Long, Long, Long, Double)] = {
-          VectorStore.admit(s, twin, pa, "vec_id", "embedding", 0L)
-          VectorStore.admit(s, twin, pb, "vec_id", "embedding", 1L)
+          vectorStore(s, twin, index, pa, pb)
           VectorStore.admitDeletes(s, twin, deadIds, "vec_id", 0L)
           served(twin)
         }
@@ -8507,10 +8459,10 @@ object Queries {
             "event_type")
           .select(col("event_type"), col("freq"), col("p50"), col("p95"),
             (abs(col("distinct_est") - col("n_exact")).cast("double")
-              <= col("n_exact") * 0.05).as("sketch_within_5pct"),
-            lit(hhEq).as("freq_merged_eq_single_pipeline"),
-            lit(qEq).as("quantile_merged_eq_single_pipeline"),
-            lit(skEq).as("sketch_merged_eq_single_pipeline"))
+              <= col("n_exact") * 0.05).as("sketch_within_5pct"))
+          .withGates("freq_merged_eq_single_pipeline" -> hhEq,
+            "quantile_merged_eq_single_pipeline" -> qEq,
+            "sketch_merged_eq_single_pipeline" -> skEq)
           .orderBy(col("event_type"))
       },
       Some("""WITH c AS (
@@ -8553,7 +8505,6 @@ object Queries {
       // survives v2's coded fragments. Emitted rows are v2's BM25
       // top-15 over the clean-corpus closed form the oracle recomputes.
       (s, d) => {
-        import graft.operators.GenStore
         val base = scratchDir("q194")
         val docs = t(s, d, "documents")
         val emb = t(s, d, "embeddings")
@@ -8563,12 +8514,8 @@ object Queries {
         // signature pass runs ONCE for both fleets AND the takedown (guide
         // §1.2, the q165 pattern): admits and the delete below slice the
         // checkpointed key set by doc id.
-        val ((vc, vb), sigKeys) = Par.both(
-          fitIvfPq(emb, kmeansIters = 2, m = 8),
-          Dedup.minHashBandKeys(
-            docs.select(col("doc_id"), col("text")), "doc_id", "text",
-            n = 3, numHashes = 32, bands = 8, portableKeys = true)
-            .localCheckpoint())
+        val (index, sigKeys) = Par.both(fitIvfPq(emb, kmeansIters = 2, m = 8),
+          signatureKeys(docs.select(col("doc_id"), col("text"))))
         // two builder fleets, halves of the corpus, no coordination — and
         // inside each fleet the three families land in disjoint roots, so
         // both levels overlap (the query's zero-coordination premise made
@@ -8577,22 +8524,9 @@ object Queries {
           val (i, k, v) =
             (s"$base/$tag/i", s"$base/$tag/k", s"$base/$tag/v")
           Par.all(Seq(
-            () => {
-              InvertedIndex.initStore(i)
-              admitDocs(s, toks.filter(pmod(col("doc_id"), lit(2)) === h), 0L, i)
-            },
-            () => {
-              KeySetStore.init(k)
-              Dedup.admitMinHashKeysBatch(
-                sigKeys.filter(pmod(col("id"), lit(2)) === h),
-                batchId = 0L, root = k)
-            },
-            () => {
-              VectorStore.init(s, v, vc, vb)
-              VectorStore.admit(s, v,
-                emb.filter(pmod(col("vec_id"), lit(2)) === h),
-                "vec_id", "embedding", 0L)
-            }))
+            () => indexStore(s, i, toks.filter(pmod(col("doc_id"), lit(2)) === h)),
+            () => signatureStore(k, sigKeys.filter(pmod(col("id"), lit(2)) === h)),
+            () => vectorStore(s, v, index, emb.filter(pmod(col("vec_id"), lit(2)) === h))))
           (i, k, v)
         }
         val ((ia, ka, va), (ib, kb, vbr)) =
@@ -8606,17 +8540,11 @@ object Queries {
         val mroot = s"$base/manifest"
         Manifest.init(mroot,
           Map("index" -> 1L, "vectors" -> 1L, "signatures" -> 1L))
-        def bmAt(ver: Long) = InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(im, Manifest.resolve(mroot, ver, "index")),
-            bm25Terms, 15)
-          .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+        def bmAt(ver: Long) = bm25Rows(pinnedBm25(s, im, mroot, ver))
         val preBm = bmAt(1L)
         // q180 discipline on the MERGED stores: roll off the pinned gens
         // (three disjoint roots — generation rolls overlap, §2.6)
-        Par.all(Seq(
-          () => InvertedIndex.compactStore(s, im, expectedGen = 1L): Unit,
-          () => KeySetStore.compactStore(s, km, expectedGen = 1L): Unit,
-          () => VectorStore.compactGen(s, vm, expectedGen = 1L): Unit))
+        fleetCompact(s, im, vm, km, 1L)
         val frac = 0.02
         def sweep(): Map[String, Option[Long]] = {
           val r = Par.all(Seq(
@@ -8629,27 +8557,14 @@ object Queries {
           Map("index" -> r(0), "vectors" -> r(1), "signatures" -> r(2))
         }
         val quietOnClean = sweep().values.forall(_.isEmpty)
-        val deadDocs = docs.filter(col("doc_id") % 7 === 3)
-          .select(col("doc_id"), col("text"))
-        Par.all(Seq(
-          () => InvertedIndex.admitDeleteBatch(s, deadDocs.select("doc_id"),
-            "doc_id", 0L, im): Unit,
-          () => VectorStore.admitDeletes(s, vm,
-            emb.filter(col("vec_id") % 7 === 3).select("vec_id"),
-            "vec_id", 0L): Unit,
-          () => Dedup.deleteMinHashKeysBatch(
-            sigKeys.filter(col("id") % 7 === 3), batchId = 0L, root = km): Unit))
+        fleetTakedown(s, docs, emb, sigKeys, im, vm, km)
         val firedAll = sweep().values.forall(_ == Some(3L))
         val v2 = Manifest.publish(mroot, expectedVersion = 1L,
           Map("index" -> 3L, "vectors" -> 3L, "signatures" -> 3L))
         val v1Stable = v2 == 2L && bmAt(1L) == preBm
         val vectorPurged = Tables.parquet(s, VectorStore.codedDir(vm, 3L))
-          .filter(col("cid") % 7 === 3).isEmpty &&
-          !java.nio.file.Files.exists(
-            java.nio.file.Paths.get(vm, "gen=3", "deletes"))
-        InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(im, Manifest.resolve(mroot, 2L, "index")),
-            bm25Terms, 15)
+          .filter(col("cid") % 7 === 3).isEmpty && noPendingDeletes(GenStore.genDir(vm, 3L))
+        pinnedBm25(s, im, mroot, 2L)
           .withGates("sweep_quiet_on_clean_merged_stores" -> quietOnClean,
             "sweep_fired_all_after_deletes" -> firedAll,
             "v1_pre_takedown_stable" -> v1Stable, "vector_purged_at_v2" -> vectorPurged)
@@ -8683,15 +8598,9 @@ object Queries {
         val mroot = scratchDir("q195m") + "/manifest"
         val docs = t(s, d, "documents")
         val toks = tokenized(docs)
-        InvertedIndex.initStore(root)
-        (0L to 2L).foreach { b =>
-          admitDocs(s, toks.filter(pmod(col("doc_id"), lit(3)) === b), b, root)
-        }
+        indexStore(s, root, (0L to 2L).map(b => toks.filter(pmod(col("doc_id"), lit(3)) === b)): _*)
         Manifest.init(mroot, Map("index" -> 1L))
-        def bmAt(ver: Long) = InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(root, Manifest.resolve(mroot, ver, "index")),
-            bm25Terms, 15)
-          .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+        def bmAt(ver: Long) = bm25Rows(pinnedBm25(s, root, mroot, ver))
         val preBm = bmAt(1L)
         val gen2 = InvertedIndex.expireBatches(s, root, expectedGen = 1L,
           minRetainedBatch = 1L)
@@ -8707,9 +8616,7 @@ object Queries {
         val droppedAfterRetire = Manifest.vacuumStore(mroot, "index", root,
           keepLast = 1) == Seq(1L)
         val v2Unmoved = bmAt(2L) == v2Pre
-        InvertedIndex.bm25SearchStore(s,
-            InvertedIndex.genDir(root, Manifest.resolve(mroot, 2L, "index")),
-            bm25Terms, 15)
+        pinnedBm25(s, root, mroot, 2L)
           .withGates("v1_full_history_stable" -> v1Stable,
             "pinned_gen_vacuum_refused" -> pinHolds,
             "dropped_after_manifest_retire" -> droppedAfterRetire,
@@ -8747,8 +8654,6 @@ object Queries {
       // the merged store — the q191 closed form, recomputed by the
       // oracle from the portable-md5 keys of all three admitted phases.
       (s, d) => {
-        import graft.operators.GenStore
-        import graft.streaming.EventStreams
         val base = scratchDir("q196")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         val pa = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -8762,19 +8667,14 @@ object Queries {
         // its micro-batches' keys itself — that machinery is the thing
         // under test. The twin admits every phase into its own root, so
         // its whole build overlaps the live flow (Par, §2.6).
-        val sigKeys = Dedup.minHashBandKeys(docs, "doc_id", "text",
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
-          .localCheckpoint()
+        val sigKeys = signatureKeys(docs)
         val probeIds = probe.select(col("doc_id").as("id"))
         val probeKeys = sigKeys.filter(pmod(col("id"), lit(4)) === 3)
         def dec(r: String) = Dedup.admitKeysAgainstMinHashStoreGen(
             probeIds, probeKeys, root = r)
           .collect().toSeq.map(x => (x.getLong(0), x.getBoolean(2)))
-        KeySetStore.init(rb)
         // builder B finished before the tick
-        Dedup.admitMinHashKeysBatch(
-          sigKeys.filter(pmod(col("id"), lit(4)) === 1),
-          batchId = 0L, root = rb)
+        signatureStore(rb, sigKeys.filter(pmod(col("id"), lit(4)) === 1))
         // builder A ingests phase-1 crawl files as a LIVE stream
         val feed = s"$base/feed"
         pa.repartition(2).write.parquet(feed)
@@ -8807,12 +8707,8 @@ object Queries {
           }
           // single-pipeline twin over every phase
           def twinSection(): Seq[(Long, Boolean)] = {
-            KeySetStore.init(twin)
-            (0L to 2L).foreach { b =>
-              Dedup.admitMinHashKeysBatch(
-                sigKeys.filter(pmod(col("id"), lit(4)) === b),
-                batchId = b, root = twin)
-            }
+            signatureStore(twin,
+              (0L to 2L).map(b => sigKeys.filter(pmod(col("id"), lit(4)) === b)): _*)
             dec(twin)
           }
           val ((fenceNamed, repointed), twinDec) =
@@ -8886,8 +8782,6 @@ object Queries {
       // Emitted rows are the merged current snapshot — the oracle
       // recomputes every surviving key's (bal, seq) closed-form.
       (s, d) => {
-        import graft.operators.GenStore
-        import graft.streaming.EventStreams
         val base = scratchDir("q197")
         val cust = t(s, d, "customer")
           .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
@@ -9010,7 +8904,6 @@ object Queries {
       // in closed form over customer.
       (s, d) => {
         import s.implicits._
-        import graft.streaming.EventStreams
         val dir = scratchDir("q198") + "/cdc"
         val cust = t(s, d, "customer")
           .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
@@ -9222,80 +9115,39 @@ object Queries {
       // identically. The oracle states the mutated corpus in closed
       // form and the posting lists over it (q142's shape).
       (s, d) => {
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q201")
         val (cdc, root, fresh) = (s"$base/cdc", s"$base/idx", s"$base/fresh")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
-        val prep: DataFrame => DataFrame = tokenized
-        def tick() = CdcSync.syncIndexFromCdc(s, cdc, root, "doc_id", "tk",
-          IndexBucket, prep)
+        def tick() = syncIndex(s, cdc, root)
         require(tick() == 0L, "bootstrap tick must land at v0")
-        // v1: first re-crawl (U, adds two tokens to %10==0)
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 10 === 0)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" graftsync graftsync")).as("text"),
-              lit(1L).as("seq"), lit("U").as("op")),
-          Seq("doc_id"), "seq", "op")
-        require(tick() == 1L, "tick must advance to v1")
+        // v1: first re-crawl (U, adds two tokens to %10==0);
         // v2: new crawl (I, shifted ids) + takedowns (D, %10==7);
         // v3: second re-crawl REPLACES v1's versions for %20==0
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 10 === 2)
-            .select((col("doc_id") + 1000000L).as("doc_id"),
-              concat(lit("graftsync "), col("text")).as("text"),
-              lit(1L).as("seq"), lit("I").as("op"))
-            .unionByName(docs.filter(col("doc_id") % 10 === 7)
-              .select(col("doc_id"), col("text"), lit(1L).as("seq"),
-                lit("D").as("op"))),
-          Seq("doc_id"), "seq", "op")
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 20 === 0)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" graftsync")).as("text"),
-              lit(2L).as("seq"), lit("U").as("op")),
-          Seq("doc_id"), "seq", "op")
+        val Seq(v1, v2, v3) = cdcMutations(docs)
+        publishDocs(s, cdc, v1)
+        require(tick() == 1L, "tick must advance to v1")
+        publishDocs(s, cdc, v2)
+        publishDocs(s, cdc, v3)
         require(tick() == 3L, "one tick must cover the (1, 3] window")
         require(tick() == 3L, "a no-op tick must not move the watermark")
-        val terms = Seq("graftsync", "join", "vector")
-        def surfaces(r: String) = (
-          InvertedIndex.lookupCurrent(s, r, terms)
-            .select(col("tok"), col("n_docs"),
-              array_join(transform(col("postings"), _.cast("string")), ",")
-                .as("postings"))
-            .orderBy("tok").collect().toSeq,
-          InvertedIndex.bm25SearchCurrent(s, r, terms, 10).collect().toSeq)
         // the fresh one-shot build lands in its own root — it (and its
         // surface read) overlaps the synced store's surface read (Par,
         // §2.6); the fresh store is then immutable, so its surfaces are
         // read ONCE and reused for the post-compaction gate (§1.2)
-        val (syncedSurf, freshSurf) = Par.both(
-          surfaces(root),
-          {
-            InvertedIndex.initStore(fresh)
-            InvertedIndex.admitBatch(s,
-              prep(EventStreams.currentCdcSnapshot(s, cdc)), "doc_id", "tk",
-              IndexBucket, batchId = 0L, root = fresh)
-            surfaces(fresh)
-          })
+        val (syncedSurf, freshSurf) = Par.both(indexSurfaces(s, root),
+          { freshIndex(s, cdc, fresh); indexSurfaces(s, fresh) })
         require(syncedSurf == freshSurf,
           "synced store diverges from a fresh build of the mutated corpus")
         InvertedIndex.compactStore(s, root, InvertedIndex.currentGen(root))
-        require(surfaces(root) == freshSurf,
+        require(indexSurfaces(s, root) == freshSurf,
           "post-compaction surfaces diverge")
         val gen = InvertedIndex.genDir(root, InvertedIndex.currentGen(root))
-        require(!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(gen, "deletes")),
-          "compaction left pending deletes")
+        require(noPendingDeletes(gen), "compaction left pending deletes")
         require(Tables.parquet(s, s"$gen/doclens").groupBy("doc_id").count()
             .filter(col("count") > 1).isEmpty,
           "a doc survives in more than one physical copy")
-        InvertedIndex.lookupCurrent(s, root, terms)
-          .select(col("tok"), col("n_docs"),
-            array_join(transform(col("postings"), _.cast("string")), ",")
-              .as("postings"))
-          .orderBy(col("tok"))
+        postingsFrame(InvertedIndex.lookupCurrent(s, root, syncTerms))
       },
       cdcSyncLookupOracle),
 
@@ -9319,16 +9171,11 @@ object Queries {
       // compaction folds the upsert history physically. The oracle
       // states the served id set per modulus class in closed form.
       (s, d) => {
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q202")
         val (cdc, root, twin) = (s"$base/cdc", s"$base/vec", s"$base/twin")
         val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         EventStreams.initCdcState(emb.withColumn("seq", lit(0L)), cdc)
-        val vprep: DataFrame => DataFrame =
-          _.select(col("vec_id"), col("embedding"))
-        def tick() = CdcSync.syncVectorsFromCdc(s, cdc, root, "vec_id",
-          "embedding", vprep, nlist = 16, kmeansIters = 5, m = 16,
-          kcode = 16, pqIters = 5)
+        def tick() = syncVectors(s, cdc, root, "vec_id")
         require(tick() == 0L, "bootstrap tick must land at v0")
         // one batch: re-embeds (U, all components shifted), new docs
         // (I, shifted ids), takedowns (D)
@@ -9346,11 +9193,8 @@ object Queries {
           Seq("vec_id"), "seq", "op")
         require(tick() == 1L, "tick must advance to v1")
         val gen = VectorStore.currentGen(root)
-        val (cents, books) = VectorStore.loadGenIndex(s, root, gen)
-        VectorStore.init(s, twin, cents, books)
-        VectorStore.admit(s, twin,
-          vprep(EventStreams.currentCdcSnapshot(s, cdc)), "vec_id",
-          "embedding", batchId = 0L)
+        vectorStore(s, twin, VectorStore.loadGenIndex(s, root, gen),
+          EventStreams.currentCdcSnapshot(s, cdc).select(col("vec_id"), col("embedding")))
         def vecs(r: String) = VectorStore.vectors(s, r, "vec_id", "embedding")
         def setEq(a: DataFrame, b: DataFrame) =
           Checks.multisetEq(a, b)
@@ -9375,8 +9219,7 @@ object Queries {
           "an updated embedding must retrieve its new version at top-1")
         VectorStore.compactGen(s, root, gen)
         require(setEq(vecs(root), vecs(twin)), "post-compaction divergence")
-        require(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-            s"$root/gen=${VectorStore.currentGen(root)}/deletes")),
+        require(noPendingDeletes(GenStore.genDir(root, VectorStore.currentGen(root))),
           "compaction left pending deletes")
         vecs(root).select((col("vec_id") % 5).cast("long").as("klass"))
           .groupBy(col("klass"))
@@ -9411,34 +9254,17 @@ object Queries {
       // scoped deletes + fragment growth crossed the dials) and is
       // QUIET at drain. Output: the shared q201 closed form.
       (s, d) => {
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q203")
         val (cdc, root, fresh, feed) =
           (s"$base/cdc", s"$base/idx", s"$base/fresh", s"$base/feed")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
-        val prep: DataFrame => DataFrame = tokenized
-        val b1 = docs.filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" graftsync graftsync")).as("text"),
-            lit(1L).as("seq"), lit("U").as("op"))
-        val b2 = docs.filter(col("doc_id") % 10 === 2)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat(lit("graftsync "), col("text")).as("text"),
-            lit(1L).as("seq"), lit("I").as("op"))
-          .unionByName(docs.filter(col("doc_id") % 10 === 7)
-            .select(col("doc_id"), col("text"), lit(1L).as("seq"),
-              lit("D").as("op")))
-        val b3 = docs.filter(col("doc_id") % 20 === 0)
-          .select(col("doc_id"),
-            concat(col("text"), lit(" graftsync")).as("text"),
-            lit(2L).as("seq"), lit("U").as("op"))
-        Seq(b1, b2, b3).foreach(
-          _.coalesce(1).write.mode("append").parquet(feed))
-        val stream = s.readStream.schema(b1.schema)
+        val batches = cdcMutations(docs)
+        batches.foreach(_.coalesce(1).write.mode("append").parquet(feed))
+        val stream = s.readStream.schema(batches.head.schema)
           .option("maxFilesPerTrigger", 1).parquet(feed)
         val q = CdcSync.cdcIngestSyncing(stream, cdc, root, "doc_id",
-          "tk", IndexBucket, prep, s"$base/_cp",
+          "tk", IndexBucket, tokenized, s"$base/_cp",
           maxFragments = 2, maxPendingFraction = 0.01)
         try q.processAllAvailable() finally q.stop()
         val atCurrent = CdcSync.appliedState(root).exists(_._1 ==
@@ -9449,32 +9275,13 @@ object Queries {
         require(!InvertedIndex.needsCompaction(s, root,
             maxFragments = 2, maxPendingFraction = 0.01),
           "the policy is not quiet at drain")
-        val terms = Seq("graftsync", "join", "vector")
-        def surfaces(r: String) = (
-          InvertedIndex.lookupCurrent(s, r, terms)
-            .select(col("tok"), col("n_docs"),
-              array_join(transform(col("postings"), _.cast("string")), ",")
-                .as("postings"))
-            .orderBy("tok").collect().toSeq,
-          InvertedIndex.bm25SearchCurrent(s, r, terms, 10).collect().toSeq)
         // fresh one-shot build in its own root || the drained store's
         // surface read (Par, §2.6)
-        val (syncedSurf, freshSurf) = Par.both(
-          surfaces(root),
-          {
-            InvertedIndex.initStore(fresh)
-            InvertedIndex.admitBatch(s,
-              prep(EventStreams.currentCdcSnapshot(s, cdc)), "doc_id", "tk",
-              IndexBucket, batchId = 0L, root = fresh)
-            surfaces(fresh)
-          })
+        val (syncedSurf, freshSurf) = Par.both(indexSurfaces(s, root),
+          { freshIndex(s, cdc, fresh); indexSurfaces(s, fresh) })
         require(syncedSurf == freshSurf,
           "streamed-synced store diverges from a fresh build")
-        InvertedIndex.lookupCurrent(s, root, terms)
-          .select(col("tok"), col("n_docs"),
-            array_join(transform(col("postings"), _.cast("string")), ",")
-              .as("postings"))
-          .orderBy(col("tok"))
+        postingsFrame(InvertedIndex.lookupCurrent(s, root, syncTerms))
       },
       cdcSyncLookupOracle),
 
@@ -9497,7 +9304,6 @@ object Queries {
       // at #1 — the update is visible through BOTH modalities. The
       // oracle states the final corpus cardinalities in closed form.
       (s, d) => {
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q204")
         val (cdc, iroot, vroot) = (s"$base/cdc", s"$base/idx", s"$base/vec")
         val (ifresh, vtwin) = (s"$base/ifresh", s"$base/vtwin")
@@ -9506,20 +9312,14 @@ object Queries {
           .select(col("vec_id").as("doc_id"), col("embedding"))
         val corpus = docs.join(emb, "doc_id")
         EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), cdc)
-        val iprep: DataFrame => DataFrame = tokenized
-        val vprep: DataFrame => DataFrame =
-          _.select(col("doc_id"), col("embedding"))
-        def itick() = CdcSync.syncIndexFromCdc(s, cdc, iroot, "doc_id",
-          "tk", IndexBucket, iprep)
-        def vtick() = CdcSync.syncVectorsFromCdc(s, cdc, vroot, "doc_id",
-          "embedding", vprep, nlist = 16, kmeansIters = 5, m = 16,
-          kcode = 16, pqIters = 5)
+        def itick() = syncIndex(s, cdc, iroot)
+        def vtick() = syncVectors(s, cdc, vroot, "doc_id")
         // the two synced stores live in disjoint roots and only READ the
         // shared CDC store — their ticks overlap (Par, guide §2.6)
         Par.both(itick(), vtick())
         // one mixed change batch: re-crawl + re-embed (U), new docs
         // (I), takedowns (D)
-        EventStreams.publishCdcBatch(s, cdc,
+        publishDocs(s, cdc,
           corpus.filter(col("doc_id") % 5 === 0)
             .select(col("doc_id"),
               // doc 0's re-crawl carries a UNIQUE term so the hybrid
@@ -9534,8 +9334,7 @@ object Queries {
                 col("embedding"), lit(1L).as("seq"), lit("I").as("op")))
             .unionByName(corpus.filter(col("doc_id") % 5 === 3)
               .select(col("doc_id"), col("text"), col("embedding"),
-                lit(1L).as("seq"), lit("D").as("op"))),
-          Seq("doc_id"), "seq", "op")
+                lit(1L).as("seq"), lit("D").as("op"))))
         val (itickV1, vtickV1) = Par.both(itick(), vtick())
         require(itickV1 == 1L && vtickV1 == 1L,
           "both sync ticks must land at v1")
@@ -9555,16 +9354,13 @@ object Queries {
         // under the synced store's own artifact)
         val fin = EventStreams.currentCdcSnapshot(s, cdc)
         Par.both(
-          {
-            InvertedIndex.initStore(ifresh)
-            InvertedIndex.admitBatch(s, iprep(fin), "doc_id", "tk",
-              IndexBucket, batchId = 0L, root = ifresh)
-          },
+          indexStore(s, ifresh, tokenized(fin)),
           {
             val (cents, books) = VectorStore.loadGenIndex(s, vroot,
               VectorStore.currentGen(vroot))
             VectorStore.init(s, vtwin, cents, books)
-            VectorStore.admit(s, vtwin, vprep(fin), "doc_id", "embedding", 0L)
+            VectorStore.admit(s, vtwin, fin.select(col("doc_id"), col("embedding")),
+              "doc_id", "embedding", 0L)
           })
         // the hybrid probe: an updated doc's NEW form through both
         // modalities — its re-crawled term for BM25, its re-embedded
@@ -9633,19 +9429,13 @@ object Queries {
       // corpus. The oracle states the final posting lists in closed
       // form across the whole mutation ledger.
       (s, d) => {
-        import graft.operators.GenStore
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q205")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val prep: DataFrame => DataFrame = tokenized
         // two pipelines on disjoint key partitions
         val (cdcA, cdcB, idxA, idxB) =
           (s"$base/cdcA", s"$base/cdcB", s"$base/idxA", s"$base/idxB")
         val (mcdc, midx, fresh) =
           (s"$base/mcdc", s"$base/midx", s"$base/fresh")
-        def tick(cdc: String, root: String) =
-          CdcSync.syncIndexFromCdc(s, cdc, root, "doc_id", "tk",
-            IndexBucket, prep)
         // the two pipelines own disjoint (cdc, index) roots and key
         // partitions — the query's own fleet premise — so their whole
         // pre-cut life (bootstrap, change batch, sync tick, checkpoint)
@@ -9655,27 +9445,16 @@ object Queries {
             changes: DataFrame): Long = {
           EventStreams.initCdcState(docs.filter(col("doc_id") % 2 === keyHalf)
             .withColumn("seq", lit(0L)), cdc)
-          tick(cdc, root)
-          EventStreams.publishCdcBatch(s, cdc, changes,
-            Seq("doc_id"), "seq", "op")
-          val v = tick(cdc, root)
+          syncIndex(s, cdc, root)
+          publishDocs(s, cdc, changes)
+          val v = syncIndex(s, cdc, root)
           EventStreams.checkpointCdc(s, cdc)
           v
         }
         val (vA, vB) = Par.both(
-          pipeline(cdcA, idxA, 0L,
-            docs.filter(col("doc_id") % 10 === 0)
-              .select(col("doc_id"),
-                concat(col("text"), lit(" graftsync")).as("text"),
-                lit(1L).as("seq"), lit("U").as("op"))),
+          pipeline(cdcA, idxA, 0L, cdcUpserts(docs, 10, " graftsync", 1L)),
           pipeline(cdcB, idxB, 1L,
-            docs.filter(col("doc_id") % 10 === 3)
-              .select((col("doc_id") + 1000000L).as("doc_id"),
-                concat(lit("graftsync "), col("text")).as("text"),
-                lit(1L).as("seq"), lit("I").as("op"))
-              .unionByName(docs.filter(col("doc_id") % 10 === 7)
-                .select(col("doc_id"), col("text"), lit(1L).as("seq"),
-                  lit("D").as("op")))))
+            cdcInserts(docs, 3).unionByName(cdcDeletes(docs, 7))))
         require(vA == 1L && vB == 1L, "pipeline ticks must land at v1")
         // the cut: quiesce, merge both layers, rebind, retire-ready
         GenStore.quiesce(cdcA, mcdc); GenStore.quiesce(cdcB, mcdc)
@@ -9694,43 +9473,17 @@ object Queries {
         CdcSync.rebind(mcdc, midx, 0L)
         // post-merge: one change batch across the old partition
         // boundary, one ordinary tick against the merged pair
-        EventStreams.publishCdcBatch(s, mcdc,
-          docs.filter(col("doc_id") % 20 === 0)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" graftsync graftsync")).as("text"),
-              lit(2L).as("seq"), lit("U").as("op"))
-            .unionByName(docs.filter(col("doc_id") % 10 === 9)
-              .select(col("doc_id"), col("text"), lit(1L).as("seq"),
-                lit("D").as("op"))),
-          Seq("doc_id"), "seq", "op")
-        require(tick(mcdc, midx) == 1L,
+        publishDocs(s, mcdc, cdcUpserts(docs, 20, " graftsync graftsync", 2L)
+          .unionByName(cdcDeletes(docs, 9)))
+        require(syncIndex(s, mcdc, midx) == 1L,
           "the post-merge tick must land at the merged clock's v1")
-        val terms = Seq("graftsync", "join", "vector")
-        def surfaces(r: String) = (
-          InvertedIndex.lookupCurrent(s, r, terms)
-            .select(col("tok"), col("n_docs"),
-              array_join(transform(col("postings"), _.cast("string")), ",")
-                .as("postings"))
-            .orderBy("tok").collect().toSeq,
-          InvertedIndex.bm25SearchCurrent(s, r, terms, 10).collect().toSeq)
         // fresh one-shot build in its own root || the merged store's
         // surface read (Par, §2.6)
-        val (mergedSurf, freshSurf) = Par.both(
-          surfaces(midx),
-          {
-            InvertedIndex.initStore(fresh)
-            InvertedIndex.admitBatch(s,
-              prep(EventStreams.currentCdcSnapshot(s, mcdc)), "doc_id", "tk",
-              IndexBucket, batchId = 0L, root = fresh)
-            surfaces(fresh)
-          })
+        val (mergedSurf, freshSurf) = Par.both(indexSurfaces(s, midx),
+          { freshIndex(s, mcdc, fresh); indexSurfaces(s, fresh) })
         require(mergedSurf == freshSurf,
           "the federated synced index diverges from a fresh build")
-        InvertedIndex.lookupCurrent(s, midx, terms)
-          .select(col("tok"), col("n_docs"),
-            array_join(transform(col("postings"), _.cast("string")), ",")
-              .as("postings"))
-          .orderBy(col("tok"))
+        postingsFrame(InvertedIndex.lookupCurrent(s, midx, syncTerms))
       },
       Some("""WITH mut AS (
              |  SELECT doc_id, CASE
@@ -9769,7 +9522,6 @@ object Queries {
       // fragment counts from the tick structure (a pure-D window
       // admits NO data batch), pending rows = the changed-key counts.
       (s, d) => {
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q206")
         val (cdc, iroot, vroot) = (s"$base/cdc", s"$base/idx", s"$base/vec")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
@@ -9777,29 +9529,21 @@ object Queries {
           .select(col("vec_id").as("doc_id"), col("embedding"))
         val corpus = docs.join(emb, "doc_id")
         EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), cdc)
-        val iprep: DataFrame => DataFrame = tokenized
-        val vprep: DataFrame => DataFrame =
-          _.select(col("doc_id"), col("embedding"))
-        def itick() = CdcSync.syncIndexFromCdc(s, cdc, iroot, "doc_id",
-          "tk", IndexBucket, iprep)
-        def vtick() = CdcSync.syncVectorsFromCdc(s, cdc, vroot, "doc_id",
-          "embedding", vprep, nlist = 16, kmeansIters = 5, m = 16,
-          kcode = 16, pqIters = 5)
+        def itick() = syncIndex(s, cdc, iroot)
+        def vtick() = syncVectors(s, cdc, vroot, "doc_id")
         // disjoint synced roots, shared CDC read — ticks overlap (Par, §2.6)
         Par.both(itick(), vtick())
-        EventStreams.publishCdcBatch(s, cdc,
+        publishDocs(s, cdc,
           corpus.filter(col("doc_id") % 10 === 0)
             .select(col("doc_id"),
               concat(col("text"), lit(" graftsync")).as("text"),
               reverse(col("embedding")).as("embedding"),
-              lit(1L).as("seq"), lit("U").as("op")),
-          Seq("doc_id"), "seq", "op")
+              lit(1L).as("seq"), lit("U").as("op")))
         Par.both(itick(), vtick())
-        EventStreams.publishCdcBatch(s, cdc,
+        publishDocs(s, cdc,
           corpus.filter(col("doc_id") % 10 === 7)
             .select(col("doc_id"), col("text"), col("embedding"),
-              lit(1L).as("seq"), lit("D").as("op")),
-          Seq("doc_id"), "seq", "op")
+              lit(1L).as("seq"), lit("D").as("op")))
         itick() // the vector store is left one version behind
         CdcSync.syncStatus(s, Seq((cdc, iroot), (cdc, vroot)))
           .orderBy(col("store"))
@@ -9843,30 +9587,19 @@ object Queries {
       // resynced store; and the resynced pipeline keeps ticking (one
       // post-cutover change batch lands through the ordinary path).
       (s, d) => {
-        import graft.operators.Manifest
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q207")
         val (cdc, r1, r2, mroot) =
           (s"$base/cdc", s"$base/idx-r1", s"$base/idx-r2", s"$base/manifest")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val prep: DataFrame => DataFrame = tokenized
-        def tick(root: String) = CdcSync.syncIndexFromCdc(s, cdc, root,
-          "doc_id", "tk", IndexBucket, prep)
+        def tick(root: String) = syncIndex(s, cdc, root)
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
         tick(r1)
         Manifest.init(mroot, Map("idx-r1" -> 1L))
         // the log moves on with eager checkpoints; retention passes the
         // r1 watermark by
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 10 === 0)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" graftsync")).as("text"),
-              lit(1L).as("seq"), lit("U").as("op")),
+        EventStreams.publishCdcBatch(s, cdc, cdcUpserts(docs, 10, " graftsync", 1L),
           Seq("doc_id"), "seq", "op", maxDeltas = 0)
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 10 === 7)
-            .select(col("doc_id"), col("text"), lit(2L).as("seq"),
-              lit("D").as("op")),
+        EventStreams.publishCdcBatch(s, cdc, cdcDeletes(docs, 7, 2L),
           Seq("doc_id"), "seq", "op", maxDeltas = 0)
         EventStreams.vacuumCdc(s, cdc, keepLast = 1)
         val refused = refuses("vacuumed") { tick(r1) }
@@ -9878,38 +9611,21 @@ object Queries {
         val roots = Map("idx-r1" -> r1, "idx-r2" -> r2)
         def bmAt(ver: Long): Seq[(Long, Double)] = {
           val store = Manifest.pins(mroot, ver).keys.head
-          InvertedIndex.bm25SearchStore(s, InvertedIndex.genDir(
-              roots(store), Manifest.resolve(mroot, ver, store)),
-            Seq("graftsync", "join", "vector"), 10)
-            .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+          bm25Rows(InvertedIndex.bm25SearchStore(s, InvertedIndex.genDir(
+            roots(store), Manifest.resolve(mroot, ver, store)), syncTerms, 10))
         }
         // v1 still serves the STALE content (no graftsync docs yet —
         // r1 never saw the updates); v2 serves the resynced store
         val v1Stale = bmAt(1L) ==
-          InvertedIndex.bm25SearchCurrent(s, r1,
-            Seq("graftsync", "join", "vector"), 10)
-            .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+          bm25Rows(InvertedIndex.bm25SearchCurrent(s, r1, syncTerms, 10))
         require(v1Stale, "the pre-cutover version must keep serving r1")
         require(v2 == 2L, "cutover publish must land at manifest v2")
         // the resynced pipeline keeps ticking through the ordinary path
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 20 === 0)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" graftsync graftsync")).as("text"),
-              lit(3L).as("seq"), lit("U").as("op")),
-          Seq("doc_id"), "seq", "op")
+        publishDocs(s, cdc, cdcUpserts(docs, 20, " graftsync graftsync", 3L))
         tick(r2)
         val fresh = s"$base/fresh"
-        InvertedIndex.initStore(fresh)
-        InvertedIndex.admitBatch(s,
-          prep(EventStreams.currentCdcSnapshot(s, cdc)), "doc_id", "tk",
-          IndexBucket, batchId = 0L, root = fresh)
-        val terms = Seq("graftsync", "join", "vector")
-        def look(r: String) = InvertedIndex.lookupCurrent(s, r, terms)
-          .select(col("tok"), col("n_docs"),
-            array_join(transform(col("postings"), _.cast("string")), ",")
-              .as("postings"))
-          .orderBy(col("tok"))
+        freshIndex(s, cdc, fresh)
+        def look(r: String) = postingsFrame(InvertedIndex.lookupCurrent(s, r, syncTerms))
         require(look(r2).collect().toSeq == look(fresh).collect().toSeq,
           "the resynced store diverges from a fresh build")
         look(r2)
@@ -9954,61 +9670,37 @@ object Queries {
       // closed form by the oracle.
       (s, d) => {
         import s.implicits._
-        import graft.streaming.{CdcSync, EventStreams}
         val base = scratchDir("q208")
         val (cdc, root) = (s"$base/cdc", s"$base/idx")
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val prep: DataFrame => DataFrame = tokenized
-        def tick() = CdcSync.syncIndexFromCdc(s, cdc, root, "doc_id",
-          "tk", IndexBucket, prep)
+        def tick() = syncIndex(s, cdc, root)
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
         tick()
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 10 === 0)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" graftsync")).as("text"),
-              lit(1L).as("seq"), lit("U").as("op")),
-          Seq("doc_id"), "seq", "op")
+        publishDocs(s, cdc, cdcUpserts(docs, 10, " graftsync", 1L))
         tick()
-        EventStreams.publishCdcBatch(s, cdc,
-          docs.filter(col("doc_id") % 10 === 2)
-            .select((col("doc_id") + 1000000L).as("doc_id"),
-              concat(lit("graftsync "), col("text")).as("text"),
-              lit(1L).as("seq"), lit("I").as("op"))
-            .unionByName(docs.filter(col("doc_id") % 10 === 7)
-              .select(col("doc_id"), col("text"), lit(1L).as("seq"),
-                lit("D").as("op"))),
-          Seq("doc_id"), "seq", "op")
+        publishDocs(s, cdc, cdcInserts(docs, 2).unionByName(cdcDeletes(docs, 7)))
         tick()
-        val terms = Seq("graftsync", "join", "vector")
         def canon(df: DataFrame): Seq[(String, Long, String)] =
-          df.select(col("tok"), col("n_docs"),
-              array_join(transform(col("postings"), _.cast("string")), ",")
-                .as("postings"))
-            .orderBy("tok")
-            .collect().map(r => (r.getString(0), r.getLong(1),
-              r.getString(2))).toSeq
+          postingsFrame(df).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
         // every retained version equals a fresh build of its snapshot —
         // three independent (own fresh root, read-only live store)
         // build-and-compare sections, overlapped (Par, guide §2.6)
         Par.all((0L to 2L).map(v => () => {
           val fr = s"$base/fresh-v$v"
-          InvertedIndex.initStore(fr)
-          InvertedIndex.admitBatch(s,
-            prep(EventStreams.cdcSnapshotAt(s, cdc, v)), "doc_id", "tk",
-            IndexBucket, batchId = 0L, root = fr)
-          require(canon(CdcSync.lookupIndexAsOf(s, root, terms, v)) ==
-              canon(InvertedIndex.lookupCurrent(s, fr, terms)),
+          indexStore(s, fr, tokenized(EventStreams.cdcSnapshotAt(s, cdc, v)))
+          require(canon(CdcSync.lookupIndexAsOf(s, root, syncTerms, v)) ==
+              canon(InvertedIndex.lookupCurrent(s, fr, syncTerms)),
             s"as-of v$v diverges from a fresh build of snapshot v$v")
         }))
-        val v1Rows = canon(CdcSync.lookupIndexAsOf(s, root, terms, 1L))
+        val v1Rows = canon(CdcSync.lookupIndexAsOf(s, root, syncTerms, 1L))
         // the fold seals the window: newest still serves, pre-fold
         // versions refuse loudly
         InvertedIndex.compactStore(s, root, InvertedIndex.currentGen(root))
-        require(canon(CdcSync.lookupIndexAsOf(s, root, terms, 2L)) ==
-            canon(InvertedIndex.lookupCurrent(s, root, terms)),
+        require(canon(CdcSync.lookupIndexAsOf(s, root, syncTerms, 2L)) ==
+            canon(InvertedIndex.lookupCurrent(s, root, syncTerms)),
           "post-fold, the newest version must still serve as-of")
-        val folded = refuses("folded away") { CdcSync.lookupIndexAsOf(s, root, terms, 1L) }
+        val folded = refuses("folded away") { CdcSync.lookupIndexAsOf(s, root, syncTerms, 1L) }
         require(folded, "a pre-fold version must refuse, never mis-serve")
         v1Rows.toDF("tok", "n_docs", "postings").orderBy(col("tok"))
       },

@@ -140,6 +140,11 @@ object Checks {
     * multisets are equal iff no group sums non-zero. Same null/NaN/−0.0
     * key semantics as ExceptAll (both are grouping-key comparisons) —
     * one job, each input computed once.
+    *
+    * Contract: both frames must have the same column names, in the same
+    * order, with the same data types; otherwise it throws an
+    * IllegalArgumentException instead of answering (no int-vs-bigint
+    * coercion, no by-name reordering).
     */
   def multisetEq(a: DataFrame, b: DataFrame): Boolean = {
     require(a.columns.toSeq == b.columns.toSeq,

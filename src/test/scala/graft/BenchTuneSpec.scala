@@ -65,4 +65,11 @@ class BenchTuneSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](BenchTune.resolve(Seq("--retention", "1000", "sigOnly")))
     intercept[IllegalArgumentException](BenchTune.resolve(Seq("--ivf", "5")))
   }
+
+  test("--rangejoin sizes its nested-loop slice from the inputs: 50,000 points and 1,000 intervals at most") {
+    // the defaults keep the strides the probe has always used
+    assert(BenchTune.rangeSliceStrides(10000000L, 100000L) == ((200L, 100L)))
+    // a small run checks every interval instead of the 10 that matched no point
+    assert(BenchTune.rangeSliceStrides(100000L, 1000L) == ((2L, 1L)))
+  }
 }

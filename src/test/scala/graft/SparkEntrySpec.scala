@@ -44,11 +44,19 @@ class SparkEntrySpec extends AnyFunSuite {
       "nlist = 16, kmeansIters = 3, m = 16, kcode = 16, pqIters = 2" -> 2,
       // tokenized; q111's bigram model keeps no doc_id
       "TextFunctions.tokens(col(\"text\")).as(\"tk\")" -> 2,
-      // admitDocs, appendDocs; q207's CDC index sync takes the same
-      // columns and bucket
+      // admitDocs, appendDocs and syncIndex, the CDC index sync tick
       "\"doc_id\", \"tk\", IndexBucket" -> 3,
       "case e: IllegalArgumentException" -> 1, // refuses
-      "Paths.get(root, \"gen=3\")" -> 1) // casRetryNoop
+      "Paths.get(root, \"gen=3\")" -> 1, // casRetryNoop
+      // signatureKeys; q164's and q170's curation streams derive their
+      // micro-batches' keys with the same parameters
+      "numHashes = 32, bands = 8, portableKeys = true)" -> 3,
+      // cdcMutations; q205's post-merge batch and q207's post-cutover
+      // batch re-crawl doc_id % 20 == 0 with the same two tokens
+      "\" graftsync graftsync\"" -> 3,
+      "kmeansIters = 5, m = 16" -> 1, // syncVectors
+      "shortlistFactor = 1000" -> 1, // exhaustiveFrame
+      "deletes\"))" -> 1) // noPendingDeletes
     val src = java.nio.file.Paths.get("src/main/scala/graft/Queries.scala")
     assert(java.nio.file.Files.exists(src),
       s"run from the repository root, not ${java.nio.file.Paths.get("").toAbsolutePath}")

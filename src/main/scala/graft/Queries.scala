@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.functions.{HashExprs, TextFunctions, VectorFunctions}
 import graft.operators.ColeQuery._
@@ -34,6 +35,11 @@ import graft.streaming.{CdcSync, EventStreams}
   *  - oracle: [[keepCtes]] the curation quality gate (`qual`, `keep`);
   *  - oracle: [[bandKeyCtes]] the portable MinHash band-key chain;
   *  - oracle: [[gateOracle]] the per-query gate rows of the 10 query vectors;
+  *  - oracle: [[postingsOracle]]/[[syncPostingsOracle]] the posting lists
+  *    of a term set, over the corpus or a synced `mut` corpus;
+  *  - oracle: [[mmrOracle]] the unrolled-greedy MMR re-rank;
+  *  - oracle: [[curationCtes]]/[[curationStage]] the streaming curation's
+  *    admission stages; [[packingOracle]] the 2048-token packing tail;
   *  - Spark: [[tokenized]]/[[docTokens]] tokenised documents;
   *  - Spark: [[admitDocs]]/[[appendDocs]] the index admit and append;
   *  - Spark: [[fitIvfPq]]/[[refitIvfPq]] the IVF-PQ fit and refit;
@@ -58,7 +64,16 @@ import graft.streaming.{CdcSync, EventStreams}
   *    [[cdcDeletes]]) the sync change script, [[publishDocs]],
   *    [[syncIndex]]/[[syncVectors]] the sync ticks, [[freshIndex]] the
   *    one-shot comparator, [[postingsFrame]]/[[indexSurfaces]] the synced
-  *    index's served surfaces.
+  *    index's served surfaces;
+  *  - Spark: [[packed]] the 2048-token packing; [[feedStream]] the
+  *    one-file-per-trigger crawl feed; [[curationStream]] the streaming
+  *    curation of q164 and q170;
+  *  - Spark: [[fleetStores]] the three-store fleet's bootstrap,
+  *    [[cdcPair]]/[[pairTick]] the two-store CDC sync pair's;
+  *  - Spark: [[decisionFrame]]/[[admitDecisions]]/[[decisionRows]] the
+  *    signature store's admission decisions, framed or collected;
+  *  - Spark: [[sketchStore]]/[[sketchEstimates]] the sketch store's
+  *    bootstrap and collected estimates.
   */
 object Queries {
 
@@ -1553,23 +1568,12 @@ object Queries {
       // Concatenate-then-slice packing into 2048-token context windows,
       // sharded by source: the layout step between curation and training.
       // Pure integer window arithmetic -> bit-exact cross-engine.
-      (s, d) => Packing.packByBudget(
-        t(s, d, "documents").select(col("doc_id"), col("source"),
-          TextFunctions.tokenCount(col("text")).as("n_tokens")),
-        "source", "doc_id", "n_tokens", 2048L)
-        .orderBy(col("source"), col("doc_id")),
-      Some("""WITH tok AS (
+      (s, d) => packed(t(s, d, "documents")).orderBy(col("source"), col("doc_id")),
+      Some(s"""WITH tok AS (
              |  SELECT doc_id, source,
              |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens
              |  FROM documents
-             |), w AS (
-             |  SELECT doc_id, source, n_tokens,
-             |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) - n_tokens AS strt
-             |  FROM tok
-             |)
-             |SELECT doc_id, source, n_tokens,
-             |  strt // 2048 AS bin, strt % 2048 AS bin_offset
-             |FROM w ORDER BY source, doc_id""".stripMargin)),
+             |${packingOracle("tok")}""".stripMargin)),
 
     QDef("q67_chunks",
       // RAG-style overlapping chunking: 200-char windows every 150 chars.
@@ -1954,13 +1958,7 @@ object Queries {
           array_join(transform(col("postings_arr"), _.cast("string")), ",")
             .as("postings"))
         .orderBy(col("tok")),
-      Some(s"""${tokCte()}
-              |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-              |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-              |    x -> CAST(x AS VARCHAR)), ',') AS postings
-              |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |GROUP BY tok ORDER BY tok""".stripMargin))
+      Some(postingsOracle(tokCte(), bm25Terms)))
   )
 
   // ---------------------------------------------------------------------------
@@ -2286,6 +2284,269 @@ object Queries {
     postingsFrame(InvertedIndex.lookupCurrent(s, root, syncTerms)).collect().toSeq,
     InvertedIndex.bm25SearchCurrent(s, root, syncTerms, 10).collect().toSeq)
 
+  /** Oracle of a [[postingsFrame]] over the `tok` CTE that `withTok`
+    * ends with: per term of `terms`, its document count and its sorted
+    * doc ids joined by commas, by tok.
+    */
+  private def postingsOracle(withTok: String, terms: Seq[String]): String =
+    s"""$withTok
+       |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
+       |    x -> CAST(x AS VARCHAR)), ',') AS postings
+       |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
+       |WHERE tok IN (${terms.map("'" + _ + "'").mkString(", ")})
+       |GROUP BY tok ORDER BY tok""".stripMargin
+
+  /** [[postingsOracle]] of the [[syncTerms]] over a synced corpus: `mut`
+    * is the body of the `mut` CTE (doc_id, text), the corpus after the
+    * scenario's change batches.
+    */
+  private def syncPostingsOracle(mut: String): String =
+    postingsOracle(s"""WITH mut AS (
+       |$mut
+       |), tok AS (
+       |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
+       |  FROM mut
+       |)""".stripMargin, syncTerms)
+
+  /** Oracle of the MMR re-rank at k = 5, lambda = 0.5 of the 10 query
+    * vectors (vec_id < 10) over their brute-force top-25 pool, the greedy
+    * unrolled into five chained CTEs (q159 states why).
+    */
+  private val mmrOracle =
+    """WITH q AS (
+      |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+      |  FROM embeddings WHERE vec_id < 10
+      |), sc AS (
+      |  SELECT query_id, vec_id AS id,
+      |    list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])) AS cos,
+      |    CAST(embedding AS DOUBLE[]) AS v
+      |  FROM q, embeddings WHERE vec_id <> query_id
+      |), pool AS (
+      |  SELECT query_id, id, cos, v FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY query_id
+      |      ORDER BY cos DESC, id) AS rn FROM sc) WHERE rn <= 25
+      |), s1 AS (
+      |  SELECT query_id, id, cos, v FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY query_id
+      |      ORDER BY 0.5*cos DESC, id) AS pk FROM pool) WHERE pk = 1
+      |), s2 AS (
+      |  SELECT query_id, id, cos, v FROM (
+      |    SELECT p.query_id, p.id, p.cos, p.v,
+      |      row_number() OVER (PARTITION BY p.query_id ORDER BY
+      |        0.5*p.cos - 0.5*list_cosine_similarity(p.v, a.v) DESC,
+      |        p.id) AS pk
+      |    FROM pool p JOIN s1 a USING (query_id)
+      |    WHERE p.id <> a.id) WHERE pk = 1
+      |), s3 AS (
+      |  SELECT query_id, id, cos, v FROM (
+      |    SELECT p.query_id, p.id, p.cos, p.v,
+      |      row_number() OVER (PARTITION BY p.query_id ORDER BY
+      |        0.5*p.cos - 0.5*greatest(
+      |          list_cosine_similarity(p.v, a.v),
+      |          list_cosine_similarity(p.v, b.v)) DESC, p.id) AS pk
+      |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
+      |    WHERE p.id NOT IN (a.id, b.id)) WHERE pk = 1
+      |), s4 AS (
+      |  SELECT query_id, id, cos, v FROM (
+      |    SELECT p.query_id, p.id, p.cos, p.v,
+      |      row_number() OVER (PARTITION BY p.query_id ORDER BY
+      |        0.5*p.cos - 0.5*greatest(
+      |          list_cosine_similarity(p.v, a.v),
+      |          list_cosine_similarity(p.v, b.v),
+      |          list_cosine_similarity(p.v, c.v)) DESC, p.id) AS pk
+      |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
+      |      JOIN s3 c USING (query_id)
+      |    WHERE p.id NOT IN (a.id, b.id, c.id)) WHERE pk = 1
+      |), s5 AS (
+      |  SELECT query_id, id FROM (
+      |    SELECT p.query_id, p.id,
+      |      row_number() OVER (PARTITION BY p.query_id ORDER BY
+      |        0.5*p.cos - 0.5*greatest(
+      |          list_cosine_similarity(p.v, a.v),
+      |          list_cosine_similarity(p.v, b.v),
+      |          list_cosine_similarity(p.v, c.v),
+      |          list_cosine_similarity(p.v, e.v)) DESC, p.id) AS pk
+      |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
+      |      JOIN s3 c USING (query_id) JOIN s4 e USING (query_id)
+      |    WHERE p.id NOT IN (a.id, b.id, c.id, e.id)) WHERE pk = 1
+      |)
+      |SELECT query_id, CAST(1 AS BIGINT) AS rank, id AS neighbor_id FROM s1
+      |UNION ALL SELECT query_id, 2, id FROM s2
+      |UNION ALL SELECT query_id, 3, id FROM s3
+      |UNION ALL SELECT query_id, 4, id FROM s4
+      |UNION ALL SELECT query_id, 5, id FROM s5
+      |ORDER BY query_id, rank""".stripMargin
+
+  /** One admission stage of the streaming curation's oracle: keep-docs of
+    * crawl batch doc_id % 3 == `k` hit `store`'s band keys (`hits$n`) and
+    * admit iff none hits (`adm$n`). Continues a WITH list.
+    */
+  private def curationStage(n: String, store: String, k: Int): String =
+    s""", hits$n AS (
+       |  SELECT b.doc_id, count(*) AS c FROM bnd b
+       |  JOIN $store s ON b.band = s.band AND b.bucket = s.bucket
+       |  WHERE b.doc_id % 3 = $k GROUP BY b.doc_id
+       |), adm$n AS (
+       |  SELECT k.doc_id FROM keep k LEFT JOIN hits$n h USING (doc_id)
+       |  WHERE k.doc_id % 3 = $k AND coalesce(h.c, 0) = 0
+       |)""".stripMargin
+
+  /** Oracle of the streaming curation's first two crawl batches over the
+    * quality-kept docs' band keys: batch 0 admits whole (`adm0`, keys
+    * `store1`), batch 1 is probed against them ([[curationStage]] 1), and
+    * `store2` holds both admitted batches' keys. Starts a WITH list and
+    * ends at store2's closing parenthesis.
+    */
+  private val curationCtes =
+    s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, adm0 AS (
+       |  SELECT doc_id FROM keep WHERE doc_id % 3 = 0
+       |), store1 AS (
+       |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 0
+       |)${curationStage("1", "store1", 1)}, store2 AS (
+       |  SELECT band, bucket FROM store1
+       |  UNION
+       |  SELECT band, bucket FROM bnd WHERE doc_id IN (SELECT doc_id FROM adm1)
+       |)""".stripMargin
+
+  /** (doc_id, source, text) docs packed by `Packing.packByBudget` into
+    * 2048-token windows by source, on their whitespace token counts.
+    */
+  private def packed(docs: DataFrame): DataFrame =
+    Packing.packByBudget(docs.select(col("doc_id"), col("source"),
+        TextFunctions.tokenCount(col("text")).as("n_tokens")),
+      "source", "doc_id", "n_tokens", 2048L)
+
+  /** Oracle tail of [[packed]]: the CTE `src` (doc_id, source, n_tokens)
+    * closes before `w`, then each doc's bin and offset, with the literal
+    * `gates` after them.
+    */
+  private def packingOracle(src: String, gates: String*): String =
+    s"""), w AS (
+       |  SELECT doc_id, source, n_tokens,
+       |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) - n_tokens AS strt
+       |  FROM $src
+       |)
+       |SELECT doc_id, source, n_tokens,
+       |  strt // 2048 AS bin, strt % 2048 AS bin_offset${gates.map(",\n  " + _).mkString}
+       |FROM w ORDER BY source, doc_id""".stripMargin
+
+  /** A file stream of the parquet files landing in `feed`, one file per
+    * trigger, so each crawl file written is one micro-batch.
+    */
+  private def feedStream(s: SparkSession, schema: StructType, feed: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed)
+
+  /** A running streaming curation (q164, q170): crawl files land in
+    * `feed` and flow `EventStreams.curationIngestCompacting` one file per
+    * trigger (quality gate 0.5, [[signatureKeys]]' MinHash parameters,
+    * compaction at 2 fragments) into the signature store at `root`;
+    * retained docs land under `retained`.
+    */
+  private final case class CurationStream(docs: DataFrame, feed: String,
+      root: String, retained: String, query: StreamingQuery) {
+    /** Write `batch` as one crawl file and wait for its micro-batch. */
+    def crawl(batch: DataFrame): Unit = {
+      batch.coalesce(1).write.mode("append").parquet(feed)
+      query.processAllAvailable()
+    }
+  }
+
+  /** Start a [[CurationStream]] of (doc_id, source, text) documents under
+    * scratch `base`.
+    */
+  private def curationStream(s: SparkSession, d: String, base: String): CurationStream = {
+    val docs = t(s, d, "documents").select(col("doc_id"), col("source"), col("text"))
+    val feed = base + "/feed"
+    val root = base + "/sigstore"
+    val retained = base + "/retained"
+    new java.io.File(feed).mkdirs()
+    CurationStream(docs, feed, root, retained,
+      EventStreams.curationIngestCompacting(feedStream(s, docs.schema, feed),
+        "doc_id", "text", root, retained, base + "/_ckpt",
+        maxFragments = 2, qualityThreshold = 0.5,
+        n = 3, numHashes = 32, bands = 8, portableKeys = true))
+  }
+
+  /** The three-store fleet's bootstrap: the signature store at `kroot`
+    * over the docs' [[signatureKeys]], the index store at `iroot` over
+    * `indexParts`, and the vector store at `vroot` over all of `emb`
+    * under the small fit; disjoint roots, so the three builds overlap.
+    * Returns the key set, derived once, which the takedowns slice.
+    */
+  private def fleetStores(s: SparkSession, docs: DataFrame, emb: DataFrame,
+      iroot: String, vroot: String, kroot: String,
+      indexParts: DataFrame*): DataFrame = {
+    val (sigKeys, _) = Par.both(
+      {
+        val keys = signatureKeys(docs.select(col("doc_id"), col("text")))
+        signatureStore(kroot, keys)
+        keys
+      },
+      Par.both(indexStore(s, iroot, indexParts: _*),
+        vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
+    sigKeys
+  }
+
+  /** One tick of both stores of the [[cdcPair]] under `base`: the synced
+    * roots are disjoint and only READ the shared CDC store, so they overlap.
+    */
+  private def pairTick(s: SparkSession, base: String): (Long, Long) =
+    Par.both(syncIndex(s, s"$base/cdc", s"$base/idx"),
+      syncVectors(s, s"$base/cdc", s"$base/vec", "doc_id"))
+
+  /** The two-store CDC sync pair under `base`: documents joined with
+    * embeddings at seq 0 in the CDC store `base/cdc`, bootstrapped into
+    * the index store `base/idx` and the vector store `base/vec` by one
+    * [[pairTick]]. Returns the corpus (doc_id, text, embedding) and the
+    * embeddings (doc_id, embedding).
+    */
+  private def cdcPair(s: SparkSession, d: String, base: String): (DataFrame, DataFrame) = {
+    val emb = t(s, d, "embeddings")
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val corpus = t(s, d, "documents").select(col("doc_id"), col("text")).join(emb, "doc_id")
+    EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), s"$base/cdc")
+    pairTick(s, base)
+    (corpus, emb)
+  }
+
+  /** Admission decisions of `ids` probed with their band `keys` against
+    * the signature store at `root`: (doc_id, hit_bands, admit).
+    */
+  private def decisionFrame(ids: DataFrame, keys: DataFrame, root: String): DataFrame =
+    Dedup.admitKeysAgainstMinHashStoreGen(ids, keys, root)
+      .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+
+  /** Admission decisions of `ids` against the signature store at `root`,
+    * collected as (id, admit).
+    */
+  private def admitDecisions(ids: DataFrame, keys: DataFrame,
+      root: String): Seq[(Long, Boolean)] =
+    Dedup.admitKeysAgainstMinHashStoreGen(ids, keys, root)
+      .collect().toSeq.map(r => (r.getLong(0), r.getBoolean(2)))
+
+  /** A decision frame (id, hit_bands, admit) collected as a triple. */
+  private def decisionRows(decisions: DataFrame): Seq[(Long, Long, Boolean)] =
+    decisions.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+
+  /** The sketch store at `root` of distinct user_id per event_type:
+    * initialised, then one batch per part with batch ids 0, 1, ….
+    */
+  private def sketchStore(s: SparkSession, root: String, parts: DataFrame*): Unit = {
+    SketchStore.initStore(root)
+    parts.zipWithIndex.foreach { case (p, b) =>
+      SketchStore.admitBatch(s, p, Seq("event_type"), "user_id", b.toLong, root)
+    }
+  }
+
+  /** The sketch store at `root`'s current per-event_type estimates,
+    * collected and sorted: (event_type, est).
+    */
+  private def sketchEstimates(s: SparkSession, root: String): Seq[(String, Long)] =
+    SketchStore.estimatesCurrent(s, root, Seq("event_type"))
+      .select(col("event_type"), col("est"))
+      .collect().toSeq.map(r => (r.getString(0), r.getLong(1))).sorted
+
   private val retrievalOps = Seq(
     QDef("q80_vocab_index",
       // Full-VOCABULARY bucketed inverted index: every token of every
@@ -2313,19 +2574,9 @@ object Queries {
       // proving concatenation in bucket order reassembles the globally
       // sorted list. Catalyst pushes the term filter below the build's
       // group-by, so only the requested terms shuffle.
-      (s, d) => InvertedIndex.lookup(
-          InvertedIndex.build(docPostings(s, d), IndexBucket), bm25Terms)
-        .select(col("tok"), col("n_docs"),
-          array_join(transform(col("postings"), _.cast("string")), ",")
-            .as("postings"))
-        .orderBy(col("tok")),
-      Some(s"""${tokCte()}
-              |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-              |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-              |    x -> CAST(x AS VARCHAR)), ',') AS postings
-              |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |GROUP BY tok ORDER BY tok""".stripMargin)),
+      (s, d) => postingsFrame(InvertedIndex.lookup(
+        InvertedIndex.build(docPostings(s, d), IndexBucket), bm25Terms)),
+      Some(postingsOracle(tokCte(), bm25Terms))),
 
     QDef("q82_audio_decode",
       // REAL audio decode (JDK javax.sound.sampled, no external codec),
@@ -4788,19 +5039,9 @@ object Queries {
         val docs = docTokens(s, d)
         appendDocs(docs.filter(col("doc_id") % 10 < 8), 0L, dir)
         appendDocs(docs.filter(col("doc_id") % 10 >= 8), 1L, dir)
-        InvertedIndex.storeLookup(s, dir, bm25Terms)
-          .select(col("tok"), col("n_docs"),
-            array_join(transform(col("postings"), _.cast("string")), ",")
-              .as("postings"))
-          .orderBy(col("tok"))
+        postingsFrame(InvertedIndex.storeLookup(s, dir, bm25Terms))
       },
-      Some(s"""${tokCte()}
-              |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-              |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-              |    x -> CAST(x AS VARCHAR)), ',') AS postings
-              |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-              |WHERE tok IN (${bm25Terms.map("'" + _ + "'").mkString(", ")})
-              |GROUP BY tok ORDER BY tok""".stripMargin))
+      Some(postingsOracle(tokCte(), bm25Terms)))
   )
 
   // ---------------------------------------------------------------------------
@@ -4963,25 +5204,15 @@ object Queries {
     * final state (q142's shape).
     */
   private val cdcSyncLookupOracle =
-    Some("""WITH mut AS (
-           |  SELECT doc_id, CASE
-           |    WHEN doc_id % 20 = 0 THEN text || ' graftsync'
-           |    WHEN doc_id % 10 = 0 THEN text || ' graftsync graftsync'
-           |    ELSE text END AS text
-           |  FROM documents WHERE doc_id % 10 <> 7
-           |  UNION ALL
-           |  SELECT doc_id + 1000000 AS doc_id, 'graftsync ' || text AS text
-           |  FROM documents WHERE doc_id % 10 = 2
-           |), tok AS (
-           |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-           |  FROM mut
-           |)
-           |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-           |    x -> CAST(x AS VARCHAR)), ',') AS postings
-           |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-           |WHERE tok IN ('graftsync', 'join', 'vector')
-           |GROUP BY tok ORDER BY tok""".stripMargin)
+    Some(syncPostingsOracle(
+      """|  SELECT doc_id, CASE
+         |    WHEN doc_id % 20 = 0 THEN text || ' graftsync'
+         |    WHEN doc_id % 10 = 0 THEN text || ' graftsync graftsync'
+         |    ELSE text END AS text
+         |  FROM documents WHERE doc_id % 10 <> 7
+         |  UNION ALL
+         |  SELECT doc_id + 1000000 AS doc_id, 'graftsync ' || text AS text
+         |  FROM documents WHERE doc_id % 10 = 2""".stripMargin))
 
   private val storeLifecycle = Seq(
     QDef("q143_index_compaction",
@@ -5161,15 +5392,9 @@ object Queries {
       (s, d) => {
         val root = scratchDir("q148") + "/sstore"
         val ev = t(s, d, "events")
-        SketchStore.initStore(root)
-        (0L to 2L).foreach { b =>
-          SketchStore.admitBatch(s, ev.filter(pmod(col("event_id"), lit(4)) === b),
-            Seq("event_type"), "user_id", b, root)
-        }
-        def ests() = SketchStore.estimatesCurrent(s, root, Seq("event_type"))
-          .select(col("event_type"), col("est"))
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1))).sorted
-        val (c, _) = compactionCycle(root, SketchStore.fragmentCount(s, root), ests())(
+        sketchStore(s, root, (0L to 2L).map(b => ev.filter(pmod(col("event_id"), lit(4)) === b)): _*)
+        val (c, _) = compactionCycle(root, SketchStore.fragmentCount(s, root),
+            sketchEstimates(s, root))(
             SketchStore.compactStore(s, root, expectedGen = 1L, Seq("event_type"))) {
           SketchStore.admitBatch(s, ev.filter(pmod(col("event_id"), lit(4)) === 3),
             Seq("event_type"), "user_id", 3L, root)
@@ -5400,11 +5625,8 @@ object Queries {
         // slice this checkpointed key set by doc id
         val sigKeys = signatureKeys(docs.select(col("doc_id"), col("text")))
         signatureStore(root, (0L to 2L).map(b => sigKeys.filter(col("id") % 5 === b)): _*)
-        def decisions() = Dedup.admitKeysAgainstMinHashStoreGen(
-            probe.select(col("doc_id").as("id")),
-            sigKeys.filter(col("id") % 5 === 4), root = root)
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+        def decisions() = decisionRows(Dedup.admitKeysAgainstMinHashStoreGen(
+          probe.select(col("doc_id").as("id")), sigKeys.filter(col("id") % 5 === 4), root))
         val (c, (crossBatchDedup, sealedRefused)) = compactionCycle(root,
             KeySetStore.fragmentCount(s, root), decisions())(
             KeySetStore.compactStore(s, root, expectedGen = 1L)) {
@@ -5427,10 +5649,8 @@ object Queries {
         // the oracle-stated surface: the probe batch's decisions against
         // the FULL admitted history (batches 0-3), from the compacted
         // store + the appended fragment
-        Dedup.admitKeysAgainstMinHashStoreGen(
-            probe.select(col("doc_id").as("id")),
-            sigKeys.filter(col("id") % 5 === 4), root = root)
-          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+        decisionFrame(probe.select(col("doc_id").as("id")),
+            sigKeys.filter(col("id") % 5 === 4), root)
           .withGates(c.gates ++ Seq(
             "decisions_identical" -> (c.readEq && c.pre.nonEmpty),
             "cross_batch_dedup" -> crossBatchDedup,
@@ -5613,12 +5833,7 @@ object Queries {
               sigKeys.filter(col("id") % 2 === 1), root = root)
             .filter(col("admit")).select(col("id").as("doc_id")),
           Seq("doc_id"), "left_semi")
-        val corpus = b1.unionByName(admitted)
-        Packing.packByBudget(
-          corpus.select(col("doc_id"), col("source"),
-            TextFunctions.tokenCount(col("text")).as("n_tokens")),
-          "source", "doc_id", "n_tokens", 2048L)
-          .orderBy(col("source"), col("doc_id"))
+        packed(b1.unionByName(admitted)).orderBy(col("source"), col("doc_id"))
       },
       Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, store AS (
               |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 2 = 0
@@ -5636,14 +5851,7 @@ object Queries {
               |  FROM documents d
               |  JOIN tok t ON d.doc_id = t.doc_id
               |  JOIN corpus c ON d.doc_id = c.doc_id
-              |), w AS (
-              |  SELECT doc_id, source, n_tokens,
-              |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) - n_tokens AS strt
-              |  FROM tokc
-              |)
-              |SELECT doc_id, source, n_tokens,
-              |  strt // 2048 AS bin, strt % 2048 AS bin_offset
-              |FROM w ORDER BY source, doc_id""".stripMargin)),
+              |${packingOracle("tokc")}""".stripMargin)),
 
     QDef("q154_range_join",
       // POINT-IN-INTERVAL range join without an equi-key — the join
@@ -5886,69 +6094,7 @@ object Queries {
             "vec_id", "embedding", 5, poolFactor = 5, lambda = 0.5)
           .select("query_id", "rank", "neighbor_id")
       },
-      Some("""WITH q AS (
-             |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-             |  FROM embeddings WHERE vec_id < 10
-             |), sc AS (
-             |  SELECT query_id, vec_id AS id,
-             |    list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])) AS cos,
-             |    CAST(embedding AS DOUBLE[]) AS v
-             |  FROM q, embeddings WHERE vec_id <> query_id
-             |), pool AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY query_id
-             |      ORDER BY cos DESC, id) AS rn FROM sc) WHERE rn <= 25
-             |), s1 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY query_id
-             |      ORDER BY 0.5*cos DESC, id) AS pk FROM pool) WHERE pk = 1
-             |), s2 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT p.query_id, p.id, p.cos, p.v,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*list_cosine_similarity(p.v, a.v) DESC,
-             |        p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id)
-             |    WHERE p.id <> a.id) WHERE pk = 1
-             |), s3 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT p.query_id, p.id, p.cos, p.v,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*greatest(
-             |          list_cosine_similarity(p.v, a.v),
-             |          list_cosine_similarity(p.v, b.v)) DESC, p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
-             |    WHERE p.id NOT IN (a.id, b.id)) WHERE pk = 1
-             |), s4 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT p.query_id, p.id, p.cos, p.v,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*greatest(
-             |          list_cosine_similarity(p.v, a.v),
-             |          list_cosine_similarity(p.v, b.v),
-             |          list_cosine_similarity(p.v, c.v)) DESC, p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
-             |      JOIN s3 c USING (query_id)
-             |    WHERE p.id NOT IN (a.id, b.id, c.id)) WHERE pk = 1
-             |), s5 AS (
-             |  SELECT query_id, id FROM (
-             |    SELECT p.query_id, p.id,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*greatest(
-             |          list_cosine_similarity(p.v, a.v),
-             |          list_cosine_similarity(p.v, b.v),
-             |          list_cosine_similarity(p.v, c.v),
-             |          list_cosine_similarity(p.v, e.v)) DESC, p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
-             |      JOIN s3 c USING (query_id) JOIN s4 e USING (query_id)
-             |    WHERE p.id NOT IN (a.id, b.id, c.id, e.id)) WHERE pk = 1
-             |)
-             |SELECT query_id, CAST(1 AS BIGINT) AS rank, id AS neighbor_id FROM s1
-             |UNION ALL SELECT query_id, 2, id FROM s2
-             |UNION ALL SELECT query_id, 3, id FROM s3
-             |UNION ALL SELECT query_id, 4, id FROM s4
-             |UNION ALL SELECT query_id, 5, id FROM s5
-             |ORDER BY query_id, rank""".stripMargin)),
+      Some(mmrOracle)),
 
     QDef("q160_semdedup_sq",
       // SemDeDup on the SQ8 tier (q124's gate at the resolution tier
@@ -6185,69 +6331,7 @@ object Queries {
             "vec_id", "embedding", 5, lambda = 0.5)
           .select("query_id", "rank", "neighbor_id")
       },
-      Some("""WITH q AS (
-             |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-             |  FROM embeddings WHERE vec_id < 10
-             |), sc AS (
-             |  SELECT query_id, vec_id AS id,
-             |    list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])) AS cos,
-             |    CAST(embedding AS DOUBLE[]) AS v
-             |  FROM q, embeddings WHERE vec_id <> query_id
-             |), pool AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY query_id
-             |      ORDER BY cos DESC, id) AS rn FROM sc) WHERE rn <= 25
-             |), s1 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY query_id
-             |      ORDER BY 0.5*cos DESC, id) AS pk FROM pool) WHERE pk = 1
-             |), s2 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT p.query_id, p.id, p.cos, p.v,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*list_cosine_similarity(p.v, a.v) DESC,
-             |        p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id)
-             |    WHERE p.id <> a.id) WHERE pk = 1
-             |), s3 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT p.query_id, p.id, p.cos, p.v,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*greatest(
-             |          list_cosine_similarity(p.v, a.v),
-             |          list_cosine_similarity(p.v, b.v)) DESC, p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
-             |    WHERE p.id NOT IN (a.id, b.id)) WHERE pk = 1
-             |), s4 AS (
-             |  SELECT query_id, id, cos, v FROM (
-             |    SELECT p.query_id, p.id, p.cos, p.v,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*greatest(
-             |          list_cosine_similarity(p.v, a.v),
-             |          list_cosine_similarity(p.v, b.v),
-             |          list_cosine_similarity(p.v, c.v)) DESC, p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
-             |      JOIN s3 c USING (query_id)
-             |    WHERE p.id NOT IN (a.id, b.id, c.id)) WHERE pk = 1
-             |), s5 AS (
-             |  SELECT query_id, id FROM (
-             |    SELECT p.query_id, p.id,
-             |      row_number() OVER (PARTITION BY p.query_id ORDER BY
-             |        0.5*p.cos - 0.5*greatest(
-             |          list_cosine_similarity(p.v, a.v),
-             |          list_cosine_similarity(p.v, b.v),
-             |          list_cosine_similarity(p.v, c.v),
-             |          list_cosine_similarity(p.v, e.v)) DESC, p.id) AS pk
-             |    FROM pool p JOIN s1 a USING (query_id) JOIN s2 b USING (query_id)
-             |      JOIN s3 c USING (query_id) JOIN s4 e USING (query_id)
-             |    WHERE p.id NOT IN (a.id, b.id, c.id, e.id)) WHERE pk = 1
-             |)
-             |SELECT query_id, CAST(1 AS BIGINT) AS rank, id AS neighbor_id FROM s1
-             |UNION ALL SELECT query_id, 2, id FROM s2
-             |UNION ALL SELECT query_id, 3, id FROM s3
-             |UNION ALL SELECT query_id, 4, id FROM s4
-             |UNION ALL SELECT query_id, 5, id FROM s5
-             |ORDER BY query_id, rank""".stripMargin)),
+      Some(mmrOracle)),
 
     QDef("q163_quantile_hdr",
       // HDR (LOG-WIDTH) QUANTILE BINS — the unbounded-domain mode q158's
@@ -6362,60 +6446,21 @@ object Queries {
       // At 100 TB: each micro-batch is narrow maps plus one key-set
       // semi-join; no stage ever rescans prior batches' raw docs.
       (s, d) => {
-        val base = scratchDir("q164")
-        val feed = base + "/feed"
-        val root = base + "/sigstore"
-        val retained = base + "/retained"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), col("source"), col("text"))
-        new java.io.File(feed).mkdirs()
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-        val q = EventStreams.curationIngestCompacting(stream,
-          "doc_id", "text", root, retained, base + "/_ckpt",
-          maxFragments = 2, qualityThreshold = 0.5,
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
+        val c = curationStream(s, d, scratchDir("q164"))
         val genSeen = try {
           (0 to 2).map { k =>
-            docs.filter(pmod(col("doc_id"), lit(3)) === k).coalesce(1)
-              .write.mode("append").parquet(feed)
-            q.processAllAvailable()
-            GenStore.currentGen(root)
+            c.crawl(c.docs.filter(pmod(col("doc_id"), lit(3)) === k))
+            GenStore.currentGen(c.root)
           }
-        } finally q.stop()
+        } finally c.query.stop()
         // compaction fired while the stream was LIVE: the generation
         // advanced between micro-batches, not after the last one
         val midStream = genSeen.init.exists(_ >= 2L)
-        Packing.packByBudget(
-          Tables.parquet(s, retained).select(col("doc_id"), col("source"),
-            TextFunctions.tokenCount(col("text")).as("n_tokens")),
-          "source", "doc_id", "n_tokens", 2048L)
+        packed(Tables.parquet(s, c.retained))
           .withColumn("mid_stream_compaction", lit(midStream))
           .orderBy(col("source"), col("doc_id"))
       },
-      Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, adm0 AS (
-              |  SELECT doc_id FROM keep WHERE doc_id % 3 = 0
-              |), store1 AS (
-              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 0
-              |), hits1 AS (
-              |  SELECT b.doc_id, count(*) AS c FROM bnd b
-              |  JOIN store1 s ON b.band = s.band AND b.bucket = s.bucket
-              |  WHERE b.doc_id % 3 = 1 GROUP BY b.doc_id
-              |), adm1 AS (
-              |  SELECT k.doc_id FROM keep k LEFT JOIN hits1 h USING (doc_id)
-              |  WHERE k.doc_id % 3 = 1 AND coalesce(h.c, 0) = 0
-              |), store2 AS (
-              |  SELECT band, bucket FROM store1
-              |  UNION
-              |  SELECT band, bucket FROM bnd WHERE doc_id IN (SELECT doc_id FROM adm1)
-              |), hits2 AS (
-              |  SELECT b.doc_id, count(*) AS c FROM bnd b
-              |  JOIN store2 s ON b.band = s.band AND b.bucket = s.bucket
-              |  WHERE b.doc_id % 3 = 2 GROUP BY b.doc_id
-              |), adm2 AS (
-              |  SELECT k.doc_id FROM keep k LEFT JOIN hits2 h USING (doc_id)
-              |  WHERE k.doc_id % 3 = 2 AND coalesce(h.c, 0) = 0
-              |), corpus AS (
+      Some(s"""$curationCtes${curationStage("2", "store2", 2)}, corpus AS (
               |  SELECT doc_id FROM adm0 UNION ALL
               |  SELECT doc_id FROM adm1 UNION ALL
               |  SELECT doc_id FROM adm2
@@ -6424,15 +6469,7 @@ object Queries {
               |  FROM documents d
               |  JOIN tok t ON d.doc_id = t.doc_id
               |  JOIN corpus c ON d.doc_id = c.doc_id
-              |), w AS (
-              |  SELECT doc_id, source, n_tokens,
-              |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) - n_tokens AS strt
-              |  FROM tokc
-              |)
-              |SELECT doc_id, source, n_tokens,
-              |  strt // 2048 AS bin, strt % 2048 AS bin_offset,
-              |  TRUE AS mid_stream_compaction
-              |FROM w ORDER BY source, doc_id""".stripMargin)),
+              |${packingOracle("tokc", "TRUE AS mid_stream_compaction")}""".stripMargin)),
 
     QDef("q165_signature_takedown",
       // TAKEDOWN FOR THE DEDUP FAMILY — q161's LSM delete-marker
@@ -6469,9 +6506,8 @@ object Queries {
         val dead = docs.filter(col("doc_id") % 7 === 3)
         val deadIds = dead.select(col("doc_id").as("id"))
         val deadKeyRows = keys.filter(col("id") % 7 === 3)
-        def probe() = Dedup.admitKeysAgainstMinHashStoreGen(deadIds,
-            deadKeyRows, root)
-          .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+        def probe() = decisionRows(
+          Dedup.admitKeysAgainstMinHashStoreGen(deadIds, deadKeyRows, root))
         val before = probe()
         // the replay repeats the delete (same batch id, same keys) and
         // deletes keys the store never admitted: subtracting an absent
@@ -6492,8 +6528,7 @@ object Queries {
           noPendingDeletes(gen2)
         val byId = pending.map(p => p._1 -> p._3).toMap
         val readmitted = before.exists(b => !b._3 && byId(b._1))
-        Dedup.admitKeysAgainstMinHashStoreGen(deadIds, deadKeyRows, root)
-          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+        decisionFrame(deadIds, deadKeyRows, root)
           .withGates("replay_noop" -> replayNoop, "post_eq_pending" -> postEqPending,
             "physical_purge" -> purged, "readmitted_exists" -> readmitted)
           .orderBy(col("doc_id"))
@@ -6718,15 +6753,8 @@ object Queries {
         // section derives the corpus band keys ONCE (guide §1.2, the q165
         // pattern) — the takedown and all three pinned probes below slice
         // the same checkpointed key set instead of re-shingling raw text.
-        def signatureSection(): DataFrame = {
-          val sigKeys = signatureKeys(docs.select(col("doc_id"), col("text")))
-          signatureStore(kroot, sigKeys)
-          sigKeys
-        }
-        val (sigKeys, _) = Par.both(signatureSection(), Par.both(
-          indexStore(s, iroot, toks.filter(col("doc_id") % 2 === 0),
-            toks.filter(col("doc_id") % 2 === 1)),
-          vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
+        val sigKeys = fleetStores(s, docs, emb, iroot, vroot, kroot,
+          toks.filter(col("doc_id") % 2 === 0), toks.filter(col("doc_id") % 2 === 1))
         Manifest.init(mroot,
           Map("index" -> 1L, "vectors" -> 1L, "signatures" -> 1L))
         val deadDocs = docs.filter(col("doc_id") % 7 === 3)
@@ -6736,10 +6764,9 @@ object Queries {
         def bmAt(v: Long) = bm25Rows(pinnedBm25(s, iroot, mroot, v))
         def vsAt(v: Long) = exhaustiveSearch(s, vroot, emb.filter(col("vec_id") < 8),
           Some(Manifest.resolve(mroot, v, "vectors")))
-        def sigAt(v: Long) = Dedup.admitKeysAgainstMinHashStoreAt(
-            deadDocs.select(col("doc_id").as("id")), deadKeys,
-            root = kroot, gen = Manifest.resolve(mroot, v, "signatures"))
-          .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+        def sigAt(v: Long) = decisionRows(Dedup.admitKeysAgainstMinHashStoreAt(
+          deadDocs.select(col("doc_id").as("id")), deadKeys,
+          root = kroot, gen = Manifest.resolve(mroot, v, "signatures")))
         // pinned pre-takedown captures: three disjoint store reads, overlapped
         val (preBm, (preVs, preSig)) =
           Par.both(bmAt(1L), Par.both(vsAt(1L), sigAt(1L)))
@@ -6898,67 +6925,29 @@ object Queries {
       // takedown is one delete-fragment write, the corpus purge one
       // anti-join per read until the corpus store's own compaction.
       (s, d) => {
-        val base = scratchDir("q170")
-        val feed = base + "/feed"
-        val root = base + "/sigstore"
-        val retained = base + "/retained"
-        val docs = t(s, d, "documents")
-          .select(col("doc_id"), col("source"), col("text"))
-        new java.io.File(feed).mkdirs()
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-        val q = EventStreams.curationIngestCompacting(stream,
-          "doc_id", "text", root, retained, base + "/_ckpt",
-          maxFragments = 2, qualityThreshold = 0.5,
-          n = 3, numHashes = 32, bands = 8, portableKeys = true)
+        val c = curationStream(s, d, scratchDir("q170"))
+        val docs = c.docs
         val takedown = try {
-          (0 to 1).foreach { k =>
-            docs.filter(pmod(col("doc_id"), lit(3)) === k).coalesce(1)
-              .write.mode("append").parquet(feed)
-            q.processAllAvailable()
-          }
+          (0 to 1).foreach(k => c.crawl(docs.filter(pmod(col("doc_id"), lit(3)) === k)))
           // the takedown: purge retained %5==0 docs from the live store
-          val td = Tables.parquet(s, retained)
+          val td = Tables.parquet(s, c.retained)
             .filter(pmod(col("doc_id"), lit(5)) === 0)
             .select(col("doc_id"), col("text")).localCheckpoint()
           Dedup.deleteMinHashBatch(td, "doc_id", "text", n = 3,
-            numHashes = 32, bands = 8, batchId = 0L, root = root,
+            numHashes = 32, bands = 8, batchId = 0L, root = c.root,
             portableKeys = true)
           // batch 2: remaining originals + a RE-CRAWL of the purged docs
           val recrawl = docs
             .join(td.select("doc_id"), Seq("doc_id"), "left_semi")
             .select((col("doc_id") + CloneShift).as("doc_id"),
               col("source"), col("text"))
-          docs.filter(pmod(col("doc_id"), lit(3)) === 2)
-            .unionByName(recrawl).coalesce(1)
-            .write.mode("append").parquet(feed)
-          q.processAllAvailable()
+          c.crawl(docs.filter(pmod(col("doc_id"), lit(3)) === 2).unionByName(recrawl))
           td.select("doc_id")
-        } finally q.stop()
-        Packing.packByBudget(
-          Tables.parquet(s, retained)
-            .join(takedown, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("source"),
-              TextFunctions.tokenCount(col("text")).as("n_tokens")),
-          "source", "doc_id", "n_tokens", 2048L)
+        } finally c.query.stop()
+        packed(Tables.parquet(s, c.retained).join(takedown, Seq("doc_id"), "left_anti"))
           .orderBy(col("source"), col("doc_id"))
       },
-      Some(s"""${tokCte()}${keepCtes}${bandKeyCtes("doc_id IN (SELECT doc_id FROM keep)")}, adm0 AS (
-              |  SELECT doc_id FROM keep WHERE doc_id % 3 = 0
-              |), store1 AS (
-              |  SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 0
-              |), hits1 AS (
-              |  SELECT b.doc_id, count(*) AS c FROM bnd b
-              |  JOIN store1 s ON b.band = s.band AND b.bucket = s.bucket
-              |  WHERE b.doc_id % 3 = 1 GROUP BY b.doc_id
-              |), adm1 AS (
-              |  SELECT k.doc_id FROM keep k LEFT JOIN hits1 h USING (doc_id)
-              |  WHERE k.doc_id % 3 = 1 AND coalesce(h.c, 0) = 0
-              |), store2 AS (
-              |  SELECT band, bucket FROM store1
-              |  UNION
-              |  SELECT band, bucket FROM bnd WHERE doc_id IN (SELECT doc_id FROM adm1)
-              |), tdown AS (
+      Some(s"""$curationCtes, tdown AS (
               |  SELECT doc_id FROM (
               |    SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1)
               |  WHERE doc_id % 5 = 0
@@ -6967,14 +6956,7 @@ object Queries {
               |  EXCEPT
               |  SELECT band, bucket FROM bnd
               |  WHERE doc_id IN (SELECT doc_id FROM tdown)
-              |), hits2o AS (
-              |  SELECT b.doc_id, count(*) AS c FROM bnd b
-              |  JOIN store2p s ON b.band = s.band AND b.bucket = s.bucket
-              |  WHERE b.doc_id % 3 = 2 GROUP BY b.doc_id
-              |), adm2o AS (
-              |  SELECT k.doc_id FROM keep k LEFT JOIN hits2o h USING (doc_id)
-              |  WHERE k.doc_id % 3 = 2 AND coalesce(h.c, 0) = 0
-              |), hits2c AS (
+              |)${curationStage("2o", "store2p", 2)}, hits2c AS (
               |  SELECT b.doc_id, count(*) AS c FROM bnd b
               |  JOIN store2p s ON b.band = s.band AND b.bucket = s.bucket
               |  WHERE b.doc_id IN (SELECT doc_id FROM tdown) GROUP BY b.doc_id
@@ -6996,14 +6978,7 @@ object Queries {
               |  FROM corpus c
               |  JOIN documents d ON d.doc_id = c.src_doc
               |  JOIN tok t ON t.doc_id = c.src_doc
-              |), w AS (
-              |  SELECT doc_id, source, n_tokens,
-              |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) - n_tokens AS strt
-              |  FROM tokc
-              |)
-              |SELECT doc_id, source, n_tokens,
-              |  strt // 2048 AS bin, strt % 2048 AS bin_offset
-              |FROM w ORDER BY source, doc_id""".stripMargin)),
+              |${packingOracle("tokc")}""".stripMargin)),
 
     QDef("q171_takedown_impact",
       // THE TAKEDOWN IMPACT REPORT — the ops/compliance question every
@@ -7250,9 +7225,7 @@ object Queries {
         val freshQuiet = !KeySetStore.needsCompaction(s, root)
         Dedup.deleteMinHashKeysBatch(sigKeys.filter(col("id") % 7 === 3),
           batchId = 0L, root = root)
-        def decisions() = Dedup.admitKeysAgainstMinHashStoreGen(
-            docs.select(col("doc_id").as("id")), sigKeys, root = root)
-          .collect().toSeq.map(r => (r.getLong(0), r.getBoolean(2)))
+        def decisions() = admitDecisions(docs.select(col("doc_id").as("id")), sigKeys, root)
         val pre = decisions()
         val looseQuiet = !KeySetStore.needsCompaction(s, root,
           maxPendingFraction = 0.99)
@@ -7366,32 +7339,21 @@ object Queries {
         val affectedTypes = Seq("click", "view")
         val deadPred = col("event_type").isInCollection(affectedTypes) &&
           col("user_id") % 10 === 3
-        SketchStore.initStore(root)
-        (0L to 1L).foreach { b =>
-          SketchStore.admitBatch(s, ev.filter(pmod(col("event_id"), lit(2)) === b),
-            Seq("event_type"), "user_id", b, root)
-        }
-        def ests() = SketchStore.estimatesCurrent(s, root, Seq("event_type"))
-          .select(col("event_type"), col("est"))
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1))).sorted
-        val stale = ests() // post-takedown, pre-rebuild: counts dead users
+        sketchStore(s, root, (0L to 1L).map(b => ev.filter(pmod(col("event_id"), lit(2)) === b)): _*)
+        val stale = sketchEstimates(s, root) // post-takedown, pre-rebuild: counts dead users
         val survivors = ev.filter(!deadPred)
         import s.implicits._
         val gen2 = SketchStore.rebuildKeys(s, root, expectedGen = 1L,
           Seq("event_type"), "user_id",
           affectedKeys = affectedTypes.toDF("event_type"),
           survivors = survivors)
-        val rebuilt = ests()
+        val rebuilt = sketchEstimates(s, root)
         val staleMap = stale.toMap
         val rebuiltMap = rebuilt.toMap
         // from-scratch twin over the surviving rows only
         val fresh = scratchDir("q176f") + "/sstore"
-        SketchStore.initStore(fresh)
-        SketchStore.admitBatch(s, survivors, Seq("event_type"), "user_id",
-          0L, fresh)
-        val freshMap = SketchStore.estimatesCurrent(s, fresh, Seq("event_type"))
-          .select(col("event_type"), col("est"))
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1))).toMap
+        sketchStore(s, fresh, survivors)
+        val freshMap = sketchEstimates(s, fresh).toMap
         val eqFresh = affectedTypes.forall(k => freshMap(k) == rebuiltMap(k))
         val staleUpper = affectedTypes.forall(k => staleMap(k) >= rebuiltMap(k))
         val unaffectedIdentical = rebuiltMap.keySet.filterNot(
@@ -7511,8 +7473,7 @@ object Queries {
         Par.both(signatureStore(root, sigKeys), signatureStore(twin, sigKeys))
         val feed = s"$base/feed"
         dead.repartition(2).write.parquet(feed)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
+        val stream = feedStream(s, docs.schema, feed)
         val q = EventStreams.signatureTakedownIngest(stream, "doc_id",
           "text", root, s"$base/_cp", n = 3, numHashes = 32, bands = 8,
           portableKeys = true, compactAtPendingFraction = 0.01)
@@ -7524,9 +7485,7 @@ object Queries {
         Dedup.deleteMinHashKeysBatch(sigKeys.filter(col("id") % 5 === 1),
           batchId = 0L, root = twin)
         KeySetStore.compactStore(s, twin, GenStore.currentGen(twin))
-        def dec(r: String) = Dedup.admitKeysAgainstMinHashStoreGen(
-            docs.select(col("doc_id").as("id")), sigKeys, root = r)
-          .collect().toSeq.map(x => (x.getLong(0), x.getBoolean(2)))
+        def dec(r: String) = admitDecisions(docs.select(col("doc_id").as("id")), sigKeys, r)
         // two disjoint finalized stores — the probes overlap
         val (streamed, twinDec) = Par.both(dec(root), dec(twin))
         val eqBatch = streamed == twinDec
@@ -7638,19 +7597,11 @@ object Queries {
         val kroot = base + "/sigstore"
         val mroot = base + "/manifest"
         val docs = t(s, d, "documents")
-        val toks = tokenized(docs)
         val emb = t(s, d, "embeddings")
         // three disjoint store families: builds overlap (Par, §2.6), and
         // the signature pass runs ONCE (guide §1.2) — the takedown below
         // slices the same checkpointed key set
-        val (sigKeys, _) = Par.both(
-          {
-            val keys = signatureKeys(docs.select(col("doc_id"), col("text")))
-            signatureStore(kroot, keys)
-            keys
-          },
-          Par.both(indexStore(s, iroot, toks),
-            vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
+        val sigKeys = fleetStores(s, docs, emb, iroot, vroot, kroot, tokenized(docs))
         Manifest.init(mroot,
           Map("index" -> 1L, "vectors" -> 1L, "signatures" -> 1L))
         def bmAt(v: Long) = bm25Rows(pinnedBm25(s, iroot, mroot, v))
@@ -7727,14 +7678,7 @@ object Queries {
         // three disjoint store families: builds overlap (Par, §2.6), and
         // the signature pass runs ONCE (guide §1.2) — the takedown below
         // slices the same checkpointed key set
-        val (sigKeys, _) = Par.both(
-          {
-            val keys = signatureKeys(docs.select(col("doc_id"), col("text")))
-            signatureStore(kroot, keys)
-            keys
-          },
-          Par.both(indexStore(s, iroot, tokenized(docs)),
-            vectorStore(s, vroot, fitIvfPq(emb, kmeansIters = 2, m = 8), emb)))
+        val sigKeys = fleetStores(s, docs, emb, iroot, vroot, kroot, tokenized(docs))
         fleetTakedown(s, docs, emb, sigKeys, iroot, vroot, kroot)
         InvertedIndex.maintenanceStatus(s, iroot)
           .withColumn("store", lit("index"))
@@ -8147,9 +8091,7 @@ object Queries {
         val sigKeys = signatureKeys(docs.filter(pmod(col("doc_id"), lit(3)) < 2))
         val oldKeys = sigKeys.filter(pmod(col("id"), lit(3)) === 0)
         signatureStore(root, oldKeys, sigKeys.filter(pmod(col("id"), lit(3)) === 1))
-        def probeOld() = Dedup.admitKeysAgainstMinHashStoreGen(
-            old.select(col("doc_id").as("id")), oldKeys, root = root)
-          .collect().toSeq.map(r => (r.getLong(0), r.getBoolean(2)))
+        def probeOld() = admitDecisions(old.select(col("doc_id").as("id")), oldKeys, root)
         // docs with shingles reject as their own clones pre-expiry
         // (shingle-less docs have no keys to hit and always admit)
         val withKeys = old.filter(
@@ -8162,9 +8104,7 @@ object Queries {
         val replayRefused = refuses("seal") {
           Dedup.admitMinHashKeysBatch(oldKeys, batchId = 0L, root = root)
         }
-        Dedup.admitKeysAgainstMinHashStoreGen(
-            old.select(col("doc_id").as("id")), oldKeys, root = root)
-          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+        decisionFrame(old.select(col("doc_id").as("id")), oldKeys, root)
           .withGates("gen_rolled" -> (gen2 == 2L),
             "pre_expiry_self_rejected" -> preRejects,
             "expired_replay_refused" -> replayRefused)
@@ -8287,15 +8227,12 @@ object Queries {
         signatureStore(rb, kB)
         KeySetStore.mergeStores(s, Seq(ra, rb), merged)
         signatureStore(twin, kA, kB)
-        def dec(r: String) = Dedup.admitKeysAgainstMinHashStoreGen(
-            probeIds, kP, r)
-          .collect().toSeq.map(x => (x.getLong(0), x.getBoolean(2)))
+        def dec(r: String) = admitDecisions(probeIds, kP, r)
         val eqTwin = dec(merged) == dec(twin)
         val sealRefused = refuses("seal") {
           Dedup.admitMinHashKeysBatch(kA, batchId = 0L, root = merged)
         }
-        Dedup.admitKeysAgainstMinHashStoreGen(probeIds, kP, merged)
-          .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+        decisionFrame(probeIds, kP, merged)
           .withGates("merged_eq_single_pipeline" -> eqTwin,
             "occupied_id_sealed" -> sealRefused)
           .orderBy(col("doc_id"))
@@ -8436,15 +8373,12 @@ object Queries {
         SketchStore.mergeStores(s, Seq(sa, sb), sm)
         HeavyHitters.mergeStores(s, Seq(ha, hb), hm)
         QuantileStore.mergeStores(s, Seq(qa, qb), qm)
-        def ests(r: String) = SketchStore.estimatesCurrent(s, r, Seq("event_type"))
-          .select(col("event_type"), col("est"))
-          .collect().toSeq.map(x => (x.getString(0), x.getLong(1))).sorted
         def hits(r: String) = HeavyHitters.hittersCurrent(s, r, 64)
           .collect().toSeq.map(x => (x.getString(0), x.getLong(1))).sorted
         def quants(r: String) = QuantileStore.quantilesCurrent(s, r,
             Seq("event_type"), qs, lo = 1.0, width = 1.0)
           .collect().toSeq.map(_.toString).sorted
-        val skEq = ests(sm) == ests(st)
+        val skEq = sketchEstimates(s, sm) == sketchEstimates(s, st)
         val hhEq = hits(hm) == hits(ht)
         val qEq = quants(qm) == quants(qt)
         HeavyHitters.hittersCurrent(s, hm, 64)
@@ -8670,16 +8604,13 @@ object Queries {
         val sigKeys = signatureKeys(docs)
         val probeIds = probe.select(col("doc_id").as("id"))
         val probeKeys = sigKeys.filter(pmod(col("id"), lit(4)) === 3)
-        def dec(r: String) = Dedup.admitKeysAgainstMinHashStoreGen(
-            probeIds, probeKeys, root = r)
-          .collect().toSeq.map(x => (x.getLong(0), x.getBoolean(2)))
+        def dec(r: String) = admitDecisions(probeIds, probeKeys, r)
         // builder B finished before the tick
         signatureStore(rb, sigKeys.filter(pmod(col("id"), lit(4)) === 1))
         // builder A ingests phase-1 crawl files as a LIVE stream
         val feed = s"$base/feed"
         pa.repartition(2).write.parquet(feed)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
+        val stream = feedStream(s, docs.schema, feed)
         val q = EventStreams.signatureIngestQuiesceAware(stream, "doc_id",
           "text", ra, s"$base/_cp", n = 3, numHashes = 32, bands = 8,
           portableKeys = true)
@@ -8728,9 +8659,7 @@ object Queries {
               java.nio.file.Paths.get(ra)) &&
             !java.nio.file.Files.exists(java.nio.file.Paths.get(rb)) &&
             dec(merged) == twinDec
-          Dedup.admitKeysAgainstMinHashStoreGen(probeIds, probeKeys,
-              root = merged)
-            .select(col("id").as("doc_id"), col("hit_bands"), col("admit"))
+          decisionFrame(probeIds, probeKeys, merged)
             .withGates("quiesce_fence_names_successor" -> fenceNamed,
               "sink_repointed_to_merged" -> repointed,
               "merged_eq_single_pipeline" -> eqTwin,
@@ -9261,8 +9190,7 @@ object Queries {
         EventStreams.initCdcState(docs.withColumn("seq", lit(0L)), cdc)
         val batches = cdcMutations(docs)
         batches.foreach(_.coalesce(1).write.mode("append").parquet(feed))
-        val stream = s.readStream.schema(batches.head.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
+        val stream = feedStream(s, batches.head.schema, feed)
         val q = CdcSync.cdcIngestSyncing(stream, cdc, root, "doc_id",
           "tk", IndexBucket, tokenized, s"$base/_cp",
           maxFragments = 2, maxPendingFraction = 0.01)
@@ -9307,16 +9235,9 @@ object Queries {
         val base = scratchDir("q204")
         val (cdc, iroot, vroot) = (s"$base/cdc", s"$base/idx", s"$base/vec")
         val (ifresh, vtwin) = (s"$base/ifresh", s"$base/vtwin")
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val emb = t(s, d, "embeddings")
-          .select(col("vec_id").as("doc_id"), col("embedding"))
-        val corpus = docs.join(emb, "doc_id")
-        EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), cdc)
-        def itick() = syncIndex(s, cdc, iroot)
-        def vtick() = syncVectors(s, cdc, vroot, "doc_id")
         // the two synced stores live in disjoint roots and only READ the
         // shared CDC store — their ticks overlap (Par, guide §2.6)
-        Par.both(itick(), vtick())
+        val (corpus, emb) = cdcPair(s, d, base)
         // one mixed change batch: re-crawl + re-embed (U), new docs
         // (I), takedowns (D)
         publishDocs(s, cdc,
@@ -9335,7 +9256,7 @@ object Queries {
             .unionByName(corpus.filter(col("doc_id") % 5 === 3)
               .select(col("doc_id"), col("text"), col("embedding"),
                 lit(1L).as("seq"), lit("D").as("op"))))
-        val (itickV1, vtickV1) = Par.both(itick(), vtick())
+        val (itickV1, vtickV1) = pairTick(s, base)
         require(itickV1 == 1L && vtickV1 == 1L,
           "both sync ticks must land at v1")
         // fold the upsert history on both sides (the compaction leg of
@@ -9485,25 +9406,15 @@ object Queries {
           "the federated synced index diverges from a fresh build")
         postingsFrame(InvertedIndex.lookupCurrent(s, midx, syncTerms))
       },
-      Some("""WITH mut AS (
-             |  SELECT doc_id, CASE
-             |    WHEN doc_id % 20 = 0 THEN text || ' graftsync graftsync'
-             |    WHEN doc_id % 10 = 0 THEN text || ' graftsync'
-             |    ELSE text END AS text
-             |  FROM documents WHERE doc_id % 10 <> 7 AND doc_id % 10 <> 9
-             |  UNION ALL
-             |  SELECT doc_id + 1000000 AS doc_id, 'graftsync ' || text AS text
-             |  FROM documents WHERE doc_id % 10 = 3
-             |), tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM mut
-             |)
-             |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-             |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-             |    x -> CAST(x AS VARCHAR)), ',') AS postings
-             |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-             |WHERE tok IN ('graftsync', 'join', 'vector')
-             |GROUP BY tok ORDER BY tok""".stripMargin)),
+      Some(syncPostingsOracle(
+        """|  SELECT doc_id, CASE
+           |    WHEN doc_id % 20 = 0 THEN text || ' graftsync graftsync'
+           |    WHEN doc_id % 10 = 0 THEN text || ' graftsync'
+           |    ELSE text END AS text
+           |  FROM documents WHERE doc_id % 10 <> 7 AND doc_id % 10 <> 9
+           |  UNION ALL
+           |  SELECT doc_id + 1000000 AS doc_id, 'graftsync ' || text AS text
+           |  FROM documents WHERE doc_id % 10 = 3""".stripMargin))),
 
     QDef("q206_sync_status",
       // THE SYNC DASHBOARD (CdcSync.syncStatus) — the q174/q181
@@ -9524,27 +9435,20 @@ object Queries {
       (s, d) => {
         val base = scratchDir("q206")
         val (cdc, iroot, vroot) = (s"$base/cdc", s"$base/idx", s"$base/vec")
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val emb = t(s, d, "embeddings")
-          .select(col("vec_id").as("doc_id"), col("embedding"))
-        val corpus = docs.join(emb, "doc_id")
-        EventStreams.initCdcState(corpus.withColumn("seq", lit(0L)), cdc)
-        def itick() = syncIndex(s, cdc, iroot)
-        def vtick() = syncVectors(s, cdc, vroot, "doc_id")
         // disjoint synced roots, shared CDC read — ticks overlap (Par, §2.6)
-        Par.both(itick(), vtick())
+        val (corpus, _) = cdcPair(s, d, base)
         publishDocs(s, cdc,
           corpus.filter(col("doc_id") % 10 === 0)
             .select(col("doc_id"),
               concat(col("text"), lit(" graftsync")).as("text"),
               reverse(col("embedding")).as("embedding"),
               lit(1L).as("seq"), lit("U").as("op")))
-        Par.both(itick(), vtick())
+        pairTick(s, base)
         publishDocs(s, cdc,
           corpus.filter(col("doc_id") % 10 === 7)
             .select(col("doc_id"), col("text"), col("embedding"),
               lit(1L).as("seq"), lit("D").as("op")))
-        itick() // the vector store is left one version behind
+        syncIndex(s, cdc, iroot) // the vector store is left one version behind
         CdcSync.syncStatus(s, Seq((cdc, iroot), (cdc, vroot)))
           .orderBy(col("store"))
       },
@@ -9630,22 +9534,12 @@ object Queries {
           "the resynced store diverges from a fresh build")
         look(r2)
       },
-      Some("""WITH mut AS (
-             |  SELECT doc_id, CASE
-             |    WHEN doc_id % 20 = 0 THEN text || ' graftsync graftsync'
-             |    WHEN doc_id % 10 = 0 THEN text || ' graftsync'
-             |    ELSE text END AS text
-             |  FROM documents WHERE doc_id % 10 <> 7
-             |), tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM mut
-             |)
-             |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-             |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-             |    x -> CAST(x AS VARCHAR)), ',') AS postings
-             |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-             |WHERE tok IN ('graftsync', 'join', 'vector')
-             |GROUP BY tok ORDER BY tok""".stripMargin)),
+      Some(syncPostingsOracle(
+        """|  SELECT doc_id, CASE
+           |    WHEN doc_id % 20 = 0 THEN text || ' graftsync graftsync'
+           |    WHEN doc_id % 10 = 0 THEN text || ' graftsync'
+           |    ELSE text END AS text
+           |  FROM documents WHERE doc_id % 10 <> 7""".stripMargin))),
 
     QDef("q208_sync_time_travel",
       // TIME TRAVEL over the SYNCED index (CdcSync.lookupIndexAsOf) —
@@ -9704,21 +9598,11 @@ object Queries {
         require(folded, "a pre-fold version must refuse, never mis-serve")
         v1Rows.toDF("tok", "n_docs", "postings").orderBy(col("tok"))
       },
-      Some("""WITH mut AS (
-             |  SELECT doc_id, CASE
-             |    WHEN doc_id % 10 = 0 THEN text || ' graftsync'
-             |    ELSE text END AS text
-             |  FROM documents
-             |), tok AS (
-             |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-             |  FROM mut
-             |)
-             |SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-             |  array_to_string(list_transform(list_sort(list(DISTINCT doc_id)),
-             |    x -> CAST(x AS VARCHAR)), ',') AS postings
-             |FROM (SELECT doc_id, unnest(tk) AS tok FROM tok)
-             |WHERE tok IN ('graftsync', 'join', 'vector')
-             |GROUP BY tok ORDER BY tok""".stripMargin))
+      Some(syncPostingsOracle(
+        """|  SELECT doc_id, CASE
+           |    WHEN doc_id % 10 = 0 THEN text || ' graftsync'
+           |    ELSE text END AS text
+           |  FROM documents""".stripMargin)))
   )
 
   val defs: Seq[QDef] =

@@ -686,11 +686,6 @@ object Similarity {
       queries, idCol, vecCol, k, cents, books,
       nprobe, shortlistFactor, broadcastQueries, cellSalt)
 
-  /** The coded-corpus frame of [[ivfPqSearch]]: one narrow pass
-    * (unitize, `nassign` replica cells, per-cell residual codes) —
-    * (cid, cv, cell, codes). Shared by the inline search path and the
-    * persisted admission store ([[appendCodedBatch]]).
-    */
   /** The shared encode front half: unitize, `nassign` replica cells,
     * per-cell residual — (cid, cv, cell, r). Every coded-corpus form
     * (PQ, SQ, both-tiers) is this one pipeline plus its code-column
@@ -708,6 +703,11 @@ object Similarity {
       .select(col("cid"), col("cv"), col("cell"),
         VectorFunctions.residual(col("uv"), col("cell"), cents).as("r"))
 
+  /** The coded-corpus frame of [[ivfPqSearch]]: one narrow pass
+    * (unitize, `nassign` replica cells, per-cell residual codes) —
+    * (cid, cv, cell, codes). Shared by the inline search path and the
+    * persisted admission store ([[appendCodedBatch]]).
+    */
   private def codedCorpus(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]],
@@ -764,15 +764,6 @@ object Similarity {
       k, shortlistFactor, broadcastQueries, cellSalt)
   }
 
-  /** The shared probed-cell search core of the IVF-PQ and IVF-SQ tiers:
-    * prune the coded scan to probed cells (broadcast path), salt hot
-    * cells if asked, equi-join probes to coded candidates on cell,
-    * score with the tier's `approxScore` expression, shortlist
-    * k*shortlistFactor per query via TopKAgg, exact-cosine re-rank to
-    * top k. `c` is (cid, cv, cell, <tier code columns>); `probes` is
-    * (query_id, cell, <tier probe columns>); `approxScore` references
-    * columns of their join.
-    */
   /** Derive the hot-cell salt from the corpus' own cell histogram: one
     * map-side-combined count over the narrow `cell` column (against a
     * persisted store this reads one column; inline it costs one
@@ -838,6 +829,15 @@ object Similarity {
     else "h" + coded.queryExecution.analyzed.semanticHash()
   }
 
+  /** The shared probed-cell search core of the IVF-PQ and IVF-SQ tiers:
+    * prune the coded scan to probed cells (broadcast path), salt hot
+    * cells if asked, equi-join probes to coded candidates on cell,
+    * score with the tier's `approxScore` expression, shortlist
+    * k*shortlistFactor per query via TopKAgg, exact-cosine re-rank to
+    * top k. `c` is (cid, cv, cell, <tier code columns>); `probes` is
+    * (query_id, cell, <tier probe columns>); `approxScore` references
+    * columns of their join.
+    */
   private def probedCellTopK(
       c: DataFrame, q: DataFrame, probes: DataFrame, approxScore: Column,
       k: Int, shortlistFactor: Int,

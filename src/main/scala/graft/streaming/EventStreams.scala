@@ -157,13 +157,6 @@ object EventStreams {
     deduped.drop("__sig")
   }
 
-  /** Read an events directory as a file stream (one parquet file per
-    * micro-batch when `maxFilesPerTrigger` is set), for local smoke tests
-    * driving the streaming operators with deterministic input.
-    * `schemaDir` is a testdata sf directory used only for the schema; the
-    * file-stream source itself requires `eventsDir` to be a directory of
-    * parquet files.
-    */
   /** Continuous CDC ingestion: maintain a versioned snapshot store from
     * a change stream via foreachBatch + [[publishCdcBatch]] — each
     * micro-batch publishes one version under the DELTA-LOG layout
@@ -1564,6 +1557,13 @@ object EventStreams {
     graft.operators.GenStore.atomicWrite(
       java.nio.file.Paths.get(stateDir, "_CURRENT"), v.toString)
 
+  /** Read an events directory as a file stream (one parquet file per
+    * micro-batch when `maxFilesPerTrigger` is set), for local smoke tests
+    * driving the streaming operators with deterministic input.
+    * `schemaDir` is a testdata sf directory used only for the schema; the
+    * file-stream source itself requires `eventsDir` to be a directory of
+    * parquet files.
+    */
   def readEventsStream(spark: SparkSession, eventsDir: String, schemaDir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
     // Match Tables.load's dual-layout handling: TIMESTAMP(NANOS) data

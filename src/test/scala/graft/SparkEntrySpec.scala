@@ -48,15 +48,33 @@ class SparkEntrySpec extends AnyFunSuite {
       "\"doc_id\", \"tk\", IndexBucket" -> 3,
       "case e: IllegalArgumentException" -> 1, // refuses
       "Paths.get(root, \"gen=3\")" -> 1, // casRetryNoop
-      // signatureKeys; q164's and q170's curation streams derive their
-      // micro-batches' keys with the same parameters
-      "numHashes = 32, bands = 8, portableKeys = true)" -> 3,
+      // signatureKeys; curationStream derives its micro-batches' keys
+      // with the same parameters
+      "numHashes = 32, bands = 8, portableKeys = true)" -> 2,
       // cdcMutations; q205's post-merge batch and q207's post-cutover
       // batch re-crawl doc_id % 20 == 0 with the same two tokens
       "\" graftsync graftsync\"" -> 3,
       "kmeansIters = 5, m = 16" -> 1, // syncVectors
       "shortlistFactor = 1000" -> 1, // exhaustiveFrame
-      "deletes\"))" -> 1) // noPendingDeletes
+      "deletes\"))" -> 1, // noPendingDeletes
+      "ORDER BY 0.5*cos DESC, id) AS pk FROM pool" -> 1, // mmrOracle
+      // postingsOracle; q80's bucketed postings add the bucket column
+      "x -> CAST(x AS VARCHAR)), ',') AS postings" -> 2,
+      // postingsFrame; q80's bucketed frame keeps the bucket column
+      "array_join(transform(col(\"postings\")" -> 2,
+      "AND coalesce(h.c, 0) = 0" -> 1, // curationStage
+      "SELECT DISTINCT band, bucket FROM bnd WHERE doc_id % 3 = 0" -> 1, // curationCtes
+      "strt // 2048 AS bin" -> 1, // packingOracle
+      "\"n_tokens\", 2048L)" -> 1, // packed
+      ".option(\"maxFilesPerTrigger\", 1)" -> 1, // feedStream
+      "maxFragments = 2, qualityThreshold = 0.5" -> 1, // curationStream
+      "fitIvfPq(emb, kmeansIters = 2, m = 8), emb)" -> 1, // fleetStores
+      "initCdcState(corpus.withColumn(\"seq\", lit(0L))" -> 1, // cdcPair
+      // decisionFrame; q105 frames its flat-store admission alike
+      "col(\"id\").as(\"doc_id\"), col(\"hit_bands\"), col(\"admit\")" -> 2,
+      ".getBoolean(2)))" -> 2, // admitDecisions and decisionRows
+      "select(col(\"event_type\"), col(\"est\"))" -> 1, // sketchEstimates
+      "SketchStore.initStore(root)" -> 1) // sketchStore
     val src = java.nio.file.Paths.get("src/main/scala/graft/Queries.scala")
     assert(java.nio.file.Files.exists(src),
       s"run from the repository root, not ${java.nio.file.Paths.get("").toAbsolutePath}")

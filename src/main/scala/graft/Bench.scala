@@ -60,7 +60,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus
     val liBytes = new java.io.File(s"$sfDir/lineitem.parquet").length()
     val shufflePartitions = math.max(1L, math.min(cpus.toLong, liBytes / (64L << 20)))
     val spark = GraftSession.configure(

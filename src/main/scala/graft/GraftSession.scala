@@ -16,9 +16,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object GraftSession {
 
+  /** Task threads of the local master (`local[cpus]`) and the default
+    * shuffle parallelism: `SPARK_GRAFT_CPUS`, or 32 when unset.
+    */
+  val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   /** Apply the engine's standard configs to a builder. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    .config("spark.sql.shuffle.partitions", cpus.toString)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -43,9 +48,8 @@ object GraftSession {
     .config("spark.sql.unionOutputPartitioning", "false")
     .config("spark.ui.enabled", "false")
 
-  /** Local session for tests/CLI; `cpus` defaults to SPARK_GRAFT_CPUS or 32. */
+  /** Local session for tests/CLI on [[cpus]] task threads. */
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val s = configure(
       SparkSession.builder().master(s"local[$cpus]").appName(appName)
     ).getOrCreate()

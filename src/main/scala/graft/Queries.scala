@@ -8784,9 +8784,7 @@ object Queries {
           refuses("disjoint") {
             EventStreams.mergeCdcStores(s, Seq(sa, sc), s"$base/bad",
               verifyKeyCols = Seq("key"))
-          } &&
-          !java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$base/bad", "_CURRENT"))
+          } && !GenStore.hasPointer(s"$base/bad")
         EventStreams.currentCdcSnapshot(s, m)
           .select(col("key"), col("bal"), col("seq"))
           .withGates("merged_v0_is_cut" -> cutEq,

@@ -34,6 +34,17 @@ import graft.Tables
   * or the new one, never a torn pointer. A generation directory above
   * the pointer is unpublished work (crashed or in-flight compaction)
   * that no reader may observe.
+  *
+  * The same VERSIONED-ROOT steps serve every pointer-anchored root in
+  * graft — the stores above, the CDC snapshot store and the component
+  * labels ([[graft.streaming.EventStreams]]: `v<N>` directories) and the
+  * [[Manifest]] (`v<N>/PINS`): one `_CURRENT` pointer ([[currentGen]],
+  * [[writePointer]], [[hasPointer]]) over numbered directories named
+  * `gen=N` or `v<N>` ([[listVersions]]), keep-last retention that
+  * renames each dropped directory to a `.deleted` tombstone before
+  * deleting it ([[vacuumVersions]], [[tombstoneDelete]],
+  * [[sweepTombstones]]), and `key=value` marker files ([[readMarker]]).
+  * The directory prefix is the only difference between the roots.
   */
 object GenStore {
 
@@ -54,8 +65,25 @@ object GenStore {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Move a versioned root's `_CURRENT` pointer to `gen`. */
   def writePointer(root: String, gen: Long): Unit =
     atomicWrite(pointerPath(root), gen.toString)
+
+  /** PUBLISH version `v` of a versioned root whose content is already on
+    * disk: when `what` names the write, re-check the quiesce mark first
+    * ([[requireStillNotQuiesced]] — a publish completing inside a
+    * federation merge's cut window throws before the pointer moves),
+    * then move the pointer.
+    */
+  private[graft] def publishVersion(root: String, v: Long,
+      what: String = ""): Unit = {
+    if (what.nonEmpty) requireStillNotQuiesced(root, what)
+    writePointer(root, v)
+  }
+
+  /** True once a versioned root has published a pointer. */
+  private[graft] def hasPointer(root: String): Boolean =
+    java.nio.file.Files.exists(pointerPath(root))
 
   /** Create the store (generation 1, empty). Idempotent. */
   def init(root: String): Unit = writePointer(root, 1L)
@@ -65,11 +93,23 @@ object GenStore {
     * compacted-away generation for readers).
     */
   def initIfAbsent(root: String): Unit =
-    if (!java.nio.file.Files.exists(pointerPath(root))) init(root)
+    if (!hasPointer(root)) init(root)
 
-  /** The generation readers currently see. */
+  /** The generation (or version) readers of a versioned root currently
+    * see.
+    */
   def currentGen(root: String): Long =
     new String(java.nio.file.Files.readAllBytes(pointerPath(root))).trim.toLong
+
+  /** The `key=value` lines of a small marker file (a CDC delta's
+    * `_DELTA`, a sync watermark, a manifest's `PINS`), split at the first
+    * `=`; lines without one are skipped.
+    */
+  private[graft] def readMarker(path: java.nio.file.Path): Map[String, String] =
+    new String(java.nio.file.Files.readAllBytes(path))
+      .linesIterator.filter(_.contains("="))
+      .map { l => val i = l.indexOf('='); (l.take(i), l.drop(i + 1)) }
+      .toMap
 
   /** One generation's directory. */
   def genDir(root: String, gen: Long): String = s"$root/gen=$gen"
@@ -246,7 +286,7 @@ object GenStore {
     val succ = quiescedSuccessor(root).getOrElse(
       throw new IllegalStateException(s"store $root is not quiesced"))
     val sealedMerge =
-      java.nio.file.Files.exists(pointerPath(succ)) && {
+      hasPointer(succ) && {
         val gen = currentGen(succ)
         val dir = java.nio.file.Paths.get(genDir(succ, gen))
         if (java.nio.file.Files.isDirectory(dir))
@@ -268,13 +308,11 @@ object GenStore {
   }
 
   /** RETIRE a merged-away source store: tombstone-rename then delete
-    * the whole root ([[graft.streaming.EventStreams.tombstoneDelete]]'s
-    * crash discipline — a racing reader never observes a partial root
-    * that still resolves).
+    * the whole root ([[tombstoneDelete]]'s crash discipline — a racing
+    * reader never observes a partial root that still resolves).
     */
   def retire(root: String): Unit =
-    graft.streaming.EventStreams.tombstoneDelete(
-      java.nio.file.Paths.get(root))
+    tombstoneDelete(java.nio.file.Paths.get(root))
 
   // -------------------------------------------------------------------------
   // ADMISSION and PUBLISH — the two halves every store shares. A front
@@ -705,40 +743,102 @@ object GenStore {
     1L
   }
 
-  /** Published generations still on disk, ascending (tombstoned
-    * `.deleted` directories and unpublished generations excluded).
+  /** Published versions of a versioned root still on disk, ascending:
+    * the directories named `prefix` + number (`gen=` for the stores,
+    * `v` for the CDC, label and manifest roots) at or below the pointer.
+    * Tombstoned `.deleted` directories and unpublished versions above
+    * the pointer are excluded.
     */
-  def listGenerations(root: String): Seq[Long] = {
+  private[graft] def listVersions(root: String, prefix: String): Seq[Long] = {
     import scala.jdk.CollectionConverters._
     val cur = currentGen(root)
+    // Files.list holds a directory handle until closed: these listings
+    // run once per streaming micro-batch on long-lived drivers, so an
+    // unclosed stream is a slow fd leak
     scala.util.Using.resource(
         java.nio.file.Files.list(java.nio.file.Paths.get(root))) { st =>
       st.iterator().asScala
         .map(_.getFileName.toString)
-        .collect { case s if s.matches("gen=\\d+") => s.drop(4).toLong }
+        .collect { case s if s.matches(s"$prefix\\d+") => s.drop(prefix.length).toLong }
         .filter(_ <= cur).toSeq.sorted
     }
   }
 
-  /** Retention for superseded generations: drop every published
-    * generation older than the newest `keepLast`, except those in
-    * `keep`. Each is tombstone-renamed before deletion
-    * ([[graft.streaming.EventStreams.tombstoneDelete]]), so a crash
-    * mid-vacuum or a racing reader can never observe a partial
-    * generation that still resolves. `keep` is the enforcement hook
-    * for cross-store pins ([[Manifest.vacuumStore]] passes the
-    * generations that retained manifest versions still pin, turning
-    * [[Manifest.retainedPins]] from an advisory audit into an invariant
-    * the vacuum cannot violate).
+  /** Published generations still on disk, ascending. */
+  def listGenerations(root: String): Seq[Long] = listVersions(root, "gen=")
+
+  /** Keep-last RETENTION over a versioned root: drop every published
+    * version ([[listVersions]]) older than the newest `keepLast`, except
+    * those in `keep`, together with its `suffixes` siblings (`""` is the
+    * version directory itself). `beforeDrop` runs with the oldest
+    * retained version before anything is dropped (the CDC vacuum seals
+    * a promoted twin there). Tombstones a crashed earlier vacuum left
+    * are swept first, and each dropped directory is tombstone-renamed
+    * before deletion ([[tombstoneDelete]]), so a crash mid-vacuum or a
+    * racing reader never observes a partial version that still
+    * resolves. Returns the dropped versions.
+    */
+  private[graft] def vacuumVersions(root: String, prefix: String,
+      keepLast: Int, keep: Set[Long] = Set.empty,
+      suffixes: Seq[String] = Seq(""),
+      beforeDrop: Long => Unit = _ => ()): Seq[Long] = {
+    require(keepLast >= 1, "keepLast must retain at least the current version")
+    sweepTombstones(java.nio.file.Paths.get(root))
+    val vs = listVersions(root, prefix)
+    val drop = vs.dropRight(keepLast).filterNot(keep)
+    if (drop.nonEmpty) beforeDrop(vs(vs.size - keepLast))
+    for (v <- drop; sfx <- suffixes)
+      tombstoneDelete(java.nio.file.Paths.get(root, s"$prefix$v$sfx"))
+    drop
+  }
+
+  /** Retention for superseded generations: [[vacuumVersions]] over the
+    * `gen=N` directories, keeping those in `keep`. `keep` is the
+    * enforcement hook for cross-store pins ([[Manifest.vacuumStore]]
+    * passes the generations that retained manifest versions still pin,
+    * turning [[Manifest.retainedPins]] from an advisory audit into an
+    * invariant the vacuum cannot violate).
     */
   def vacuumExcept(root: String, keepLast: Int,
-      keep: Set[Long]): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must retain at least the current generation")
-    graft.streaming.EventStreams.sweepTombstones(java.nio.file.Paths.get(root))
-    val drop = listGenerations(root).dropRight(keepLast).filterNot(keep)
-    drop.foreach(g => graft.streaming.EventStreams.tombstoneDelete(
-      java.nio.file.Paths.get(genDir(root, g))))
-    drop
+      keep: Set[Long]): Seq[Long] =
+    vacuumVersions(root, "gen=", keepLast, keep)
+
+  /** Finish any `.deleted` tombstones a crashed earlier vacuum left
+    * behind — they are already invisible to readers (no listing matches
+    * them), this just reclaims the space. Called at the start of every
+    * vacuum.
+    */
+  private[graft] def sweepTombstones(dir: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (!java.nio.file.Files.isDirectory(dir)) return
+    val leftovers = scala.util.Using.resource(java.nio.file.Files.list(dir)) {
+      st => st.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".deleted")).toSeq
+    }
+    leftovers.foreach(reallyDelete)
+  }
+
+  private def reallyDelete(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
+      st.iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists)
+    }
+  }
+
+  /** Atomic-visibility directory delete: rename to a `.deleted`
+    * tombstone first (readers' exact-name checks fail from that instant
+    * on), then delete the tombstone's contents; a pre-existing tombstone
+    * from a crashed earlier vacuum is finished off first.
+    */
+  private[graft] def tombstoneDelete(dir: java.nio.file.Path): Unit = {
+    val tomb = dir.resolveSibling(dir.getFileName.toString + ".deleted")
+    if (java.nio.file.Files.exists(tomb)) reallyDelete(tomb)
+    if (java.nio.file.Files.exists(dir)) {
+      java.nio.file.Files.move(dir, tomb,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      reallyDelete(tomb)
+    }
   }
 
   // -------------------------------------------------------------------------

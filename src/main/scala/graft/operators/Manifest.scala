@@ -26,23 +26,19 @@ package graft.operators
   *   root/v<N>/PINS     # sorted `name=generation` lines
   * }}}
   *
-  * Retention mirrors the stores ([[GenStore.vacuumExcept]] / CDC): old
-  * versions tombstone-delete, and resolving a vacuumed version fails
-  * loudly, never silently re-resolves to something newer. The pattern
+  * The pointer, the version listing and the retention are
+  * [[GenStore]]'s versioned-root steps with the `v` prefix: old versions
+  * tombstone-delete ([[GenStore.vacuumVersions]]), and resolving a
+  * vacuumed version fails loudly, never silently re-resolves to
+  * something newer. The pattern
   * is ordinary snapshot-isolation catalog practice (Iceberg/Delta-style
   * root pointers over immutable snapshots), re-expressed over this
   * repo's generational stores; gated by q152.
   */
 object Manifest {
 
-  private def pointerPath(root: String) =
-    java.nio.file.Paths.get(root, "_CURRENT")
-
   private def versionDir(root: String, v: Long) =
     java.nio.file.Paths.get(root, s"v$v")
-
-  private def writePointer(root: String, v: Long): Unit =
-    GenStore.atomicWrite(pointerPath(root), v.toString)
 
   private def writePins(root: String, v: Long,
       pins: Map[String, Long]): Unit = {
@@ -59,12 +55,11 @@ object Manifest {
     */
   def init(root: String, pins: Map[String, Long]): Unit = {
     writePins(root, 1L, pins)
-    writePointer(root, 1L)
+    GenStore.publishVersion(root, 1L)
   }
 
   /** The version readers currently resolve. */
-  def currentVersion(root: String): Long =
-    new String(java.nio.file.Files.readAllBytes(pointerPath(root))).trim.toLong
+  def currentVersion(root: String): Long = GenStore.currentGen(root)
 
   /** Publish a new pin set as version `expectedVersion + 1` — CAS on
     * the version the writer planned against (a racing publish that
@@ -109,7 +104,7 @@ object Manifest {
             "it; remove it and retry")
     }
     writePins(root, cur + 1, pins)
-    writePointer(root, cur + 1)
+    GenStore.publishVersion(root, cur + 1)
     cur + 1
   }
 
@@ -122,12 +117,7 @@ object Manifest {
     require(java.nio.file.Files.exists(f),
       s"manifest version $version of $root does not exist " +
         "(vacuumed or never published) — re-resolve from the current version")
-    new String(java.nio.file.Files.readAllBytes(f)).linesIterator
-      .filter(_.nonEmpty)
-      .map { l =>
-        val i = l.indexOf('=')
-        l.substring(0, i) -> l.substring(i + 1).toLong
-      }.toMap
+    GenStore.readMarker(f).map { case (n, g) => n -> g.toLong }
   }
 
   /** The current version's pins, in one resolve. */
@@ -144,17 +134,7 @@ object Manifest {
   /** Published versions still on disk, ascending (tombstones and
     * unpublished work excluded).
     */
-  def listVersions(root: String): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    val cur = currentVersion(root)
-    scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(root))) { st =>
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("v\\d+") => s.drop(1).toLong }
-        .filter(_ <= cur).toSeq.sorted
-    }
-  }
+  def listVersions(root: String): Seq[Long] = GenStore.listVersions(root, "v")
 
   /** Retention: drop every published version older than the newest
     * `keepLast` (tombstone-renamed before deletion — the family's
@@ -163,15 +143,8 @@ object Manifest {
     * retention policy drops a store generation only when no retained
     * manifest version still pins it ([[retainedPins]] is that audit).
     */
-  def vacuum(root: String, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must retain at least the current version")
-    graft.streaming.EventStreams.sweepTombstones(
-      java.nio.file.Paths.get(root))
-    val drop = listVersions(root).dropRight(keepLast)
-    drop.foreach(v => graft.streaming.EventStreams.tombstoneDelete(
-      versionDir(root, v)))
-    drop
-  }
+  def vacuum(root: String, keepLast: Int): Seq[Long] =
+    GenStore.vacuumVersions(root, "v", keepLast)
 
   /** Every (store, generation) still pinned by ANY retained manifest
     * version — the reference set a store-level vacuum must not drop.

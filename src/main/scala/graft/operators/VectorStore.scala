@@ -704,7 +704,7 @@ object VectorStore {
     * rather than seeing partial data: the generation directory is
     * atomically renamed to a `gen=<N>.deleted` tombstone before the
     * recursive delete (the CDC vacuum's discipline,
-    * [[graft.streaming.EventStreams.tombstoneDelete]]), so a crash
+    * [[GenStore.tombstoneDelete]]), so a crash
     * mid-vacuum or a racing reader can never observe a partial
     * generation that still resolves.
     */

@@ -46,6 +46,11 @@ import graft.operators.{GenStore, InvertedIndex, Similarity, VectorStore}
   * pattern); this front refuses rather than silently full-diffing.
   * The q207 catalog query drives the whole recovery end to end.
   *
+  * Both ticks run one skeleton (`tick`: binding and lag checks, the
+  * persisted change feed, scoped delete, upsert, watermark last); each
+  * store passes only its bootstrap and its two store calls. The
+  * streaming form runs on [[EventStreams]]' one sink runner.
+  *
   * DELIBERATE EXCLUSION — no sync front for the signature/gram
   * stores ([[graft.operators.KeySetStore]]): an upsert there must
   * delete keys DERIVED FROM THE OLD PAYLOAD (the grams/bands of the
@@ -78,10 +83,7 @@ object CdcSync {
     val p = watermarkPath(root)
     if (!java.nio.file.Files.exists(p)) None
     else {
-      val kv = new String(java.nio.file.Files.readAllBytes(p))
-        .linesIterator.filter(_.contains("="))
-        .map { l => val i = l.indexOf('='); (l.take(i), l.drop(i + 1)) }
-        .toMap
+      val kv = GenStore.readMarker(p)
       Some((kv("version").toLong, kv("cdcDir"),
         kv.getOrElse("base", "0").toLong))
     }
@@ -108,15 +110,42 @@ object CdcSync {
   def syncIndexFromCdc(spark: SparkSession, cdcDir: String, root: String,
       keyCol: String, toksCol: String, bucketSize: Long,
       prep: DataFrame => DataFrame,
-      seqCol: String = "seq", opCol: String = "op"): Long = {
+      seqCol: String = "seq", opCol: String = "op"): Long =
+    tick(spark, cdcDir, root, keyCol, prep, seqCol, opCol) { (docs, cur) =>
+      InvertedIndex.initStore(root)
+      if (!docs.isEmpty)
+        InvertedIndex.admitBatch(spark, docs, keyCol, toksCol,
+          bucketSize, batchId = cur, root = root)
+    }((keys, id) =>
+      // one scoped delete covers updates AND deletes (for a freshly
+      // inserted key it masks nothing, harmlessly) — hwm = base + cur - 1
+      // reaches every earlier tick's batch id AND, post-federation,
+      // every merged fragment below the rebind base
+      InvertedIndex.admitScopedDeleteBatch(spark, keys, keyCol,
+        batchId = id, root = root),
+    (ups, id) => InvertedIndex.admitBatch(spark, ups, keyCol, toksCol,
+      bucketSize, batchId = id, root = root))
+
+  /** One sync TICK's skeleton, shared by [[syncIndexFromCdc]] and
+    * [[syncVectorsFromCdc]]. Before the first tick (no watermark) it
+    * runs `bootstrap(snapshot, cur)` on the prepped current snapshot.
+    * Afterwards it checks the binding (one store tracks one CDC source)
+    * and the lag (a no-op when already current; refused when the
+    * watermark is ahead), persists the net change feed for
+    * `(applied, cur]`, and, when the feed is non-empty, runs
+    * `scopedDelete` on its keys and `upsert` on its prepped I/U rows,
+    * both under batch id `base + cur`. The watermark moves last, in
+    * every case. Returns the new applied version.
+    */
+  private def tick(spark: SparkSession, cdcDir: String, root: String,
+      keyCol: String, prep: DataFrame => DataFrame, seqCol: String,
+      opCol: String)(bootstrap: (DataFrame, Long) => Unit)(
+      scopedDelete: (DataFrame, Long) => Unit,
+      upsert: (DataFrame, Long) => Unit): Long = {
     val cur = EventStreams.currentCdcVersion(cdcDir)
     readState(root) match {
       case None =>
-        InvertedIndex.initStore(root)
-        val docs = prep(EventStreams.cdcSnapshotAt(spark, cdcDir, cur))
-        if (!docs.isEmpty)
-          InvertedIndex.admitBatch(spark, docs, keyCol, toksCol,
-            bucketSize, batchId = cur, root = root)
+        bootstrap(prep(EventStreams.cdcSnapshotAt(spark, cdcDir, cur)), cur)
         writeApplied(root, cur, cdcDir)
         cur
       case Some((applied, src, base)) =>
@@ -133,18 +162,9 @@ object CdcSync {
           applied, cur, Seq(keyCol), seqCol, opCol).persist()
         try {
           if (!changes.isEmpty) {
-            // one scoped delete covers updates AND deletes (for a
-            // freshly inserted key it masks nothing, harmlessly) —
-            // hwm = base + cur - 1 reaches every earlier tick's batch
-            // id AND, post-federation, every merged fragment below
-            // the rebind base
-            InvertedIndex.admitScopedDeleteBatch(spark,
-              changes.select(col(keyCol)), keyCol, batchId = base + cur,
-              root = root)
+            scopedDelete(changes.select(col(keyCol)), base + cur)
             val ups = prep(changes.filter(col(opCol) =!= "D").drop(opCol))
-            if (!ups.isEmpty)
-              InvertedIndex.admitBatch(spark, ups, keyCol, toksCol,
-                bucketSize, batchId = base + cur, root = root)
+            if (!ups.isEmpty) upsert(ups, base + cur)
           }
           writeApplied(root, cur, cdcDir, base)
         } finally changes.unpersist()
@@ -188,9 +208,9 @@ object CdcSync {
     val cur = EventStreams.currentCdcVersion(cdcDir)
     require(version >= 0 && version <= cur,
       s"version $version is not published at $cdcDir (current is $cur)")
-    val gen = graft.operators.GenStore.currentGen(root)
-    val base = math.max(graft.operators.GenStore.compactedHwm(root, gen),
-      graft.operators.GenStore.deletesHwm(root, gen)) + 1L
+    val gen = GenStore.currentGen(root)
+    val base = math.max(GenStore.compactedHwm(root, gen),
+      GenStore.deletesHwm(root, gen)) + 1L
     writeApplied(root, version, cdcDir, base)
   }
 
@@ -217,8 +237,8 @@ object CdcSync {
     require(version >= 0 && version <= applied,
       s"version $version is not applied at $root (watermark is $applied)")
     val bound = base + version
-    val gen = graft.operators.GenStore.currentGen(root)
-    val hwm = graft.operators.GenStore.compactedHwm(root, gen)
+    val gen = GenStore.currentGen(root)
+    val hwm = GenStore.compactedHwm(root, gen)
     require(hwm < 0 || bound >= hwm,
       s"version $version has been folded away (the gen=$gen compaction " +
         s"sealed batches <= $hwm into one fragment): as-of reads reach " +
@@ -232,7 +252,7 @@ object CdcSync {
     * applied to the corpus-tracking pair: one row per synced store
     * with its binding, version lag, fragment growth and pending-delete
     * pressure, built from DRIVER-SIDE file reads and parquet FOOTER
-    * counts only ([[graft.operators.GenStore.footerRowCount]]) — ZERO
+    * counts only ([[GenStore.footerRowCount]]) — ZERO
     * Spark jobs over store data, so a scheduler can afford the check
     * every tick. Columns: store root, bound cdc dir, applied/current
     * versions, `lag_versions` (how far serving trails the log),
@@ -300,19 +320,15 @@ object CdcSync {
       maxDeltas: Int = 8, maxDeltaFraction: Double = 0.5,
       maxFragments: Int = 16, maxPendingFraction: Double = 0.05)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        EventStreams.publishCdcBatch(s, stateDir, batch, Seq(keyCol),
-          seqCol, opCol, maxDeltas, maxDeltaFraction)
-        syncIndexFromCdc(s, stateDir, indexRoot, keyCol, toksCol,
-          bucketSize, prep, seqCol, opCol)
-        InvertedIndex.compactIfNeeded(s, indexRoot, maxFragments,
-          maxPendingFraction)
-        ()
-      }
-      .start()
+    EventStreams.sink(changes, checkpointDir) { (batch, _) =>
+      val s = batch.sparkSession
+      EventStreams.publishCdcBatch(s, stateDir, batch, Seq(keyCol),
+        seqCol, opCol, maxDeltas, maxDeltaFraction)
+      syncIndexFromCdc(s, stateDir, indexRoot, keyCol, toksCol,
+        bucketSize, prep, seqCol, opCol)
+      InvertedIndex.compactIfNeeded(s, indexRoot, maxFragments,
+        maxPendingFraction)
+    }
 
   /** One sync TICK for the CODED VECTOR store — [[syncIndexFromCdc]]'s
     * twin for embeddings: the bootstrap tick FITS the IVF-PQ artifact
@@ -329,44 +345,18 @@ object CdcSync {
       keyCol: String, vecCol: String, prep: DataFrame => DataFrame,
       nlist: Int, kmeansIters: Int, m: Int, kcode: Int, pqIters: Int,
       nassign: Int = 2,
-      seqCol: String = "seq", opCol: String = "op"): Long = {
-    val cur = EventStreams.currentCdcVersion(cdcDir)
-    readState(root) match {
-      case None =>
-        val vecs = prep(EventStreams.cdcSnapshotAt(spark, cdcDir, cur))
-        require(!vecs.isEmpty,
-          "vector bootstrap needs a non-empty snapshot: the tick fits " +
-            "the IVF-PQ artifact on it (an empty corpus has no geometry)")
-        val (cents, books) = Similarity.fitIvfPq(vecs, keyCol, vecCol,
-          nlist, kmeansIters, m, kcode, pqIters)
-        VectorStore.init(spark, root, cents, books)
-        VectorStore.admit(spark, root, vecs, keyCol, vecCol,
-          batchId = cur, nassign = nassign)
-        writeApplied(root, cur, cdcDir)
-        cur
-      case Some((applied, src, base)) =>
-        require(src == cdcDir,
-          s"store $root syncs from $src — refusing a tick against " +
-            s"$cdcDir (one store tracks one CDC source)")
-        if (applied == cur) return cur
-        require(applied < cur,
-          s"applied watermark $applied is ahead of the CDC store's " +
-            s"current version $cur — was the CDC store at $cdcDir " +
-            "reset or replaced? Resync into a fresh root")
-        val changes = EventStreams.cdcChangesBetween(spark, cdcDir,
-          applied, cur, Seq(keyCol), seqCol, opCol).persist()
-        try {
-          if (!changes.isEmpty) {
-            VectorStore.admitScopedDeletes(spark, root,
-              changes.select(col(keyCol)), keyCol, batchId = base + cur)
-            val ups = prep(changes.filter(col(opCol) =!= "D").drop(opCol))
-            if (!ups.isEmpty)
-              VectorStore.admit(spark, root, ups, keyCol, vecCol,
-                batchId = base + cur, nassign = nassign)
-          }
-          writeApplied(root, cur, cdcDir, base)
-        } finally changes.unpersist()
-        cur
-    }
-  }
+      seqCol: String = "seq", opCol: String = "op"): Long =
+    tick(spark, cdcDir, root, keyCol, prep, seqCol, opCol) { (vecs, cur) =>
+      require(!vecs.isEmpty,
+        "vector bootstrap needs a non-empty snapshot: the tick fits " +
+          "the IVF-PQ artifact on it (an empty corpus has no geometry)")
+      val (cents, books) = Similarity.fitIvfPq(vecs, keyCol, vecCol,
+        nlist, kmeansIters, m, kcode, pqIters)
+      VectorStore.init(spark, root, cents, books)
+      VectorStore.admit(spark, root, vecs, keyCol, vecCol,
+        batchId = cur, nassign = nassign)
+    }((keys, id) =>
+      VectorStore.admitScopedDeletes(spark, root, keys, keyCol, batchId = id),
+    (ups, id) => VectorStore.admit(spark, root, ups, keyCol, vecCol,
+      batchId = id, nassign = nassign))
 }

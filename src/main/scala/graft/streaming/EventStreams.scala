@@ -2,9 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
 import graft.Tables
+import graft.operators.GenStore
 
 /** Structured Streaming surface over the events table: windowed
   * aggregation with watermarking, and stateful gap sessionization whose
@@ -18,6 +20,12 @@ import graft.Tables
   * scale, state lives in the executor state store (RocksDB-backed on a
   * real cluster) partitioned by the grouping key — the same hash shuffle
   * as the batch groupBy.
+  *
+  * Every foreachBatch sink here and in [[CdcSync]] runs through one
+  * runner ([[sink]]) and, where replays of compacted batches must be
+  * refused, one sealed-replay guard ([[unlessSealed]]). The CDC snapshot
+  * and label roots are [[graft.operators.GenStore]] versioned roots
+  * (`_CURRENT` over `v<N>` directories, tombstone retention).
   */
 object EventStreams {
 
@@ -157,6 +165,89 @@ object EventStreams {
     deduped.drop("__sig")
   }
 
+  // ---------------------------------------------------------------------
+  // SINKS — every foreachBatch sink below (and
+  // [[CdcSync.cdcIngestSyncing]]) runs through ONE runner ([[sink]]);
+  // the admission sinks share one sealed-replay guard ([[unlessSealed]]),
+  // the six compacting sinks one admit-then-compact step
+  // ([[admitThenCompact]]), the three takedown sinks one takedown step
+  // ([[takedownStep]]) and the two label sinks one label-version step
+  // ([[nextLabels]]).
+  // ---------------------------------------------------------------------
+
+  /** The streaming SINK RUNNER: run `step(batch, batchId)` on each
+    * micro-batch of `in`, with the stream's progress checkpointed under
+    * `checkpointDir`. foreachBatch runs one micro-batch at a time, so a
+    * step always sees the previous step's writes.
+    */
+  private[streaming] def sink(in: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => step(batch, batchId) }
+      .start()
+
+  /** The compacted high-water mark of `root`'s current generation. */
+  private def sealedHwm(root: String): Long =
+    GenStore.compactedHwm(root, GenStore.currentGen(root))
+
+  /** The SEALED-REPLAY GUARD of the admission sinks: run `admit` only for
+    * a store id above the compacted high-water mark of the current
+    * generation. A micro-batch replayed after a compaction sealed its id
+    * (sink crash after the admission but before the checkpoint commit)
+    * is a no-op: its rows are durably inside the compacted fragment (the
+    * policy runs only after its admission completed; single-writer
+    * discipline excludes concurrent compactors), so skipping is
+    * exactness, not loss. An UNSEALED replay overwrites its own
+    * fragment as always.
+    */
+  private[graft] def unlessSealed(root: String, id: Long)(admit: => Unit): Unit =
+    if (id > sealedHwm(root)) admit
+
+  /** The ADMIT-THEN-COMPACT step of the compacting admission sinks:
+    * admit the micro-batch under its id, then run the store's compaction
+    * policy — both skipped for a sealed replay ([[unlessSealed]]).
+    */
+  private[graft] def admitThenCompact(root: String)(
+      admit: (SparkSession, DataFrame, Long) => Unit)(
+      compact: SparkSession => Any): (DataFrame, Long) => Unit =
+    (batch, batchId) => unlessSealed(root, batchId) {
+      admit(batch.sparkSession, batch, batchId)
+      compact(batch.sparkSession)
+    }
+
+  /** The TAKEDOWN step of the signature, index and vector takedown
+    * sinks: land the micro-batch's delete markers under
+    * `baseBatchId + batchId`, then, when `compactAt` > 0, run the store's
+    * pending-fraction compaction policy. No sealed-replay guard: a
+    * replayed delete is a semantic no-op whether or not a compaction
+    * already applied it (subtracting an absent key removes nothing).
+    */
+  private[graft] def takedownStep(baseBatchId: Long, compactAt: Double)(
+      delete: (SparkSession, DataFrame, Long) => Unit)(
+      compactIfNeeded: (SparkSession, Double) => Any): (DataFrame, Long) => Unit =
+    (batch, batchId) => {
+      delete(batch.sparkSession, batch, baseBatchId + batchId)
+      if (compactAt > 0) compactIfNeeded(batch.sparkSession, compactAt)
+    }
+
+  /** The LABEL-VERSION step of [[componentsIngest]] and
+    * [[crawlAdmissionIngest]]: read the label snapshot before this
+    * micro-batch — capped at `batchId`, so a retry after the pointer
+    * moved replays onto the PRE-batch state — derive the next labels from
+    * it, write them as `v<batchId+1>`, move the pointer, and drop the
+    * in-memory checkpoint (the labels now live in parquet, so a long
+    * stream holds zero label RDDs per batch).
+    */
+  private def nextLabels(spark: SparkSession, labelDir: String,
+      batchId: Long)(derive: DataFrame => DataFrame): Unit = {
+    val prevV = math.min(currentCdcVersion(labelDir), batchId)
+    val next = derive(Tables.parquet(spark, s"$labelDir/v$prevV"))
+    next.write.mode("overwrite").parquet(s"$labelDir/v${batchId + 1}")
+    GenStore.publishVersion(labelDir, batchId + 1)
+    org.apache.spark.sql.GraftBridge.releaseCheckpoint(next)
+  }
+
   /** Continuous CDC ingestion: maintain a versioned snapshot store from
     * a change stream via foreachBatch + [[publishCdcBatch]] — each
     * micro-batch publishes one version under the DELTA-LOG layout
@@ -175,15 +266,11 @@ object EventStreams {
   def cdcIngest(
       changes: DataFrame, stateDir: String, keyCols: Seq[String],
       seqCol: String, opCol: String, maxDeltas: Int = 8,
-      maxDeltaFraction: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        publishCdcBatch(batch.sparkSession, stateDir, batch, keyCols,
-          seqCol, opCol, maxDeltas, maxDeltaFraction)
-        ()
-      }
-      .start()
+      maxDeltaFraction: Double = 0.5): StreamingQuery =
+    sink(changes, s"$stateDir/_checkpoint") { (batch, _) =>
+      publishCdcBatch(batch.sparkSession, stateDir, batch, keyCols,
+        seqCol, opCol, maxDeltas, maxDeltaFraction)
+    }
 
   /** Continuous dedup-group maintenance: each micro-batch of (src, dst)
     * near-dup pair edges is admitted against the CURRENT label snapshot
@@ -194,42 +281,31 @@ object EventStreams {
     * the [[cdcIngest]] discipline: `stateDir/v<N>` + an atomically
     * advanced `_CURRENT` pointer, so readers never see a partial label
     * table. Idempotent under micro-batch retry twice over: the version
-    * read as "previous" is capped at this batchId (a crash between
-    * pointer-advance and checkpoint commit re-reads the PRE-batch
-    * state), and even re-admitting the same edges onto post-batch
-    * labels would be a semantic no-op (CC is idempotent to edge
-    * re-union). Call [[initCcState]] once before starting.
+    * read as "previous" is capped at this batchId ([[nextLabels]]: a
+    * crash between pointer-advance and checkpoint commit re-reads the
+    * PRE-batch state), and even re-admitting the same edges onto
+    * post-batch labels would be a semantic no-op (CC is idempotent to
+    * edge re-union). Call [[initCcState]] once before starting.
     */
   def componentsIngest(
       edges: DataFrame, srcCol: String, dstCol: String,
-      stateDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prevV = math.min(readCdcVersion(stateDir), batchId)
-        val prev = Tables.parquet(spark, s"$stateDir/v$prevV")
-        val next = graft.operators.Components
-          .incrementalComponents(prev, batch, srcCol, dstCol)
-        next.write.mode("overwrite").parquet(s"$stateDir/v${batchId + 1}")
-        writeCdcVersion(stateDir, batchId + 1)
-        // the label table now lives in parquet; drop the in-memory
-        // checkpoint so long streams hold zero label RDDs per batch
-        org.apache.spark.sql.GraftBridge.releaseCheckpoint(next)
-      }
-      .start()
+      stateDir: String): StreamingQuery =
+    sink(edges, s"$stateDir/_checkpoint") { (batch, batchId) =>
+      nextLabels(batch.sparkSession, stateDir, batchId)(prev =>
+        graft.operators.Components
+          .incrementalComponents(prev, batch, srcCol, dstCol))
+    }
 
   /** Seed [[componentsIngest]]'s state: `initial` must be an (id, comp)
-    * label table — pass an empty frame for a cold start.
+    * label table — pass an empty frame for a cold start. The label root
+    * is a CDC-style versioned root, seeded exactly like [[initCdcState]].
     */
-  def initCcState(initial: DataFrame, stateDir: String): Unit = {
-    initial.write.mode("overwrite").parquet(s"$stateDir/v0")
-    writeCdcVersion(stateDir, 0)
-  }
+  def initCcState(initial: DataFrame, stateDir: String): Unit =
+    initCdcState(initial, stateDir)
 
   /** The label snapshot readers see: whatever `_CURRENT` points at. */
   def currentCcLabels(spark: SparkSession, stateDir: String): DataFrame =
-    Tables.parquet(spark, s"$stateDir/v${readCdcVersion(stateDir)}")
+    Tables.parquet(spark, s"$stateDir/v${currentCdcVersion(stateDir)}")
 
   /** Continuous sketch-store maintenance: every micro-batch appends its
     * per-key HLL sketches to the stats table via
@@ -245,14 +321,11 @@ object EventStreams {
   def sketchIngest(
       events: DataFrame, keyCols: Seq[String], valueCol: String,
       path: String, checkpointDir: String,
-      lgK: Int = graft.operators.SketchStore.DefaultLgK): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchStore.appendBatch(
-          batch, keyCols, valueCol, batchId, path, lgK)
-      }
-      .start()
+      lgK: Int = graft.operators.SketchStore.DefaultLgK): StreamingQuery =
+    sink(events, checkpointDir) { (batch, batchId) =>
+      graft.operators.SketchStore.appendBatch(
+        batch, keyCols, valueCol, batchId, path, lgK)
+    }
 
   /** Continuous heavy-hitter maintenance, the frequency twin of
     * [[sketchIngest]]: each micro-batch appends its <= m-entry
@@ -266,13 +339,10 @@ object EventStreams {
     */
   def heavyHitterIngest(
       events: DataFrame, keyCol: String, m: Int,
-      path: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.HeavyHitters.appendBatch(batch, keyCol, m, batchId, path)
-      }
-      .start()
+      path: String, checkpointDir: String): StreamingQuery =
+    sink(events, checkpointDir) { (batch, batchId) =>
+      graft.operators.HeavyHitters.appendBatch(batch, keyCol, m, batchId, path)
+    }
 
   /** Continuous ANN-index admission, the vector member of the
     * streaming-maintenance family ([[sketchIngest]] distinct counts,
@@ -291,14 +361,11 @@ object EventStreams {
       cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]],
       path: String, checkpointDir: String,
-      nassign: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.appendCodedBatch(
-          batch, idCol, vecCol, cents, books, batchId, path, nassign)
-      }
-      .start()
+      nassign: Int = 2): StreamingQuery =
+    sink(vectors, checkpointDir) { (batch, batchId) =>
+      graft.operators.Similarity.appendCodedBatch(
+        batch, idCol, vecCol, cents, books, batchId, path, nassign)
+    }
 
   /** The WHOLE incremental crawl-admission loop as ONE streaming sink —
     * the q127 batch capstone (coded-store vector admission -> store-
@@ -312,11 +379,11 @@ object EventStreams {
     * into the versioned label snapshot via incremental components +
     * the per-batch singleton union (every admitted vector gets a
     * label, edge-less ones self-labeled — an O(batch) anti join).
-    * Labels version exactly like [[componentsIngest]] (`v<N>` +
-    * `_CURRENT`), and the "previous" version is capped at this batchId
-    * so a micro-batch retry replays onto the PRE-batch state — combined
-    * with the coded store's per-batch overwrite, the whole loop is
-    * retry-idempotent. The end state is gated equal to the ONE-SHOT
+    * Labels version exactly like [[componentsIngest]] ([[nextLabels]]:
+    * `v<N>` + `_CURRENT`, the "previous" version capped at this batchId
+    * so a micro-batch retry replays onto the PRE-batch state) —
+    * combined with the coded store's per-batch overwrite, the whole loop
+    * is retry-idempotent. The end state is gated equal to the ONE-SHOT
     * closed form (q142 == q124's semantics), whichever order the
     * batches arrive in: cross-batch edges are discovered by whichever
     * side arrives second, and CC is a function of the edge union.
@@ -327,29 +394,22 @@ object EventStreams {
       books: Array[Array[Array[Double]]],
       storeDir: String, labelDir: String, checkpointDir: String,
       k: Int, threshold: Double,
-      nprobe: Int = 12, shortlistFactor: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.{Components, Similarity}
-        Similarity.appendCodedBatch(batch, idCol, vecCol, cents, books,
-          batchId, storeDir)
-        val edges = Similarity.searchCodedStore(spark, batch, idCol, vecCol,
-            k, cents, books, storeDir, nprobe, shortlistFactor,
-            broadcastQueries = false)
-          .filter(col("cos") >= threshold)
-          .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
-        val prevV = math.min(readCdcVersion(labelDir), batchId)
-        val prev = Tables.parquet(spark, s"$labelDir/v$prevV")
-        val next = Components.withSingletonComponents(
+      nprobe: Int = 12, shortlistFactor: Int = 32): StreamingQuery =
+    sink(vectors, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import graft.operators.{Components, Similarity}
+      Similarity.appendCodedBatch(batch, idCol, vecCol, cents, books,
+        batchId, storeDir)
+      val edges = Similarity.searchCodedStore(spark, batch, idCol, vecCol,
+          k, cents, books, storeDir, nprobe, shortlistFactor,
+          broadcastQueries = false)
+        .filter(col("cos") >= threshold)
+        .select(col("query_id").as("id_a"), col("neighbor_id").as("id_b"))
+      nextLabels(spark, labelDir, batchId)(prev =>
+        Components.withSingletonComponents(
           Components.incrementalComponents(prev, edges, "id_a", "id_b"),
-          batch, idCol)
-        next.write.mode("overwrite").parquet(s"$labelDir/v${batchId + 1}")
-        writeCdcVersion(labelDir, batchId + 1)
-        org.apache.spark.sql.GraftBridge.releaseCheckpoint(next)
-      }
-      .start()
+          batch, idCol))
+    }
 
   /** Continuous retrieval-index admission, the text-retrieval member of
     * the streaming-maintenance family: each micro-batch of tokenized
@@ -361,51 +421,34 @@ object EventStreams {
     */
   def indexIngest(
       docs: DataFrame, idCol: String, toksCol: String, bucketSize: Long,
-      path: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.InvertedIndex.appendBatch(
-          batch, idCol, toksCol, bucketSize, batchId, path)
-      }
-      .start()
+      path: String, checkpointDir: String): StreamingQuery =
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      graft.operators.InvertedIndex.appendBatch(
+        batch, idCol, toksCol, bucketSize, batchId, path)
+    }
 
   /** [[indexIngest]] against the GENERATIONAL store with the compaction
-    * policy applied per micro-batch: after each admission,
-    * [[graft.operators.InvertedIndex.compactIfFragmented]] merges the
-    * fragments into a new generation once `maxFragments` accumulate —
-    * the continuous form of the q143 compactor, bounding read
-    * amplification at crawl cadence with no operator in the loop.
-    *
-    * Retry semantics under the seal: a REPLAYED micro-batch (sink
-    * crash after the admission but before the checkpoint commit) whose
-    * id the meantime compaction already sealed is a NO-OP — its rows
-    * are durably inside the compacted fragment (the policy runs only
-    * after its admission completed; single-writer discipline excludes
-    * concurrent compactors), so skipping is exactness, not loss. An
-    * UNSEALED replay overwrites its own directories as always.
+    * policy applied per micro-batch ([[admitThenCompact]]): after each
+    * admission, [[graft.operators.InvertedIndex.compactIfFragmented]]
+    * merges the fragments into a new generation once `maxFragments`
+    * accumulate — the continuous form of the q143 compactor, bounding
+    * read amplification at crawl cadence with no operator in the loop.
+    * A replayed micro-batch whose id the meantime compaction already
+    * sealed is a no-op ([[unlessSealed]]); an unsealed replay
+    * overwrites its own directories as always.
     */
   def indexIngestCompacting(
       docs: DataFrame, idCol: String, toksCol: String, bucketSize: Long,
       root: String, checkpointDir: String,
-      maxFragments: Int): org.apache.spark.sql.streaming.StreamingQuery = {
+      maxFragments: Int): StreamingQuery = {
+    import graft.operators.InvertedIndex
     // cold start only: a RESTARTED stream must keep the advanced pointer
     // (a plain initStore rewrites _CURRENT=1, which would resurrect a
     // compacted-away generation for readers)
-    graft.operators.GenStore.initIfAbsent(root)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.InvertedIndex
-        val spark = batch.sparkSession
-        if (batchId > InvertedIndex.compactedHwm(root, InvertedIndex.currentGen(root))) {
-          InvertedIndex.admitBatch(spark, batch, idCol, toksCol,
-            bucketSize, batchId, root)
-          InvertedIndex.compactIfFragmented(spark, root, maxFragments)
-          ()
-        } // else: sealed replay — rows already in the compacted fragment
-      }
-      .start()
+    GenStore.initIfAbsent(root)
+    sink(docs, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
+      InvertedIndex.admitBatch(spark, batch, idCol, toksCol, bucketSize, id, root)
+    }(InvertedIndex.compactIfFragmented(_, root, maxFragments)))
   }
 
   /** Streaming VECTOR admission with the compaction policy — the
@@ -417,27 +460,19 @@ object EventStreams {
     * initialized with a fitted index ([[graft.operators.VectorStore
     * .init]] — fitting is a policy-layer action, not a sink side
     * effect); a restarted stream keeps whatever generation the pointer
-    * reached. Sealed replays (micro-batch retried after a meantime
-    * compaction sealed its id) are no-ops: their rows are durably
-    * inside the compacted fragment. Refit-on-drift composes above this
-    * sink exactly as in batch — compaction never changes the geometry.
+    * reached. Sealed replays are no-ops ([[unlessSealed]]).
+    * Refit-on-drift composes above this sink exactly as in batch —
+    * compaction never changes the geometry.
     */
   def vectorIngestCompacting(
       vectors: DataFrame, idCol: String, vecCol: String,
       root: String, checkpointDir: String, maxFragments: Int,
-      nassign: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, VectorStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, VectorStore.currentGen(root))) {
-          VectorStore.admit(spark, root, batch, idCol, vecCol, batchId, nassign)
-          VectorStore.compactIfFragmented(spark, root, maxFragments)
-          ()
-        } // else: sealed replay — rows already in the compacted fragment
-      }
-      .start()
+      nassign: Int = 2): StreamingQuery = {
+    import graft.operators.VectorStore
+    sink(vectors, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
+      VectorStore.admit(spark, root, batch, idCol, vecCol, id, nassign)
+    }(VectorStore.compactIfFragmented(_, root, maxFragments)))
+  }
 
   /** Streaming KEY-SET admission with the compaction policy — the same
     * pattern on the dedup stores ([[graft.operators.KeySetStore]]):
@@ -451,20 +486,12 @@ object EventStreams {
     */
   def keySetIngestCompacting(
       keys: DataFrame, root: String, checkpointDir: String,
-      maxFragments: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    keys.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, KeySetStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          KeySetStore.admitBatch(batch, batchId, root)
-          KeySetStore.compactIfFragmented(spark, root, maxFragments)
-          ()
-        } // else: sealed replay — keys already in the compacted fragment
-      }
-      .start()
+      maxFragments: Int): StreamingQuery = {
+    import graft.operators.KeySetStore
+    GenStore.initIfAbsent(root)
+    sink(keys, checkpointDir)(admitThenCompact(root) { (_, batch, id) =>
+      KeySetStore.admitBatch(batch, id, root)
+    }(KeySetStore.compactIfFragmented(_, root, maxFragments)))
   }
 
   /** Per-sink LANE-PROGRESS file at a store root: the highest remapped
@@ -485,7 +512,7 @@ object EventStreams {
   }
 
   private def writeLaneLast(root: String, sinkId: Int, mapped: Long): Unit =
-    graft.operators.GenStore.atomicWrite(
+    GenStore.atomicWrite(
       java.nio.file.Paths.get(root, "_LANES", s"sink$sinkId"), mapped.toString)
 
   /** Streaming SIGNATURE admission under the LIVE-MERGE QUIESCE
@@ -523,48 +550,43 @@ object EventStreams {
       checkpointDir: String, n: Int = 3, numHashes: Int = 32,
       bands: Int = 8, portableKeys: Boolean = false,
       maxFragments: Int = Int.MaxValue, sinkId: Int = 0,
-      laneWidth: Long = 1L << 20): org.apache.spark.sql.streaming.StreamingQuery = {
+      laneWidth: Long = 1L << 20): StreamingQuery = {
     require(sinkId >= 0 && laneWidth >= 1, "sinkId/laneWidth out of range")
-    graft.operators.GenStore.initIfAbsent(root)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, GenStore, KeySetStore}
-        val spark = batch.sparkSession
-        require(batchId < laneWidth,
-          s"micro-batch id $batchId overflows the sink lane (width " +
-            s"$laneWidth) — restart the stream with a wider lane")
-        // chase the forwarding chain (a merged store may itself have
-        // been quiesced into a later merge)
-        var target = root
-        var offset = 0L
-        var hop = GenStore.quiescedSuccessor(target)
-        while (hop.isDefined) {
-          target = hop.get
-          // gen 1's seal is the merge's last write and never changes:
-          // a stable base that clears every merge-renumbered id
-          offset = GenStore.compactedHwm(target, 1L) + 1 +
-            sinkId * laneWidth
-          hop = GenStore.quiescedSuccessor(target)
-        }
-        val mapped = offset + batchId
-        // per-sink replay detection; no lane file (pre-lane stores, or
-        // a fresh stream against a compacted store) falls back to the
-        // conservative global seal — exactly the pre-lane semantics
-        val last = laneLast(target, sinkId).getOrElse(
-          GenStore.compactedHwm(target, GenStore.currentGen(target)))
-        if (mapped > last) {
-          Dedup.admitMinHashBatch(batch, idCol, textCol, n, numHashes,
-            bands, batchId = mapped, root = target,
-            portableKeys = portableKeys)
-          writeLaneLast(target, sinkId, mapped)
-          if (maxFragments != Int.MaxValue)
-            KeySetStore.compactIfFragmented(spark, target, maxFragments)
-          ()
-        } // else: this sink's own replay — the fragment already landed
-          // (and may since have been folded); skipping is exactness
+    GenStore.initIfAbsent(root)
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      import graft.operators.{Dedup, KeySetStore}
+      val spark = batch.sparkSession
+      require(batchId < laneWidth,
+        s"micro-batch id $batchId overflows the sink lane (width " +
+          s"$laneWidth) — restart the stream with a wider lane")
+      // chase the forwarding chain (a merged store may itself have
+      // been quiesced into a later merge)
+      var target = root
+      var offset = 0L
+      var hop = GenStore.quiescedSuccessor(target)
+      while (hop.isDefined) {
+        target = hop.get
+        // gen 1's seal is the merge's last write and never changes:
+        // a stable base that clears every merge-renumbered id
+        offset = GenStore.compactedHwm(target, 1L) + 1 +
+          sinkId * laneWidth
+        hop = GenStore.quiescedSuccessor(target)
       }
-      .start()
+      val mapped = offset + batchId
+      // per-sink replay detection; no lane file (pre-lane stores, or
+      // a fresh stream against a compacted store) falls back to the
+      // conservative global seal — exactly the pre-lane semantics
+      val last = laneLast(target, sinkId).getOrElse(sealedHwm(target))
+      if (mapped > last) {
+        Dedup.admitMinHashBatch(batch, idCol, textCol, n, numHashes,
+          bands, batchId = mapped, root = target,
+          portableKeys = portableKeys)
+        writeLaneLast(target, sinkId, mapped)
+        if (maxFragments != Int.MaxValue)
+          KeySetStore.compactIfFragmented(spark, target, maxFragments)
+      } // else: this sink's own replay — the fragment already landed
+        // (and may since have been folded); skipping is exactness
+    }
   }
 
   /** The STREAMING CURATION pipeline — q153's batch capstone as one
@@ -600,7 +622,8 @@ object EventStreams {
     * fragment away, a replay is a sealed no-op, so the curated rows
     * must already be on disk by then (retained-last lost the batch's
     * docs forever on a crash inside that window). (3) a batch at or
-    * below the compacted high-water mark is a sealed no-op.
+    * below the compacted high-water mark is a sealed no-op
+    * ([[unlessSealed]]).
     *
     * At 100 TB each micro-batch costs narrow quality/shingle maps plus
     * one key-set semi-join — no stage touches prior batches' raw docs.
@@ -610,16 +633,12 @@ object EventStreams {
       root: String, retainedDir: String, checkpointDir: String,
       maxFragments: Int, qualityThreshold: Double,
       n: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      portableKeys: Boolean = false):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curationStep(batch, batchId, idCol, textCol, root, retainedDir,
-          maxFragments, qualityThreshold, n, numHashes, bands, portableKeys)
-      }
-      .start()
+      portableKeys: Boolean = false): StreamingQuery = {
+    GenStore.initIfAbsent(root)
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      curationStep(batch, batchId, idCol, textCol, root, retainedDir,
+        maxFragments, qualityThreshold, n, numHashes, bands, portableKeys)
+    }
   }
 
   /** One micro-batch of [[curationIngestCompacting]] — factored out so
@@ -632,46 +651,43 @@ object EventStreams {
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       root: String, retainedDir: String, maxFragments: Int,
       qualityThreshold: Double, n: Int, numHashes: Int, bands: Int,
-      portableKeys: Boolean): Unit = {
-    import graft.operators.{Dedup, GenStore, KeySetStore}
+      portableKeys: Boolean): Unit = unlessSealed(root, batchId) {
+    import graft.operators.{Dedup, KeySetStore}
     val spark = batch.sparkSession
-    if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-      val keep = batch.filter(
-        graft.functions.TextFunctions.qualityScore(col(textCol))
-          >= qualityThreshold)
-      // probe ONLY fragments other than our own (replay window 1 above)
-      val admitted = KeySetStore.keysCurrentExcluding(spark, root, batchId)
-        match {
-          case None => keep // empty store (or only our own crashed fragment)
-          case Some(keys) => keep.join(
-            Dedup.admitAgainstKeys(keep, idCol, textCol,
-                n, numHashes, bands, keys, portableKeys)
-              .filter(col("admit")).select(col("id").as(idCol)),
-            Seq(idCol), "left_semi")
-        }
-      val landed = admitted.localCheckpoint()
-      // retained corpus FIRST (replay window 2 above): after the keys
-      // admit, a compaction may seal this id and turn replays into
-      // no-ops — the curated rows must already be on disk by then
-      landed.write.mode("overwrite")
-        .parquet(s"$retainedDir/batch_id=$batchId")
-      Dedup.admitMinHashBatch(landed, idCol, textCol, n, numHashes,
-        bands, batchId, root, portableKeys)
-      KeySetStore.compactIfFragmented(spark, root, maxFragments)
-      org.apache.spark.sql.GraftBridge.releaseCheckpoint(landed)
-      ()
-    } // else: sealed replay — keys and retained rows already landed
+    val keep = batch.filter(
+      graft.functions.TextFunctions.qualityScore(col(textCol))
+        >= qualityThreshold)
+    // probe ONLY fragments other than our own (replay window 1 above)
+    val admitted = KeySetStore.keysCurrentExcluding(spark, root, batchId)
+      match {
+        case None => keep // empty store (or only our own crashed fragment)
+        case Some(keys) => keep.join(
+          Dedup.admitAgainstKeys(keep, idCol, textCol,
+              n, numHashes, bands, keys, portableKeys)
+            .filter(col("admit")).select(col("id").as(idCol)),
+          Seq(idCol), "left_semi")
+      }
+    val landed = admitted.localCheckpoint()
+    // retained corpus FIRST (replay window 2 above): after the keys
+    // admit, a compaction may seal this id and turn replays into
+    // no-ops — the curated rows must already be on disk by then
+    landed.write.mode("overwrite")
+      .parquet(s"$retainedDir/batch_id=$batchId")
+    Dedup.admitMinHashBatch(landed, idCol, textCol, n, numHashes,
+      bands, batchId, root, portableKeys)
+    KeySetStore.compactIfFragmented(spark, root, maxFragments)
+    org.apache.spark.sql.GraftBridge.releaseCheckpoint(landed)
   }
 
   /** Streaming TAKEDOWN for the signature store — the delete-marker
     * side of [[curationIngestCompacting]]: each micro-batch of
     * documents to take down lands its derived band keys as one delete
     * fragment ([[graft.operators.Dedup.deleteMinHashBatch]] — key-set
-    * subtraction, q165 semantics). No hwm guard: a replayed delete is
-    * a semantic no-op whether or not a compaction already applied it
-    * (subtracting an absent key removes nothing), so at-least-once
-    * delivery is safe without one — the asymmetry with the admission
-    * sinks, whose replays of compacted batches must be REFUSED.
+    * subtraction, q165 semantics) through [[takedownStep]]. No hwm
+    * guard: a replayed delete is a semantic no-op whether or not a
+    * compaction already applied it, so at-least-once delivery is safe
+    * without one — the asymmetry with the admission sinks, whose
+    * replays of compacted batches must be REFUSED.
     * Delete batch ids live in their own subdirectory, so a takedown
     * stream and a crawl stream on the same store never collide — but
     * a SECOND takedown stream (fresh checkpoint, micro-batch ids back
@@ -697,21 +713,13 @@ object EventStreams {
       root: String, checkpointDir: String,
       n: Int = 3, numHashes: Int = 32, bands: Int = 8,
       portableKeys: Boolean = false, baseBatchId: Long = 0L,
-      compactAtPendingFraction: Double = 0.0):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.deleteMinHashBatch(batch, idCol, textCol,
-          n, numHashes, bands, baseBatchId + batchId, root, portableKeys)
-        if (compactAtPendingFraction > 0)
-          graft.operators.KeySetStore.compactIfNeeded(batch.sparkSession,
-            root, maxFragments = Int.MaxValue,
-            maxPendingFraction = compactAtPendingFraction)
-        ()
-      }
-      .start()
+      compactAtPendingFraction: Double = 0.0): StreamingQuery = {
+    GenStore.initIfAbsent(root)
+    sink(docs, checkpointDir)(takedownStep(baseBatchId,
+        compactAtPendingFraction) { (_, batch, id) =>
+      graft.operators.Dedup.deleteMinHashBatch(batch, idCol, textCol,
+        n, numHashes, bands, id, root, portableKeys)
+    }(graft.operators.KeySetStore.compactIfNeeded(_, root, Int.MaxValue, _)))
   }
 
   /** Streaming TAKEDOWN for the retrieval index — doc-id delete
@@ -725,21 +733,14 @@ object EventStreams {
     */
   def indexTakedownIngest(
       ids: DataFrame, idCol: String, root: String, checkpointDir: String,
-      baseBatchId: Long = 0L, compactAtPendingFraction: Double = 0.0):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.InvertedIndex.admitDeleteBatch(batch.sparkSession,
-          batch, idCol, baseBatchId + batchId, root)
-        if (compactAtPendingFraction > 0)
-          graft.operators.InvertedIndex.compactIfNeeded(batch.sparkSession,
-            root, maxFragments = Int.MaxValue,
-            maxPendingFraction = compactAtPendingFraction)
-        ()
-      }
-      .start()
+      baseBatchId: Long = 0L, compactAtPendingFraction: Double = 0.0)
+      : StreamingQuery = {
+    import graft.operators.InvertedIndex
+    GenStore.initIfAbsent(root)
+    sink(ids, checkpointDir)(takedownStep(baseBatchId,
+        compactAtPendingFraction) { (spark, batch, id) =>
+      InvertedIndex.admitDeleteBatch(spark, batch, idCol, id, root)
+    }(InvertedIndex.compactIfNeeded(_, root, Int.MaxValue, _)))
   }
 
   /** Streaming TAKEDOWN for the coded vector store — vec-id delete
@@ -751,20 +752,13 @@ object EventStreams {
     */
   def vectorTakedownIngest(
       ids: DataFrame, idCol: String, root: String, checkpointDir: String,
-      baseBatchId: Long = 0L, compactAtPendingFraction: Double = 0.0):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.VectorStore.admitDeletes(batch.sparkSession,
-          root, batch, idCol, baseBatchId + batchId)
-        if (compactAtPendingFraction > 0)
-          graft.operators.VectorStore.compactIfNeeded(batch.sparkSession,
-            root, maxFragments = Int.MaxValue,
-            maxPendingFraction = compactAtPendingFraction)
-        ()
-      }
-      .start()
+      baseBatchId: Long = 0L, compactAtPendingFraction: Double = 0.0)
+      : StreamingQuery = {
+    import graft.operators.VectorStore
+    sink(ids, checkpointDir)(takedownStep(baseBatchId,
+        compactAtPendingFraction) { (spark, batch, id) =>
+      VectorStore.admitDeletes(spark, root, batch, idCol, id)
+    }(VectorStore.compactIfNeeded(_, root, Int.MaxValue, _)))
   }
 
   /** Streaming RETRACTION for the quantile store — the group-inverse
@@ -772,33 +766,29 @@ object EventStreams {
     * retract lands its negated per-(key, bin) counts as one fragment
     * ([[graft.operators.QuantileStore.retractBatch]]). UNLIKE the
     * signature takedown, a replay here is NOT harmless once compacted
-    * (it would subtract twice), so the sink keeps the hwm guard the
-    * admission sinks use: a micro-batch at or below the compacted
-    * high-water mark is a checkpoint replay of already-applied work
-    * and is skipped. Retraction fragments share the admissions' id
-    * space (they ARE ordinary fragments with negated counts), so
-    * `baseBatchId` MUST clear every id the store already holds — store
-    * id = base + micro-batch id, a fixed mapping that keeps checkpoint
-    * replays idempotent while never overwriting an admission fragment.
+    * (it would subtract twice), so the sink keeps the admission sinks'
+    * sealed-replay guard ([[unlessSealed]]): a micro-batch at or below
+    * the compacted high-water mark is a checkpoint replay of
+    * already-applied work and is skipped. Retraction fragments share the
+    * admissions' id space (they ARE ordinary fragments with negated
+    * counts), so `baseBatchId` MUST clear every id the store already
+    * holds — store id = base + micro-batch id, a fixed mapping that keeps
+    * checkpoint replays idempotent while never overwriting an admission
+    * fragment.
     */
   def quantileRetractIngest(
       rows: DataFrame, keyCols: Seq[String], valueCol: String,
       lo: Double, width: Double, nbins: Int,
-      root: String, checkpointDir: String, baseBatchId: Long):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, QuantileStore}
-        val id = baseBatchId + batchId
-        if (id > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          QuantileStore.retractBatch(batch.sparkSession, batch, keyCols,
-            valueCol, lo, width, nbins, id, root)
-          ()
-        } // else: sealed replay — the retraction is inside the merged fragment
+      root: String, checkpointDir: String, baseBatchId: Long)
+      : StreamingQuery = {
+    GenStore.initIfAbsent(root)
+    sink(rows, checkpointDir) { (batch, batchId) =>
+      val id = baseBatchId + batchId
+      unlessSealed(root, id) {
+        graft.operators.QuantileStore.retractBatch(batch.sparkSession,
+          batch, keyCols, valueCol, lo, width, nbins, id, root)
       }
-      .start()
+    }
   }
 
   /** Streaming SKETCH admission with the compaction policy — the same
@@ -811,22 +801,12 @@ object EventStreams {
   def sketchIngestCompacting(
       events: DataFrame, keyCols: Seq[String], valueCol: String,
       root: String, checkpointDir: String, maxFragments: Int,
-      lgK: Int = graft.operators.SketchStore.DefaultLgK):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, SketchStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          SketchStore.admitBatch(spark, batch, keyCols, valueCol, batchId,
-            root, lgK)
-          SketchStore.compactIfFragmented(spark, root, keyCols, maxFragments)
-          ()
-        } // else: sealed replay — registers already unioned into the fragment
-      }
-      .start()
+      lgK: Int = graft.operators.SketchStore.DefaultLgK): StreamingQuery = {
+    import graft.operators.SketchStore
+    GenStore.initIfAbsent(root)
+    sink(events, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
+      SketchStore.admitBatch(spark, batch, keyCols, valueCol, id, root, lgK)
+    }(SketchStore.compactIfFragmented(_, root, keyCols, maxFragments)))
   }
 
   /** Streaming FREQUENCY admission with the compaction policy — the
@@ -837,21 +817,12 @@ object EventStreams {
     */
   def frequencyIngestCompacting(
       rows: DataFrame, keyCol: String, m: Int,
-      root: String, checkpointDir: String, maxFragments: Int):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, HeavyHitters}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          HeavyHitters.admitBatch(spark, batch, keyCol, m, batchId, root)
-          HeavyHitters.compactIfFragmented(spark, root, m, maxFragments)
-          ()
-        } // else: sealed replay — counts already pruned into the fragment
-      }
-      .start()
+      root: String, checkpointDir: String, maxFragments: Int): StreamingQuery = {
+    import graft.operators.HeavyHitters
+    GenStore.initIfAbsent(root)
+    sink(rows, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
+      HeavyHitters.admitBatch(spark, batch, keyCol, m, id, root)
+    }(HeavyHitters.compactIfFragmented(_, root, m, maxFragments)))
   }
 
   /** Streaming QUANTILE admission with the compaction policy — the
@@ -866,27 +837,22 @@ object EventStreams {
   def quantileIngestCompacting(
       rows: DataFrame, keyCols: Seq[String], valueCol: String,
       lo: Double, width: Double, nbins: Int,
-      root: String, checkpointDir: String, maxFragments: Int):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenStore.initIfAbsent(root)
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{GenStore, QuantileStore}
-        val spark = batch.sparkSession
-        if (batchId > GenStore.compactedHwm(root, GenStore.currentGen(root))) {
-          QuantileStore.admitBatch(spark, batch, keyCols, valueCol,
-            lo, width, nbins, batchId, root)
-          QuantileStore.compactIfFragmented(spark, root, keyCols, maxFragments)
-          ()
-        } // else: sealed replay — counts already summed into the fragment
-      }
-      .start()
+      root: String, checkpointDir: String, maxFragments: Int): StreamingQuery = {
+    import graft.operators.QuantileStore
+    GenStore.initIfAbsent(root)
+    sink(rows, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
+      QuantileStore.admitBatch(spark, batch, keyCols, valueCol,
+        lo, width, nbins, id, root)
+    }(QuantileStore.compactIfFragmented(_, root, keyCols, maxFragments)))
   }
 
+  /** Seed a CDC snapshot store (and, through [[initCcState]], a label
+    * root): `initial` becomes checkpoint version v0, then the pointer
+    * publishes it.
+    */
   def initCdcState(initial: DataFrame, stateDir: String): Unit = {
     initial.write.mode("overwrite").parquet(s"$stateDir/v0")
-    writeCdcVersion(stateDir, 0)
+    GenStore.publishVersion(stateDir, 0)
   }
 
   /** The snapshot readers see: whatever version `_CURRENT` points at,
@@ -894,7 +860,7 @@ object EventStreams {
     * most `maxDeltas` pending deltas — the policy-bounded read cost).
     */
   def currentCdcSnapshot(spark: SparkSession, stateDir: String): DataFrame =
-    resolveCdcSnapshot(spark, stateDir, readCdcVersion(stateDir))
+    resolveCdcSnapshot(spark, stateDir, currentCdcVersion(stateDir))
 
   // ---------------------------------------------------------------------
   // DELTA-LOG CDC LAYOUT — versions under `stateDir/v<N>` are either
@@ -951,11 +917,7 @@ object EventStreams {
         s"seqCol=${m.seqCol}\nopCol=${m.opCol}\n").getBytes)
 
   private def readCdcDeltaMeta(stateDir: String, v: Long): CdcDeltaMeta = {
-    val kv = new String(java.nio.file.Files.readAllBytes(
-        cdcDeltaMarker(stateDir, v)))
-      .linesIterator.filter(_.contains("="))
-      .map { l => val i = l.indexOf('='); (l.take(i), l.drop(i + 1)) }
-      .toMap
+    val kv = GenStore.readMarker(cdcDeltaMarker(stateDir, v))
     CdcDeltaMeta(kv("keyCols").split(',').toSeq, kv("seqCol"), kv("opCol"))
   }
 
@@ -1028,13 +990,13 @@ object EventStreams {
       maxDeltas: Int = 8, maxDeltaFraction: Double = 0.5): Boolean = {
     require(maxDeltas >= 0, "maxDeltas must be non-negative")
     require(maxDeltaFraction > 0, "maxDeltaFraction must be positive")
-    val (base, deltas) = resolveCdcChain(stateDir, readCdcVersion(stateDir))
+    val (base, deltas) = resolveCdcChain(stateDir, currentCdcVersion(stateDir))
     if (deltas.size >= maxDeltas) true
     else if (deltas.isEmpty) false
     else {
-      val pending = graft.operators.GenStore.footerRowCount(spark,
+      val pending = GenStore.footerRowCount(spark,
         deltas.map(_._1))
-      val ckpt = graft.operators.GenStore.footerRowCount(spark, Seq(base))
+      val ckpt = GenStore.footerRowCount(spark, Seq(base))
       pending.toDouble >= maxDeltaFraction * ckpt
     }
   }
@@ -1054,7 +1016,7 @@ object EventStreams {
     * batch re-published as a NEW version is state-preserving through
     * the stale-seq guard — replayed at read time exactly as it was
     * applied eagerly. Quiesce fences on both sides of the write
-    * ([[graft.operators.GenStore.requireStillNotQuiesced]]): a publish
+    * ([[graft.operators.GenStore.publishVersion]]): a publish
     * completing inside a federation merge's cut window throws before
     * the pointer advances, so the cut never silently misses it.
     */
@@ -1062,8 +1024,8 @@ object EventStreams {
       spark: SparkSession, stateDir: String, changes: DataFrame,
       keyCols: Seq[String], seqCol: String, opCol: String,
       maxDeltas: Int = 8, maxDeltaFraction: Double = 0.5): Long = {
-    graft.operators.GenStore.requireNotQuiesced(stateDir)
-    val cur = readCdcVersion(stateDir)
+    GenStore.requireNotQuiesced(stateDir)
+    val cur = currentCdcVersion(stateDir)
     val next = cur + 1
     if (cdcNeedsCheckpoint(spark, stateDir, maxDeltas, maxDeltaFraction)) {
       // checkpoint publish: fold chain + batch into a full snapshot
@@ -1087,9 +1049,7 @@ object EventStreams {
       writeCdcDeltaMarker(stateDir, next,
         CdcDeltaMeta(keyCols, seqCol, opCol))
     }
-    graft.operators.GenStore.requireStillNotQuiesced(stateDir,
-      s"publish of version $next")
-    writeCdcVersion(stateDir, next)
+    GenStore.publishVersion(stateDir, next, s"publish of version $next")
     next
   }
 
@@ -1103,15 +1063,13 @@ object EventStreams {
     * exactly like compact-before-quiesce for the fragment stores.
     */
   def checkpointCdc(spark: SparkSession, stateDir: String): Long = {
-    graft.operators.GenStore.requireNotQuiesced(stateDir)
-    val cur = readCdcVersion(stateDir)
+    GenStore.requireNotQuiesced(stateDir)
+    val cur = currentCdcVersion(stateDir)
     if (!isCdcDelta(stateDir, cur)) return cur
     val next = cur + 1
     resolveCdcSnapshot(spark, stateDir, cur)
       .write.mode("overwrite").parquet(cdcVersionDir(stateDir, next))
-    graft.operators.GenStore.requireStillNotQuiesced(stateDir,
-      s"checkpoint at version $next")
-    writeCdcVersion(stateDir, next)
+    GenStore.publishVersion(stateDir, next, s"checkpoint at version $next")
     next
   }
 
@@ -1159,8 +1117,7 @@ object EventStreams {
   def mergeCdcStores(spark: SparkSession, srcDirs: Seq[String],
       dstDir: String, verifyKeyCols: Seq[String] = Nil): Long = {
     require(srcDirs.size >= 2, "mergeCdcStores needs at least two sources")
-    require(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dstDir, "_CURRENT")),
+    require(!GenStore.hasPointer(dstDir),
       s"merge target $dstDir must be a fresh store root")
     val conf = spark.sessionState.newHadoopConf()
     // wipe-and-redo (the mergeOpen discipline): a pointer-less target
@@ -1170,7 +1127,7 @@ object EventStreams {
     val dfs = v0.getFileSystem(conf)
     if (dfs.exists(v0)) dfs.delete(v0, true)
     // the cut: record each source's version, then move the bytes
-    val cuts = srcDirs.map(src => (src, readCdcVersion(src)))
+    val cuts = srcDirs.map(src => (src, currentCdcVersion(src)))
     val (deltaCut, ckptCut) = cuts.partition { case (src, cur) =>
       isCdcDelta(src, cur)
     }
@@ -1191,13 +1148,13 @@ object EventStreams {
     }
     require(deltaCut.nonEmpty || pairs.nonEmpty,
       "no snapshot files found under any source's current version")
-    graft.operators.GenStore.copyFragments(spark, pairs)
+    GenStore.copyFragments(spark, pairs)
     // movement fence (requireSourcesUnmoved semantics): a publish that
     // passed its pre-check before the quiesce mark landed may have
     // advanced a source inside the copy window — refuse to publish the
     // cut rather than silently missing its batch
     cuts.foreach { case (src, cur) =>
-      val now = readCdcVersion(src)
+      val now = currentCdcVersion(src)
       if (now != cur) throw new IllegalStateException(
         s"source $src advanced during the merge cut (v$cur -> v$now): " +
           "a publish landed inside the copy window — quiesce the source " +
@@ -1216,7 +1173,7 @@ object EventStreams {
           "clocks are per-pipeline and cannot be compared); the unsealed " +
           "target has no pointer and is not readable")
     }
-    writeCdcVersion(dstDir, 0)
+    GenStore.publishVersion(dstDir, 0)
     0L
   }
 
@@ -1233,7 +1190,7 @@ object EventStreams {
     * overwritten by the batch's retry).
     */
   def cdcSnapshotAt(spark: SparkSession, stateDir: String, version: Long): DataFrame = {
-    val cur = readCdcVersion(stateDir)
+    val cur = currentCdcVersion(stateDir)
     require(version >= 0 && version <= cur,
       s"version $version is not published (current is $cur)")
     require(cdcTwinSealed(stateDir, version) ||
@@ -1247,20 +1204,8 @@ object EventStreams {
     * (`v<N>.deleted`, a vacuum in progress or crashed mid-delete) do not
     * match and are correctly reported as vacuumed.
     */
-  def listCdcVersions(stateDir: String): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    val cur = readCdcVersion(stateDir)
-    // Files.list holds a directory handle until closed: these listings
-    // run once per streaming micro-batch on long-lived drivers, so an
-    // unclosed stream is a slow fd leak (ADVICE r9)
-    scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(stateDir))) { st =>
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("v\\d+") => s.drop(1).toLong }
-        .filter(_ <= cur).toSeq.sorted
-    }
-  }
+  def listCdcVersions(stateDir: String): Seq[Long] =
+    GenStore.listVersions(stateDir, "v")
 
   /** SNAPSHOT DIFF: the minimal change feed that turns version `fromV`
     * into version `toV` — inserts (key only in `toV`), updates (key in
@@ -1299,7 +1244,7 @@ object EventStreams {
 
   /** The published version `_CURRENT` points at — the public read of
     * the pointer (the sync front's cut coordinate). */
-  def currentCdcVersion(stateDir: String): Long = readCdcVersion(stateDir)
+  def currentCdcVersion(stateDir: String): Long = GenStore.currentGen(stateDir)
 
   /** NET CHANGES between two published versions — the change feed a
     * DERIVED store consumes to track this one without rebuilds
@@ -1345,7 +1290,7 @@ object EventStreams {
   def cdcChangesBetween(spark: SparkSession, stateDir: String,
       fromV: Long, toV: Long, keyCols: Seq[String],
       seqCol: String = "seq", opCol: String = "op"): DataFrame = {
-    val cur = readCdcVersion(stateDir)
+    val cur = currentCdcVersion(stateDir)
     require(fromV >= 0 && fromV <= toV && toV <= cur,
       s"need 0 <= fromV <= toV <= current ($cur); got ($fromV, $toV)")
     val cols = Tables.parquet(spark, resolveCdcChain(stateDir, fromV)._1)
@@ -1488,74 +1433,17 @@ object EventStreams {
     * check and serves truncated data.
     */
   def vacuumCdc(spark: SparkSession, stateDir: String,
-      keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must retain at least the current version")
-    sweepTombstones(java.nio.file.Paths.get(stateDir))
-    val vs = listCdcVersions(stateDir)
-    val drop = vs.dropRight(keepLast)
-    if (drop.isEmpty) return drop
-    val boundary = vs(vs.size - keepLast)
-    if (isCdcDelta(stateDir, boundary) && !cdcTwinSealed(stateDir, boundary)) {
-      // promotion: seal the twin BEFORE dropping anything below it
-      resolveCdcSnapshot(spark, stateDir, boundary)
-        .write.mode("overwrite").parquet(cdcTwinDir(stateDir, boundary))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(cdcTwinDir(stateDir, boundary), "_SEALED"),
-        Array.emptyByteArray)
-    }
-    drop.foreach { v =>
-      tombstoneDelete(java.nio.file.Paths.get(stateDir, s"v$v"))
-      tombstoneDelete(java.nio.file.Paths.get(stateDir, s"v${v}c"))
-    }
-    drop
-  }
-
-  /** Finish any `.deleted` tombstones a crashed earlier vacuum left
-    * behind — they are already invisible to readers (no listing matches
-    * them), this just reclaims the space. Called at the start of every
-    * vacuum.
-    */
-  private[graft] def sweepTombstones(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.isDirectory(dir)) return
-    val leftovers = scala.util.Using.resource(java.nio.file.Files.list(dir)) {
-      st => st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".deleted")).toSeq
-    }
-    leftovers.foreach(reallyDelete)
-  }
-
-  private def reallyDelete(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
-      st.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists)
-    }
-  }
-
-  /** Atomic-visibility directory delete: rename to a `.deleted`
-    * tombstone first (readers' exact-name checks fail from that instant
-    * on), then delete the tombstone's contents; a pre-existing tombstone
-    * from a crashed earlier vacuum is finished off first. Shared by the
-    * CDC and vector-generation vacuums.
-    */
-  private[graft] def tombstoneDelete(dir: java.nio.file.Path): Unit = {
-    val tomb = dir.resolveSibling(dir.getFileName.toString + ".deleted")
-    if (java.nio.file.Files.exists(tomb)) reallyDelete(tomb)
-    if (java.nio.file.Files.exists(dir)) {
-      java.nio.file.Files.move(dir, tomb,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      reallyDelete(tomb)
-    }
-  }
-
-  private def readCdcVersion(stateDir: String): Long =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(stateDir, "_CURRENT"))).trim.toLong
-
-  private def writeCdcVersion(stateDir: String, v: Long): Unit =
-    graft.operators.GenStore.atomicWrite(
-      java.nio.file.Paths.get(stateDir, "_CURRENT"), v.toString)
+      keepLast: Int): Seq[Long] =
+    GenStore.vacuumVersions(stateDir, "v", keepLast, suffixes = Seq("", "c"),
+      beforeDrop = boundary =>
+        if (isCdcDelta(stateDir, boundary) && !cdcTwinSealed(stateDir, boundary)) {
+          // promotion: seal the twin BEFORE dropping anything below it
+          resolveCdcSnapshot(spark, stateDir, boundary)
+            .write.mode("overwrite").parquet(cdcTwinDir(stateDir, boundary))
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(cdcTwinDir(stateDir, boundary), "_SEALED"),
+            Array.emptyByteArray)
+        })
 
   /** Read an events directory as a file stream (one parquet file per
     * micro-batch when `maxFilesPerTrigger` is set), for local smoke tests

@@ -173,9 +173,21 @@ class GenStoreProtocolSpec extends AnyFunSuite {
   // ---- lint: GenStore alone sequences seal -> pointer and the fences ----
 
   test("lint: only GenStore seals, moves a pointer, re-checks quiesce or renames atomically") {
+    val literal = java.util.regex.Pattern.quote _
+    // what must be written once: label -> the pattern of a copy
     val tokens = Seq("GenStore.seal(", "GenStore.writePointer(",
-      "requireStillNotQuiesced(", "StandardCopyOption.ATOMIC_MOVE")
-    // (file, token) -> sites that stay outside GenStore on purpose
+        "requireStillNotQuiesced(", "StandardCopyOption.ATOMIC_MOVE",
+        // the versioned-root steps: the pointer path and the tombstone
+        // retention
+        "\"_CURRENT\"", "def tombstoneDelete", "def sweepTombstones",
+        // the streaming sink runner
+        ".writeStream")
+      .map(t => t -> literal(t)) ++ Seq(
+        // a version-directory listing (the `gen=N` / `v<N>` name pattern)
+        "version listing" -> """"(v|gen=)\\\\d""",
+        // the sealed-replay guard's high-water mark read
+        "sealed-replay guard" -> "compactedHwm\\([^\\n]*currentGen\\(")
+    // (file, label) -> sites that stay outside GenStore on purpose
     val allowed = Map(
       // VectorStore.refitStart carries the compaction seal into the refit
       // generation before any batch migrates
@@ -183,11 +195,11 @@ class GenStoreProtocolSpec extends AnyFunSuite {
       // VectorStore.refitFinish publishes after its not-migrated guard
       // and migrates the publish-window stragglers itself
       ("VectorStore.scala", "GenStore.writePointer(") -> 1,
-      // the CDC version publish and checkpoint re-check the quiesce mark
-      // before their own version-pointer move
-      ("EventStreams.scala", "requireStillNotQuiesced(") -> 2,
-      // EventStreams.tombstoneDelete renames a whole directory, not a file
-      ("EventStreams.scala", "StandardCopyOption.ATOMIC_MOVE") -> 1)
+      // EventStreams.sink, the one runner of every foreachBatch sink
+      ("EventStreams.scala", ".writeStream") -> 1,
+      // EventStreams.sealedHwm, read by the one sealed-replay guard
+      // (unlessSealed) and the lane sink's fallback
+      ("EventStreams.scala", "sealed-replay guard") -> 1)
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
     val offenders = Files.walk(root).iterator().asScala
@@ -195,8 +207,9 @@ class GenStoreProtocolSpec extends AnyFunSuite {
         p.getFileName.toString != "GenStore.scala").toSeq
       .flatMap { p: Path =>
         val lines = new String(Files.readAllBytes(p), "UTF-8").split("\n", -1).toSeq
-        tokens.flatMap { t =>
-          val sites = lines.indices.filter(i => lines(i).contains(t))
+        tokens.flatMap { case (t, re) =>
+          val pattern = re.r
+          val sites = lines.indices.filter(i => pattern.findFirstIn(lines(i)).isDefined)
           if (sites.size <= allowed.getOrElse((p.getFileName.toString, t), 0)) Nil
           else sites.map(i => s"$p:${i + 1} $t")
         }

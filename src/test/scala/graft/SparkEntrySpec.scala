@@ -88,10 +88,13 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("all catalog queries execute and return rows at sf0.001") {
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val n = fn(spark, TestSpark.sf0001).count()
-      if (n == 0) Some(name) else None
-    }
+    // Verify's pooled catalog runner (its width and exclusive tail)
+    val outcomes = Verify.runCatalog(spark, TestSpark.sf0001,
+      SparkEntry.queries.toSeq.sortBy(_._1))((_, df) => df.count())
+    val failed = outcomes.collect { case (name, scala.util.Failure(e)) =>
+      s"$name: ${e.getMessage}" }
+    assert(failed.isEmpty, s"queries that threw at sf0.001: $failed")
+    val empty = outcomes.collect { case (name, scala.util.Success(0L)) => name }
     assert(empty.isEmpty, s"queries with zero rows at sf0.001: $empty")
   }
 }

@@ -1020,4 +1020,45 @@ class StreamingSpec extends AnyFunSuite {
     assert(vsearch(vs) == vsearch(vbatch), "streamed vector takedown != batch delete")
     assert(vsearch(vs).nonEmpty)
   }
+
+  test("sink steps: a sealed replay through the shared guard changes nothing; a replayed takedown lands idempotently") {
+    import graft.operators.{GenStore, KeySetStore}
+    val root = java.nio.file.Files.createTempDirectory("graft-sink-replay")
+      .resolve("kstore").toString
+    KeySetStore.init(root)
+    val keys = spark.range(0, 20).toDF("k")
+    // the compacting sinks' micro-batch step: admit, then compact once
+    // two fragments exist
+    val step = EventStreams.admitThenCompact(root) { (_, batch, id) =>
+      KeySetStore.admitBatch(batch, id, root)
+    }(KeySetStore.compactIfFragmented(_, root, 2))
+    step(keys.filter($"k" < 10), 0L)
+    step(keys.filter($"k" >= 10), 1L)
+    assert(GenStore.currentGen(root) == 2L)
+    assert(GenStore.compactedHwm(root, 2L) == 1L)
+    def live() = KeySetStore.keysCurrent(spark, root).select("k").as[Long]
+      .collect().toSet
+    def onDisk() = (GenStore.currentGen(root), GenStore.listManifest(spark, root))
+    val (files, rows) = (onDisk(), live())
+    assert(rows == (0L until 20L).toSet)
+    // replays of both sealed ids, carrying rows the store never saw: the
+    // guard skips them whole — no throw, no fragment, row or pointer move
+    step(spark.range(100, 110).toDF("k"), 1L)
+    step(spark.range(100, 110).toDF("k"), 0L)
+    assert(onDisk() == files, "a sealed replay wrote to the store")
+    assert(live() == rows)
+    // takedowns carry no guard: a replayed delete batch overwrites its own
+    // fragment under the same id, and the store serves the same keys
+    val takedown = EventStreams.takedownStep(baseBatchId = 5L, compactAt = 0.0) {
+      (_, batch, id) => KeySetStore.admitDeleteBatch(batch, id, root)
+    }((_, _) => ())
+    val dead = keys.filter($"k" % 3 === 0)
+    takedown(dead, 0L)
+    val once = live()
+    assert(once == rows.filterNot(_ % 3 == 0))
+    takedown(dead, 0L)
+    assert(live() == once)
+    assert(GenStore.listBatchIds(spark, s"${GenStore.genDir(root, 2L)}/deletes") == Seq(5L))
+    assert(GenStore.currentGen(root) == 2L)
+  }
 }

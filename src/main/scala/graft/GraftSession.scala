@@ -46,6 +46,20 @@ object GraftSession {
     // RDDs with unequal numbers of partitions"). Disabling restores the
     // exchange the consumer needs — the pre-4.1 plan shape.
     .config("spark.sql.unionOutputPartitioning", "false")
+    // Compiled-class cache (static: one per JVM, sized when the first
+    // session compiles). Spark's default of 100 classes is smaller than
+    // one graftbench store_churn cycle, so each cycle recompiled classes
+    // the cycle before had compiled and evicted. Classes compiled in one
+    // timed cycle and the retained heap (4-core VM, seeds 31-33; one
+    // seed for 100 and 200):
+    //   entries   compiles   heap MB
+    //     100       354       84.6
+    //     200       323       86.9
+    //     300     121-159   89.5-90.1
+    //     400      91-94    92.5-93.2
+    // The ~90 left are classes new in every cycle (plans whose literals
+    // vary); each cached class holds 25-30 KB of heap.
+    .config("spark.sql.codegen.cache.maxEntries", "400")
     .config("spark.ui.enabled", "false")
 
   /** Local session for tests/CLI on [[cpus]] task threads. */

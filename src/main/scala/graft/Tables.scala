@@ -25,7 +25,9 @@ object Tables {
 
   /** Open Parquet files or directories as `DataFrameReader.parquet` does,
     * with the schema resolved on the driver. Reads that merge schemas
-    * (`option("mergeSchema", "true")`) still merge in a Spark job.
+    * (`Map("mergeSchema" -> "true")`) merge on the driver too, up to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files, and
+    * in Spark's job above it.
     */
   def parquet(spark: SparkSession, paths: String*): DataFrame =
     parquet(spark, Map.empty[String, String], paths: _*)

@@ -750,6 +750,99 @@ object VectorExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
+  /** Near-dup survivors of one semantic-dedup cell. `members` is
+    * array<struct<key:long, id, v:array<numeric>>> with distinct keys.
+    * Pair mode (`hub` false): every pair with [[cosineKernel]] >=
+    * `threshold` is linked by a min-key union-find, and each
+    * component's min-key member survives. Hub mode: the min-key member
+    * is the hub, and every member scoring >= `threshold` against it is
+    * dropped. Returns the surviving elements in input order. A null
+    * vector links to nothing, like the null cosine it would score.
+    */
+  def cellSurvivorsKernel(members: ArrayData, kind: Int, hub: Boolean,
+      threshold: Double): ArrayData = {
+    val n = members.numElements()
+    val rows = Array.tabulate(n)(i => members.getStruct(i, 3))
+    val keys = rows.map(_.getLong(0))
+    val vecs = rows.map(r => if (r.isNullAt(2)) null else r.getArray(2))
+    // cosineKernel is symmetric bit for bit: the argument order is free
+    def near(i: Int, j: Int): Boolean =
+      vecs(i) != null && vecs(j) != null && cosineKernel(vecs(i), vecs(j), kind, kind) >= threshold
+    val keep = Array.fill(n)(true)
+    if (hub && n > 0) {
+      val h = keys.indices.minBy(keys(_))
+      for (i <- 0 until n) if (i != h && near(i, h)) keep(i) = false
+    } else {
+      // each root is its component's min-key member
+      val parent = Array.tabulate(n)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var y = x
+        while (parent(y) != r) { val nx = parent(y); parent(y) = r; y = nx }
+        r
+      }
+      var i = 0
+      while (i < n) {
+        var j = i + 1
+        while (j < n) {
+          val ri = find(i)
+          val rj = find(j)
+          // a pair already joined cannot change any component
+          if (ri != rj && near(i, j)) {
+            if (keys(ri) < keys(rj)) parent(rj) = ri else parent(ri) = rj
+          }
+          j += 1
+        }
+        i += 1
+      }
+      i = 0
+      while (i < n) { keep(i) = find(i) == i; i += 1 }
+    }
+    new GenericArrayData(rows.indices.filter(i => keep(i)).map(rows(_).copy()).toArray[Any])
+  }
+
+  /** Cell survivors (see [[cellSurvivorsKernel]]): `members` as there,
+    * `hub` a boolean column choosing hub mode per cell. Output type is
+    * the input array type.
+    */
+  case class CellSurvivors(members: Expression, hub: Expression, threshold: Double)
+      extends BinaryExpression {
+    override def left: Expression = members
+    override def right: Expression = hub
+    override def dataType: DataType = members.dataType
+    override def nullIntolerant: Boolean = true
+
+    private def vecElemKind: Int = members.dataType match {
+      case ArrayType(s: StructType, _) => elemKind(s(2).dataType)
+      case other => throw new IllegalStateException(s"unchecked input $other")
+    }
+
+    override def checkInputDataTypes(): TypeCheckResult = members.dataType match {
+      case ArrayType(s: StructType, _) if s.length == 3 && s(0).dataType == LongType &&
+          hub.dataType == BooleanType &&
+          checkVectorType("cell_survivors", s(2).dataType) ==
+            TypeCheckResult.TypeCheckSuccess =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        "cell_survivors needs array<struct<key:long, id, v:array<numeric>>> and a " +
+          s"boolean, got ${other.simpleString} and ${hub.dataType.simpleString}")
+    }
+
+    override protected def nullSafeEval(m: Any, h: Any): Any =
+      cellSurvivorsKernel(m.asInstanceOf[ArrayData], vecElemKind,
+        h.asInstanceOf[Boolean], threshold)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (m, h) =>
+        s"${ev.value} = graft.functions.VectorExprs.cellSurvivorsKernel(" +
+          s"$m, $vecElemKind, $h, ${threshold}D);")
+
+    override def prettyName: String = "cell_survivors"
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(members = l, hub = r)
+  }
+
   /** `cents` is a Seq-of-Seq so the case class keeps structural
     * equality/canonicalization (an Array field would compare by
     * reference and defeat common-subexpression elimination).

@@ -92,6 +92,14 @@ object VectorFunctions {
     org.apache.spark.sql.GraftBridge.column(VectorExprs.MmrSelect(
       org.apache.spark.sql.GraftBridge.expression(cands), k, lambda))
 
+  /** The near-dup survivors of one semantic-dedup cell (see
+    * [[graft.functions.VectorExprs.CellSurvivors]]).
+    */
+  def cellSurvivors(members: Column, hub: Column, threshold: Double): Column =
+    org.apache.spark.sql.GraftBridge.column(VectorExprs.CellSurvivors(
+      org.apache.spark.sql.GraftBridge.expression(members),
+      org.apache.spark.sql.GraftBridge.expression(hub), threshold))
+
   /** The composed (zip_with/aggregate) cosine — same math, same strict
     * left-to-right accumulation; used to cross-check the native
     * expression and as the pattern reference for new vector ops.

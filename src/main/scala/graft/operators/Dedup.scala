@@ -364,91 +364,70 @@ object Dedup {
     * cells via [[Similarity.fitCentroids]], within-cell pairs with
     * cosine >= threshold form the near-dup graph, and exactly ONE
     * member — the minimum id — of each connected near-dup GROUP
-    * survives ([[Components.connectedComponents]] over the pair graph,
-    * so chains A~B~C collapse to one survivor even when A!~C, the
-    * standard near-dup-group semantics; a one-hop drop rule would
+    * survives (chains A~B~C collapse to one survivor even when A!~C,
+    * the standard near-dup-group semantics; a one-hop drop rule would
     * delete chain members whose only near-duplicate was itself
-    * deleted). Deterministic for any partitioning.
+    * deleted). Deterministic for any partitioning. Ids must be unique.
+    * Rows with a null embedding or a null id are dropped at the
+    * boundary: neither can be compared or named as a survivor.
     *
     * Scale: pairwise work is bounded per cell and the bound is ENFORCED,
     * not advisory. Bit-identical vectors collapse to a min-id
     * representative FIRST (cosine is invariant across identical copies,
-    * so this is lossless for the near-dup relation, costs one shuffle,
-    * and chains each clone to its representative with an O(n) pair) —
-    * which is also what makes the bound enforceable, because k-means can
-    * never split a set of identical points and a re-crawled page's
-    * embedding megacluster is exactly the skew that otherwise defeats
-    * nlist tuning. Then [[boundedCells]] re-clusters any cell above
-    * `maxCellSize` (default max(4096, 8·sqrt(N))) into sub-cells, and
-    * the rare cell no split can reduce within `refineRounds` falls back
-    * to an O(n) hub compare instead of O(n^2) pairs, so a skewed
-    * embedding space cannot produce a quadratic stage. Cell assignment
-    * is a narrow argmax, and the
-    * component pass runs only over near-dup pairs (a tiny fraction of
-    * the corpus) — the cluster-scoped alternative to
-    * [[embeddingNearDupPairs]]' LSH when near-dup groups should follow
-    * the corpus's semantic structure.
+    * so this is lossless for the near-dup relation and costs one
+    * shuffle) — which is also what makes the bound enforceable, because
+    * k-means can never split a set of identical points and a re-crawled
+    * page's embedding megacluster is exactly the skew that otherwise
+    * defeats nlist tuning. Then [[boundedCells]] re-clusters any cell
+    * above `maxCellSize` (default max(4096, 8·sqrt(N)); N is counted
+    * only when some cell is above 4096, since no smaller cell can be
+    * over that cap) into sub-cells, and the rare cell no split can
+    * reduce within `refineRounds` falls back to an O(n) hub compare
+    * instead of O(n^2) pairs, so a skewed embedding space cannot
+    * produce a quadratic stage.
+    *
+    * Cell locality: every near-dup edge stays inside one cell. Each
+    * representative sits in exactly one cell; cell pairs and hub pairs
+    * join members of the same cell; and a clone's only edge is to its
+    * representative, which has the lower id. So every clone is dropped,
+    * and the groups among representatives are the connected components
+    * of each cell's own pair graph. One grouped pass per cell
+    * ([[graft.functions.VectorExprs.CellSurvivors]]: all-pairs
+    * [[graft.functions.VectorExprs.cosineKernel]], the same threshold
+    * test the pair self-join applied, plus a min-id union-find, or the
+    * hub test for a residual cell) finds each cell's survivors with no
+    * global component rounds; memory per task is O(cap x dim). The
+    * cluster-scoped alternative to [[embeddingNearDupPairs]]' LSH when
+    * near-dup groups should follow the corpus's semantic structure.
     */
   def semanticDedup(
       vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.99, nlist: Int = 16, kmeansIters: Int = 3,
       maxCellSize: Int = 0, refineRounds: Int = 3): DataFrame = {
-    // null embeddings can't be near-duplicates of anything: kept as
-    // survivors untouched would be wrong (they're not comparable) —
-    // dropped at the boundary like the other embedding operators
     val v = vecs.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-    val cap: Long =
+    val capFloor = if (maxCellSize > 0) maxCellSize.toLong else 4096L
+    def cap: Long =
       if (maxCellSize > 0) maxCellSize.toLong
       else math.max(4096L, 8L * math.sqrt(v.count().toDouble).toLong)
     // exact-collapse (see scale note above): one representative per
-    // distinct vector enters the cell machinery; clones chain to it
+    // distinct vector enters the cell machinery; clones never survive,
+    // and a null id is never its vector's representative
     val wv = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
-    val withRep = v.withColumn("rep_id", min(col("id")).over(wv))
-    val clonePairs = withRep.filter(col("id") =!= col("rep_id"))
-      .select(col("rep_id").as("id_a"), col("id").as("id_b"))
-    val reps = withRep.filter(col("id") === col("rep_id")).select("id", "v")
-    val (cells, residual) = boundedCells(reps, nlist, kmeansIters, cap, refineRounds)
+    val reps = v.withColumn("rep_id", min(col("id")).over(wv))
+      .filter(col("id") === col("rep_id")).select("id", "v")
+    val (cells, residual) = boundedCells(reps, nlist, kmeansIters, cap, refineRounds, capFloor)
     // all-pairs compare ONLY inside cells proven <= cap by boundedCells;
-    // residual (irreducible) cells get the O(n) hub pattern instead
-    val bounded =
-      if (residual.isEmpty) cells
-      else cells.filter(!col("cell").isInCollection(residual))
-    val a = bounded.alias("a")
-    val b = bounded.alias("b")
-    val cellPairs = a.join(b,
-        col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
-      .filter(VectorFunctions.cosine(col("a.v"), col("b.v")) >= threshold)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val repPairs =
-      if (residual.isEmpty) cellPairs
-      else {
-        // Oversized cells of DISTINCT vectors that re-clustering could
-        // not split within refineRounds (a very tight blob) compare each
-        // member against the cell's min-id hub: O(n) pairs per cell
-        // instead of O(n^2). What this approximates: two members
-        // near-dup to each other but BOTH outside threshold of the hub
-        // stay unlinked — for a cell that k-means cannot split, such
-        // pairs are rare by construction (the cell is tight), and
-        // boundedness at scale is the contract here.
-        val res = cells.filter(col("cell").isInCollection(residual))
-        val hubs = res.groupBy(col("cell"))
-          .agg(min(col("id")).as("hub_id"))
-          .join(res.select(col("cell"), col("id").as("hub_id"),
-            col("v").as("hub_v")), Seq("cell", "hub_id"))
-        val hubPairs = res.join(broadcast(hubs), "cell")
-          .filter(col("id") =!= col("hub_id"))
-          .filter(VectorFunctions.cosine(col("v"), col("hub_v")) >= threshold)
-          .select(least(col("hub_id"), col("id")).as("id_a"),
-            greatest(col("hub_id"), col("id")).as("id_b"))
-        cellPairs.unionByName(hubPairs)
-      }
-    val pairs = repPairs.unionByName(clonePairs)
-    val dropped = Components.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("id") =!= col("comp"))
-      .select("id")
-    v.join(dropped, Seq("id"), "left_anti")
-      .select(col("id").as(idCol), col("v").as(vecCol))
+    // residual (irreducible) cells get the O(n) hub test instead. What
+    // the hub test approximates: two members near-dup to each other but
+    // BOTH outside threshold of the hub stay unlinked — for a cell that
+    // k-means cannot split, such pairs are rare by construction (the
+    // cell is tight), and boundedness at scale is the contract here.
+    val hub = if (residual.isEmpty) lit(false) else col("cell").isInCollection(residual)
+    cells.groupBy(col("cell"))
+      .agg(collect_list(struct(col("id").cast("long").as("key"), col("id"), col("v"))).as("m"))
+      .select(explode(VectorFunctions.cellSurvivors(col("m"), hub, threshold)).as("s"))
+      .select(col("s.id").as(idCol), col("s.v").as(vecCol))
   }
 
   /** Cell assignment with ENFORCED cell-size bound: k-means cells, then
@@ -462,19 +441,23 @@ object Dedup {
     * first; k-means can NEVER split those) — are returned in the
     * residual list for the caller to handle with a linear-cost
     * strategy. Returns (id, v, cell) with cell ids unique across rounds.
+    * `cap` is evaluated at most once, and only if some cell is larger
+    * than `capFloor`, a lower bound on it.
     */
   private[graft] def boundedCells(
       v: DataFrame, nlist: Int, kmeansIters: Int,
-      cap: Long, refineRounds: Int): (DataFrame, Seq[Long]) = {
+      cap: => Long, refineRounds: Int, capFloor: Long = 0L): (DataFrame, Seq[Long]) = {
+    lazy val limit = cap
     val cents = Similarity.fitCentroids(v, "id", "v", nlist, kmeansIters)
     var cells = Similarity.assignCells(v, "v", cents)
       .withColumn("cell", col("cell").cast("long"))
     var nextCell = nlist.toLong
-    def oversized(): Seq[(Long, Long)] =
+    def oversized(above: Long): Seq[(Long, Long)] =
       cells.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > cap).collect()
+        .filter(col("n") > above).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    var over = oversized()
+    // a cell no larger than capFloor is within the cap, whatever it is
+    var over = oversized(capFloor).filter(_._2 > limit)
     var round = 0
     var prevCp: DataFrame = null
     while (over.nonEmpty && round < refineRounds) {
@@ -482,7 +465,7 @@ object Dedup {
         val members = cells.filter(col("cell") === c)
         // enough sub-cells to land near cap/2 if the split is even,
         // bounded so a single round's fit stays cheap
-        val k = math.min(64, math.max(2, (2L * n / cap).toInt))
+        val k = math.min(64, math.max(2, (2L * n / limit).toInt))
         val subCents = Similarity.fitCentroids(members, "id", "v", k, 2)
         val reassigned = Similarity
           .assignCells(members.drop("cell"), "v", subCents, "sub")
@@ -501,7 +484,7 @@ object Dedup {
         cells, release = if (round > 0) Seq(prevCp) else Nil)
       prevCp = cells
       round += 1
-      over = oversized()
+      over = oversized(limit)
     }
     (cells, over.map(_._1))
   }

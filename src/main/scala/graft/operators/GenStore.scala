@@ -470,6 +470,13 @@ object GenStore {
     cur + 1
   }
 
+  /** Reader options of a delete-set read: fragments written before the
+    * `hwm` column existed sit beside fragments that carry it, so their
+    * footers are merged (on the driver for a few fragments,
+    * `GraftParquetFormat`).
+    */
+  private[graft] val MergeSchema = Map("mergeSchema" -> "true")
+
   /** True when a delete frame holds an hwm-SCOPED row (the ordered
     * delete of [[InvertedIndex.admitReplaceBatch]]): its mask bound
     * names admission batch ids of one generation, which a fold or a
@@ -667,8 +674,8 @@ object GenStore {
     if (scopedFence) srcRoots.foreach { src =>
       val sdir = genDir(src, currentGen(src))
       val delIds = listBatchIds(spark, s"$sdir/deletes")
-      if (delIds.nonEmpty && hasScoped(spark.read.option("mergeSchema", "true")
-          .parquet(delIds.map(i => s"$sdir/deletes/batch_id=$i"): _*)))
+      if (delIds.nonEmpty && hasScoped(Tables.parquet(spark, MergeSchema,
+          delIds.map(i => s"$sdir/deletes/batch_id=$i"): _*)))
         throw new IllegalStateException(
           s"source $src has pending SCOPED (hwm) deletes: their " +
             "high-water marks reference source-local admission batch " +

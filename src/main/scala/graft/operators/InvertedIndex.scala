@@ -195,8 +195,7 @@ object InvertedIndex {
     // needsCompaction policy is what keeps the set fraction-bounded, so
     // the broadcast never outgrows the driver by contract.
     else {
-      val raw0 = spark.read.option("mergeSchema", "true")
-        .parquet(s"$path/deletes")
+      val raw0 = Tables.parquet(spark, GenStore.MergeSchema, s"$path/deletes")
       // as-of reads exclude delete fragments above the bound (a
       // partition prune on the batch_id directory key)
       val raw = bound.map(b => raw0.filter(col("batch_id") <= b))
@@ -730,8 +729,8 @@ object InvertedIndex {
       // (admitted above the mask bound) folds through untouched.
       val del = if (l.delIds.isEmpty) None
         else Some(broadcast( // O(dead ids) — see pendingDeletes
-          GenStore.deleteMask(spark.read.option("mergeSchema", "true")
-            .parquet(l.delPaths: _*), "doc_id")))
+          GenStore.deleteMask(
+            Tables.parquet(spark, GenStore.MergeSchema, l.delPaths: _*), "doc_id")))
       del match {
         case None =>
           write(frag("postings", l.ids)

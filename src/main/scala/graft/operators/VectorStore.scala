@@ -205,8 +205,8 @@ object VectorStore {
     val p = new org.apache.hadoop.fs.Path(deletesDir(root, gen))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
-    else Some(GenStore.deleteMask(spark.read.option("mergeSchema", "true")
-      .parquet(deletesDir(root, gen)), "cid"))
+    else Some(GenStore.deleteMask(
+      Tables.parquet(spark, GenStore.MergeSchema, deletesDir(root, gen)), "cid"))
   }
 
   /** Excludes a generation's pending deletes from a coded frame — the
@@ -436,8 +436,8 @@ object VectorStore {
       // straggler would lose the takedown)
       val del = if (l.delIds.isEmpty) None
         else Some(broadcast( // O(dead ids) — see minusDeleted
-          GenStore.deleteMask(spark.read.option("mergeSchema", "true")
-            .parquet(l.delPaths: _*), "cid")))
+          GenStore.deleteMask(
+            Tables.parquet(spark, GenStore.MergeSchema, l.delPaths: _*), "cid")))
       // compaction is layout-only, so it carries whatever code tiers the
       // store was admitted with — a pre-SQ8 store (no sq column) compacts
       // fine and stays pq-only; adding the tier is refit's job, not this

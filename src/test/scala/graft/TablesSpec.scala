@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetFormat, ParquetFileFormat}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables.parquet` opens a table exactly as `spark.read.parquet` does —
@@ -20,21 +18,7 @@ class TablesSpec extends AnyFunSuite {
 
   private def tmpDir(): String = Files.createTempDirectory("graft-tables").toString
 
-  /** `f`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    ListenerBusAccess.drain(sc)
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      ListenerBusAccess.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsDuring[T](f: => T): (T, Int) = JobCounter.jobsIn(spark)(f)
 
   /** Opens `paths` both ways; asserts equal schemas and that only the
     * Spark reader needed a job to get there.
@@ -112,6 +96,44 @@ class TablesSpec extends AnyFunSuite {
     assert(merged.schema.fieldNames.toSeq == Seq("id", "tag", "extra"))
   }
 
+  test("delete fragments with and without hwm merge to Spark's schema on the driver and in its job") {
+    // a store's delete set: a takedown fragment (ids only) beside a
+    // scoped fragment that carries the hwm bound, each under batch_id=N
+    val root = tmpDir() + "/deletes"
+    writeFragment(Seq(3L, 4L).toDF("doc_id"), s"$root/batch_id=0", "part-0.parquet")
+    writeFragment(Seq((5L, 2L)).toDF("doc_id", "hwm"), s"$root/batch_id=1", "part-0.parquet")
+    writeFragment(Seq(6L).toDF("doc_id"), s"$root/batch_id=2", "part-0.parquet")
+    val leaves = (0 to 2).map(i => s"$root/batch_id=$i")
+    for (paths <- Seq(Seq(root), leaves, leaves.reverse)) {
+      val (ours, ourJobs) = jobsDuring {
+        val df = Tables.parquet(spark, Map("mergeSchema" -> "true"), paths: _*)
+        df.schema
+        df
+      }
+      val theirs = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      assert(ours.schema == theirs.schema, paths.mkString(", "))
+      assert(ours.schema.fieldNames.toSeq.take(2) == Seq("doc_id", "hwm"))
+      assert(ourJobs == 0, s"3 footers merged in $ourJobs job(s)")
+      assert(ours.orderBy("doc_id").collect().toSeq == theirs.orderBy("doc_id").collect().toSeq)
+    }
+    // the schema step alone, below and above the driver-side file limit
+    val files = leaves.reverse.map(new org.apache.hadoop.fs.Path(_)).flatMap { d =>
+      d.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(d).toSeq
+    }
+    val opts = Map("mergeSchema" -> "true")
+    val spark0 = new ParquetFileFormat().inferSchema(spark, opts, files)
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prev = spark.conf.get(key)
+    for ((limit, jobs) <- Seq((3, 0), (2, 1))) {
+      spark.conf.set(key, limit.toString)
+      try {
+        val (schema, n) = jobsDuring(new GraftParquetFormat().inferSchema(spark, opts, files))
+        assert(schema == spark0 && schema.isDefined, s"limit $limit")
+        assert(n == jobs, s"3 footers at a limit of $limit: $n job(s)")
+      } finally spark.conf.set(key, prev)
+    }
+  }
+
   test("a session that reads Parquet through Spark's V2 source keeps that source") {
     val path = s"${TestSpark.sf0001}/region.parquet"
     def scan(df: DataFrame) = df.queryExecution.sparkPlan.collectLeaves().map(_.nodeName)
@@ -133,9 +155,8 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("lint: every Parquet open in src/main goes through Tables.parquet") {
-    // a spark.read chain ending in .parquet(, options included; only
-    // mergeSchema reads may bypass Tables.parquet
-    val read = """\.read((?:\s*\.option\((?:[^()]|\([^()]*\))*\))*)\s*\.parquet\(""".r
+    // a spark.read chain ending in .parquet(, options included
+    val read = """\.read(?:\s*\.option\((?:[^()]|\([^()]*\))*\))*\s*\.parquet\(""".r
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
     val offenders = Files.walk(root).iterator().asScala
@@ -143,7 +164,6 @@ class TablesSpec extends AnyFunSuite {
       .flatMap { p: Path =>
         val src = new String(Files.readAllBytes(p), "UTF-8")
         read.findAllMatchIn(src)
-          .filterNot(_.group(1).contains("\"mergeSchema\""))
           .map(m => s"$p:${src.take(m.start).count(_ == '\n') + 1}")
       }
     assert(offenders.isEmpty, offenders.mkString("open these with Tables.parquet: ", ", ", ""))

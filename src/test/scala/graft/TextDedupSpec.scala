@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{HashExprs, TextFunctions}
-import graft.operators.Dedup
+import graft.functions.{HashExprs, TextFunctions, VectorFunctions}
+import graft.operators.{Components, Dedup}
 
 class TextFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -421,6 +424,137 @@ class DedupSpec extends AnyFunSuite {
         maxCellSize = 20, refineRounds = 0)
       .select("id").as[Long].collect().toSet
     assert(survivors == (singles.map(_._1).toSet + 0L), s"got $survivors")
+  }
+
+  test("semanticDedup: a chain inside one cell (A~B, B~C, A!~C) leaves only its min id") {
+    def at(th: Double) = Array(math.cos(th).toFloat, math.sin(th).toFloat, 0f, 0f)
+    val (a, b, c) = (at(0.0), at(0.1), at(0.2))
+    val cos = Seq((a, b, c)).toDF("a", "b", "c").select(
+      VectorFunctions.cosine(col("a"), col("b")), VectorFunctions.cosine(col("b"), col("c")),
+      VectorFunctions.cosine(col("a"), col("c"))).head()
+    assert(cos.getDouble(0) >= 0.99 && cos.getDouble(1) >= 0.99 && cos.getDouble(2) < 0.99, cos)
+    // the chain's min id at its end (A) and in its middle (B)
+    for ((ids, want) <- Seq((Seq(1L, 2L, 3L), 1L), (Seq(2L, 1L, 3L), 1L))) {
+      val v = ids.zip(Seq(a, b, c)).toDF("id", "v")
+      val survivors = Dedup.semanticDedup(v, "id", "v", threshold = 0.99, nlist = 1, kmeansIters = 1)
+        .select("id").as[Long].collect().toSeq
+      assert(survivors == Seq(want), s"chain $ids")
+    }
+  }
+
+  /** The pair-graph formulation of [[Dedup.semanticDedup]] that the
+    * per-cell pass replaced, kept as its oracle: within-cell cosine
+    * pairs, min-id-hub pairs in residual cells and clone-to-
+    * representative pairs, then [[Components.connectedComponents]]
+    * over all of them; every non-root is dropped. Also returns the
+    * residual cells and the number of near-dup representative pairs
+    * that land in different cells (the test's coverage witnesses).
+    */
+  private def pairGraphSemanticDedup(
+      vecs: DataFrame, threshold: Double, nlist: Int, kmeansIters: Int,
+      maxCellSize: Int, refineRounds: Int): (Set[Long], Seq[Long], Long) = {
+    val v = vecs.filter(col("v").isNotNull).select("id", "v")
+    val cap: Long =
+      if (maxCellSize > 0) maxCellSize.toLong
+      else math.max(4096L, 8L * math.sqrt(v.count().toDouble).toLong)
+    val withRep = v.withColumn("rep_id", min(col("id")).over(Window.partitionBy(col("v"))))
+    val clonePairs = withRep.filter(col("id") =!= col("rep_id"))
+      .select(col("rep_id").as("id_a"), col("id").as("id_b"))
+    val reps = withRep.filter(col("id") === col("rep_id")).select("id", "v")
+    val (cells, residual) = Dedup.boundedCells(reps, nlist, kmeansIters, cap, refineRounds)
+    val bounded = cells.filter(!col("cell").isInCollection(residual))
+    def near(a: String, b: String) = VectorFunctions.cosine(col(s"$a.v"), col(s"$b.v")) >= threshold
+    val cellPairs = bounded.alias("a").join(bounded.alias("b"),
+        col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
+      .filter(near("a", "b"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val res = cells.filter(col("cell").isInCollection(residual))
+    val hubs = res.groupBy(col("cell")).agg(min(col("id")).as("hub_id"))
+      .join(res.select(col("cell"), col("id").as("hub_id"), col("v").as("hub_v")), Seq("cell", "hub_id"))
+    val hubPairs = res.join(hubs, "cell")
+      .filter(col("id") =!= col("hub_id"))
+      .filter(VectorFunctions.cosine(col("v"), col("hub_v")) >= threshold)
+      .select(least(col("hub_id"), col("id")).as("id_a"), greatest(col("hub_id"), col("id")).as("id_b"))
+    val dropped = Components.connectedComponents(
+        cellPairs.unionByName(hubPairs).unionByName(clonePairs), "id_a", "id_b")
+      .filter(col("id") =!= col("comp")).select("id")
+    val survivors = v.join(dropped, Seq("id"), "left_anti").select("id").as[Long].collect().toSet
+    val crossCell = cells.alias("a").join(cells.alias("b"),
+        col("a.cell") =!= col("b.cell") && col("a.id") < col("b.id"))
+      .filter(near("a", "b")).count()
+    (survivors, residual, crossCell)
+  }
+
+  /** Four orthogonal clusters whose in-cluster cosines straddle 0.99
+    * (near-dup chains beside unlinked points), bit-identical clones on either side of their
+    * source's id, a null embedding, and a vector with a null element
+    * plus its clone; ids shuffled by `seed`.
+    */
+  private def crossCheckCorpus(seed: Long, elem: DataType): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val dim = 8
+    // half the points tight (pairwise cos ~0.99), half loose (~0.93)
+    val vecs = for (c <- 0 until 4; i <- 0 until 30; sd = if (i % 2 == 0) 0.03 else 0.1)
+      yield Array.tabulate[Any](dim)(d => if (d == c) 1.0 else rnd.nextGaussian() * sd)
+    val ids = rnd.shuffle((0 until vecs.size).map(i => 10L * i + 100L))
+    val clones = rnd.shuffle(vecs.indices.toList).take(12).zipWithIndex.map { case (i, k) =>
+      (ids(i) + (if (k % 2 == 0) 3L else -3L), vecs(i)) // unique: ids are 0 mod 10
+    }
+    val nullElem = Array[Any](1.0, null, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+    val rows = ids.zip(vecs) ++ clones ++ Seq((1L, null), (2L, nullElem), (3L, nullElem))
+    def cast(x: Any): Any = if (x == null || elem == DoubleType) x else x.asInstanceOf[Double].toFloat
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(elem, containsNull = true))))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (id, v) =>
+      Row(id, Option(v).map(_.toSeq.map(cast)).orNull)
+    }, 3), schema)
+  }
+
+  test("semanticDedup == the pair-graph + connectedComponents oracle on seeded corpora") {
+    val configs = Seq( // (nlist, maxCellSize, refineRounds)
+      (8, 0, 3), // default cap: clusters split over cells, pair mode only
+      (2, 40, 1), // one refinement round splits both cells below the cap
+      (3, 40, 0)) // hub cells beside pair cells in one pass
+    var residualSeen = false
+    var crossSeen = false
+    for (seed <- Seq(11L, 12L); elem <- Seq(FloatType, DoubleType); (nlist, cap, rounds) <- configs) {
+      val corpus = crossCheckCorpus(seed, elem).localCheckpoint()
+      val got = Dedup.semanticDedup(corpus, "id", "v", threshold = 0.99, nlist = nlist,
+          kmeansIters = 2, maxCellSize = cap, refineRounds = rounds)
+        .select("id").as[Long].collect()
+      val (want, residual, crossCell) = pairGraphSemanticDedup(corpus, 0.99, nlist, 2, cap, rounds)
+      val tag = s"seed $seed, $elem, nlist $nlist, cap $cap, rounds $rounds"
+      assert(got.length == got.toSet.size, tag)
+      assert(got.toSet == want, tag)
+      assert(!want.contains(1L) && want.contains(2L) && !want.contains(3L), tag)
+      assert(want.size < 121, s"$tag: no near-dup was dropped")
+      residualSeen ||= residual.nonEmpty
+      crossSeen ||= crossCell > 0
+    }
+    assert(residualSeen, "no configuration left a residual hub cell")
+    assert(crossSeen, "no near-dup pair straddled two cells")
+  }
+
+  test("semanticDedup on a 300-row batch runs at most 16 Spark jobs") {
+    // the curation batch's shape: 64-dim embeddings around 16 centres,
+    // some bit-identical and some within 1e-6 of another row; 4 cells
+    // and one k-means round, as the curation op calls it
+    val rnd = new scala.util.Random(5)
+    val centres = Array.fill(16)(Array.fill(64)(rnd.nextGaussian()))
+    val base = (0 until 240).map(i => centres(rnd.nextInt(16)).map(_ + 0.5 * rnd.nextGaussian()))
+    val planted = (0 until 60).map { i =>
+      val src = base(rnd.nextInt(base.size))
+      if (i % 2 == 0) src else src.map(_ + 1e-6 * (rnd.nextDouble() - 0.5))
+    }
+    val batch = (base ++ planted).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("id", "v").localCheckpoint()
+    val (survivors, jobs) = JobCounter.jobsIn(spark) {
+      Dedup.semanticDedup(batch, "id", "v", nlist = 4, kmeansIters = 1).select("id").as[Long].collect()
+    }
+    assert(survivors.length <= 240 && survivors.length >= 200, survivors.length)
+    // AQE's job count varies between runs: 16 leaves margin over the
+    // 11 measured
+    assert(jobs <= 16, s"semanticDedup ran $jobs Spark jobs on 300 rows")
   }
 
   test("semanticDedupGroupsKnn: vectors with no qualifying edge survive as singletons") {

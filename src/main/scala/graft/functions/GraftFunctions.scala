@@ -114,11 +114,15 @@ object GraftFunctions {
   private[functions] def info(name: String): ExpressionInfo =
     new ExpressionInfo(classOf[HashExprs.type].getName, name)
 
-  /** Builder-time injection for new sessions. */
+  /** Builder-time injection for new sessions: the functions, and the
+    * columnar partial aggregate [[graft.exec.ColumnarPartialAgg]].
+    */
   class GraftExtensions extends (SparkSessionExtensions => Unit) {
-    override def apply(ext: SparkSessionExtensions): Unit =
+    override def apply(ext: SparkSessionExtensions): Unit = {
       all.foreach { case (name, builder) =>
         ext.injectFunction((FunctionIdentifier(name), info(name), builder))
       }
+      ext.injectColumnar(_ => graft.exec.ColumnarPartialAgg.columnar)
+    }
   }
 }

@@ -17,8 +17,12 @@ import org.apache.spark.sql.functions._
   *  - predicate evaluation (src/execution.cpp:23-46) -> codegen'd Filter
   *  - stats-based row-group skipping (src/execution.cpp:48-71) -> Parquet
   *    pushed filters (visible as PushedFilters in explain)
-  *  - single-pass count+sum+min+max (src/execution.cpp:300-334) -> one
-  *    HashAggregateExec with four agg expressions (partial + final at scale)
+  *  - single-pass count+sum+min+max (src/execution.cpp:300-334) and the
+  *    single-key group-by (src/execution.cpp:339-401) -> four agg
+  *    expressions; over the vectorized Parquet scan the partial half is
+  *    `graft.exec.ColumnarPartialAggExec`, one fold of the reader's batches
+  *    (a string key's dictionary codes, a filter of integer comparisons),
+  *    and the final half after the exchange is Spark's HashAggregateExec
   *  - group-key output ordering (src/execution.cpp:396-398) -> orderBy
   *
   * Extensions over the reference, marked below: Ne/Lt/... also accept string
@@ -74,8 +78,9 @@ object ColeQuery {
 
   /** The reference always materializes count+sum+min+max together in one pass
     * (`AggResult`, include/execution.h:69-75); [[aggResult]] reproduces that
-    * shape as four agg expressions in one HashAggregateExec. The Avg
-    * extension (not in the reference enum) appends a fifth.
+    * shape as four agg expressions in one aggregation. The Avg extension (not
+    * in the reference enum) appends a fifth, which keeps Spark's partial
+    * HashAggregateExec (its buffer is a Double sum).
     */
   def aggResult(valueCol: String, withAvg: Boolean = false): Seq[Column] = {
     val base = Seq(

@@ -19,9 +19,22 @@ import graft.exec.ColumnarPartialAgg
 object GraftSession {
 
   /** Task threads of the local master (`local[cpus]`) and the default
-    * shuffle parallelism: `SPARK_GRAFT_CPUS`, or 32 when unset.
+    * shuffle parallelism: `SPARK_GRAFT_CPUS`, or 32 when unset. Lazy, so
+    * a bad value fails each use with [[parseCpus]]'s message rather than
+    * the object's initializer.
     */
-  val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A `SPARK_GRAFT_CPUS` value: 32 when unset, else a positive int; a
+    * non-integer or non-positive value is refused (it would build
+    * `local[0]` and zero shuffle partitions).
+    */
+  private[graft] def parseCpus(v: Option[String]): Int = v match {
+    case None => 32
+    case Some(s) => s.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS='$s' is not a positive int"))
+  }
 
   /** Apply the engine's standard configs to a builder. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b

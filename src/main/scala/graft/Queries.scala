@@ -6430,7 +6430,7 @@ object Queries {
       // exact score, threshold 0.5) -> ONE MinHash-LSH semi-join probe
       // against the generational signature store (q151 machinery,
       // portable-md5 keys; batch 0 probes an empty store, so everything
-      // admits) -> survivors' band keys admitted -> compactIfFragmented
+      // admits) -> survivors' band keys admitted -> compactIfNeeded
       // (maxFragments=2, so compaction fires MID-STREAM after batch 1
       // and batch 2 probes the COMPACTED fragment — the lossless-
       // compaction claim exercised inside a live stream) -> retained
@@ -8331,7 +8331,7 @@ object Queries {
 
     QDef("q193_mergeable_federation",
       // FEDERATION across the MERGEABLE family (sketch / frequency /
-      // quantile, GenStore.mergeFlatStores): these stores' reads ALREADY
+      // quantile, MergeableStore.mergeStores): these stores' reads ALREADY
       // union fragments by algebra (register max / MG merge / bin-count
       // sum), so two builders' stores merged by fragment copies answer
       // EXACTLY like one pipeline — the defining mergeability property,

@@ -17,8 +17,16 @@ import graft.Tables
   *    generation, list, fold, sweep stragglers, seal, move the pointer,
   *    sweep again;
   *  - [[mergeStores]] / [[mergeFlatStoresHooked]]: the federation merge;
-  *  - the policy: [[fragmentCount]], [[compactIfFragmented]],
-  *    [[needsCompaction]], [[compactIfNeeded]], [[maintenanceStatus]].
+  *  - the policy: [[compactionDue]] over one generation's listing and
+  *    footers, with the defaults [[MaxFragments]] and
+  *    [[MaxPendingFraction]].
+  *
+  * Each store object extends one family trait, [[PendingDeleteStore]]
+  * (stores with a `deletes/` table) or [[MergeableStore]] (delete-free
+  * flat stores), both a [[FragmentStore]]: it states its [[Layout]] and
+  * its compaction body, and the trait supplies init, the pointer and
+  * seal reads, `fragmentCount`, `needsCompaction`, `compactIfNeeded`,
+  * `maintenanceStatus` and the opening of pending deletes.
   *
   * Layout under one root:
   * {{{
@@ -295,7 +303,7 @@ object GenStore {
         else
           // no generation dir: a CDC successor's pointer is written
           // LAST (mergeCdcStores), so pointer + v<cur> snapshot = a
-          // sealed CDC merge; a bare pointer is only mergeFlatStores'
+          // sealed CDC merge; a bare pointer is only mergeFlatStoresHooked's
           // initIfAbsent — no fragment copied yet, safe to abort
           java.nio.file.Files.isDirectory(
             java.nio.file.Paths.get(succ, s"v$gen"))
@@ -631,16 +639,6 @@ object GenStore {
       java.nio.file.Paths.get(genDir(root, gen), "_MERGE_PENDING"))
   }
 
-  /** FEDERATION MERGE for FLAT-fragment stores (fragments directly
-    * under the generation directory; an optional `deletes/` table
-    * beside them) — the mergeable-family wrappers (sketch / frequency /
-    * quantile, whose reads union fragments by algebra, so a merge IS
-    * just the fragments side by side). See [[mergeFlatStoresHooked]].
-    */
-  private[graft] def mergeFlatStores(spark: SparkSession,
-      srcRoots: Seq[String], dstRoot: String): Long =
-    mergeFlatStoresHooked(spark, srcRoots, dstRoot, () => ())
-
   /** FEDERATION MERGE of stores with pending deletes and a fold — the
     * scale-out ingestion pattern ([[InvertedIndex.mergeStores]],
     * [[VectorStore.mergeStores]], [[KeySetStore.mergeStores]]): K
@@ -855,6 +853,18 @@ object GenStore {
   // can afford it every batch.
   // -------------------------------------------------------------------------
 
+  /** The policy's default `maxFragments`: compact once this many
+    * fragments accumulate (the dial that bounds steady-state read
+    * amplification).
+    */
+  final val MaxFragments = 16
+
+  /** The policy's default `maxPendingFraction`: compact once the
+    * pending-delete rows reach this fraction of the data rows (the dial
+    * that bounds the takedown serving window).
+    */
+  final val MaxPendingFraction = 0.05
+
   /** How a store lays out one generation: `tables` are the
     * sub-directories one batch id spans (the first holds the fragments
     * the policy counts; "" = fragments directly under the generation
@@ -873,77 +883,203 @@ object GenStore {
   private[graft] val Flat: Layout = Layout(Seq(""), (spark, dir) =>
     footerRowCount(spark, listBatchIds(spark, dir).map(i => s"$dir/batch_id=$i")))
 
-  /** Fragments of the current generation — the quantity compaction
-    * exists to bound.
+  /** The COMPACTION-POLICY predicate over one generation's reads: true
+    * when the fragment count reached `maxFragments` (read
+    * amplification) OR the pending-delete rows grew past
+    * `maxPendingFraction` of the data rows (every read pays that mask
+    * until a compaction folds it away — the takedown serving window,
+    * bounded by CONTRACT once this predicate drives the maintenance
+    * loop). A store with pending deletes but no data rows compacts; one
+    * with no fragments does not (deletes alone can wait). `pending` and
+    * `dataRows` are read only when the fragment count leaves the answer
+    * open (and `dataRows` only with deletes pending).
     */
-  private[graft] def fragmentCount(spark: SparkSession, root: String,
-      layout: Layout): Long =
-    listBatchIds(spark, layout.dataDir(genDir(root, currentGen(root)))).size.toLong
-
-  /** The continuous-compaction policy: run `compact` on the current
-    * generation once `maxFragments` accumulate (the dial that bounds
-    * steady-state read amplification). Returns the new generation when
-    * it fired.
-    */
-  private[graft] def compactIfFragmented(spark: SparkSession, root: String,
-      layout: Layout, maxFragments: Int)(compact: Long => Long): Option[Long] = {
-    require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
-    if (fragmentCount(spark, root, layout) < maxFragments) None
-    else Some(compact(currentGen(root)))
-  }
-
-  /** The COMPACTION-POLICY predicate: true when the fragment count
-    * reached `maxFragments` (read amplification) OR the pending-delete
-    * rows grew past `maxPendingFraction` of the data rows (every read
-    * pays that mask until a compaction folds it away — the takedown
-    * serving window, bounded by CONTRACT once this predicate drives the
-    * maintenance loop). A store with pending deletes but no data rows
-    * compacts; one with no fragments does not (deletes alone can wait).
-    */
-  private[graft] def needsCompaction(spark: SparkSession, root: String,
-      layout: Layout, maxFragments: Int, maxPendingFraction: Double): Boolean = {
+  private[graft] def compactionDue(frags: Long, pending: => Long,
+      dataRows: => Long, maxFragments: Int,
+      maxPendingFraction: Double): Boolean = {
     require(maxFragments >= 2, "maxFragments < 2 would compact every batch")
     require(maxPendingFraction > 0, "maxPendingFraction must be positive")
-    val dir = genDir(root, currentGen(root))
-    val frags = listBatchIds(spark, layout.dataDir(dir)).size
     if (frags == 0) false
     else if (frags >= maxFragments) true
     else {
-      val pending = footerRowCount(spark, Seq(s"$dir/deletes"))
-      pending > 0 &&
-        pending.toDouble >= maxPendingFraction * layout.dataRows(spark, dir)
+      val p = pending
+      p > 0 && p.toDouble >= maxPendingFraction * dataRows
     }
   }
 
-  /** Run `compact` when [[needsCompaction]] says so — the
-    * maintenance-loop form that subsumes [[compactIfFragmented]].
+  /** One store of the FRAGMENT-STORE FAMILY. A store object extends
+    * [[PendingDeleteStore]] or [[MergeableStore]] and states only its
+    * [[layout]] (default [[Flat]]) and its compaction body; this trait
+    * supplies the per-root surface every store shares: restart-safe
+    * init, the pointer and seal reads, the fragment count, the policy
+    * on one set of reads, the dashboard row, and the opening of a
+    * generation's pending deletes.
     */
-  private[graft] def compactIfNeeded(spark: SparkSession, root: String,
-      layout: Layout, maxFragments: Int, maxPendingFraction: Double)(
-      compact: Long => Long): Option[Long] =
-    if (!needsCompaction(spark, root, layout, maxFragments, maxPendingFraction)) None
-    else Some(compact(currentGen(root)))
+  trait FragmentStore {
 
-  /** The operational dashboard row the maintenance loop reads: one row
-    * of (generation, fragments, data_rows, pending_rows,
-    * pending_fraction, needs_compaction) for the current generation —
-    * the exact inputs [[needsCompaction]] evaluates, exposed so a
-    * scheduler (or a human) can see WHY a tick will or won't fire.
+    /** How this store lays out one generation. */
+    private[graft] def layout: Layout = Flat
+
+    /** Create the store (generation 1, empty) if no pointer exists.
+      * Idempotent AND restart-safe: on an advanced store this is a no-op
+      * (a plain [[GenStore.init]] would re-point readers at the
+      * superseded generation 1). A store whose generation 1 holds more
+      * than fragments ([[VectorStore]]'s index artifact) initializes
+      * through its own `init`.
+      */
+    def initStore(root: String): Unit = initIfAbsent(root)
+
+    /** The generation readers currently see. */
+    def currentGen(root: String): Long = GenStore.currentGen(root)
+
+    /** One generation's directory. */
+    def genDir(root: String, gen: Long): String = GenStore.genDir(root, gen)
+
+    /** The compacted high-water mark of a generation
+      * ([[GenStore.compactedHwm]]): -1 for a never-compacted generation;
+      * batch ids at or below it are sealed inside the compacted fragment.
+      */
+    def compactedHwm(root: String, gen: Long): Long =
+      GenStore.compactedHwm(root, gen)
+
+    /** Fragments of the current generation — the quantity compaction
+      * exists to bound.
+      */
+    def fragmentCount(spark: SparkSession, root: String): Long =
+      fragmentsIn(spark, genDir(root, currentGen(root)))
+
+    private def fragmentsIn(spark: SparkSession, dir: String): Long =
+      listBatchIds(spark, layout.dataDir(dir)).size.toLong
+
+    /** [[compactionDue]] on the current generation's listing and
+      * footers.
+      */
+    protected def due(spark: SparkSession, root: String, maxFragments: Int,
+        maxPendingFraction: Double = MaxPendingFraction): Boolean = {
+      val dir = genDir(root, currentGen(root))
+      compactionDue(fragmentsIn(spark, dir),
+        footerRowCount(spark, Seq(s"$dir/deletes")),
+        layout.dataRows(spark, dir), maxFragments, maxPendingFraction)
+    }
+
+    /** Run `compact` on the current generation when [[due]]. Returns the
+      * new generation when it fired.
+      */
+    protected def compactWhenDue(spark: SparkSession, root: String,
+        maxFragments: Int, maxPendingFraction: Double = MaxPendingFraction)(
+        compact: Long => Long): Option[Long] =
+      if (!due(spark, root, maxFragments, maxPendingFraction)) None
+      else Some(compact(currentGen(root)))
+
+    /** The operational dashboard row the maintenance loop reads: one row
+      * of (generation, fragments, data_rows, pending_rows,
+      * pending_fraction, needs_compaction) for the current generation —
+      * the inputs [[compactionDue]] evaluates and its answer, from ONE
+      * read of each, so a scheduler (or a human) sees WHY a tick will or
+      * won't fire and the row never disagrees with itself.
+      */
+    protected def status(spark: SparkSession, root: String,
+        maxFragments: Int,
+        maxPendingFraction: Double = MaxPendingFraction): DataFrame = {
+      import spark.implicits._
+      val gen = currentGen(root)
+      val dir = genDir(root, gen)
+      val frags = fragmentsIn(spark, dir)
+      val dataRows = layout.dataRows(spark, dir)
+      val pendingRows = footerRowCount(spark, Seq(s"$dir/deletes"))
+      Seq((gen, frags, dataRows, pendingRows,
+        if (dataRows == 0) (if (pendingRows > 0) 1.0 else 0.0)
+        else pendingRows.toDouble / dataRows,
+        compactionDue(frags, pendingRows, dataRows, maxFragments,
+          maxPendingFraction)))
+        .toDF("generation", "fragments", "data_rows", "pending_rows",
+          "pending_fraction", "needs_compaction")
+    }
+
+    /** The pending delete fragments of the generation directory `dir`,
+      * read with `options`, or None when no delete was ever admitted
+      * there (the common case: read plans stay untouched).
+      */
+    protected def pendingDeletesUnder(spark: SparkSession, dir: String,
+        options: Map[String, String] = Map.empty): Option[DataFrame] = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/deletes")
+      if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+      else Some(Tables.parquet(spark, options, s"$dir/deletes"))
+    }
+  }
+
+  /** A family store with a pending-delete table ([[InvertedIndex]],
+    * [[VectorStore]], [[KeySetStore]]): its policy weighs the pending
+    * rows against the data rows as well as counting fragments, and
+    * [[compactStore]] folds the deletes away.
     */
-  private[graft] def maintenanceStatus(spark: SparkSession, root: String,
-      layout: Layout, maxFragments: Int, maxPendingFraction: Double): DataFrame = {
-    import spark.implicits._
-    val gen = currentGen(root)
-    val dir = genDir(root, gen)
-    val frags = listBatchIds(spark, layout.dataDir(dir)).size.toLong
-    val dataRows = layout.dataRows(spark, dir)
-    val pendingRows = footerRowCount(spark, Seq(s"$dir/deletes"))
-    Seq((gen, frags, dataRows, pendingRows,
-      if (dataRows == 0) (if (pendingRows > 0) 1.0 else 0.0)
-      else pendingRows.toDouble / dataRows,
-      needsCompaction(spark, root, layout, maxFragments, maxPendingFraction)))
-      .toDF("generation", "fragments", "data_rows", "pending_rows",
-        "pending_fraction", "needs_compaction")
+  trait PendingDeleteStore extends FragmentStore {
+
+    /** COMPACT generation `expectedGen` (compare-and-swap: a retry after
+      * success returns the current generation untouched). Returns the
+      * published generation.
+      */
+    private[graft] def compactStore(spark: SparkSession, root: String,
+        expectedGen: Long): Long
+
+    /** The COMPACTION-POLICY predicate ([[compactionDue]]) on the
+      * current generation: the fragment count, or the pending-delete
+      * rows against the data rows. Footer-metadata reads, plus whatever
+      * the store's [[layout]] needs to count its data rows.
+      */
+    def needsCompaction(spark: SparkSession, root: String,
+        maxFragments: Int = MaxFragments,
+        maxPendingFraction: Double = MaxPendingFraction): Boolean =
+      due(spark, root, maxFragments, maxPendingFraction)
+
+    /** Run [[compactStore]] when [[needsCompaction]] says so. Returns the
+      * new generation when it fired.
+      */
+    def compactIfNeeded(spark: SparkSession, root: String,
+        maxFragments: Int = MaxFragments,
+        maxPendingFraction: Double = MaxPendingFraction): Option[Long] =
+      compactWhenDue(spark, root, maxFragments, maxPendingFraction)(
+        compactStore(spark, root, _))
+
+    /** The maintenance dashboard row ([[FragmentStore.status]]). */
+    def maintenanceStatus(spark: SparkSession, root: String,
+        maxFragments: Int = MaxFragments,
+        maxPendingFraction: Double = MaxPendingFraction): DataFrame =
+      status(spark, root, maxFragments, maxPendingFraction)
+  }
+
+  /** A delete-free family store of flat fragments ([[SketchStore]],
+    * [[QuantileStore]], [[HeavyHitters]]): the reads union fragments by
+    * algebra, so nothing can be pending and the policy is the fragment
+    * count alone — a missing `deletes/` table counts zero rows. Each
+    * store's `compactIfNeeded` passes its fold's own argument (key
+    * columns, summary size) to [[compactWhenDue]].
+    */
+  trait MergeableStore extends FragmentStore {
+
+    /** The compaction-policy predicate, fragment leg only. */
+    def needsCompaction(spark: SparkSession, root: String,
+        maxFragments: Int = MaxFragments): Boolean =
+      due(spark, root, maxFragments)
+
+    /** The maintenance dashboard row ([[FragmentStore.status]]); its
+      * pending side is structurally zero, which the row states rather
+      * than hides.
+      */
+    def maintenanceStatus(spark: SparkSession, root: String,
+        maxFragments: Int = MaxFragments): DataFrame =
+      status(spark, root, maxFragments)
+
+    /** FEDERATION MERGE ([[mergeFlatStoresHooked]]): K partitions build
+      * independently and merge by fragment copies — the read's own
+      * algebra (register union, MG merge, count sum) makes the merged
+      * answers equal a single-pipeline store's, so a merge IS just the
+      * fragments side by side. Same parameters (lgK, m, bin geometry)
+      * across sources.
+      */
+    def mergeStores(spark: SparkSession, srcRoots: Seq[String],
+        dstRoot: String): Long =
+      mergeFlatStoresHooked(spark, srcRoots, dstRoot, () => ())
   }
 
   /** Total row count under `dirs`, read from parquet FOOTERS only —

@@ -27,7 +27,7 @@ import graft.Tables
   * reference has no sketch surface at all; north-star extension beside
   * the HLL sketch store (SketchStore.scala).
   */
-object HeavyHitters {
+object HeavyHitters extends GenStore.MergeableStore {
 
   final case class Counter(key: String, est: Long)
   final case class MGBuf(entries: Seq[Counter])
@@ -145,23 +145,13 @@ object HeavyHitters {
   // guarantees, not bit equality, are the gate (q149).
   // -------------------------------------------------------------------------
 
-  /** Create the generational frequency store if no pointer exists.
-    * Idempotent and restart-safe ([[GenStore.initIfAbsent]]): a no-op
-    * on an advanced store, never a pointer rewind.
-    */
-  def initStore(root: String): Unit = GenStore.initIfAbsent(root)
-
-  /** Fragments of the current generation. */
-  def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.fragmentCount(spark, root, GenStore.Flat)
-
   /** Admit one batch under the CURRENT generation — [[appendBatch]]
     * routed through the pointer and the family's fences
     * ([[GenStore.admit]]).
     */
   def admitBatch(spark: SparkSession, batch: DataFrame, keyCol: String,
       m: Int, batchId: Long, root: String): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+    GenStore.admit(root, currentGen(root), batchId)(
       appendBatch(batch, keyCol, m, batchId, _))
 
   /** COMPACT the current generation: [[mergeSummaries]] over every
@@ -188,46 +178,21 @@ object HeavyHitters {
       l.carry(spark)
     }
 
-  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
-    * compact once `maxFragments` accumulate. Returns the new generation
-    * when it fired.
+  /** The continuous-compaction policy ([[GenStore.MergeableStore]]'s
+    * fragment leg — MG summaries have no delete surface, the TAKEDOWN
+    * contract below): compact once `maxFragments` accumulate. Returns
+    * the new generation when it fired.
     */
-  def compactIfFragmented(spark: SparkSession, root: String, m: Int,
+  def compactIfNeeded(spark: SparkSession, root: String, m: Int,
       maxFragments: Int): Option[Long] =
-    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
-      compactStore(spark, root, _, m))
-
-  /** The family's compaction-policy predicate, fragment leg only (MG
-    * summaries have no delete surface — the TAKEDOWN contract below).
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16): Boolean =
-    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments, 0.05)
-
-  /** FEDERATION MERGE ([[GenStore.mergeFlatStores]]): K partitions
-    * summarize independently, merge by fragment copies — the MG merge
-    * the read already performs makes merged hitters equal a
-    * single-pipeline store's. Same m across sources.
-    */
-  def mergeStores(spark: SparkSession, srcRoots: Seq[String],
-      dstRoot: String): Long =
-    GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
-
-  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
-    * data cardinality is the summary row count (<= m per fragment,
-    * footer-read); the pending side is structurally zero.
-    */
-  def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16): DataFrame =
-    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments, 0.05)
+    compactWhenDue(spark, root, maxFragments)(compactStore(spark, root, _, m))
 
   /** [[mergeSummaries]] through the pointer: the heavy hitters of the
     * union of everything admitted, from (compacted fragment + appended
     * batches) — never the raw stream.
     */
   def hittersCurrent(spark: SparkSession, root: String, m: Int): DataFrame =
-    mergeSummaries(
-      Tables.parquet(spark, GenStore.genDir(root, GenStore.currentGen(root))), m)
+    mergeSummaries(Tables.parquet(spark, genDir(root, currentGen(root))), m)
 
   // -------------------------------------------------------------------------
   // TAKEDOWN contract. MG deletion is impossible: the prune step
@@ -269,7 +234,7 @@ object HeavyHitters {
     // id would overwrite the post-takedown summary with the pre-takedown
     // one — the exact overwrite the seal exists to refuse
     GenStore.publish(spark, root, expectedGen, action = "rebuild",
-        sealAt = _ => (GenStore.compactedHwm(root, expectedGen) +: affected).max) { l =>
+        sealAt = _ => (compactedHwm(root, expectedGen) +: affected).max) { l =>
       val unknown = affected.filterNot(l.ids.contains)
       require(unknown.isEmpty,
         s"rebuildBatches names fragments the store does not hold: " +

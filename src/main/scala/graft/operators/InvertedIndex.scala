@@ -22,7 +22,7 @@ import graft.Tables
   * The reference engine has no retrieval-index surface at all (its scope
   * list, /root/reference/README.md:129-138); north-star extension.
   */
-object InvertedIndex {
+object InvertedIndex extends GenStore.PendingDeleteStore {
 
   /** Builds the bucketed index from `(doc_id: long, tok: string)` posting
     * rows (one row per token occurrence; duplicates collapse here).
@@ -183,10 +183,7 @@ object InvertedIndex {
     * column existed read as null and coalesce to unbounded.
     */
   private def pendingDeletes(spark: SparkSession, path: String,
-      bound: Option[Long] = None): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
+      bound: Option[Long] = None): Option[DataFrame] =
     // BROADCAST by construction: the delete set is O(dead ids) — the
     // distinct above a tiny fragment scan defeats the planner's size
     // estimate, and an unhinted plan degrades to sort-merge anti-joins
@@ -194,15 +191,12 @@ object InvertedIndex {
     // 10M-doc/100k-dead store, vs 1.5× broadcast — SCALE.md). The
     // needsCompaction policy is what keeps the set fraction-bounded, so
     // the broadcast never outgrows the driver by contract.
-    else {
-      val raw0 = Tables.parquet(spark, GenStore.MergeSchema, s"$path/deletes")
+    pendingDeletesUnder(spark, path, GenStore.MergeSchema).map { raw =>
       // as-of reads exclude delete fragments above the bound (a
       // partition prune on the batch_id directory key)
-      val raw = bound.map(b => raw0.filter(col("batch_id") <= b))
-        .getOrElse(raw0)
-      Some(broadcast(GenStore.deleteMask(raw, "doc_id")))
+      broadcast(GenStore.deleteMask(
+        bound.fold(raw)(b => raw.filter(col("batch_id") <= b)), "doc_id"))
     }
-  }
 
   /** Restrict a candidate frame (carrying the admission `batch_id`
     * partition column) to rows that survive the scoped-delete mask
@@ -469,42 +463,21 @@ object InvertedIndex {
   // -------------------------------------------------------------------------
 
   // generational primitives shared with the rest of the admission-store
-  // family live in [[GenStore]]; these are the index store's bindings
-
-  /** Create the generational store (generation 1, empty) if no pointer
-    * exists. Idempotent AND restart-safe: on an advanced store this is
-    * a no-op (a plain [[GenStore.init]] would re-point readers at the
-    * superseded generation 1).
-    */
-  def initStore(root: String): Unit = GenStore.initIfAbsent(root)
-
-  /** The generation readers currently see. */
-  def currentGen(root: String): Long = GenStore.currentGen(root)
-
-  /** One generation's directory — the `path` the flat functions take. */
-  def genDir(root: String, gen: Long): String = GenStore.genDir(root, gen)
+  // family live in [[GenStore]] ([[GenStore.PendingDeleteStore]]: init,
+  // pointer, seal and policy); `genDir(root, gen)` is the `path` the
+  // flat functions take
 
   /** The index store's generation layout: postings, doclens and stats
-    * fragments share each batch id; the data rows are the doclens rows
-    * (one per indexed doc), counted from footers.
+    * fragments share each batch id; the policy counts postings
+    * fragments, and the data rows are the doclens rows (one per indexed
+    * doc), counted from footers — the r12-measured 1.61× pending-read
+    * tax persists until a compaction folds the delete set away.
     */
-  private val layout = GenStore.Layout(Seq("postings", "doclens", "stats"),
+  override private[graft] val layout = GenStore.Layout(
+    Seq("postings", "doclens", "stats"),
     (spark, dir) => GenStore.footerRowCount(spark,
       GenStore.listBatchIds(spark, s"$dir/doclens")
         .map(i => s"$dir/doclens/batch_id=$i")))
-
-  /** Fragment (batch-directory) count of the current generation's
-    * postings table — the quantity compaction exists to bound.
-    */
-  def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.fragmentCount(spark, root, layout)
-
-  /** The compacted high-water mark of a generation ([[GenStore
-    * .compactedHwm]]): -1 for a never-compacted generation; batch ids
-    * at or below it are sealed inside the compacted fragment.
-    */
-  def compactedHwm(root: String, gen: Long): Long =
-    GenStore.compactedHwm(root, gen)
 
   /** Admit one tokenized batch under the CURRENT generation (the
     * [[appendBatch]] pass routed through the pointer) through the
@@ -775,44 +748,6 @@ object InvertedIndex {
           restat(i)
       }
     }
-
-  /** The compaction POLICY ([[GenStore.compactIfFragmented]]): compact
-    * the current generation when its fragment count has reached
-    * `maxFragments` (reads then touch at most maxFragments-1 appended
-    * fragments plus the compacted one between policy firings). Returns
-    * the new generation if a compaction ran. Single-writer discipline as
-    * everywhere in the store lifecycle.
-    */
-  def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] =
-    GenStore.compactIfFragmented(spark, root, layout, maxFragments)(
-      compactStore(spark, root, _))
-
-  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]): the
-    * fragment count, or pending-delete ids against the indexed documents
-    * — the r12-measured 1.61× pending-read tax persists until a
-    * compaction folds the delete set away. Footer-metadata reads only.
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
-    GenStore.needsCompaction(spark, root, layout, maxFragments,
-      maxPendingFraction)
-
-  /** Run [[compactStore]] when [[needsCompaction]] says so. */
-  def compactIfNeeded(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05):
-      Option[Long] =
-    GenStore.compactIfNeeded(spark, root, layout, maxFragments,
-      maxPendingFraction)(compactStore(spark, root, _))
-
-  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
-    * data cardinality is the doclens row count (one row per indexed
-    * doc), pending is the delete-marker row count — footer reads only.
-    */
-  def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
-    GenStore.maintenanceStatus(spark, root, layout, maxFragments,
-      maxPendingFraction)
 
   /** [[storeLookup]] through the pointer. */
   def lookupCurrent(spark: SparkSession, root: String,

@@ -32,17 +32,10 @@ import graft.Tables
   * pointer re-check fences an admit racing a compaction, straggler
   * sweep re-lists around the pointer move.
   */
-object KeySetStore {
+object KeySetStore extends GenStore.PendingDeleteStore {
 
-  /** Create the generational store if no pointer exists. Idempotent
-    * and restart-safe ([[GenStore.initIfAbsent]]): a no-op on an
-    * advanced store, never a pointer rewind.
-    */
-  def init(root: String): Unit = GenStore.initIfAbsent(root)
-
-  /** Fragments of the current generation. */
-  def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.fragmentCount(spark, root, GenStore.Flat)
+  /** [[initStore]] under the key-set store's own name. */
+  def init(root: String): Unit = initStore(root)
 
   /** Admit one batch's key rows (made distinct here) under the CURRENT
     * generation through the family's fences ([[GenStore.admit]]).
@@ -58,7 +51,7 @@ object KeySetStore {
     */
   private[graft] def admitBatchHooked(keys: DataFrame, batchId: Long,
       root: String, midHook: () => Unit): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId,
+    GenStore.admit(root, currentGen(root), batchId,
       sealedWhy = "replays of compacted batches are refused (a per-batch " +
         "overwrite would drop the other merged batches' keys)",
       midHook = midHook) { dir =>
@@ -92,8 +85,7 @@ object KeySetStore {
     * plus the merge-renumbered-id fence ([[GenStore.deletesHwm]]).
     */
   def admitDeleteBatch(keys: DataFrame, batchId: Long, root: String): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId,
-        deletes = true) { dir =>
+    GenStore.admit(root, currentGen(root), batchId, deletes = true) { dir =>
       keys.distinct().write.mode("overwrite")
         .parquet(s"$dir/deletes/batch_id=$batchId")
     }
@@ -102,17 +94,12 @@ object KeySetStore {
     * deletes were ever admitted (the zero-cost common case — read plans
     * are untouched).
     */
-  private def pendingDeletes(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
+  private def pendingDeletes(spark: SparkSession, dir: String): Option[DataFrame] =
     // BROADCAST by construction — O(dead docs' keys); the distinct
     // defeats size estimation and an unhinted anti-join would reshuffle
     // the whole key-set scan (see InvertedIndex.pendingDeletes). The
     // needsCompaction policy keeps the set fraction-bounded.
-    else Some(broadcast(
-      Tables.parquet(spark, s"$dir/deletes").drop("batch_id").distinct()))
-  }
+    pendingDeletesUnder(spark, dir).map(d => broadcast(d.drop("batch_id").distinct()))
 
   /** The key set through the pointer — every key column of every
     * fragment of the current generation. A multiset until compacted;
@@ -122,7 +109,7 @@ object KeySetStore {
     * the plan is the bare fragment scan.
     */
   def keysCurrent(spark: SparkSession, root: String): DataFrame =
-    keysAt(spark, root, GenStore.currentGen(root))
+    keysAt(spark, root, currentGen(root))
 
   /** [[keysCurrent]] at a PINNED generation (manifest reads, q152/q168):
     * generations are immutable, so the same pin always serves the same
@@ -130,7 +117,7 @@ object KeySetStore {
     * generation that admitted them.
     */
   def keysAt(spark: SparkSession, root: String, gen: Long): DataFrame = {
-    val dir = GenStore.genDir(root, gen)
+    val dir = genDir(root, gen)
     val ids = GenStore.listBatchIds(spark, dir)
     require(ids.nonEmpty, s"no fragments under $dir")
     keysOf(spark, dir, ids)
@@ -159,7 +146,7 @@ object KeySetStore {
     */
   def keysCurrentExcluding(spark: SparkSession, root: String,
       excludeBatchId: Long): Option[DataFrame] = {
-    val dir = GenStore.genDir(root, GenStore.currentGen(root))
+    val dir = genDir(root, currentGen(root))
     val ids = GenStore.listBatchIds(spark, dir).filterNot(_ == excludeBatchId)
     if (ids.isEmpty) None else Some(keysOf(spark, dir, ids))
   }
@@ -195,7 +182,7 @@ object KeySetStore {
     */
   def mergeStores(spark: SparkSession, srcRoots: Seq[String],
       dstRoot: String, compactFirst: Boolean = false): Long =
-    GenStore.mergeStores(spark, srcRoots, dstRoot, GenStore.Flat.tables,
+    GenStore.mergeStores(spark, srcRoots, dstRoot, layout.tables,
       if (compactFirst) Some(compactStore(spark, _, _)) else None,
       scopedFence = false)
 
@@ -244,38 +231,4 @@ object KeySetStore {
       i => survivors(Tables.parquet(spark, s"${l.src}/batch_id=$i"))
         .write.mode("overwrite").parquet(s"${l.dst}/batch_id=$i")
     }
-
-  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
-    * compact once `maxFragments` accumulate. Returns the new generation
-    * when it fired.
-    */
-  def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] =
-    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
-      compactStore(spark, root, _))
-
-  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]) —
-    * [[VectorStore.needsRefit]]'s twin for layout: the fragment count,
-    * or the pending-delete key rows against the data key rows, both
-    * from footers.
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
-    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments,
-      maxPendingFraction)
-
-  /** Run [[compactStore]] when [[needsCompaction]] says so. Returns the
-    * new generation when it fired.
-    */
-  def compactIfNeeded(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05):
-      Option[Long] =
-    GenStore.compactIfNeeded(spark, root, GenStore.Flat, maxFragments,
-      maxPendingFraction)(compactStore(spark, root, _))
-
-  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]). */
-  def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
-    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments,
-      maxPendingFraction)
 }

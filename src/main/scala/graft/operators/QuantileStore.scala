@@ -38,7 +38,7 @@ import graft.Tables
   * The reference engine has no quantile surface (README scope list);
   * north-star extension. q158 gates the lifecycle end-to-end.
   */
-object QuantileStore {
+object QuantileStore extends GenStore.MergeableStore {
 
   private def binOf(valueCol: String, lo: Double, width: Double, nbins: Int): Column =
     least(greatest(floor((col(valueCol) - lo) / width), lit(0L)),
@@ -182,15 +182,14 @@ object QuantileStore {
   def admitBatchHdr(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       valueCol: String, subBits: Int, nbins: Int,
       batchId: Long, root: String): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+    GenStore.admit(root, currentGen(root), batchId)(
       appendBatchHdr(batch, keyCols, valueCol, subBits, nbins, batchId, _))
 
   /** [[quantilesOfHdr]] over the current generation's merged histogram. */
   def quantilesCurrentHdr(spark: SparkSession, root: String, keyCols: Seq[String],
       qs: Seq[(String, Int, Int)], subBits: Int): DataFrame =
     quantilesOfHdr(
-      mergedHistogram(spark,
-        GenStore.genDir(root, GenStore.currentGen(root)), keyCols),
+      mergedHistogram(spark, genDir(root, currentGen(root)), keyCols),
       keyCols, qs, subBits)
 
   // -------------------------------------------------------------------------
@@ -200,16 +199,6 @@ object QuantileStore {
   // lossless, so every post-compaction answer is bit-identical.
   // -------------------------------------------------------------------------
 
-  /** Create the generational quantile store if no pointer exists.
-    * Idempotent and restart-safe ([[GenStore.initIfAbsent]]): a no-op
-    * on an advanced store, never a pointer rewind.
-    */
-  def initStore(root: String): Unit = GenStore.initIfAbsent(root)
-
-  /** Fragments of the current generation. */
-  def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.fragmentCount(spark, root, GenStore.Flat)
-
   /** Admit one batch under the CURRENT generation through the family's
     * fences ([[GenStore.admit]]): sealed batch ids refused, pointer
     * re-read after the write so an admission racing a compaction fails
@@ -218,7 +207,7 @@ object QuantileStore {
   def admitBatch(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       valueCol: String, lo: Double, width: Double, nbins: Int,
       batchId: Long, root: String): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+    GenStore.admit(root, currentGen(root), batchId)(
       appendBatch(batch, keyCols, valueCol, lo, width, nbins, batchId, _))
 
   // -------------------------------------------------------------------------
@@ -261,7 +250,7 @@ object QuantileStore {
   private def admitNegated(spark: SparkSession, batch: DataFrame,
       keyCols: Seq[String], binCol: Column, valueCol: String,
       batchId: Long, root: String): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId,
+    GenStore.admit(root, currentGen(root), batchId,
         verb = "retraction",
         sealedWhy = "a replayed retraction would subtract twice and is refused") {
       dir =>
@@ -318,47 +307,24 @@ object QuantileStore {
       l.carry(spark)
     }
 
-  /** The continuous-compaction policy: compact once `maxFragments`
-    * accumulate. Returns the new generation when it fired.
+  /** The continuous-compaction policy ([[GenStore.MergeableStore]]'s
+    * fragment leg): compact once `maxFragments` accumulate. Returns the
+    * new generation when it fired. Retractions here ARE ordinary
+    * fragments (negated counts in the group algebra — q166), so
+    * "pending retraction weight" and read amplification are both
+    * governed by the same fragment count; there is no separate delete
+    * surface to fraction-bound, and the dashboard's pending side is
+    * zero.
     */
-  def compactIfFragmented(spark: SparkSession, root: String,
+  def compactIfNeeded(spark: SparkSession, root: String,
       keyCols: Seq[String], maxFragments: Int): Option[Long] =
-    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
+    compactWhenDue(spark, root, maxFragments)(
       compactStore(spark, root, _, keyCols))
-
-  /** The family's compaction-policy predicate, fragment leg only:
-    * retractions here ARE ordinary fragments (negated counts in the
-    * group algebra — q166), so "pending retraction weight" and read
-    * amplification are both governed by the same fragment count; there
-    * is no separate delete surface to fraction-bound.
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16): Boolean =
-    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments, 0.05)
-
-  /** FEDERATION MERGE ([[GenStore.mergeFlatStores]]): K partitions
-    * histogram independently, merge by fragment copies — bin counts
-    * form a group, so the re-sum the read already performs makes
-    * merged quantiles exact. Same (lo, width, nbins) across sources.
-    */
-  def mergeStores(spark: SparkSession, srcRoots: Seq[String],
-      dstRoot: String): Long =
-    GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
-
-  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
-    * data cardinality is the (key, bin) row count (footer-read, <= keys
-    * × nbins per fragment); pending is structurally zero — retraction
-    * fragments are data fragments, visible in `fragments`.
-    */
-  def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16): DataFrame =
-    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** [[quantilesOf]] over the current generation's merged histogram. */
   def quantilesCurrent(spark: SparkSession, root: String, keyCols: Seq[String],
       qs: Seq[(String, Int, Int)], lo: Double, width: Double): DataFrame =
     quantilesOf(
-      mergedHistogram(spark,
-        GenStore.genDir(root, GenStore.currentGen(root)), keyCols),
+      mergedHistogram(spark, genDir(root, currentGen(root)), keyCols),
       keyCols, qs, lo, width)
 }

@@ -25,7 +25,7 @@ import graft.Tables
   * /root/reference/README.md:127-138); north-star extension. In-query
   * mergeability is proven by q77; THIS is the storage surface (q83).
   */
-object SketchStore {
+object SketchStore extends GenStore.MergeableStore {
 
   /** Default HLL precision: 2^12 registers, ~1.6% relative error. */
   final val DefaultLgK = 12
@@ -75,16 +75,6 @@ object SketchStore {
   // sketch store; q148 gates it.
   // -------------------------------------------------------------------------
 
-  /** Create the generational sketch store if no pointer exists.
-    * Idempotent and restart-safe ([[GenStore.initIfAbsent]]): a no-op
-    * on an advanced store, never a pointer rewind.
-    */
-  def initStore(root: String): Unit = GenStore.initIfAbsent(root)
-
-  /** Fragments of the current generation. */
-  def fragmentCount(spark: SparkSession, root: String): Long =
-    GenStore.fragmentCount(spark, root, GenStore.Flat)
-
   /** Admit one batch under the CURRENT generation — [[appendBatch]]
     * routed through the pointer and the family's fences
     * ([[GenStore.admit]]): sealed batch ids are refused (they are inside
@@ -95,7 +85,7 @@ object SketchStore {
   def admitBatch(spark: SparkSession, batch: DataFrame, keyCols: Seq[String],
       valueCol: String, batchId: Long, root: String,
       lgK: Int = DefaultLgK): Unit =
-    GenStore.admit(root, GenStore.currentGen(root), batchId)(
+    GenStore.admit(root, currentGen(root), batchId)(
       appendBatch(batch, keyCols, valueCol, batchId, _, lgK))
 
   /** COMPACT the current generation: union every fragment's sketch rows
@@ -128,42 +118,16 @@ object SketchStore {
       l.carry(spark)
     }
 
-  /** The continuous-compaction policy ([[GenStore.compactIfFragmented]]):
-    * compact once `maxFragments` accumulate. Returns the new generation
-    * when it fired.
+  /** The continuous-compaction policy ([[GenStore.MergeableStore]]'s
+    * fragment leg — a sketch store has no delete surface, HLL deletion
+    * being impossible, the TAKEDOWN contract below): compact once
+    * `maxFragments` accumulate. Returns the new generation when it
+    * fired.
     */
-  def compactIfFragmented(spark: SparkSession, root: String,
+  def compactIfNeeded(spark: SparkSession, root: String,
       keyCols: Seq[String], maxFragments: Int): Option[Long] =
-    GenStore.compactIfFragmented(spark, root, GenStore.Flat, maxFragments)(
+    compactWhenDue(spark, root, maxFragments)(
       compactStore(spark, root, _, keyCols))
-
-  /** The family's compaction-policy predicate, fragment leg only: a
-    * sketch store has no delete surface (HLL deletion is impossible —
-    * the TAKEDOWN contract below), so read amplification is governed
-    * purely by fragment count.
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16): Boolean =
-    GenStore.needsCompaction(spark, root, GenStore.Flat, maxFragments, 0.05)
-
-  /** FEDERATION MERGE ([[GenStore.mergeFlatStores]]): K partitions
-    * sketch independently, merge by fragment copies — register union
-    * at read time is the store's ordinary algebra, so merged estimates
-    * equal a single-pipeline store's exactly. Same lgK across sources
-    * (the union's own precondition).
-    */
-  def mergeStores(spark: SparkSession, srcRoots: Seq[String],
-      dstRoot: String): Long =
-    GenStore.mergeFlatStores(spark, srcRoots, dstRoot)
-
-  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
-    * data cardinality is the per-key sketch row count (footer-read);
-    * the pending side is structurally zero — nothing here can hold a
-    * delete, which the dashboard states rather than hides.
-    */
-  def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16): DataFrame =
-    GenStore.maintenanceStatus(spark, root, GenStore.Flat, maxFragments, 0.05)
 
   /** [[mergedEstimates]] through the pointer. `n_batches` counts the
     * FRAGMENTS contributing per key (post-compaction: the compacted
@@ -172,8 +136,7 @@ object SketchStore {
     */
   def estimatesCurrent(spark: SparkSession, root: String,
       keyCols: Seq[String]): DataFrame =
-    mergedEstimates(spark,
-      GenStore.genDir(root, GenStore.currentGen(root)), keyCols)
+    mergedEstimates(spark, genDir(root, currentGen(root)), keyCols)
 
   // -------------------------------------------------------------------------
   // TAKEDOWN contract. HLL deletion is information-theoretically

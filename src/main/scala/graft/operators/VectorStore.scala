@@ -56,24 +56,23 @@ import graft.functions.VectorFunctions
   * territory shaped by the published IVF/PQ lineage (Jegou et al., PAMI
   * 2011) and ordinary snapshot-isolation storage practice.
   */
-object VectorStore {
+object VectorStore extends GenStore.PendingDeleteStore {
 
-  private def indexDir(root: String, gen: Long) = GenStore.genDir(root, gen) + "/index"
+  private def indexDir(root: String, gen: Long) = genDir(root, gen) + "/index"
   /** The admission-store directory of one generation — the `path` that
     * [[Similarity.appendCodedBatch]]/[[Similarity.searchCodedStore]]
     * operate on (stats land beside it at `coded_stats`).
     */
-  def codedDir(root: String, gen: Long): String = GenStore.genDir(root, gen) + "/coded"
-
-  /** The generation readers currently see. */
-  def currentGen(root: String): Long = GenStore.currentGen(root)
+  def codedDir(root: String, gen: Long): String = genDir(root, gen) + "/coded"
 
   /** The vector store's generation layout: coded and coded-stats
     * fragments share each batch id; the data rows are the admitted
     * vectors, summed from the KB stats fragments (the [[needsRefit]]
-    * read).
+    * read) — the one count of the policy that is a Spark read. Delete
+    * markers for never-admitted ids inflate the pending side, which is
+    * acceptable for a trigger: it fires early, never late.
     */
-  private val layout = GenStore.Layout(Seq("coded", "coded_stats"),
+  override private[graft] val layout = GenStore.Layout(Seq("coded", "coded_stats"),
     (spark, dir) => Tables.parquet(spark, s"$dir/coded_stats")
       .agg(coalesce(sum(col("n_vectors")), lit(0L))).head().getLong(0))
 
@@ -148,7 +147,7 @@ object VectorStore {
   // oldest survivor).
   // -------------------------------------------------------------------------
 
-  private def deletesDir(root: String, gen: Long) = GenStore.genDir(root, gen) + "/deletes"
+  private def deletesDir(root: String, gen: Long) = genDir(root, gen) + "/deletes"
 
   /** TAKEDOWN: admit one batch of vec ids to delete under the CURRENT
     * generation, with the [[admit]] pointer-re-read fence. No
@@ -201,13 +200,9 @@ object VectorStore {
     * written before the hwm column existed read as unbounded.
     */
   private def pendingDeletes(spark: SparkSession, root: String,
-      gen: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(deletesDir(root, gen))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else Some(GenStore.deleteMask(
-      Tables.parquet(spark, GenStore.MergeSchema, deletesDir(root, gen)), "cid"))
-  }
+      gen: Long): Option[DataFrame] =
+    pendingDeletesUnder(spark, genDir(root, gen), GenStore.MergeSchema)
+      .map(GenStore.deleteMask(_, "cid"))
 
   /** Excludes a generation's pending deletes from a coded frame — the
     * one anti-join every delete-aware read shares. Applied BEFORE the
@@ -301,7 +296,7 @@ object VectorStore {
     // the compaction seal survives a refit: migrated fragments keep
     // their (merged) batch ids, so a replay of a pre-compaction id
     // must stay refused in the new generation too
-    val sealedHwm = GenStore.compactedHwm(root, cur)
+    val sealedHwm = compactedHwm(root, cur)
     if (sealedHwm >= 0) GenStore.seal(root, cur + 1, sealedHwm)
     cur + 1
   }
@@ -412,6 +407,15 @@ object VectorStore {
   def compactGen(spark: SparkSession, root: String, expectedGen: Long): Long =
     compactGenHooked(spark, root, expectedGen, () => ())
 
+  /** The family's compaction body ([[GenStore.PendingDeleteStore]]):
+    * [[compactGen]]. Layout-only, so the policy composes freely with the
+    * refit policy ([[needsRefit]]) — drift decides WHEN the geometry
+    * changes, fragmentation and pending takedowns when the files do.
+    */
+  private[graft] def compactStore(spark: SparkSession, root: String,
+      expectedGen: Long): Long =
+    compactGen(spark, root, expectedGen)
+
   /** [[compactGen]] with a hook run after the fragment and delete
     * listings — the family's race-test seam ([[KeySetStore
     * .compactStoreHooked]]): work admitted inside the window must ride
@@ -511,48 +515,6 @@ object VectorStore {
       if (compactFirst) Some(compactGen(spark, _, _)) else None,
       scopedFence = true, prepare = () => init(spark, dstRoot, c0, b0))
   }
-
-  /** The continuous-compaction policy over [[compactGen]]
-    * ([[GenStore.compactIfFragmented]]): compact once `maxFragments`
-    * accumulate. Returns the new generation when it fired.
-    * Layout-only, so it composes freely with the refit policy
-    * ([[needsRefit]]) — drift decides WHEN the geometry changes,
-    * fragmentation decides when the files do.
-    */
-  def compactIfFragmented(spark: SparkSession, root: String,
-      maxFragments: Int): Option[Long] =
-    GenStore.compactIfFragmented(spark, root, layout, maxFragments)(
-      compactGen(spark, root, _))
-
-  /** The COMPACTION-POLICY predicate ([[GenStore.needsCompaction]]) —
-    * the layout twin of [[needsRefit]], and the contract that bounds
-    * the pending-takedown serving window (the r12-measured read tax
-    * every kNN query pays between a delete admit and the next
-    * compaction). The pending side is parquet-footer counts; the vector
-    * count is one Spark read of the KB stats fragments. Delete markers
-    * for never-admitted ids inflate the numerator — acceptable for a
-    * trigger: it fires early, never late.
-    */
-  def needsCompaction(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): Boolean =
-    GenStore.needsCompaction(spark, root, layout, maxFragments,
-      maxPendingFraction)
-
-  /** Run [[compactGen]] when [[needsCompaction]] says so. */
-  def compactIfNeeded(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05):
-      Option[Long] =
-    GenStore.compactIfNeeded(spark, root, layout, maxFragments,
-      maxPendingFraction)(compactGen(spark, root, _))
-
-  /** The maintenance dashboard row ([[GenStore.maintenanceStatus]]):
-    * data cardinality is the admitted-vector count from the KB stats
-    * fragments, pending is the delete-marker footer count.
-    */
-  def maintenanceStatus(spark: SparkSession, root: String,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05): DataFrame =
-    GenStore.maintenanceStatus(spark, root, layout, maxFragments,
-      maxPendingFraction)
 
   /** The admitted corpus reconstructed from the CURRENT generation's
     * own rows — one row per vector (the primary-replica filter

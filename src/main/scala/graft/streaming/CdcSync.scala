@@ -318,7 +318,8 @@ object CdcSync {
       checkpointDir: String,
       seqCol: String = "seq", opCol: String = "op",
       maxDeltas: Int = 8, maxDeltaFraction: Double = 0.5,
-      maxFragments: Int = 16, maxPendingFraction: Double = 0.05)
+      maxFragments: Int = GenStore.MaxFragments,
+      maxPendingFraction: Double = GenStore.MaxPendingFraction)
       : org.apache.spark.sql.streaming.StreamingQuery =
     EventStreams.sink(changes, checkpointDir) { (batch, _) =>
       val s = batch.sparkSession

@@ -429,9 +429,10 @@ object EventStreams {
 
   /** [[indexIngest]] against the GENERATIONAL store with the compaction
     * policy applied per micro-batch ([[admitThenCompact]]): after each
-    * admission, [[graft.operators.InvertedIndex.compactIfFragmented]]
+    * admission, [[graft.operators.InvertedIndex.compactIfNeeded]]
     * merges the fragments into a new generation once `maxFragments`
-    * accumulate — the continuous form of the q143 compactor, bounding
+    * accumulate (or pending deletes reach the default fraction of the
+    * indexed docs) — the continuous form of the q143 compactor, bounding
     * read amplification at crawl cadence with no operator in the loop.
     * A replayed micro-batch whose id the meantime compaction already
     * sealed is a no-op ([[unlessSealed]]); an unsealed replay
@@ -448,15 +449,16 @@ object EventStreams {
     GenStore.initIfAbsent(root)
     sink(docs, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
       InvertedIndex.admitBatch(spark, batch, idCol, toksCol, bucketSize, id, root)
-    }(InvertedIndex.compactIfFragmented(_, root, maxFragments)))
+    }(InvertedIndex.compactIfNeeded(_, root, maxFragments)))
   }
 
   /** Streaming VECTOR admission with the compaction policy — the
     * [[indexIngestCompacting]] pattern on the coded vector store: each
     * micro-batch encodes against the current generation's index
     * ([[graft.operators.VectorStore.admit]], one narrow pass) and
-    * [[graft.operators.VectorStore.compactIfFragmented]] keeps the
-    * fragment count bounded at crawl cadence. The store must already be
+    * [[graft.operators.VectorStore.compactIfNeeded]] keeps the
+    * fragment count (and the pending-delete fraction) bounded at crawl
+    * cadence. The store must already be
     * initialized with a fitted index ([[graft.operators.VectorStore
     * .init]] — fitting is a policy-layer action, not a sink side
     * effect); a restarted stream keeps whatever generation the pointer
@@ -471,7 +473,7 @@ object EventStreams {
     import graft.operators.VectorStore
     sink(vectors, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
       VectorStore.admit(spark, root, batch, idCol, vecCol, id, nassign)
-    }(VectorStore.compactIfFragmented(_, root, maxFragments)))
+    }(VectorStore.compactIfNeeded(_, root, maxFragments)))
   }
 
   /** Streaming KEY-SET admission with the compaction policy — the same
@@ -491,7 +493,7 @@ object EventStreams {
     GenStore.initIfAbsent(root)
     sink(keys, checkpointDir)(admitThenCompact(root) { (_, batch, id) =>
       KeySetStore.admitBatch(batch, id, root)
-    }(KeySetStore.compactIfFragmented(_, root, maxFragments)))
+    }(KeySetStore.compactIfNeeded(_, root, maxFragments)))
   }
 
   /** Per-sink LANE-PROGRESS file at a store root: the highest remapped
@@ -583,7 +585,7 @@ object EventStreams {
           portableKeys = portableKeys)
         writeLaneLast(target, sinkId, mapped)
         if (maxFragments != Int.MaxValue)
-          KeySetStore.compactIfFragmented(spark, target, maxFragments)
+          KeySetStore.compactIfNeeded(spark, target, maxFragments)
       } // else: this sink's own replay — the fragment already landed
         // (and may since have been folded); skipping is exactness
     }
@@ -597,8 +599,9 @@ object EventStreams {
     * semi-join per batch; history never rescanned; an empty store
     * admits everything, so batch 0 needs no special casing at the
     * call site) -> survivors' band keys admitted under this batch id
-    * -> [[graft.operators.KeySetStore.compactIfFragmented]] keeps the
-    * fragment count bounded for the life of the stream -> the retained
+    * -> [[graft.operators.KeySetStore.compactIfNeeded]] keeps the
+    * fragment count and the pending takedown fraction bounded for the
+    * life of the stream -> the retained
     * docs land as `retainedDir/batch_id=N` (the curated-corpus output,
     * input columns unchanged).
     *
@@ -618,7 +621,7 @@ object EventStreams {
     * made (same offsets → same batch rows, deterministic quality and
     * key maps). (2) the retained corpus is written BEFORE the keys are
     * admitted and before any compaction can seal this id — once
-    * [[graft.operators.KeySetStore.compactIfFragmented]] folds the
+    * [[graft.operators.KeySetStore.compactIfNeeded]] folds the
     * fragment away, a replay is a sealed no-op, so the curated rows
     * must already be on disk by then (retained-last lost the batch's
     * docs forever on a crash inside that window). (3) a batch at or
@@ -675,7 +678,7 @@ object EventStreams {
       .parquet(s"$retainedDir/batch_id=$batchId")
     Dedup.admitMinHashBatch(landed, idCol, textCol, n, numHashes,
       bands, batchId, root, portableKeys)
-    KeySetStore.compactIfFragmented(spark, root, maxFragments)
+    KeySetStore.compactIfNeeded(spark, root, maxFragments)
     org.apache.spark.sql.GraftBridge.releaseCheckpoint(landed)
   }
 
@@ -793,7 +796,7 @@ object EventStreams {
 
   /** Streaming SKETCH admission with the compaction policy — the same
     * pattern on the per-key HLL store: each micro-batch lands its
-    * sketch rows and [[graft.operators.SketchStore.compactIfFragmented]]
+    * sketch rows and [[graft.operators.SketchStore.compactIfNeeded]]
     * unions fragments per key once the policy fires (estimates
     * bit-identical, q148's gate). Cold-start initializes generation 1;
     * sealed replays are no-ops.
@@ -806,7 +809,7 @@ object EventStreams {
     GenStore.initIfAbsent(root)
     sink(events, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
       SketchStore.admitBatch(spark, batch, keyCols, valueCol, id, root, lgK)
-    }(SketchStore.compactIfFragmented(_, root, keyCols, maxFragments)))
+    }(SketchStore.compactIfNeeded(_, root, keyCols, maxFragments)))
   }
 
   /** Streaming FREQUENCY admission with the compaction policy — the
@@ -822,7 +825,7 @@ object EventStreams {
     GenStore.initIfAbsent(root)
     sink(rows, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
       HeavyHitters.admitBatch(spark, batch, keyCol, m, id, root)
-    }(HeavyHitters.compactIfFragmented(_, root, m, maxFragments)))
+    }(HeavyHitters.compactIfNeeded(_, root, m, maxFragments)))
   }
 
   /** Streaming QUANTILE admission with the compaction policy — the
@@ -843,7 +846,7 @@ object EventStreams {
     sink(rows, checkpointDir)(admitThenCompact(root) { (spark, batch, id) =>
       QuantileStore.admitBatch(spark, batch, keyCols, valueCol,
         lo, width, nbins, id, root)
-    }(QuantileStore.compactIfFragmented(_, root, keyCols, maxFragments)))
+    }(QuantileStore.compactIfNeeded(_, root, keyCols, maxFragments)))
   }
 
   /** Seed a CDC snapshot store (and, through [[initCcState]], a label

@@ -83,7 +83,7 @@ class CompactionPolicySpec extends AnyFunSuite {
         n = 3, numHashes = 32, bands = 8, root = root)
       .as[(Long, Long, Boolean)].collect().toSeq
     assert(after === before, "the policy-fired compaction changed decisions")
-    // fragment-count leg still subsumes compactIfFragmented
+    // the fragment-count leg
     Dedup.admitMinHashBatch(docs.limit(5), "doc_id", "text", n = 3,
       numHashes = 32, bands = 8, batchId = 10L, root = root)
     assert(KeySetStore.needsCompaction(spark, root, maxFragments = 2))
@@ -176,6 +176,89 @@ class CompactionPolicySpec extends AnyFunSuite {
     assert(InvertedIndex.maintenanceStatus(spark, iroot).columns.toSeq === cols)
   }
 
+  /** One store of the family under the policy table: its init, one
+    * admission under a batch id, and its policy surface at a given
+    * `maxFragments`.
+    */
+  private case class PolicyStore(name: String, store: GenStore.FragmentStore,
+      init: String => Unit, admit: (String, Long) => Unit,
+      needs: (String, Int) => Boolean,
+      status: (String, Int) => org.apache.spark.sql.Row,
+      compact: (String, Int) => Option[Long])
+
+  private val policyStores: Seq[PolicyStore] = {
+    import graft.operators.{HeavyHitters, QuantileStore, SketchStore}
+    def samples(b: Long) = Seq(("a", 1L + b), ("a", 3L), ("b", 2L + b))
+      .toDF("k", "v")
+    def vecs(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      col("id").as("vec_id"), array((0 until 8).map(j =>
+        ((pmod(xxhash64(col("id"), lit(j)), lit(201L)) - 100L) / 100.0)
+          .cast("double")): _*).as("embedding"))
+    lazy val index = Similarity.fitIvfPq(vecs(0, 40), "vec_id",
+      "embedding", nlist = 2, kmeansIters = 1, m = 2, kcode = 4, pqIters = 1)
+    Seq(
+      PolicyStore("InvertedIndex", InvertedIndex, InvertedIndex.initStore,
+        (root, b) => InvertedIndex.admitBatch(spark,
+          Seq((10 * b, Seq("a", "b")), (10 * b + 1, Seq("b")))
+            .toDF("doc_id", "tk"), "doc_id", "tk", 7L, b, root),
+        InvertedIndex.needsCompaction(spark, _, _),
+        InvertedIndex.maintenanceStatus(spark, _, _).head(),
+        InvertedIndex.compactIfNeeded(spark, _, _)),
+      PolicyStore("VectorStore", VectorStore,
+        VectorStore.init(spark, _, index._1, index._2),
+        (root, b) => VectorStore.admit(spark, root, vecs(20 * b, 20 * b + 20),
+          "vec_id", "embedding", b),
+        VectorStore.needsCompaction(spark, _, _),
+        VectorStore.maintenanceStatus(spark, _, _).head(),
+        VectorStore.compactIfNeeded(spark, _, _)),
+      PolicyStore("KeySetStore", KeySetStore, KeySetStore.init,
+        (root, b) => KeySetStore.admitBatch(spark.range(0, 10 + b).toDF("k"),
+          b, root),
+        KeySetStore.needsCompaction(spark, _, _),
+        KeySetStore.maintenanceStatus(spark, _, _).head(),
+        KeySetStore.compactIfNeeded(spark, _, _)),
+      PolicyStore("SketchStore", SketchStore, SketchStore.initStore,
+        (root, b) => SketchStore.admitBatch(spark, samples(b), Seq("k"), "v",
+          b, root),
+        SketchStore.needsCompaction(spark, _, _),
+        SketchStore.maintenanceStatus(spark, _, _).head(),
+        SketchStore.compactIfNeeded(spark, _, Seq("k"), _)),
+      PolicyStore("QuantileStore", QuantileStore, QuantileStore.initStore,
+        (root, b) => QuantileStore.admitBatch(spark, samples(b), Seq("k"),
+          "v", 0.0, 1.0, 8, b, root),
+        QuantileStore.needsCompaction(spark, _, _),
+        QuantileStore.maintenanceStatus(spark, _, _).head(),
+        QuantileStore.compactIfNeeded(spark, _, Seq("k"), _)),
+      PolicyStore("HeavyHitters", HeavyHitters, HeavyHitters.initStore,
+        (root, b) => HeavyHitters.admitBatch(spark, samples(b), "k", 4, b,
+          root),
+        HeavyHitters.needsCompaction(spark, _, _),
+        HeavyHitters.maintenanceStatus(spark, _, _).head(),
+        HeavyHitters.compactIfNeeded(spark, _, 4, _)))
+  }
+
+  policyStores.foreach { st =>
+    test(s"policy table: ${st.name} fires at maxFragments, its dashboard agrees, compactIfNeeded folds to one fragment") {
+      val root = fresh(s"policy-${st.name}")
+      st.init(root)
+      def agrees(expected: Boolean): Unit = {
+        assert(st.needs(root, 2) === expected,
+          s"needsCompaction at ${st.store.fragmentCount(spark, root)} fragments")
+        assert(st.status(root, 2).getAs[Boolean]("needs_compaction") === expected,
+          "the dashboard row disagrees with needsCompaction")
+      }
+      st.admit(root, 0L)
+      agrees(false) // one fragment: below maxFragments = 2
+      assert(st.compact(root, 2) === None)
+      st.admit(root, 1L)
+      agrees(true) // two fragments: at maxFragments
+      val gen = st.store.currentGen(root)
+      assert(st.compact(root, 2) === Some(gen + 1))
+      assert(st.store.fragmentCount(spark, root) === 1L)
+      agrees(false)
+    }
+  }
+
   test("the mergeable stores carry the policy surface too: fragment leg + dashboard, no phantom delete side") {
     import graft.operators.{HeavyHitters, QuantileStore, SketchStore}
     import spark.implicits._
@@ -186,20 +269,16 @@ class CompactionPolicySpec extends AnyFunSuite {
     (0L to 1L).foreach(b => SketchStore.admitBatch(spark,
       ev.filter(pmod(col("event_id"), lit(2)) === b),
       Seq("event_type"), "user_id", b, sroot))
-    assert(!SketchStore.needsCompaction(spark, sroot, maxFragments = 3))
-    assert(SketchStore.needsCompaction(spark, sroot, maxFragments = 2))
     val srow = SketchStore.maintenanceStatus(spark, sroot, maxFragments = 2)
       .head()
     assert(srow.getAs[Long]("fragments") === 2L)
     assert(srow.getAs[Long]("pending_rows") === 0L)
-    assert(srow.getAs[Boolean]("needs_compaction"))
     // frequency store
     val hroot = fresh("nchh")
     HeavyHitters.initStore(hroot)
     (0L to 1L).foreach(b => HeavyHitters.admitBatch(spark,
       ev.filter(pmod(col("event_id"), lit(2)) === b)
         .select(col("event_type").as("k")), "k", 8, b, hroot))
-    assert(HeavyHitters.needsCompaction(spark, hroot, maxFragments = 2))
     assert(HeavyHitters.maintenanceStatus(spark, hroot)
       .head().getAs[Long]("pending_rows") === 0L)
     // quantile store: a retraction is a DATA fragment, so it shows in
@@ -218,7 +297,7 @@ class CompactionPolicySpec extends AnyFunSuite {
       "a retraction fragment must count as a data fragment")
     assert(qrow.getAs[Long]("pending_rows") === 0L)
     assert(QuantileStore.needsCompaction(spark, qroot, maxFragments = 2))
-    assert(QuantileStore.compactIfFragmented(spark, qroot, Seq("k"), 2)
+    assert(QuantileStore.compactIfNeeded(spark, qroot, Seq("k"), 2)
       .contains(2L))
     assert(!QuantileStore.needsCompaction(spark, qroot, maxFragments = 2))
   }

@@ -181,7 +181,12 @@ class GenStoreProtocolSpec extends AnyFunSuite {
         // retention
         "\"_CURRENT\"", "def tombstoneDelete", "def sweepTombstones",
         // the streaming sink runner
-        ".writeStream")
+        ".writeStream",
+        // the fragment-store family's maintenance surface and its
+        // policy defaults (GenStore.FragmentStore and its two traits)
+        "GenStore.needsCompaction(", "GenStore.maintenanceStatus(",
+        "GenStore.fragmentCount(", "GenStore.compactIfNeeded(",
+        "maxFragments: Int = 16", "maxPendingFraction: Double = 0.05")
       .map(t => t -> literal(t)) ++ Seq(
         // a version-directory listing (the `gen=N` / `v<N>` name pattern)
         "version listing" -> """"(v|gen=)\\\\d""",

@@ -1031,7 +1031,7 @@ class StreamingSpec extends AnyFunSuite {
     // two fragments exist
     val step = EventStreams.admitThenCompact(root) { (_, batch, id) =>
       KeySetStore.admitBatch(batch, id, root)
-    }(KeySetStore.compactIfFragmented(_, root, 2))
+    }(KeySetStore.compactIfNeeded(_, root, 2))
     step(keys.filter($"k" < 10), 0L)
     step(keys.filter($"k" >= 10), 1L)
     assert(GenStore.currentGen(root) == 2L)
